@@ -103,7 +103,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from statschat_ke_spark.index.query import topk
 
     idx = _ensure_index(spark, "/root/testdata/sf0.001")
-    return topk(spark, idx, FLAGSHIP_QUERY, k=10, mode="auto")
+    return topk(spark, idx, FLAGSHIP_QUERY, k=10)
 
 
 # --------------------------------------------------------------------------
@@ -284,7 +284,7 @@ def _ft_bm25_topk(spark, sf_dir):
     from statschat_ke_spark.index.query import topk
 
     idx = _ensure_index(spark, sf_dir)
-    res = topk(spark, idx, FLAGSHIP_QUERY, k=10, mode="auto")
+    res = topk(spark, idx, FLAGSHIP_QUERY, k=10)
     return res.select("doc_id", F.round("score", 6).alias("score"))
 
 
@@ -297,7 +297,7 @@ def _ft_bm25_empty_query(spark, sf_dir):
     from statschat_ke_spark.index.query import topk
 
     idx = _ensure_index(spark, sf_dir)
-    res = topk(spark, idx, "?!... ---", k=10, mode="auto")
+    res = topk(spark, idx, "?!... ---", k=10)
     return res.select("doc_id", F.round("score", 6).alias("score"))
 
 
@@ -332,7 +332,7 @@ def _ft_bm25_delete(spark, sf_dir):
     from statschat_ke_spark.index.query import topk
 
     idx = _ensure_index_with_deletes(spark, sf_dir)
-    res = topk(spark, idx, FLAGSHIP_QUERY, k=10, mode="auto")
+    res = topk(spark, idx, FLAGSHIP_QUERY, k=10)
     return res.select("doc_id", F.round("score", 6).alias("score"))
 
 
@@ -394,7 +394,7 @@ def _ft_bm25_update(spark, sf_dir):
     from statschat_ke_spark.index.query import topk
 
     idx = _ensure_index_updated(spark, sf_dir)
-    res = topk(spark, idx, FLAGSHIP_QUERY, k=10, mode="auto")
+    res = topk(spark, idx, FLAGSHIP_QUERY, k=10)
     return res.select("doc_id", F.round("score", 6).alias("score"))
 
 
@@ -441,7 +441,7 @@ def _ft_bm25_compact(spark, sf_dir):
     from statschat_ke_spark.index.query import topk
 
     idx = _ensure_index_compacted(spark, sf_dir)
-    res = topk(spark, idx, FLAGSHIP_QUERY, k=10, mode="auto")
+    res = topk(spark, idx, FLAGSHIP_QUERY, k=10)
     return res.select("doc_id", F.round("score", 6).alias("score"))
 
 
@@ -489,7 +489,7 @@ def _ft_bm25_stream(spark, sf_dir):
     from statschat_ke_spark.index.query import topk
 
     idx = _ensure_index_streamed(spark, sf_dir)
-    res = topk(spark, idx, FLAGSHIP_QUERY, k=10, mode="auto")
+    res = topk(spark, idx, FLAGSHIP_QUERY, k=10)
     return res.select("doc_id", F.round("score", 6).alias("score"))
 
 
@@ -1730,7 +1730,12 @@ def oracle_sql() -> dict[str, str]:
                                         '\\b(19\\d{2}|20\\d{2})\\b', 1))
                                     || '-01-01', '%Y-%m-%d')::DATE
                            END,
-                           DATE '1900-01-01') AS creation
+                           DATE '1900-01-01') AS creation,
+                       list_filter(
+                           string_split(
+                               regexp_replace(filename, '\\.(pdf|html?)$', ''),
+                               '-'),
+                           x -> x <> '') AS kw
                 FROM base
             )
             SELECT okey,
@@ -1750,12 +1755,11 @@ def oracle_sql() -> dict[str, str]:
                        '%Y-%m-%d') AS period_date,
                    replace(regexp_replace(filename, '\\.(pdf|html?)$', ''),
                            '-', ' ') AS title,
+                   -- order-preserving dedup, like Spark's array_distinct:
+                   -- keep element i only at its first position
                    array_to_string(
-                       list_filter(
-                           string_split(
-                               regexp_replace(filename, '\\.(pdf|html?)$', ''),
-                               '-'),
-                           x -> x <> ''), ',') AS keywords_csv
+                       list_filter(kw, (x, i) -> list_position(kw, x) = i),
+                       ',') AS keywords_csv
             FROM cr
         """,
         "sim_cosine_pairs": """

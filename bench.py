@@ -96,7 +96,7 @@ def main() -> None:
 
         # --- BM25 query latency (wand) ---
         t0 = time.time()
-        topk(spark, idx_dir, E.FLAGSHIP_QUERY, k=10, mode="auto").collect()
+        topk(spark, idx_dir, E.FLAGSHIP_QUERY, k=10).collect()
         t["ft_bm25_topk"] = time.time() - t0
 
         # --- headline relational/pipeline queries (driver contract) ---

@@ -54,7 +54,7 @@ def main() -> None:
         best = float("inf")
         for _ in range(3):
             t0 = time.time()
-            topk(spark, args.work, q, 10, mode="wand").collect()
+            topk(spark, args.work, q, 10).collect()
             best = min(best, time.time() - t0)
         return round(best, 3)
 

@@ -4,8 +4,9 @@ Measures, over a deterministic ~300k-doc Zipf corpus (same generator as
 bench_scaling.py, materialized once and reused):
 
 1. index build wall + throughput at local[32]
-2. single-query BM25 latency, WAND vs exhaustive mode (block skipping only
-   matters when there are enough blocks to skip)
+2. single-query BM25 latency per query shape (standard and selective), plus
+   the fraction of posting blocks WAND decodes (block skipping only matters
+   when there are enough blocks to skip)
 3. batch retrieval: topk_batch over 16 queries in ONE job vs sequential
 4. incremental update: segment-append vs full compaction on a 5% delta —
    the delta-proportionality evidence for update_index(strategy='segment')
@@ -88,31 +89,21 @@ def _decoded_fraction(spark, idx: str, q: str, k: int = 10):
     """Fraction of the query's posting blocks the WAND path actually
     decodes — exact: replays topk's own grouping and _wand_slice over the
     collected postings with the block decoder wrapped by a counter."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     from statschat_ke_spark.index import query as Q
 
     marker = Q._read_marker(idx)
     stats = Q._snapshot_stats(idx, marker)
-    terminfo = Q._query_terms(spark, idx, q, marker, int(stats["n_docs"]))
+    terminfo = Q._probe_idf(spark, idx, Q._term_ids(q), marker, int(stats["n_docs"]))
     if not terminfo:
         return None
-    ids = list(terminfo)
-    avgdl = float(stats["avgdl"])
-    pst = (
-        spark.read.parquet(os.path.join(idx, "postings"))
-        .filter(F.col("term_id").isin(ids))
-        .select("seg", "term_id", "slice", "block_id", "n", "doc_ids", "tfs",
-                "dls", "block_max_tf", "block_min_dl", "first_doc", "last_doc")
-        .toPandas()
-    )
-    if not len(pst):
-        return None
-    idf_map = {t: v["idf"] for t, v in terminfo.items()}
     total_df = sum(v["df"] for v in terminfo.values())
     par = spark.sparkContext.defaultParallelism
     n_groups = Q.wand_group_count(total_df, par)  # topk's exact grouping
+    pst = Q._postings(spark, idx, marker, list(terminfo), n_groups).toPandas()
+    if not len(pst):
+        return None
+    idf_map = {t: v["idf"] for t, v in terminfo.items()}
+    avgdl = float(stats["avgdl"])
     decoded = {"n": 0}
     orig = Q._TermBlocks.partials
 
@@ -124,7 +115,7 @@ def _decoded_fraction(spark, idx: str, q: str, k: int = 10):
     Q._TermBlocks.partials = counting
     try:
         runner = Q._wand_slice(idf_map, avgdl, k)
-        for _, g in pst.groupby([pst["seg"], pst["slice"] % n_groups]):
+        for _, g in pst.groupby(["seg", "wg"]):
             runner(g)
     finally:
         Q._TermBlocks.partials = orig
@@ -186,49 +177,29 @@ def main() -> None:
         }
         print(json.dumps({"index_build": report["index_build"]}), flush=True)
 
-    # ---- 2. single-query latency: auto (default), wand, exhaustive ----
-    for mode in ("auto", "wand", "exhaustive"):
-        walls = []
-        for rep in range(args.repeats):
-            t0 = time.time()
-            for q in QUERIES[:8]:
-                topk(spark, idx, q, k=10, mode=mode).collect()
-            walls.append((time.time() - t0) / 8)
-        report[f"query_{mode}"] = {
-            "per_query_s_best": round(min(walls), 3),
-            "per_query_s_all": [round(w, 3) for w in walls],
-        }
-        print(json.dumps({f"query_{mode}": report[f"query_{mode}"]}), flush=True)
-    report["wand_speedup_vs_exhaustive"] = round(
-        report["query_exhaustive"]["per_query_s_best"]
-        / report["query_wand"]["per_query_s_best"],
-        3,
-    )
-
-    # ---- 2b. selective queries (rare+common terms) — the shape where
-    # block-max pruning actually skips (homogeneous all-common queries
-    # decode everything by nature; mode=auto picks exhaustive for them) ----
+    # ---- 2. single-query latency per query shape: standard (all-common
+    # terms, decodes nearly everything) and selective (rare+common terms —
+    # the shape where block-max pruning actually skips) ----
     SELECTIVE = [
         "the w00123",
         "of the and county w09000",
         "report w02001 w00042",
         "county statistics w04242",
     ]
-    for mode in ("wand", "exhaustive"):
+    for label, qs in (("standard", QUERIES[:8]), ("selective", SELECTIVE)):
         walls = []
         for rep in range(args.repeats):
             t0 = time.time()
-            for q in SELECTIVE:
-                topk(spark, idx, q, k=10, mode=mode).collect()
-            walls.append((time.time() - t0) / len(SELECTIVE))
-        report[f"selective_{mode}"] = {
+            for q in qs:
+                topk(spark, idx, q, k=10).collect()
+            walls.append((time.time() - t0) / len(qs))
+        report[f"query_{label}"] = {
             "per_query_s_best": round(min(walls), 3),
             "per_query_s_all": [round(w, 3) for w in walls],
         }
-        print(json.dumps({f"selective_{mode}": report[f"selective_{mode}"]}),
-              flush=True)
+        print(json.dumps({f"query_{label}": report[f"query_{label}"]}), flush=True)
 
-    # ---- 2c. decoded-block fraction (driver-side exact instrumentation):
+    # ---- 2b. decoded-block fraction (driver-side exact instrumentation):
     # rerun the same WAND grouping/logic over the query's collected postings
     # with _TermBlocks.partials wrapped by a decode counter. The design-point
     # claim is that pruning effectiveness GROWS with corpus size (more blocks
@@ -243,42 +214,6 @@ def main() -> None:
         }
     print(json.dumps({"wand_decoded_fraction": report["wand_decoded_fraction"]}),
           flush=True)
-
-    # ---- 2d. auto-mode decision audit (round-5 re-derivation evidence):
-    # for each query shape, record what mode=auto resolves to (from
-    # LAST_QUERY_INFO — threshold, Σdf, pick) and whether that pick matches
-    # the mode THIS run measured faster for the shape. This is the "auto
-    # picks the measured-faster mode at every corpus size" check the
-    # two-regime auto_mode_threshold is fit to.
-    from statschat_ke_spark.index.query import LAST_QUERY_INFO
-
-    faster = {
-        "standard": ("wand" if report["query_wand"]["per_query_s_best"]
-                     <= report["query_exhaustive"]["per_query_s_best"]
-                     else "exhaustive"),
-        "selective": ("wand" if report["selective_wand"]["per_query_s_best"]
-                      <= report["selective_exhaustive"]["per_query_s_best"]
-                      else "exhaustive"),
-    }
-    report["auto_decisions"] = {}
-    for label, qs in (("standard", QUERIES[:8]), ("selective", SELECTIVE)):
-        picks = []
-        for q in qs:
-            topk(spark, idx, q, k=10, mode="auto").collect()
-            picks.append({"query": q,
-                          "picked": LAST_QUERY_INFO.get("mode"),
-                          "total_df": LAST_QUERY_INFO.get("total_df"),
-                          "threshold": LAST_QUERY_INFO.get("threshold")})
-        modes = {p["picked"] for p in picks}
-        report["auto_decisions"][label] = {
-            "measured_faster_this_run": faster[label],
-            "auto_picked": sorted(modes),
-            "auto_matches_faster": modes == {faster[label]},
-            "per_query": picks,
-        }
-    print(json.dumps({"auto_decisions": {
-        k: {kk: vv for kk, vv in v.items() if kk != "per_query"}
-        for k, v in report["auto_decisions"].items()}}), flush=True)
 
     # ---- 3. batch retrieval: one job for all queries ----
     walls = []
@@ -379,7 +314,7 @@ def main() -> None:
     from statschat_ke_spark.index.build import build_index as _bi
 
     part_files = sorted(_glob.glob(os.path.join(input_dir, "part-*.parquet")))
-    seg_lat: dict = {"1": report.get("query_auto", {}).get("per_query_s_best")}
+    seg_lat: dict = {"1": report["query_standard"]["per_query_s_best"]}
     for n_seg in (4, 16):
         idx_s = os.path.join(
             tempfile.gettempdir(), f"statschat_large_idx_{args.n_docs}_seg{n_seg}"
@@ -412,7 +347,7 @@ def main() -> None:
         for rep in range(args.repeats):
             t0 = time.time()
             for q in QUERIES[:8]:
-                topk(spark, idx_s, q, k=10, mode="auto").collect()
+                topk(spark, idx_s, q, k=10).collect()
             walls.append((time.time() - t0) / 8)
         seg_lat[str(n_seg)] = round(min(walls), 3)
         print(json.dumps({f"seg{n_seg}_per_query_s": seg_lat[str(n_seg)]}),

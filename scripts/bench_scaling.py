@@ -121,7 +121,7 @@ def child(cpus: int, input_dir: str, num_partitions: int) -> None:
         "market price inflation quarter",
         "household labour income",
     ]:
-        topk(spark, idx, q, k=10, mode="wand").collect()
+        topk(spark, idx, q, k=10).collect()
         n_q += 1
     query_s = time.time() - t0
 

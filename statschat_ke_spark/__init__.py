@@ -10,8 +10,8 @@ From-scratch re-expression of the capabilities of KNBS-StatsChat/statschat-ke
 - ``index.build``        distributed inverted-index build (sort-based agg,
                          salted term-range merge, delta-gap+vbyte, avgdl-free
                          block bounds, doc-disjoint incremental segments)
-- ``index.query``        BM25 top-k (exhaustive + block-max WAND with
-                         essential-term pruning; mode="auto" routing)
+- ``index.query``        BM25 top-k (block-max WAND with essential-term
+                         pruning; one scorer for topk and topk_batch)
 - ``api``                the reference's make_query surface composed
                          end-to-end (search → postproc → highlight)
 - ``index.oracle``       single-node numpy oracle for rank-identity tests

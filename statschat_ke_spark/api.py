@@ -36,7 +36,7 @@ from statschat_ke_spark.functions.refops import (
     html_escape_py,
     latest_weight_py,
 )
-from statschat_ke_spark.index.query import LONG_MIN, topk
+from statschat_ke_spark.index.query import topk
 from statschat_ke_spark.operators.postproc import doc_u_asc as _doc_u_asc_shared
 from statschat_ke_spark.operators.postproc import search_pipeline
 
@@ -96,7 +96,6 @@ def search(
     latest_only: bool = False,
     fetch_k: int | None = None,
     highlight: bool = True,
-    mode: str = "auto",
     use_cache: bool = True,
 ) -> dict:
     """Answer one question: returns the reference's response shape
@@ -140,7 +139,6 @@ def search(
             latest_only,
             fetch_k,
             highlight,
-            mode,
         )
         hit = _result_cache_get(cache_key)
         if hit is not None:
@@ -151,7 +149,7 @@ def search(
     )
     if fetch_k is None:
         fetch_k = 4 * k if will_filter_latest else k
-    hits = topk(spark, index_dir, q, k=max(fetch_k, k), mode=mode, with_url=True)
+    hits = topk(spark, index_dir, q, k=max(fetch_k, k), with_url=True)
 
     # driver-side twins of the F7/F15 Column functions (parity-tested): the
     # question is a driver-local string, and a 1-row Spark job per request

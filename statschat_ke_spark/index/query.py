@@ -9,13 +9,10 @@ inverted-index analog of an index-nested-loop join (SURVEY.md §2.3 J5):
    per-term impact upper bounds, collected to the driver (≤ |q| rows)
 3. postings scan filtered by term_id (predicate pushdown + row-group
    pruning: postings are written term_id-sorted within range partitions)
-4. scoring:
-   - ``exhaustive``: decode every block, emit per-doc partials, hash-agg
-     sum, global top-k (TakeOrderedAndProject)
-   - ``wand``: group blocks by doc-range slice; per slice a vectorized
-     block-max WAND skips blocks whose upper bound can't enter the top-k;
-     per-slice top-k then global top-k. Exact because a doc's postings for
-     every term share its slice (slice = f(doc_id)).
+4. scoring: group blocks by doc-range slice; per slice group a vectorized
+   block-max WAND skips blocks whose upper bound can't enter the top-k;
+   per-group top-k then global top-k (TakeOrderedAndProject). Exact because
+   a doc's postings for every term share its slice (slice = f(doc_id)).
 5. tie-break: score desc, doc_id ascending in unsigned order — identical to
    the numpy oracle (index/oracle.py).
 
@@ -28,8 +25,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import threading
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -38,10 +33,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from statschat_ke_spark.functions.hashing import xxhash64_str
 from statschat_ke_spark.functions.tokenize import tokenize
 from statschat_ke_spark.index.codec import BLOCK, decode_doc_ids, decode_tfs, vbyte_decode
+from statschat_ke_spark.operators.postproc import doc_u_asc
 
 K1 = 1.2
 B = 0.75
-LONG_MIN = -(2**63)
 
 # Per-task cap on the batch path's shared decoded-block memo (docs_u +
 # scores ≈ 16 B/posting). Sized so n_concurrent_tasks × cap fits a typical
@@ -53,16 +48,6 @@ BATCH_DECODE_CACHE_BYTES = int(
 RESULT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
-
-# exhaustive-scorer partial rows carry the term's query position so the
-# per-doc fold can sum in canonical (query appearance) order
-EXHAUSTIVE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("qpos", T.IntegerType(), False),
         T.StructField("score", T.DoubleType(), False),
     ]
 )
@@ -290,24 +275,29 @@ def _snapshot_stats(index_dir: str, marker: dict) -> dict:
     return load_stats(index_dir)
 
 
-def _query_terms(
+def _term_ids(query_text: str) -> list[int]:
+    """The query's distinct term_ids in appearance order — the canonical
+    per-doc summation order (see _wand_slice) the oracle also uses."""
+    return [xxhash64_str(t) for t in dict.fromkeys(tokenize(query_text))]
+
+
+def _probe_idf(
     spark: SparkSession,
     index_dir: str,
-    query_text: str,
+    ids: list[int],
     marker: dict,
     n_docs: int,
 ) -> dict[int, dict]:
-    """Driver-side lexicon probe: term_id → {idf, df}.
+    """Driver-side lexicon probe: term_id → {idf, df} for the ``ids`` present
+    in the snapshot, in ``ids`` order.
 
     The lexicon is segmented (one subdir per incremental segment); global df
     is the SUM over segments, aggregated on the term_id-pruned probe
-    (≤ |q| × n_segments rows — trivial) and probe-cached across queries.
+    (≤ |ids| × n_segments rows — trivial) and probe-cached across queries.
     ``marker``/``n_docs`` come from the caller's single snapshot read so idf
     is computed against the same commit the postings scan is pruned to."""
-    terms = list(dict.fromkeys(tokenize(query_text)))
-    if not terms:
+    if not ids:
         return {}
-    ids = [xxhash64_str(t) for t in terms]
     out = {}
     for tid, df in _probe_dfs(spark, index_dir, ids, marker).items():
         if df > 0:
@@ -316,87 +306,35 @@ def _query_terms(
     return out
 
 
-def _empty_result(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], RESULT_SCHEMA)
-
-
-# Observability for the auto-mode decision (the result schema is contract-
-# fixed, so the chosen mode can't ride in the DataFrame): updated on every
-# topk() call with the resolved mode, the query's Σdf and the threshold used.
-# THREAD-LOCAL under the hood: the threaded WSGI server runs queries
-# concurrently, and a plain module dict would report another request's
-# mode/Σdf to whichever thread read it next.
-class _QueryInfo(threading.local):
-    def __init__(self):
-        self.data: dict = {}
-
-    def update(self, **kw) -> None:
-        self.data.update(kw)
-
-    def __getitem__(self, k):
-        return self.data[k]
-
-    def get(self, k, default=None):
-        return self.data.get(k, default)
-
-    def __contains__(self, k) -> bool:
-        return k in self.data
-
-    def __repr__(self) -> str:
-        return repr(self.data)
-
-
-LAST_QUERY_INFO = _QueryInfo()
+def _postings(
+    spark: SparkSession, index_dir: str, marker: dict, ids: list[int], n_groups: int
+) -> DataFrame:
+    """The snapshot's posting blocks for ``ids`` (term_id pushdown), tagged
+    with their WAND slice group ``wg``. Doc ranges of distinct slices are
+    disjoint, so ANY slice partition keeps per-group local top-k + a global
+    top-k exact."""
+    return (
+        _prune_to_snapshot(
+            spark.read.parquet(os.path.join(index_dir, "postings")), marker
+        )
+        .filter(F.col("term_id").isin(ids))
+        .select("seg", "term_id", "slice", "block_id", "n", "doc_ids", "tfs",
+                "dls", "block_max_tf", "block_min_dl", "first_doc", "last_doc")
+        .withColumn("wg", F.pmod(F.col("slice"), F.lit(n_groups)))
+    )
 
 
 def wand_group_count(total_df: int, parallelism: int) -> int:
-    """Adaptive slice-coarsening group count (see topk's wand branch).
-    Single source of truth — topk, topk_batch, and the decoded-fraction
-    instrumentation (scripts/bench_large.py) must group identically, or the
-    instrumentation measures a grouping production never runs."""
+    """Adaptive slice-coarsening group count: every WAND group pays ~k
+    decoded blocks before its local θ converges, so 64 fine slices × k
+    forfeit most pruning when posting volume is modest. Estimated block
+    count (Σdf from the lexicon probe — no extra job) sizes the group
+    count: few groups (global-ish θ, max pruning) for small volume, up to
+    4×parallelism for big scans. Single source of truth — topk, topk_batch,
+    and the decoded-fraction instrumentation (scripts/bench_large.py) must
+    group identically, or the instrumentation measures a grouping
+    production never runs."""
     return int(max(1, min(4 * parallelism, (total_df // BLOCK) // 512 + 1)))
-
-
-# Corpus size at which per-query cost stops being dominated by fixed Spark
-# stage overhead and starts being dominated by posting decode volume —
-# the boundary between the two auto_mode_threshold regimes below. Sits
-# between the 270k corpus (exhaustive measured faster on every query shape)
-# and the 900k corpus (WAND measured faster on every query shape); the
-# measured curves are monotone on each side, so any cut between them is
-# behavior-identical at the measured points.
-STAGE_OVERHEAD_DOCS = 512_000
-
-
-def auto_mode_threshold(n_docs: int) -> int:
-    """Σdf crossover between exhaustive and WAND, re-derived (round 5) from
-    the three-point BENCH_LARGE curve at 270k / 900k / 3.24M docs.
-
-    Two measured regimes, not one ratio:
-
-    - Small corpus (stage-overhead regime, n_docs < STAGE_OVERHEAD_DOCS):
-      per-query wall is ~1 s of fixed Spark stage overhead; WAND's metadata
-      machinery (interval sweep + per-group θ warm-up of ~k decoded blocks)
-      is a visible fraction of that, so exhaustive's single streaming decode
-      wins unless posting volume is huge. Measured crossover on the
-      270k-doc corpus: Σdf ≈ 2M ≈ 8×n_docs (BENCH_LARGE, round 2) — the
-      8×n_docs rule, kept verbatim for this regime.
-
-    - Large corpus (decode-volume regime): at 900k and 3.24M docs WAND
-      measured faster on EVERY query shape — standard 4-term 1.12 vs
-      1.22 s/q and 1.00 vs 1.11, selective 0.91 vs 1.23 and 1.09 vs 1.79,
-      and even all-common queries (99.7% blocks decoded) — because its
-      per-slice local top-k avoids the exhaustive scorer's global doc-id
-      shuffle, whose cost grows with candidate count (BENCH_LARGE_1M/3M6,
-      round 4). The round-2 8×n_docs rule, derived at 270k, mis-routed
-      those shapes to exhaustive; here only the tiny-volume floor remains.
-
-    The 64×BLOCK floor keeps single-block queries (and tiny test corpora)
-    out of WAND's group machinery in both regimes. The resolved decision is
-    recorded per query in LAST_QUERY_INFO; ``auto_threshold`` overrides.
-    """
-    if n_docs < STAGE_OVERHEAD_DOCS:
-        return max(64 * BLOCK, 8 * n_docs)
-    return 64 * BLOCK
 
 
 def topk(
@@ -405,91 +343,36 @@ def topk(
     query_text: str,
     k: int = 10,
     *,
-    mode: str = "auto",
-    auto_threshold: int | None = None,
     with_url: bool = False,
 ) -> DataFrame:
-    """Top-k (doc_id, score[, url, rank]) for a free-text query.
-
-    ``mode``: ``wand`` (block-max skipping), ``exhaustive`` (decode
-    everything), or ``auto`` — picks exhaustive when the query's Σdf (known
-    from the lexicon probe, no extra job) is below ``auto_threshold``
-    (default: derived from the corpus size — see ``auto_mode_threshold``),
-    wand when posting volume is what dominates. Both modes are
-    rank-identical (property-tested). The resolved mode is recorded in
-    ``LAST_QUERY_INFO`` for observability.
-    """
+    """Top-k (doc_id, score[, url]) for a free-text query: block-max WAND
+    per (segment, slice group), then a global top-k."""
     # ONE snapshot read serves the whole query: format check, segment
-    # pruning, n_docs (idf + auto threshold) and avgdl all come from the
-    # same commit marker, so an append landing mid-query can't mix one
-    # snapshot's postings with another's scoring globals.
+    # pruning, n_docs (idf) and avgdl all come from the same commit marker,
+    # so an append landing mid-query can't mix one snapshot's postings with
+    # another's scoring globals.
     marker = check_index_format(index_dir)
     stats = _snapshot_stats(index_dir, marker)
-    n_docs = int(stats["n_docs"])
-    terminfo = _query_terms(spark, index_dir, query_text, marker, n_docs)
+    terminfo = _probe_idf(
+        spark, index_dir, _term_ids(query_text), marker, int(stats["n_docs"])
+    )
     if not terminfo:
-        res = _empty_result(spark)
-        LAST_QUERY_INFO.update(mode="empty", total_df=0, threshold=None)
+        res = spark.createDataFrame([], RESULT_SCHEMA)
     else:
         total_df = sum(v["df"] for v in terminfo.values())
-        if mode == "auto":
-            if auto_threshold is None:
-                auto_threshold = auto_mode_threshold(n_docs)
-            mode = "exhaustive" if total_df < auto_threshold else "wand"
-        LAST_QUERY_INFO.update(mode=mode, total_df=total_df, threshold=auto_threshold)
-        ids = list(terminfo.keys())
-        avgdl = float(stats["avgdl"])
-        pst = (
-            _prune_to_snapshot(
-                spark.read.parquet(os.path.join(index_dir, "postings")), marker
-            )
-            .filter(F.col("term_id").isin(ids))
-            .select("seg", "term_id", "slice", "block_id", "n", "doc_ids", "tfs",
-                    "dls", "block_max_tf", "block_min_dl", "first_doc", "last_doc")
-        )
+        n_groups = wand_group_count(total_df, spark.sparkContext.defaultParallelism)
         idf_map = {t: v["idf"] for t, v in terminfo.items()}
         dead_bc = _load_tombstones_bc(spark, index_dir, marker)
-        if mode == "exhaustive":
-            scored = pst.mapInPandas(
-                _exhaustive_scorer(idf_map, avgdl, dead_bc), EXHAUSTIVE_SCHEMA
+        res = (
+            _postings(spark, index_dir, marker, list(terminfo), n_groups)
+            .groupBy("seg", "wg")
+            .applyInPandas(
+                _wand_slice(idf_map, float(stats["avgdl"]), k, dead_bc),
+                RESULT_SCHEMA,
             )
-            # canonical-order per-doc sum (see _wand_slice bit-reproducibility
-            # note): a doc has ≤|q| partial rows, one per query term; fold
-            # them sorted by query position so the float summation order is a
-            # pure function of (index, query) — F.sum's accumulation order
-            # follows shuffle arrival and varies with parallelism, which can
-            # swap exact-tie ranks across cluster sizes.
-            res = scored.groupBy("doc_id").agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("qpos", "score"))),
-                    F.lit(0.0),
-                    lambda a, x: a + x["score"],
-                ).alias("score")
-            )
-        elif mode == "wand":
-            # Adaptive slice coarsening: every WAND group pays ~k decoded
-            # blocks before its local θ converges, so 64 fine slices × k
-            # forfeit most pruning when posting volume is modest. Estimated
-            # block count (Σdf from the lexicon probe — no extra job) sizes
-            # the group count: few groups (global-ish θ, max pruning) for
-            # small volume, up to 4×parallelism for big scans. Doc ranges of
-            # distinct slices are disjoint, so ANY slice partition keeps
-            # per-group local top-k + global TakeOrdered exact.
-            par = spark.sparkContext.defaultParallelism
-            n_groups = wand_group_count(total_df, par)
-            grouped = pst.withColumn("wg", F.pmod(F.col("slice"), F.lit(n_groups)))
-            res = grouped.groupBy("seg", "wg").applyInPandas(
-                _wand_slice(idf_map, avgdl, k, dead_bc), RESULT_SCHEMA
-            )
-        else:
-            raise ValueError(f"unknown mode {mode!r}")
-
-    ranked = (
-        res.orderBy(
-            F.desc("score"), F.col("doc_id").bitwiseXOR(F.lit(LONG_MIN)).asc()
         )
-        .limit(k)
-    )
+
+    ranked = res.orderBy(F.desc("score"), doc_u_asc()).limit(k)
     if with_url:
         docs = _prune_to_snapshot(
             spark.read.parquet(os.path.join(index_dir, "docs")), marker
@@ -499,7 +382,7 @@ def topk(
         ranked = (
             docs.join(F.broadcast(ranked), "doc_id", "inner")
             .select("doc_id", "score", "url")
-            .orderBy(F.desc("score"), F.col("doc_id").bitwiseXOR(F.lit(LONG_MIN)).asc())
+            .orderBy(F.desc("score"), doc_u_asc())
         )
     return ranked
 
@@ -527,39 +410,19 @@ def topk_batch(
     # segment pruning and scoring globals from the same commit marker.
     marker = check_index_format(index_dir)
     # ONE lexicon probe for the union of every query's terms
-    terms_by_q = {
-        qid: list(dict.fromkeys(tokenize(qtext))) for qid, qtext in queries.items()
-    }
-    ids_by_q = {
-        qid: [xxhash64_str(t) for t in ts] for qid, ts in terms_by_q.items()
-    }
+    ids_by_q = {qid: _term_ids(qtext) for qid, qtext in queries.items()}
     union_ids = sorted({t for ids in ids_by_q.values() for t in ids})
     stats = _snapshot_stats(index_dir, marker)
     avgdl = float(stats["avgdl"])
-    n = int(stats["n_docs"])
-    lex = {}
-    if union_ids:
-        for tid, df in _probe_dfs(spark, index_dir, union_ids, marker).items():
-            if df > 0:
-                idf = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-                lex[tid] = {"idf": idf, "df": df}
-    per_q: dict[int, dict[int, dict]] = {
-        qid: {t: lex[t] for t in ids if t in lex} for qid, ids in ids_by_q.items()
-    }
-    all_ids = sorted({t for ti in per_q.values() for t in ti})
-    if not all_ids:
+    lex = _probe_idf(spark, index_dir, union_ids, marker, int(stats["n_docs"]))
+    if not lex:
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, score double"
         )
-    idf_by_q = {q: {t: v["idf"] for t, v in ti.items()} for q, ti in per_q.items()}
-    pst = (
-        _prune_to_snapshot(
-            spark.read.parquet(os.path.join(index_dir, "postings")), marker
-        )
-        .filter(F.col("term_id").isin(all_ids))
-        .select("seg", "term_id", "slice", "block_id", "n", "doc_ids", "tfs",
-                "dls", "block_max_tf", "block_min_dl", "first_doc", "last_doc")
-    )
+    idf_by_q = {
+        qid: {t: lex[t]["idf"] for t in ids if t in lex}
+        for qid, ids in ids_by_q.items()
+    }
 
     schema = T.StructType(
         [
@@ -571,15 +434,16 @@ def topk_batch(
 
     from pyspark.sql import Window as W
 
-    # same adaptive coarsening as topk (see there): group count sized from
-    # the union Σdf so per-group θ converges with little decode overhead.
+    # same adaptive coarsening as topk (see wand_group_count): group count
+    # sized from the union Σdf so per-group θ converges with little decode
+    # overhead.
     # ``n_groups`` pins the count explicitly — the adaptive default couples
     # the JOB SHAPE to defaultParallelism (more groups = more per-group θ
     # warm-up decode), so an N-vs-4N scaling measurement must pin it to run
     # the identical job at both levels and vary only concurrency
     # (scripts/bench_query_scaling.py does; same rule as the build bench's
     # identical partition counts).
-    total_df = sum(lex[t]["df"] for t in all_ids)
+    total_df = sum(v["df"] for v in lex.values())
     par = spark.sparkContext.defaultParallelism
     if n_groups is None:
         n_groups = wand_group_count(total_df, par)
@@ -644,7 +508,7 @@ def topk_batch(
             )
         return pd.concat(outs, ignore_index=True)
 
-    grouped = pst.withColumn("wg", F.pmod(F.col("slice"), F.lit(n_groups)))
+    grouped = _postings(spark, index_dir, marker, sorted(lex), n_groups)
     if n_qb > 1:
         tb_rows = sorted(
             {
@@ -659,58 +523,13 @@ def topk_batch(
     else:
         grouped = grouped.withColumn("qb", F.lit(0))
     scored = grouped.groupBy("seg", "wg", "qb").applyInPandas(run_slice, schema)
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("doc_id").bitwiseXOR(F.lit(LONG_MIN)).asc()
-    )
+    w = W.partitionBy("query_id").orderBy(F.desc("score"), doc_u_asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
         .orderBy("query_id", "rank")
     )
-
-
-def _exhaustive_scorer(idf_map: dict[int, float], avgdl: float, dead_bc=None):
-    qpos_map = {t: i for i, t in enumerate(idf_map)}  # query appearance order
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dead = dead_bc.value if dead_bc is not None else None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # Whole-batch concatenated decode — no per-block Python loop.
-            # Each column's buffers are byte-concatenable: vbyte values are
-            # self-terminating, so one decode over the joined buffer yields
-            # the flat value stream; `n` (docs per block) segments it.
-            n = pdf["n"].to_numpy().astype(np.int64)
-            gaps = vbyte_decode(b"".join(pdf["doc_ids"]))
-            tfs = (vbyte_decode(b"".join(pdf["tfs"])) + np.uint64(1)).astype(
-                np.float64
-            )
-            dls = vbyte_decode(b"".join(pdf["dls"])).astype(np.float64)
-            # segmented cumsum restores absolute doc ids: each block's gap
-            # stream starts with an absolute id, so subtract the running
-            # total carried in from the previous blocks of the batch
-            g = np.cumsum(gaps, dtype=np.uint64)
-            ends = np.cumsum(n)
-            prev = np.zeros(len(pdf), dtype=np.uint64)
-            prev[1:] = g[ends[:-1] - 1]
-            ids = g - np.repeat(prev, n)
-            w = np.repeat(
-                pdf["term_id"].map(idf_map).to_numpy(dtype=np.float64), n
-            )
-            qpos = np.repeat(
-                pdf["term_id"].map(qpos_map).to_numpy(dtype=np.int32), n
-            )
-            partial = w * tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-            keep = _mask_alive(ids, dead)  # tombstoned docs never emit rows
-            if keep is not None:
-                ids, qpos, partial = ids[keep], qpos[keep], partial[keep]
-            yield pd.DataFrame(
-                {"doc_id": ids.view(np.int64), "qpos": qpos, "score": partial}
-            )
-
-    return score
 
 
 class _TermBlocks:
@@ -849,7 +668,7 @@ def _wand_terms_topk(
     the same hot blocks (measured ~6x of the batch stage's wall at 64
     queries). ``terms`` must be in the query's canonical term order.
     """
-    if not terms:
+    if not terms or k <= 0:
         return pd.DataFrame(
             {"doc_id": np.empty(0, dtype=np.int64),
              "score": np.empty(0, dtype=np.float64)}

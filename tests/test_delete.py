@@ -1,6 +1,6 @@
 """Document deletion (tombstone) tests — the Iceberg delete-file analog.
 
-Exactness contract: after delete_docs, every query mode must return results
+Exactness contract: after delete_docs, topk and topk_batch must return results
 rank-identical AND score-identical (1e-9) to an index built from scratch
 WITHOUT the deleted docs — i.e. the tombstone mask, the negative-df lexicon
 delta, and the decremented n_docs/avgdl together reproduce exact BM25 over
@@ -63,18 +63,17 @@ def deleted_pair(spark, corpus, tmp_path_factory):
     return d1, d2, victims
 
 
-def _assert_same_topk(spark, d1, d2, mode):
+def _assert_same_topk(spark, d1, d2):
     for q in QUERIES:
-        a = topk(spark, d1, q, 10, mode=mode).toPandas()
-        b = topk(spark, d2, q, 10, mode=mode).toPandas()
-        assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all(), (mode, q)
-        assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), (mode, q)
+        a = topk(spark, d1, q, 10).toPandas()
+        b = topk(spark, d2, q, 10).toPandas()
+        assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all(), q
+        assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), q
 
 
 def test_delete_equals_fresh_build_both_modes(spark, deleted_pair):
     d1, d2, _ = deleted_pair
-    _assert_same_topk(spark, d1, d2, "wand")
-    _assert_same_topk(spark, d1, d2, "exhaustive")
+    _assert_same_topk(spark, d1, d2)
 
 
 def test_delete_equals_fresh_build_batch(spark, deleted_pair):
@@ -130,7 +129,7 @@ def test_compaction_reclaims_and_stays_identical(spark, corpus, tmp_path_factory
     merge_index(spark, d1, num_partitions=P)
     rows_after = spark.read.parquet(os.path.join(d1, "postings")).count()
     assert rows_after < rows_before  # physical reclaim
-    _assert_same_topk(spark, d1, d2, "wand")
+    _assert_same_topk(spark, d1, d2)
     # tombstone files survive the compaction (staged still holds the rows,
     # so a future rebuild must keep filtering)
     import json
@@ -139,7 +138,7 @@ def test_compaction_reclaims_and_stays_identical(spark, corpus, tmp_path_factory
         assert json.load(f)["tombstone_files"]
     # ... and a SECOND compaction still excludes the deleted docs
     merge_index(spark, d1, num_partitions=P)
-    _assert_same_topk(spark, d1, d2, "wand")
+    _assert_same_topk(spark, d1, d2)
 
 
 def test_delete_then_segment_append(spark, corpus, tmp_path_factory):
@@ -170,13 +169,12 @@ def test_delete_then_segment_append(spark, corpus, tmp_path_factory):
 
     ref = docs.filter(~docs.url.isin(victims)).unionByName(extra)
     build_index(spark, ref, d2, num_partitions=P)
-    _assert_same_topk(spark, d1, d2, "wand")
-    _assert_same_topk(spark, d1, d2, "exhaustive")
+    _assert_same_topk(spark, d1, d2)
 
     # terminal-delete semantics: re-sending a deleted url is a no-op
     resend = docs.filter(docs.url.isin(victims[:5]))
     update_index(spark, resend, d1, num_partitions=P, strategy="segment")
-    _assert_same_topk(spark, d1, d2, "wand")
+    _assert_same_topk(spark, d1, d2)
 
 
 def test_delete_everything(spark, tmp_path_factory):
@@ -187,8 +185,7 @@ def test_delete_everything(spark, tmp_path_factory):
     urls = [r.url for r in spark.read.parquet(os.path.join(d, "docs")).collect()]
     res = delete_docs(spark, d, urls)
     assert res.n_docs == 0 and res.avgdl == 0.0
-    for mode in ("wand", "exhaustive"):
-        assert topk(spark, d, QUERIES[0], 10, mode=mode).count() == 0
+    assert topk(spark, d, QUERIES[0], 10).count() == 0
 
 
 def test_multiple_deletes_fold_to_one_delta_segment(spark, corpus, tmp_path_factory):
@@ -214,8 +211,7 @@ def test_multiple_deletes_fold_to_one_delta_segment(spark, corpus, tmp_path_fact
     deltas_in_marker = [s for s in marker["segments"] if int(s) >= DELETE_SEG_BASE]
     assert deltas_in_marker == stats["delete_segments"]
     build_index(spark, docs.filter(~docs.url.isin(urls[:45])), d2, num_partitions=P)
-    _assert_same_topk(spark, d1, d2, "wand")
-    _assert_same_topk(spark, d1, d2, "exhaustive")
+    _assert_same_topk(spark, d1, d2)
 
 
 def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
@@ -261,7 +257,7 @@ def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
 
     ref = docs.filter(~docs.url.isin(victims)).unionByName(extra)
     build_index(spark, ref, d2, num_partitions=P)
-    _assert_same_topk(spark, d1, d2, "wand")
+    _assert_same_topk(spark, d1, d2)
 
 
 def test_delete_ignores_uncommitted_staged_chunk(spark, corpus, tmp_path_factory):

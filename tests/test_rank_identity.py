@@ -2,8 +2,8 @@
 
 Mirrors the reference's golden-question evaluation
 (/root/reference/statschat/model_evaluation/evaluation.py:250-326) with
-exact assertions: identical doc_id sequences, scores to 1e-9, both for the
-exhaustive scorer and for block-max WAND.
+exact assertions: identical doc_id sequences, scores to 1e-9, for block-max
+WAND (per-query ``topk`` and ``topk_batch``).
 """
 
 from __future__ import annotations
@@ -20,16 +20,12 @@ def oracle(corpus_pdf):
     return OracleIndex(corpus_pdf)
 
 
-@pytest.mark.parametrize("mode", ["exhaustive", "wand"])
-def test_rank_identity_all_queries(spark, index_dir, oracle, queries, mode):
+def test_rank_identity_all_queries(spark, index_dir, oracle, queries):
     for q in queries.itertuples(index=False):
         golden = oracle.topk(q.query_text, int(q.k))
-        got = topk(spark, index_dir, q.query_text, int(q.k), mode=mode).toPandas()
-        assert len(got) == len(golden), (q.query_id, mode)
-        assert (got.doc_id.to_numpy() == golden.doc_id.to_numpy()).all(), (
-            q.query_id,
-            mode,
-        )
+        got = topk(spark, index_dir, q.query_text, int(q.k)).toPandas()
+        assert len(got) == len(golden), q.query_id
+        assert (got.doc_id.to_numpy() == golden.doc_id.to_numpy()).all(), q.query_id
         assert np.allclose(got.score.to_numpy(), golden.score.to_numpy(), atol=1e-9)
 
 
@@ -68,14 +64,13 @@ def test_wand_exact_tie_at_rank_k(spark, index_dir, oracle):
     """Regression: an exact score tie AT the kth slot must resolve by the
     unsigned-doc_id tie-break in WAND too. The interval upper bounds come
     out of a float sweep+cumsum whose rounding once pushed the tied doc's
-    interval a few ulp below θ, so WAND skipped it while exhaustive kept it
+    interval a few ulp below θ, so WAND skipped it while the oracle kept it
     (query.py _wand_slice eps margin). This query has two docs bit-equal at
     rank 10 on the 1k corpus."""
     q = "w09207 w02260 reports"
     golden = oracle.topk(q, 10)
-    for mode in ("wand", "exhaustive"):
-        got = topk(spark, index_dir, q, 10, mode=mode).toPandas()
-        assert list(got.doc_id) == list(golden.doc_id), mode
+    got = topk(spark, index_dir, q, 10).toPandas()
+    assert list(got.doc_id) == list(golden.doc_id)
     # the tie is real: ranks 10 and 11 carry bit-identical scores
     g11 = oracle.topk(q, 11)
     assert g11.score.iloc[9] == g11.score.iloc[10]
@@ -83,7 +78,7 @@ def test_wand_exact_tie_at_rank_k(spark, index_dir, oracle):
 
 def test_scores_bit_identical_across_groupings(spark, index_dir):
     """Emitted scores are a pure function of (index, query): BIT-identical
-    across WAND slice-group counts and vs the exhaustive scorer. Per-doc
+    across WAND slice-group counts and between topk and topk_batch. Per-doc
     partials are summed in canonical query-term order (query.py _wand_slice
     'Bit-reproducibility'); without that pin, the essential/non-essential
     split order varies with grouping and near-tied docs swap ranks by one
@@ -114,11 +109,11 @@ def test_scores_bit_identical_across_groupings(spark, index_dir):
                 == baseline.score.to_numpy().view(np.int64)
             ).all(), ng
     for qid, qtext in queries.items():
-        ex = topk(spark, index_dir, qtext, 10, mode="exhaustive").toPandas()
+        single = topk(spark, index_dir, qtext, 10).toPandas()
         sub = baseline[baseline.query_id == qid]
-        assert list(ex.doc_id) == list(sub.doc_id), qid
+        assert list(single.doc_id) == list(sub.doc_id), qid
         assert (
-            ex.score.to_numpy().view(np.int64)
+            single.score.to_numpy().view(np.int64)
             == sub.score.to_numpy().view(np.int64)
         ).all(), qid
 
@@ -175,36 +170,6 @@ def test_topk_batch_rank_identity_golden_scale(spark, index_dir, oracle, corpus_
     # sanity: the mix actually produced hits and misses
     assert n_nonempty >= 150
     assert n_nonempty < len(qmap)
-
-
-def test_auto_mode_threshold_derivation_and_identity(spark, index_dir, oracle):
-    """auto mode: the crossover is derived from corpus size (not a magic
-    constant), the resolved mode is observable, and results are
-    rank-identical on both sides of the threshold."""
-    from statschat_ke_spark.index.query import (
-        LAST_QUERY_INFO,
-        auto_mode_threshold,
-        load_stats,
-        topk,
-    )
-
-    q = "what was inflation in december 2023"
-    golden = oracle.topk(q, 10)
-
-    # default: threshold comes from n_docs
-    got = topk(spark, index_dir, q, 10).toPandas()
-    stats = load_stats(index_dir)
-    assert LAST_QUERY_INFO["threshold"] == auto_mode_threshold(int(stats["n_docs"]))
-    assert LAST_QUERY_INFO["mode"] in ("exhaustive", "wand")
-    total_df = LAST_QUERY_INFO["total_df"]
-    assert list(got.doc_id) == list(golden.doc_id)
-
-    # force each side of the crossover around THIS query's Σdf
-    for thr, want in [(total_df + 1, "exhaustive"), (total_df, "wand")]:
-        got = topk(spark, index_dir, q, 10, auto_threshold=thr).toPandas()
-        assert LAST_QUERY_INFO["mode"] == want, (thr, LAST_QUERY_INFO)
-        assert list(got.doc_id) == list(golden.doc_id), want
-        assert np.allclose(got.score.to_numpy(), golden.score.to_numpy(), atol=1e-9)
 
 
 def test_term_blocks_budget_cap(spark, index_dir, queries):
@@ -322,28 +287,3 @@ def test_scores_bit_identical_across_slice_bits(spark, corpus_df, index_dir,
             == baseline.score.to_numpy().view(np.int64)
         ).all(), sb
 
-
-def test_auto_mode_threshold_regimes():
-    """Round-5 re-derivation: below the stage-overhead boundary the 270k
-    crossover (8×n_docs) holds; above it, only the tiny-volume floor routes
-    to exhaustive, because WAND measured faster on every query shape at
-    900k and 3.24M docs (BENCH_LARGE_1M / BENCH_LARGE_3M6)."""
-    from statschat_ke_spark.index.build import BLOCK
-    from statschat_ke_spark.index.query import (
-        STAGE_OVERHEAD_DOCS,
-        auto_mode_threshold,
-    )
-
-    floor = 64 * BLOCK
-    # small-corpus regime: proportional rule, floored
-    assert auto_mode_threshold(1_000) == floor
-    assert auto_mode_threshold(270_000) == 8 * 270_000
-    # large-corpus regime: threshold collapses to the floor, so a standard
-    # 4-term query (Σdf ≈ 3×n_docs) and a selective rare+common query
-    # (Σdf ≈ 0.9×n_docs) BOTH route to wand — the measured-faster mode
-    for n in (900_000, 3_240_000, 10**9):
-        thr = auto_mode_threshold(n)
-        assert thr == floor
-        assert 3 * n > thr and int(0.9 * n) > thr
-    # the boundary sits strictly between the two measured corpora
-    assert 270_000 < STAGE_OVERHEAD_DOCS <= 900_000

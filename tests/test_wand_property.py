@@ -1,4 +1,4 @@
-"""WAND == exhaustive on random posting sets (SURVEY.md §5.2-3).
+"""WAND == brute force on random posting sets (SURVEY.md §5.2-3).
 
 Unit-tests the per-slice block-max WAND function directly (no Spark session)
 against brute-force scoring, including adversarial tie cases.
@@ -81,7 +81,7 @@ def test_wand_matches_bruteforce_random():
             ]
             term_postings[1000 + t] = plist
         pdf, idf_map = _build_slice_pdf(term_postings, avgdl)
-        for k in (1, 5, 20):
+        for k in (0, 1, 5, 20):
             got = _wand_slice(idf_map, avgdl, k)(pdf)
             want = _brute_force(term_postings, idf_map, avgdl, k)
             got_ids = got.doc_id.to_numpy().view(np.uint64).tolist()
