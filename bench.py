@@ -80,17 +80,17 @@ def main() -> None:
         # docs_per_sec derived AFTER the rep loop from the best build wall:
         # computing it per-rep reported whichever rep ran LAST, which under
         # a hypervisor pause contradicts the best-of-N build time beside it
-        extra["index"] = {"n_docs": res.n_docs, "n_terms": res.n_terms}
-        # skew_ratio in every bench JSON (max/mean pack-partition postings):
-        # the trend across corpus sizes is the early-warning signal for when
-        # hot (term_id, slice) keys need further splitting
-        try:
-            with open(os.path.join(idx_dir, "stats.json")) as f:
-                extra["index"]["skew_ratio"] = round(
-                    float(json.load(f).get("skew_ratio", 0.0)), 4
-                )
-        except (OSError, ValueError):
-            pass
+        # n_terms and skew_ratio (max/mean pack-partition postings) come
+        # from the build's metrics; the skew trend across corpus sizes is the
+        # early-warning signal for when hot (term_id, slice) keys need
+        # further splitting
+        with open(os.path.join(idx_dir, "stats.json")) as f:
+            st = json.load(f)
+        extra["index"] = {
+            "n_docs": res.n_docs,
+            "n_terms": st["n_terms"],
+            "skew_ratio": round(float(st["skew_ratio"]), 4),
+        }
         # point the shared cache at the index we just built
         E._INDEX_CACHE[os.path.abspath(sf_dir)] = idx_dir
 

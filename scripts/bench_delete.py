@@ -41,12 +41,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from statschat_ke_spark.index.build import delete_docs
-    from statschat_ke_spark.index.query import load_stats, topk
+    from statschat_ke_spark.index.query import check_index_format, topk
 
     shutil.rmtree(args.work, ignore_errors=True)
     shutil.copytree(args.idx, args.work)
-    stats = load_stats(args.work)
-    n_docs = int(stats["n_docs"])
+    n_docs = int(check_index_format(args.work)["n_docs"])
 
     q = "county population census survey"
 

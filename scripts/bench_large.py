@@ -91,9 +91,8 @@ def _decoded_fraction(spark, idx: str, q: str, k: int = 10):
     collected postings with the block decoder wrapped by a counter."""
     from statschat_ke_spark.index import query as Q
 
-    marker = Q._read_marker(idx)
-    stats = Q._snapshot_stats(idx, marker)
-    terminfo = Q._probe_idf(spark, idx, Q._term_ids(q), marker, int(stats["n_docs"]))
+    marker = Q.check_index_format(idx)
+    terminfo = Q._probe_idf(spark, idx, Q._term_ids(q), marker, int(marker["n_docs"]))
     if not terminfo:
         return None
     total_df = sum(v["df"] for v in terminfo.values())
@@ -103,7 +102,7 @@ def _decoded_fraction(spark, idx: str, q: str, k: int = 10):
     if not len(pst):
         return None
     idf_map = {t: v["idf"] for t, v in terminfo.items()}
-    avgdl = float(stats["avgdl"])
+    avgdl = float(marker["avgdl"])
     decoded = {"n": 0}
     orig = Q._TermBlocks.partials
 
@@ -138,7 +137,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from statschat_ke_spark.index.build import build_index, update_index
-    from statschat_ke_spark.index.query import topk, topk_batch
+    from statschat_ke_spark.index.query import check_index_format, topk, topk_batch
 
     input_dir = _materialize_corpus(args.n_docs)
     spark = _session(args.cpus)
@@ -158,8 +157,7 @@ def main() -> None:
             pass
 
         res = _Res()
-        stats = json.load(open(os.path.join(idx, "stats.json")))
-        res.n_docs, res.n_terms = stats["n_docs"], stats["n_terms"]
+        res.n_docs = check_index_format(idx)["n_docs"]
     else:
         shutil.rmtree(idx, ignore_errors=True)
         t0 = time.time()
@@ -169,7 +167,7 @@ def main() -> None:
         report["index_build"] = {
             "wall_s": round(build_s, 3),
             "n_docs": res.n_docs,
-            "n_terms": res.n_terms,
+            "n_terms": stats["n_terms"],
             "n_postings": stats["n_postings"],
             "docs_per_sec": round(res.n_docs / build_s, 1),
             "postings_per_sec": round(stats["n_postings"] / build_s, 1),

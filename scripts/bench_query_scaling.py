@@ -172,10 +172,12 @@ def main() -> None:
               args.n_groups or None, args.shuffle_partitions)
         return
 
+    from statschat_ke_spark.index.query import check_index_format
+
     stats = json.load(open(os.path.join(args.index, "stats.json")))
     report: dict = {
         "index": args.index,
-        "n_docs": stats["n_docs"],
+        "n_docs": check_index_format(args.index)["n_docs"],
         "n_postings": stats["n_postings"],
         "n_queries": args.n_queries,
         "repeats": args.repeats,

@@ -35,11 +35,23 @@ from bench_scaling import data_proportional_partitions  # noqa: E402
 from bench_skew import QUERIES, _ensure_corpus, _session  # noqa: E402
 
 
+def _en_docs(input_dir: str) -> int:
+    """Docs build_index keeps from the corpus (its default lang="en")."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    lang = pq.read_table(input_dir, columns=["lang"]).column("lang")
+    return int(pc.sum(pc.equal(lang, "en")).as_py() or 0)
+
+
 def build(input_dir: str, bits: int, cpus: int, P: int) -> str:
-    from statschat_ke_spark.index.build import build_index
+    from statschat_ke_spark.index.build import build_index, committed_record
 
     idx = os.path.join(tempfile.gettempdir(), f"statschat_skewq_idx_{bits}")
-    if os.path.exists(os.path.join(idx, "_SUCCESS.json")):
+    # reuse only a committed index of this engine's format built from this
+    # corpus; anything else (other --n-docs, older format) is rebuilt
+    rec = committed_record(idx)
+    if rec is not None and rec["n_docs"] == _en_docs(input_dir):
         return idx
     shutil.rmtree(idx, ignore_errors=True)
     spark = _session(cpus)

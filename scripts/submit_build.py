@@ -71,7 +71,6 @@ def main() -> None:
     out = {
         "complete": res.complete,
         "n_docs": res.n_docs,
-        "n_terms": res.n_terms,
         "wall_s": round(res.wall_s, 2),
         "chunks_processed": res.chunks_processed,
         "chunks_skipped": res.chunks_skipped,
@@ -85,9 +84,12 @@ def main() -> None:
 
         with open(os.path.join(args.index_dir, "stats.json")) as f:
             st = json.load(f)
+        out["n_terms"] = st.get("n_terms")
         out["skew_ratio"] = round(float(st.get("skew_ratio", 0.0)), 4)
         out["n_postings"] = int(st.get("n_postings", 0))
-        out["postings_per_sec"] = round(float(st.get("postings_per_sec", 0.0)), 1)
+        out["postings_per_sec"] = (
+            round(out["n_postings"] / res.wall_s, 1) if res.wall_s > 0 else 0.0
+        )
         out["phase_timings_s"] = st.get("phase_timings_s")
     except (OSError, ValueError, KeyError):
         pass

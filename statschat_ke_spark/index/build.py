@@ -61,9 +61,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from statschat_ke_spark.functions.extract import extract_text_udf
 from statschat_ke_spark.index.codec import BLOCK, vbyte_encode_chunks
+from statschat_ke_spark.index.query import check_index_format, read_commit
 
-K1 = 1.2
-B = 0.75
 # FLOOR for the per-segment doc-range slice count (2^SLICE_BITS slices).
 # The actual slice_bits of a segment is derived from its own doc count at
 # build time (derive_slice_bits below) so a web-scale build never ships the
@@ -71,7 +70,7 @@ B = 0.75
 # one pack reducer sorts and one WAND task scans — so the count must grow
 # with the corpus. Queries treat `slice` as opaque data (grouped by pmod),
 # so segments with different slice_bits coexist exactly; the value used is
-# recorded in stats.json per build.
+# reported in the build's stats.json metrics.
 SLICE_BITS = 6
 # Target upper bound on docs per slice: a term occurring in EVERY doc still
 # packs/scans at most this many postings per (term_id, slice) shuffle key.
@@ -96,9 +95,10 @@ def derive_slice_bits(n_docs: int, *, target: int = DOCS_PER_SLICE_TARGET) -> in
     chosen: see the BENCH_SKEW.json note on DOCS_PER_SLICE_TARGET above."""
     n_slices = -(-max(1, n_docs) // max(1, target))  # ceil division
     return min(24, max(SLICE_BITS, (n_slices - 1).bit_length()))
-# Bump when the on-disk postings/lexicon layout changes; recorded in
-# _SUCCESS.json so stale caches rebuild instead of misreading.
-INDEX_FORMAT = 2
+# Bump when the on-disk layout or the commit record changes; recorded in
+# _SUCCESS.json so stale caches rebuild instead of misreading. 3: the
+# _SUCCESS.json record is the only snapshot state (stats.json is metrics).
+INDEX_FORMAT = 3
 LONG_MIN = -(2**63)
 # Arrow batch rows for the pack stage. Pack input rows are 28 fixed-width
 # bytes, so 128k rows ≈ 3.6 MB per batch; the 10k default caused a
@@ -328,8 +328,6 @@ class BuildResult:
     index_dir: str
     n_docs: int
     avgdl: float
-    n_terms: int
-    n_posting_rows: int
     wall_s: float
     chunks_processed: int
     chunks_skipped: int
@@ -602,7 +600,9 @@ def build_index(
     stay bounded at any scale. Rank/score results are invariant to it.
 
     Layout: staged/ (phase A, per-chunk), docs/, lexicon/, postings/,
-    _lineage/, _metrics/, stats.json, _SUCCESS.json.
+    _lineage/, _metrics/, tombstones/, _SUCCESS.json (the commit record,
+    the only snapshot state) and stats.json (metrics of the last segment
+    build; the engine never reads it).
 
     ``docs`` is a DataFrame or a parquet dataset PATH. With a path and
     ``n_chunks > 1``, chunks are cut at the FILE LISTING (round-robin over
@@ -652,8 +652,6 @@ def build_index(
                 index_dir=index_dir,
                 n_docs=0,
                 avgdl=0.0,
-                n_terms=0,
-                n_posting_rows=0,
                 wall_s=time.time() - t0,
                 chunks_processed=processed,
                 chunks_skipped=len(done_chunks),
@@ -676,14 +674,10 @@ def build_index(
         _stage_chunk(spark, cdf, index_dir, chunk, n_files=n_files)
         processed += 1
 
-    result = merge_index(
-        spark, index_dir, num_partitions=P, n_chunks=n_chunks,
-        slice_bits=slice_bits,
-    )
+    result = merge_index(spark, index_dir, num_partitions=P, slice_bits=slice_bits)
     result.chunks_processed = processed
     result.chunks_skipped = len(done_chunks)
     result.wall_s = time.time() - t0
-    _finalize_stats(index_dir, result.wall_s)
     return result
 
 
@@ -736,7 +730,8 @@ def update_index(
     # the in-flight chunk/segment is invisible and queries keep serving the
     # old snapshot (same reader story as ingest_stream). Only table-rewriting
     # paths (merge_index, reached via strategy='compact' or maybe_compact)
-    # invalidate the marker, immediately before clearing the table dirs.
+    # swap it for an uncommitted record, immediately before clearing the
+    # table dirs.
     existing_path = os.path.join(index_dir, "staged")
     if os.path.exists(existing_path):
         existing = spark.read.parquet(existing_path).select("url")
@@ -745,18 +740,16 @@ def update_index(
     next_chunk = (max(done) + 1) if done else 0
     _stage_chunk(spark, base, index_dir, next_chunk)
 
-    # no prior completed merge (fresh dir) → the delta IS the whole index;
-    # compaction and segment-append coincide, take the compaction path
-    has_base = os.path.exists(os.path.join(index_dir, "stats.json"))
-    if strategy == "compact" or not has_base:
+    # no committed base (fresh dir, unfinished compaction) → the delta is
+    # merged with every staged chunk; take the compaction path
+    base_rec = committed_record(index_dir)
+    if strategy == "compact" or base_rec is None:
         result = merge_index(
-            spark, index_dir, num_partitions=P, n_chunks=next_chunk + 1,
-            slice_bits=slice_bits,
+            spark, index_dir, num_partitions=P, slice_bits=slice_bits
         )
         result.chunks_processed = 1
         result.chunks_skipped = len(done)
         result.wall_s = time.time() - t0
-        _finalize_stats(index_dir, result.wall_s)
         return result
 
     # Reconcile ALL pending chunks (staged minus covered), not only the one
@@ -766,7 +759,7 @@ def update_index(
     # only next_chunk would then mark the index complete with the earlier
     # orphan chunk silently unpacked. Same reconciliation as ingest_stream.
     pending = sorted(
-        staged_chunks(spark, index_dir) - covered_chunks(index_dir)
+        staged_chunks(spark, index_dir) - set(base_rec["covered_chunks"])
     )
     appended = list(pending)
     result = None
@@ -794,16 +787,6 @@ def update_index(
     return result
 
 
-def _existing_segments(index_dir: str) -> list[int]:
-    """On-disk DATA segment numbers (postings/ dir listing)."""
-    p = os.path.join(index_dir, "postings")
-    if not os.path.isdir(p):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(p) if d.startswith("seg=")
-    )
-
-
 def _listed_delta_segments(index_dir: str) -> list[int]:
     """Lexicon-only delete-delta segment dirs present ON DISK (committed or
     not) — used only to pick collision-free new ids; never published."""
@@ -821,19 +804,14 @@ def _listed_delta_segments(index_dir: str) -> list[int]:
     )
 
 
-def _committed_segments(index_dir: str, stats: dict) -> list[int]:
-    """The segment list a commit marker should publish: data segments from
-    the postings listing, plus the delete-delta segments stats.json records
-    as COMMITTED. Delta dirs are deliberately NOT taken from the directory
-    listing — a delete that crashed between its lexicon-delta write and its
-    stats/marker commit leaves an orphan dir, and publishing it through a
-    later append's marker would subtract df without the matching tombstone
-    or n_docs decrement (silently wrong idf). Orphan dirs are inert garbage
-    until the next compaction clears the lexicon table."""
-    return sorted(
-        set(_existing_segments(index_dir))
-        | {int(s) for s in stats.get("delete_segments", [])}
-    )
+def committed_record(index_dir: str) -> dict | None:
+    """The committed snapshot record, or None when there is no committed
+    base to append to: a fresh dir, a compaction that did not finish, or an
+    index of another format. Writers then take the full-merge path."""
+    try:
+        return check_index_format(index_dir)
+    except RuntimeError:
+        return None
 
 
 def maybe_compact(
@@ -846,9 +824,9 @@ def maybe_compact(
     """Fold all segments back into seg=0 when the count exceeds
     ``max_segments`` (None = never). Returns the compaction result, or None
     when no compaction was needed. Safe mid-lifecycle: merge_index
-    invalidates _SUCCESS before touching tables and rebuilds from the staged
-    chunks, so a crash here degrades to a resumable rebuild, never a
-    corrupt-but-complete index.
+    replaces the commit record with an uncommitted one before touching
+    tables and rebuilds from the staged chunks, so a crash here degrades to
+    a resumable rebuild, never a corrupt-but-complete index.
 
     Reader concurrency: segment APPENDS are reader-safe (queries prune to
     the committed segment list and never see the in-flight segment), but
@@ -860,7 +838,11 @@ def maybe_compact(
     path."""
     if max_segments is None:
         return None
-    if len(_existing_segments(index_dir)) <= max_segments:
+    data_segs = [
+        s for s in check_index_format(index_dir)["segments"]
+        if s < DELETE_SEG_BASE
+    ]
+    if len(data_segs) <= max_segments:
         return None
     out = merge_index(spark, index_dir, num_partitions=num_partitions)
     out.compacted = True
@@ -877,21 +859,19 @@ class DeleteResult:
     tombstone_file: str | None  # None when the call was a no-op
 
 
-def _tombstone_paths(index_dir: str, stats: dict) -> list[str]:
-    return [
-        os.path.join(index_dir, "tombstones", f)
-        for f in stats.get("tombstone_files", [])
-    ]
-
-
-def _tombstone_df(spark: SparkSession, index_dir: str, stats: dict):
+def _tombstone_df(spark: SparkSession, index_dir: str, files: list[str]):
     """Tombstoned doc_ids as a (tiny) DataFrame, or None when there are none.
     Read from the delete files directly so writer-side joins see exactly the
     committed delete set."""
-    paths = _tombstone_paths(index_dir, stats)
-    if not paths:
+    if not files:
         return None
-    return spark.read.parquet(*paths).select("doc_id").distinct()
+    return (
+        spark.read.parquet(
+            *(os.path.join(index_dir, "tombstones", f) for f in files)
+        )
+        .select("doc_id")
+        .distinct()
+    )
 
 
 @_single_writer
@@ -913,27 +893,29 @@ def delete_docs(
       more segment. All lifetime deletes FOLD into a single delta segment
       (the previous delta is re-aggregated with the new one), so probe
       fan-out stays O(1) no matter how many takedown calls accumulate;
-    - **stats** (n_docs, avgdl) are decremented exactly from the deleted
-      docs' doclens, keeping the BM25 length normalization exact.
+    - the commit record's **n_docs, avgdl** are decremented exactly from
+      the deleted docs' doclens, keeping the BM25 length normalization
+      exact.
 
     The result is bit-identical to an index built without the deleted docs
     (rank AND score — property-tested), while the delete itself costs one
     pushed-down scan of the staged table plus a |deleted|-sized aggregation.
 
-    Scope: only docs in the COMMITTED snapshot (staged chunks listed in
-    stats.json's covered_chunks) are deletable — a url sitting in a
+    Scope: only docs in the COMMITTED snapshot (staged chunks listed in the
+    commit record's covered_chunks) are deletable — a url sitting in a
     staged-but-unmerged chunk (``ingest_stream(merge=False)``, or the window
     between _stage_chunk and append_segment) was never added to the
-    committed stats, so subtracting it would corrupt n_docs/idf for the live
-    corpus. Delete it after its chunk commits.
+    committed n_docs, so subtracting it would corrupt n_docs/idf for the
+    live corpus. Delete it after its chunk commits.
 
-    Crash safety: the stats/_SUCCESS rename is the commit point. The delta
-    segment is written to a fresh reserved id first (never in any marker
-    until committed — marker segment lists come from _committed_segments,
-    not directory listing), the tombstone file second, stats+marker last. A
-    crash anywhere before the marker rename leaves the committed snapshot
-    untouched plus inert orphan files; a retry re-finds the victims (their
-    tombstone never committed) and performs the delete exactly once.
+    Crash safety: the _SUCCESS.json rename is the single commit point. The
+    delta segment is written to a fresh reserved id first (never in any
+    record until committed — every new segment list is the committed list
+    plus the new segment, never a directory listing), the tombstone file
+    second, the commit record last. A crash anywhere before that rename
+    leaves the committed snapshot untouched plus inert orphan files; a retry
+    re-finds the victims (their tombstone never committed) and performs the
+    delete exactly once.
 
     Physical reclaim happens at the next compaction (merge_index excludes
     tombstoned docs when it rebuilds, so posting bytes shrink), but the
@@ -952,22 +934,7 @@ def delete_docs(
     (no double-subtraction of df/avgdl).
     """
     t0 = time.time()
-    stats_path = os.path.join(index_dir, "stats.json")
-    if not os.path.exists(stats_path):
-        raise RuntimeError(
-            f"index at {index_dir!r} has no completed build (stats.json "
-            "missing) — delete_docs needs a committed index"
-        )
-    with open(stats_path) as f:
-        old = json.load(f)
-    try:
-        with open(os.path.join(index_dir, "_SUCCESS.json")) as f:
-            old_marker = json.load(f)
-    except (OSError, ValueError):
-        raise RuntimeError(
-            f"index at {index_dir!r} has no committed _SUCCESS.json — "
-            "delete_docs mutates only committed snapshots"
-        ) from None
+    old = check_index_format(index_dir)  # only committed snapshots mutate
     if isinstance(urls, DataFrame):
         url_df = urls.select("url").distinct()
     else:
@@ -975,13 +942,12 @@ def delete_docs(
             [(str(u),) for u in urls], "url string"
         ).distinct()
 
-    staged = spark.read.parquet(os.path.join(index_dir, "staged"))
-    covered = old.get("covered_chunks")
-    if covered is not None:
-        # committed corpus only — see "Scope" in the docstring
-        staged = staged.filter(F.col("chunk").isin([int(c) for c in covered]))
+    # committed corpus only — see "Scope" in the docstring
+    staged = spark.read.parquet(os.path.join(index_dir, "staged")).filter(
+        F.col("chunk").isin(old["covered_chunks"])
+    )
     victims = staged.join(F.broadcast(url_df), "url", "semi")
-    tomb = _tombstone_df(spark, index_dir, old)
+    tomb = _tombstone_df(spark, index_dir, old["tombstone_files"])
     if tomb is not None:
         # idempotence: docs already tombstoned must not subtract twice
         victims = victims.join(F.broadcast(tomb), "doc_id", "left_anti")
@@ -991,7 +957,7 @@ def delete_docs(
         .dropDuplicates(["doc_id"])
         .persist()
     )
-    old_delta_segs = [int(s) for s in old.get("delete_segments", [])]
+    old_delta_segs = [s for s in old["segments"] if s >= DELETE_SEG_BASE]
     try:
         hit = victims.select("doc_id", "doclen").collect()  # ≤ |urls| rows
         if not hit:
@@ -1064,21 +1030,14 @@ def delete_docs(
         if n_docs
         else 0.0
     )
-    stats = {
-        **old,
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "tombstone_files": list(old.get("tombstone_files", [])) + [fname],
-        "delete_segments": [seg],  # the folded delta supersedes prior ones
-        "n_deleted_total": int(old.get("n_deleted_total", 0)) + n_del,
-        "last_delete": {"n_docs": n_del, "segment": seg},
-    }
-    _write_stats_and_success(
+    _commit(
         index_dir,
-        stats,
-        old_marker.get("chunks", 0),
-        _committed_segments(index_dir, stats),
-        old.get("covered_chunks", []),
+        n_docs=n_docs,
+        avgdl=avgdl,
+        # the folded delta supersedes prior ones
+        segments=[s for s in old["segments"] if s < DELETE_SEG_BASE] + [seg],
+        covered_chunks=old["covered_chunks"],
+        tombstone_files=old["tombstone_files"] + [fname],
     )
     return DeleteResult(
         index_dir=index_dir,
@@ -1102,37 +1061,29 @@ def append_segment(
     """Pack ALREADY-STAGED chunk N into index segment N and merge the global
     stats incrementally — the delta-proportional phase-B unit shared by
     ``update_index(strategy='segment')`` and the streaming drain. Requires a
-    completed prior merge (stats.json); idempotent: an already-appended or
-    empty chunk just refreshes the success marker."""
+    committed base; idempotent: an already-appended or empty chunk commits
+    nothing."""
     t0 = time.time()
     P = num_partitions or spark.sparkContext.defaultParallelism
     timings: dict[str, float] = {}
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        old = json.load(f)
-    n_chunks = len(staged_chunks(spark, index_dir))
+    old = check_index_format(index_dir)
 
     def _unchanged() -> BuildResult:
-        _write_stats_and_success(
-            index_dir, old, n_chunks, _committed_segments(index_dir, old),
-            old.get("covered_chunks", []),
-        )
         return BuildResult(
             index_dir=index_dir,
             n_docs=int(old["n_docs"]),
             avgdl=float(old["avgdl"]),
-            n_terms=int(old["n_terms"]),
-            n_posting_rows=int(old.get("n_posting_rows", 0)),
             wall_s=time.time() - t0,
             chunks_processed=0,
             chunks_skipped=0,
         )
 
-    if chunk in set(old.get("covered_chunks", [])):
+    if chunk in old["covered_chunks"]:
         return _unchanged()  # replayed drain / already-compacted chunk
     staged_k = spark.read.parquet(
         os.path.join(index_dir, "staged", f"chunk={chunk}")
     )
-    tomb = _tombstone_df(spark, index_dir, old)
+    tomb = _tombstone_df(spark, index_dir, old["tombstone_files"])
     if tomb is not None:
         # terminal-delete enforcement at the phase-B choke point: a chunk
         # that re-lands a tombstoned url (streaming drains have no url
@@ -1164,58 +1115,24 @@ def append_segment(
     avgdl = (
         (old["n_docs"] * old["avgdl"] + dl_delta) / n_docs if n_docs else 0.0
     )
-    n_terms = (
-        spark.read.parquet(os.path.join(index_dir, "lexicon"))
-        .select("term_id")
-        .distinct()
-        .count()
+    _commit(
+        index_dir,
+        n_docs=n_docs,
+        avgdl=avgdl,
+        segments=old["segments"] + [chunk],
+        covered_chunks=old["covered_chunks"] + [chunk],
+        tombstone_files=old["tombstone_files"],
     )
     wall = time.time() - t0
-    stats = {
-        **old,
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "n_terms": int(n_terms),
-        "n_posting_rows": int(old.get("n_posting_rows", 0)) + seg_stats["rows"],
-        "n_postings": int(old.get("n_postings", 0)) + seg_stats["postings"],
-        "postings_per_sec": (seg_stats["postings"] / wall) if wall > 0 else 0.0,
-        "build_wall_s": wall,
-        "phase_timings_s": {k: round(v, 3) for k, v in timings.items()},
-        "last_delta": {"segment": chunk, "n_docs": n_delta},
-        "covered_chunks": sorted(set(old.get("covered_chunks", [])) | {chunk}),
-    }
-    _write_stats_and_success(
-        index_dir, stats, n_chunks, _committed_segments(index_dir, stats),
-        stats["covered_chunks"],
-    )
+    _write_build_metrics(index_dir, seg_stats, sb, timings, wall)
     return BuildResult(
         index_dir=index_dir,
         n_docs=n_docs,
         avgdl=avgdl,
-        n_terms=int(n_terms),
-        n_posting_rows=stats["n_posting_rows"],
         wall_s=wall,
         chunks_processed=1,
         chunks_skipped=0,
     )
-
-
-def _invalidate_success(index_dir: str) -> None:
-    p = os.path.join(index_dir, "_SUCCESS.json")
-    if os.path.exists(p):
-        os.remove(p)
-
-
-def _finalize_stats(index_dir: str, wall_s: float) -> None:
-    """Rewrite wall-clock-derived metrics to cover phase A + phase B."""
-    p = os.path.join(index_dir, "stats.json")
-    with open(p) as f:
-        stats = json.load(f)
-    stats["build_wall_s"] = wall_s
-    stats["postings_per_sec"] = (
-        stats["n_postings"] / wall_s if wall_s > 0 else 0.0
-    )
-    _atomic_json(p, stats, indent=2)
 
 
 def _check_term_collisions(term_dict: DataFrame) -> None:
@@ -1255,7 +1172,7 @@ def _build_segment(
     are disjoint across segments, and BM25 globals (idf, avgdl) are merged
     at query/probe time, never baked into posting bytes.
 
-    Returns {n_posting_rows, n_postings, max_p, avg_p} for stats.
+    Returns {rows, postings, max_p, avg_p, n_terms} for the build metrics.
     """
     seg_sub = f"seg={seg}"
     staged_docs = staged.select("doc_id", "url", "doclen")
@@ -1410,46 +1327,69 @@ def _clear_dir(path: str) -> None:
         shutil.rmtree(path)
 
 
-def _write_stats_and_success(
-    index_dir: str, stats: dict, n_chunks, segments, covered_chunks
+def _commit(
+    index_dir: str,
+    *,
+    n_docs: int,
+    avgdl: float,
+    segments: list[int],
+    covered_chunks: list[int] | set[int],
+    tombstone_files: list[str],
 ) -> None:
-    """``covered_chunks`` records which staged chunks the current segments
-    contain — a compaction folds MANY chunks into seg=0, so `staged minus
-    segments` alone would wrongly re-append compacted chunks.
+    """Publish one snapshot. The atomic rename of _SUCCESS.json is the ONLY
+    commit point (the Iceberg metadata-pointer swap): a query reads the
+    record once and gets its segment list, scoring globals and delete files
+    from the same commit, and a crash before the rename leaves the previous
+    snapshot whole.
 
-    Both files are written via tmp + atomic rename: a query racing the
-    commit (ingest_stream + serving in one driver) must see either the old
-    or the new JSON, never a torn write."""
-    _atomic_json(os.path.join(index_dir, "stats.json"), stats, indent=2)
+    - ``segments``: the committed list plus whatever this commit adds —
+      never a directory listing, so orphan dirs of a crashed writer stay
+      unpublished. Lexicon-only delete-delta segments are the ids
+      >= DELETE_SEG_BASE.
+    - ``covered_chunks``: the staged chunks the segments contain (a
+      compaction folds MANY chunks into seg=0, so `staged minus segments`
+      alone would wrongly re-append compacted chunks).
+    - ``tombstone_files``: this snapshot's delete files under tombstones/
+      (Iceberg positional-delete analog); readers mask them, merges exclude
+      them.
+    - ``version``: unique per commit — the query probe cache keys on it,
+      not on mtime, which back-to-back appends can share."""
     _atomic_json(
         os.path.join(index_dir, "_SUCCESS.json"),
         {
-            "complete": True,
-            "chunks": n_chunks,
-            "segments": segments,
-            "covered_chunks": sorted(covered_chunks),
             "format": INDEX_FORMAT,
-            # Scoring globals embedded IN the snapshot marker: a query that
-            # reads the marker once gets (segment list, n_docs, avgdl) from
-            # the same commit, so a concurrent append can never pair one
-            # snapshot's postings with another's idf/avgdl (stats.json and
-            # _SUCCESS.json are two separate renames — readers that consult
-            # both can interleave a commit between them).
-            "stats": {
-                "n_docs": int(stats["n_docs"]),
-                "avgdl": float(stats["avgdl"]),
-            },
-            # Delete files of this snapshot (Iceberg positional-delete
-            # analog): parquet files of tombstoned doc_ids under
-            # tombstones/. Readers mask these ids out of scoring; merges
-            # exclude them from rebuilt segments (see delete_docs).
-            "tombstone_files": list(stats.get("tombstone_files", [])),
-            # Unique per commit: the query probe cache keys on this, not
-            # on mtime — back-to-back segment appends (ingest_stream) can
-            # land within one mtime granule on coarse-timestamp
-            # filesystems and would otherwise leave stale df cached.
             "version": uuid.uuid4().hex,
+            "n_docs": int(n_docs),
+            "avgdl": float(avgdl),
+            "segments": sorted(int(s) for s in segments),
+            "covered_chunks": sorted(int(c) for c in covered_chunks),
+            "tombstone_files": list(tombstone_files),
         },
+    )
+
+
+def _write_build_metrics(
+    index_dir: str, seg_stats: dict, slice_bits: int, timings: dict,
+    wall: float, **extra,
+) -> None:
+    """stats.json: metrics of the segment build that just ran, written after
+    the commit. Write-only — nothing in the engine reads it."""
+    _atomic_json(
+        os.path.join(index_dir, "stats.json"),
+        {
+            "n_postings": seg_stats["postings"],
+            "n_posting_rows": seg_stats["rows"],
+            "skew_ratio": (
+                seg_stats["max_p"] / seg_stats["avg_p"]
+                if seg_stats["avg_p"] else 1.0
+            ),
+            "slice_bits": slice_bits,
+            "phase_timings_s": {k: round(v, 3) for k, v in timings.items()},
+            "build_wall_s": wall,
+            "postings_per_sec": seg_stats["postings"] / wall if wall > 0 else 0.0,
+            **extra,
+        },
+        indent=2,
     )
 
 
@@ -1460,27 +1400,12 @@ def _atomic_json(path: str, obj, *, indent=None) -> None:
     os.replace(tmp, path)
 
 
-def covered_chunks(index_dir: str) -> set[int]:
-    """Staged chunks already folded into index segments. Read from
-    stats.json (read by writers; independent of the _SUCCESS marker,
-    which only describes the committed reader snapshot)."""
-    p = os.path.join(index_dir, "stats.json")
-    if not os.path.exists(p):
-        return set()
-    try:
-        with open(p) as f:
-            return set(json.load(f).get("covered_chunks", []))
-    except Exception:
-        return set()
-
-
 @_single_writer
 def merge_index(
     spark: SparkSession,
     index_dir: str,
     *,
     num_partitions: int | None = None,
-    n_chunks: int | None = None,
     slice_bits: int | None = None,
 ) -> BuildResult:
     """Phase B COMPACTION: global stats, lexicon, postings from ALL staged
@@ -1494,23 +1419,14 @@ def merge_index(
     # physical reclaim of deletes: tombstoned docs are excluded from the
     # rebuilt segment (posting bytes shrink), but the tombstone files carry
     # forward — the immutable staged chunks still hold the deleted rows, so
-    # every future rebuild must keep filtering (see delete_docs)
-    tomb_files: list[str] = []
-    old_stats_path = os.path.join(index_dir, "stats.json")
-    if os.path.exists(old_stats_path):
-        try:
-            with open(old_stats_path) as f:
-                tomb_files = list(json.load(f).get("tombstone_files", []))
-        except (OSError, ValueError):
-            tomb_files = []
-    if tomb_files:
-        tomb = _tombstone_df(spark, index_dir, {"tombstone_files": tomb_files})
+    # every future rebuild must keep filtering (see delete_docs). Read from
+    # the committed record, or from the uncommitted one a crashed compaction
+    # left behind.
+    tomb_files = list(read_commit(index_dir).get("tombstone_files", []))
+    tomb = _tombstone_df(spark, index_dir, tomb_files)
+    if tomb is not None:
         staged = staged.join(F.broadcast(tomb), "doc_id", "left_anti")
     all_chunks = staged_chunks(spark, index_dir)
-    if n_chunks is None:
-        # keep the _SUCCESS marker truthful when invoked standalone (e.g.
-        # after a streaming drain): count the actually-staged chunks
-        n_chunks = len(all_chunks)
 
     stats_row = staged.agg(
         F.count("*").alias("n_docs"), F.avg("doclen").alias("avgdl")
@@ -1532,12 +1448,15 @@ def merge_index(
     P_docs = max(1, min(2048, n_docs // 2_000_000 + 1))
     sb = slice_bits if slice_bits is not None else derive_slice_bits(n_docs)
 
-    # compaction owns the whole table dirs: invalidate the completion marker
-    # BEFORE gutting them — a crash mid-compaction must not leave a
-    # complete=True _SUCCESS over cleared/partial tables. This is the ONLY
-    # invalidation in the lifecycle: staging and segment append leave the
-    # marker (and with it the old reader snapshot) intact.
-    _invalidate_success(index_dir)
+    # compaction owns the whole table dirs: BEFORE gutting them, atomically
+    # replace the commit record with an uncommitted one that keeps only the
+    # tombstones. Readers and delete_docs refuse it, update_index and
+    # ingest_stream take the merge path, and a retried merge_index reads its
+    # tombstones from it. This is the ONLY invalidation in the lifecycle:
+    # staging and segment append leave the committed snapshot intact.
+    _atomic_json(
+        os.path.join(index_dir, "_SUCCESS.json"), {"tombstone_files": tomb_files}
+    )
     for sub in ("postings", "docs", "lexicon", "_metrics"):
         _clear_dir(os.path.join(index_dir, sub))
 
@@ -1545,45 +1464,27 @@ def merge_index(
         spark, staged, index_dir, 0, P_pack=P_pack, P_docs=P_docs,
         timings=timings, slice_bits=sb,
     )
+    # compaction folds the deletes physically: the rebuilt lexicon is
+    # computed over the survivors, so no delta segment remains live (the
+    # cleared lexicon/ dir also reclaimed any orphan/superseded delta dirs)
+    _commit(
+        index_dir,
+        n_docs=n_docs,
+        avgdl=avgdl,
+        segments=[0],
+        covered_chunks=all_chunks,
+        tombstone_files=tomb_files,
+    )
+    wall = time.time() - t0
     # a full compaction leaves exactly one segment, so the segment's observed
     # lexicon row count IS the global term count — no read-back job
-    n_terms = seg_stats["n_terms"]
-    wall = time.time() - t0
-
-    stats = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "k1": K1,
-        "b": B,
-        "slice_bits": sb,
-        "block": BLOCK,
-        "n_terms": int(n_terms),
-        "n_posting_rows": seg_stats["rows"],
-        "n_postings": seg_stats["postings"],
-        "postings_per_sec": (seg_stats["postings"] / wall) if wall > 0 else 0.0,
-        "skew_ratio": (
-            seg_stats["max_p"] / seg_stats["avg_p"] if seg_stats["avg_p"] else 1.0
-        ),
-        "build_wall_s": wall,
-        "phase_timings_s": {k: round(v, 3) for k, v in timings.items()},
-        "covered_chunks": sorted(all_chunks),
-        "tombstone_files": tomb_files,
-        # compaction folds the deletes physically: the rebuilt lexicon is
-        # computed over the survivors, so no delta segment remains live
-        # (the cleared lexicon/ dir also reclaimed any orphan/superseded
-        # delta dirs)
-        "delete_segments": [],
-    }
-    _write_stats_and_success(
-        index_dir, stats, n_chunks, segments=[0], covered_chunks=all_chunks
+    _write_build_metrics(
+        index_dir, seg_stats, sb, timings, wall, n_terms=seg_stats["n_terms"]
     )
-
     return BuildResult(
         index_dir=index_dir,
         n_docs=n_docs,
         avgdl=avgdl,
-        n_terms=int(n_terms),
-        n_posting_rows=seg_stats["rows"],
         wall_s=wall,
         chunks_processed=0,
         chunks_skipped=0,

@@ -53,42 +53,44 @@ RESULT_SCHEMA = T.StructType(
 )
 
 
-def load_stats(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        return json.load(f)
+def read_commit(index_dir: str) -> dict:
+    """The index's ``_SUCCESS.json`` record as written ({} when absent or
+    torn). The record is the index's only snapshot state: ``format``,
+    ``version`` (a uuid per commit), ``n_docs``, ``avgdl``, ``segments``,
+    ``covered_chunks`` and ``tombstone_files``; its atomic rename is the only
+    commit point. A compaction in flight replaces it with an uncommitted
+    record holding only ``tombstone_files`` (see merge_index). Writers read
+    it raw only to recover those tombstones; everything else goes through
+    check_index_format."""
+    try:
+        with open(os.path.join(index_dir, "_SUCCESS.json")) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return {}
 
 
 def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
-    """Fail fast, with a clear message, before querying an index that is not
-    a committed snapshot of the format this engine reads. Returns the parsed
-    commit marker so callers get their whole snapshot (format, segment list,
-    scoring globals) from ONE read.
+    """Fail fast, with a clear message, before reading an index that is not
+    a committed snapshot of the format this engine reads. Returns the commit
+    record so callers get their whole snapshot (format, segment list,
+    scoring globals, tombstones) from ONE read.
 
-    Three distinct failure shapes, all otherwise confusing at query time:
-    an ABSENT ``_SUCCESS.json`` means the last build/append never committed
-    (crash mid-build, or an ``ingest_stream(merge=False)`` drain awaiting its
-    merge) — tables may be partially written; a TORN/CORRUPT marker (invalid
-    JSON — e.g. written by a pre-atomic-rename engine on a crash) is reported
-    the same way rather than escaping as a raw JSONDecodeError; a
-    format-version MISMATCH means the posting/block layout on disk is not
-    what this decoder assumes (e.g. a v1 index's baked tf-normalized block
-    bounds would make v2's avgdl-free WAND pruning silently unsafe rather
-    than loudly wrong)."""
+    An absent, torn or uncommitted record (no ``version``) means the last
+    build never committed (crash mid-build, an ``ingest_stream(merge=False)``
+    drain awaiting its merge, or a compaction that did not finish) — tables
+    may be partially written. A format MISMATCH means the on-disk layout is
+    not what this engine assumes: rebuild."""
     from statschat_ke_spark.index.build import INDEX_FORMAT
 
     if marker is None:
-        p = os.path.join(index_dir, "_SUCCESS.json")
-        try:
-            with open(p) as f:
-                marker = json.load(f)
-        except (OSError, ValueError):
-            marker = {}
-    if not marker:
+        marker = read_commit(index_dir)
+    if "version" not in marker:
         raise RuntimeError(
-            f"index at {index_dir!r} has no _SUCCESS.json commit marker "
-            "(absent or torn) — the build was interrupted before commit or "
-            "a streaming drain ran with merge=False; finish the build "
-            "(merge_index / append_segment) before querying"
+            f"index at {index_dir!r} has no _SUCCESS.json commit record "
+            "(absent, torn, or left by an unfinished compaction) — the build "
+            "was interrupted before commit or a streaming drain ran with "
+            "merge=False; finish the build (merge_index / append_segment) "
+            "before querying"
         )
     fmt = marker.get("format")
     if fmt != INDEX_FORMAT:
@@ -103,68 +105,41 @@ def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
 # Driver-side probe cache — the engine analog of the reference's
 # ``lru_cache`` on make_query (cloud_llm.py:235, SURVEY §2.8 "query-result
 # cache dict in the query driver"). Keyed by the index's commit version
-# (the uuid in _SUCCESS.json — unique per _write_stats_and_success commit),
-# NOT mtime: back-to-back segment appends can land within one mtime granule
-# on coarse-timestamp filesystems and would leave stale df cached. Values:
-# term_id → df (0 = probed and absent). Bounded by the number of distinct
-# QUERIED terms, not the lexicon.
+# (the uuid in _SUCCESS.json — unique per commit), NOT mtime: back-to-back
+# segment appends can land within one mtime granule on coarse-timestamp
+# filesystems and would leave stale df cached. Values: term_id → df
+# (0 = probed and absent). Bounded by the number of distinct QUERIED terms,
+# not the lexicon.
 _PROBE_CACHE: dict[tuple[str, str], dict[int, int]] = {}
-
-
-def _read_marker(index_dir: str) -> dict:
-    """The _SUCCESS.json snapshot commit record ({} when absent/unreadable).
-    One read serves both the version (probe-cache key) and the committed
-    segment list (reader-side snapshot pruning) so the two can't disagree
-    across a concurrent commit."""
-    try:
-        with open(os.path.join(index_dir, "_SUCCESS.json")) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return {}
 
 
 def _index_version(index_dir: str, marker: dict | None = None) -> str:
     if marker is None:
-        marker = _read_marker(index_dir)
-    if not marker:
-        return "<absent>"
-    try:
-        # per-commit uuid (format ≥ r3); fall back to mtime for older markers
-        return str(
-            marker.get("version")
-            or os.path.getmtime(os.path.join(index_dir, "_SUCCESS.json"))
-        )
-    except OSError:
-        return "<absent>"
+        marker = read_commit(index_dir)
+    return str(marker.get("version", "<absent>"))
 
 
 def _prune_to_snapshot(df: DataFrame, marker: dict) -> DataFrame:
     """Restrict a segmented table scan (postings/lexicon/docs, partitioned by
-    ``seg``) to the segments the commit marker lists.
+    ``seg``) to the segments the commit record lists.
 
     The table dirs are enumerated by file listing, so WITHOUT this filter a
     reader racing a concurrent ``append_segment`` would pick up a fully
-    written ``seg=N`` whose commit (stats.json + _SUCCESS) hasn't landed —
+    written ``seg=N`` whose commit (the _SUCCESS.json rename) hasn't landed —
     scoring uncommitted docs under the old global stats. ``seg`` is a
     partition column, so the isin() prunes at planning time (no extra job,
     no data read from uncommitted dirs) — the Iceberg snapshot-read analog."""
-    segs = marker.get("segments")
-    if segs is None:
-        return df  # pre-segments marker: directory contents ARE the snapshot
-    return df.filter(F.col("seg").isin([int(s) for s in segs]))
+    return df.filter(F.col("seg").isin([int(s) for s in marker["segments"]]))
 
 
 def _probe_dfs(
-    spark: SparkSession, index_dir: str, ids: list[int], marker: dict | None = None
+    spark: SparkSession, index_dir: str, ids: list[int], marker: dict
 ) -> dict[int, int]:
     """df per term_id (summed over the COMMITTED lexicon segments),
-    probe-cached. The snapshot prune and the cache key come from one marker
-    read — the CALLER's when provided (topk/topk_batch pass the marker their
-    whole query runs against, so probed df can never describe a different
-    commit than the postings scan) — so cached df always describes the keyed
-    version."""
-    if marker is None:
-        marker = _read_marker(index_dir)
+    probe-cached. The snapshot prune and the cache key come from the
+    caller's one record read (the record its whole query runs against, so
+    probed df can never describe a different commit than the postings scan)
+    — so cached df always describes the keyed version."""
     key = (index_dir, _index_version(index_dir, marker))
     if key not in _PROBE_CACHE:
         # Evict superseded versions of THIS index_dir (a long-lived driver
@@ -261,20 +236,6 @@ def _mask_alive(docs_u: np.ndarray, dead: np.ndarray | None):
     return ~hit
 
 
-def _snapshot_stats(index_dir: str, marker: dict) -> dict:
-    """Scoring globals (n_docs, avgdl) for the snapshot ``marker`` commits.
-
-    Read from the marker itself when present (format ≥ r4 embeds them at
-    commit, so one marker read yields a CONSISTENT (segments, n_docs, avgdl)
-    triple); fall back to stats.json for older markers — there the two files
-    are separate renames and a racing commit can tear them, which is exactly
-    why the embed exists."""
-    s = marker.get("stats")
-    if s and "n_docs" in s and "avgdl" in s:
-        return s
-    return load_stats(index_dir)
-
-
 def _term_ids(query_text: str) -> list[int]:
     """The query's distinct term_ids in appearance order — the canonical
     per-doc summation order (see _wand_slice) the oracle also uses."""
@@ -352,9 +313,8 @@ def topk(
     # so an append landing mid-query can't mix one snapshot's postings with
     # another's scoring globals.
     marker = check_index_format(index_dir)
-    stats = _snapshot_stats(index_dir, marker)
     terminfo = _probe_idf(
-        spark, index_dir, _term_ids(query_text), marker, int(stats["n_docs"])
+        spark, index_dir, _term_ids(query_text), marker, int(marker["n_docs"])
     )
     if not terminfo:
         res = spark.createDataFrame([], RESULT_SCHEMA)
@@ -367,7 +327,7 @@ def topk(
             _postings(spark, index_dir, marker, list(terminfo), n_groups)
             .groupBy("seg", "wg")
             .applyInPandas(
-                _wand_slice(idf_map, float(stats["avgdl"]), k, dead_bc),
+                _wand_slice(idf_map, float(marker["avgdl"]), k, dead_bc),
                 RESULT_SCHEMA,
             )
         )
@@ -412,9 +372,8 @@ def topk_batch(
     # ONE lexicon probe for the union of every query's terms
     ids_by_q = {qid: _term_ids(qtext) for qid, qtext in queries.items()}
     union_ids = sorted({t for ids in ids_by_q.values() for t in ids})
-    stats = _snapshot_stats(index_dir, marker)
-    avgdl = float(stats["avgdl"])
-    lex = _probe_idf(spark, index_dir, union_ids, marker, int(stats["n_docs"]))
+    avgdl = float(marker["avgdl"])
+    lex = _probe_idf(spark, index_dir, union_ids, marker, int(marker["n_docs"]))
     if not lex:
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, score double"

@@ -34,7 +34,7 @@ from statschat_ke_spark.index.build import (
     _prepare_base,
     _stage_chunk,
     append_segment,
-    covered_chunks,
+    committed_record,
     maybe_compact,
     merge_index,
     staged_chunks,
@@ -66,8 +66,9 @@ def ingest_stream(
     ``strategy='segment'`` (default): every drained micro-batch chunk is
     appended as its own doc-disjoint index segment (``append_segment``), so
     continuous ingest cost stays ∝ new data — the shape a real trigger
-    interval needs. Falls back to full compaction when no completed merge
-    exists yet. ``strategy='compact'``: full phase-B re-merge per drain.
+    interval needs. Falls back to full compaction when no committed
+    snapshot exists (fresh dir, or a compaction that did not finish).
+    ``strategy='compact'``: full phase-B re-merge per drain.
     """
     if strategy not in ("segment", "compact"):
         # validate BEFORE any work: an unknown strategy must fail on the
@@ -96,23 +97,17 @@ def ingest_stream(
 
     if not merge:
         return None
-    has_base = os.path.exists(os.path.join(index_dir, "stats.json"))
-    if strategy == "compact" or not has_base:
+    base = committed_record(index_dir)
+    if strategy == "compact" or base is None:
         return merge_index(spark, index_dir, num_partitions=num_partitions)
     staged = staged_chunks(spark, index_dir)
-    pending = sorted(staged - covered_chunks(index_dir))
+    pending = sorted(staged - set(base["covered_chunks"]))
     if not pending:
         # nothing new landed: report the unchanged index
-        import json
-
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            s = json.load(f)
         return BuildResult(
             index_dir=index_dir,
-            n_docs=int(s["n_docs"]),
-            avgdl=float(s["avgdl"]),
-            n_terms=int(s["n_terms"]),
-            n_posting_rows=int(s.get("n_posting_rows", 0)),
+            n_docs=int(base["n_docs"]),
+            avgdl=float(base["avgdl"]),
             wall_s=0.0,
             chunks_processed=0,
             chunks_skipped=len(staged),

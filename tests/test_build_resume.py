@@ -14,10 +14,20 @@ import os
 import pytest
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
-from statschat_ke_spark.index.build import build_index, staged_chunks, update_index
-from statschat_ke_spark.index.query import topk
+from statschat_ke_spark.index.build import (
+    DELETE_SEG_BASE,
+    build_index,
+    staged_chunks,
+    update_index,
+)
+from statschat_ke_spark.index.query import check_index_format, topk
 
 P = 4  # fixed partitioning so posting bytes are comparable across builds
+
+
+def _data_segments(d):
+    """Data segments of the committed snapshot (delete deltas excluded)."""
+    return [s for s in check_index_format(d)["segments"] if s < DELETE_SEG_BASE]
 
 
 @pytest.fixture(scope="module")
@@ -213,8 +223,6 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
     top of the compacted state)."""
     import numpy as np
 
-    from statschat_ke_spark.index.build import _existing_segments
-
     d_ss, _ = single_shot
     pdf = generate_documents(500)
 
@@ -225,7 +233,7 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
 
     d = str(tmp_path_factory.mktemp("lc") / "idx")
     build_index(spark, df_of(0, 200), d, num_partitions=P)
-    assert _existing_segments(d) == [0]
+    assert _data_segments(d) == [0]
 
     compactions = []
     # appends → segment counts 2, 3, 4(>3: compact to 1), 2
@@ -239,7 +247,7 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
     assert compactions == [False, False, True, False]
     # post-compaction state: seg=0 plus exactly the one post-compaction
     # append (segments are named by chunk id; the 5th slice staged chunk 4)
-    assert _existing_segments(d) == [0, 4]
+    assert _data_segments(d) == [0, 4]
 
     # the compacted+appended index answers identically to the single-shot
     # build over the same 500 docs (ranks AND scores); n_docs matches the
@@ -260,7 +268,7 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
             strategy="segment", max_segments=None,
         )
         assert not res.compacted
-    assert _existing_segments(d2) == [0, 1, 2, 3]
+    assert _data_segments(d2) == [0, 1, 2, 3]
 
 
 def test_update_segment_chunk_accounting(spark, tmp_path_factory):
@@ -291,6 +299,44 @@ def test_update_segment_chunk_accounting(spark, tmp_path_factory):
     assert res2.chunks_skipped == done_total  # all prior chunks skipped
 
 
+def test_crashed_compaction_then_segment_update(spark, tmp_path_factory, monkeypatch):
+    """A compaction that crashes after replacing the commit record and
+    clearing the tables leaves no committed base: a later segment update
+    must rebuild from every staged chunk and equal a fresh build of base +
+    delta, never publish the delta segment alone."""
+    import numpy as np
+
+    import statschat_ke_spark.index.build as build_mod
+
+    def crash(*_a, **_kw):
+        raise RuntimeError("injected crash")
+
+    pdf = generate_documents(400, seed=21)
+
+    def df_of(part):
+        return spark.createDataFrame(part, schema=DOCUMENTS_SPARK_SCHEMA).select(
+            "url", "warc_ts", "html", "text", "lang"
+        )
+
+    base, delta = df_of(pdf.iloc[:300]), df_of(pdf.iloc[300:])
+    d = str(tmp_path_factory.mktemp("ccr") / "idx")
+    ref = str(tmp_path_factory.mktemp("ccrref") / "idx")
+    build_index(spark, base, d, num_partitions=P)
+    with monkeypatch.context() as m:
+        m.setattr(build_mod, "_build_segment", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            build_mod.merge_index(spark, d, num_partitions=P)
+
+    res = update_index(spark, delta, d, num_partitions=P, strategy="segment")
+    ref_res = build_index(spark, base.unionByName(delta), ref, num_partitions=P)
+    assert res.n_docs == ref_res.n_docs
+    for q in ["what was inflation in december 2023", "maize production county report"]:
+        a = topk(spark, d, q, 10).toPandas()
+        b = topk(spark, ref, q, 10).toPandas()
+        assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all(), q
+        assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), q
+
+
 def test_query_rejects_uncommitted_and_foreign_format(spark, single_shot, tmp_path_factory):
     """check_index_format: querying an uncommitted or format-mismatched index
     fails loudly with an actionable message instead of decoding garbage."""
@@ -318,6 +364,10 @@ def test_query_rejects_uncommitted_and_foreign_format(spark, single_shot, tmp_pa
     with open(marker, "w") as f:
         json.dump({**m, "format": 1}, f)
     with pytest.raises(RuntimeError, match="format 1"):
+        topk(spark, d2, "anything", 5)
+    with open(marker, "w") as f:
+        json.dump({**m, "format": 2}, f)
+    with pytest.raises(RuntimeError, match="format 2 .* rebuild"):
         topk(spark, d2, "anything", 5)
 
     # the committed index still queries fine
@@ -432,9 +482,9 @@ def test_update_index_serves_throughout_segment_append(
     assert res.n_docs > res0.n_docs  # delta landed (lang filter may drop some)
     with open(os.path.join(d, "_SUCCESS.json")) as f:
         marker = json.load(f)
-    # the commit marker embeds the scoring globals of ITS snapshot
-    assert marker["stats"]["n_docs"] == res.n_docs
-    assert marker["stats"]["avgdl"] == pytest.approx(res.avgdl)
+    # the commit record carries the scoring globals of ITS snapshot
+    assert marker["n_docs"] == res.n_docs
+    assert marker["avgdl"] == pytest.approx(res.avgdl)
     topk(spark, d, "report", 5)
 
 

@@ -203,20 +203,24 @@ def test_multiple_deletes_fold_to_one_delta_segment(spark, corpus, tmp_path_fact
     )
     for batch in (urls[:15], urls[15:30], urls[30:45]):
         delete_docs(spark, d1, batch)
-    with open(os.path.join(d1, "stats.json")) as f:
-        stats = json.load(f)
-    assert len(stats["delete_segments"]) == 1
     with open(os.path.join(d1, "_SUCCESS.json")) as f:
         marker = json.load(f)
     deltas_in_marker = [s for s in marker["segments"] if int(s) >= DELETE_SEG_BASE]
-    assert deltas_in_marker == stats["delete_segments"]
+    assert len(deltas_in_marker) == 1
+    # the one live delta is the one on disk under the newest reserved id
+    listed = sorted(
+        int(x.split("=", 1)[1])
+        for x in os.listdir(os.path.join(d1, "lexicon"))
+        if int(x.split("=", 1)[1]) >= DELETE_SEG_BASE
+    )
+    assert deltas_in_marker == listed[-1:]
     build_index(spark, docs.filter(~docs.url.isin(urls[:45])), d2, num_partitions=P)
     _assert_same_topk(spark, d1, d2)
 
 
 def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
     """A delete that crashed after its lexicon-delta write but before the
-    stats/marker commit leaves an orphan delta dir; later commits must NOT
+    commit leaves an orphan delta dir; later commits must NOT
     publish it (marker segments come from committed state, not directory
     listing), and a retry of the delete must subtract exactly once."""
     import json
@@ -233,7 +237,7 @@ def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
     )[:20]
 
     # simulate the crash window: an orphan negative-delta dir on disk with
-    # no tombstone, no stats update, no marker commit
+    # no tombstone and no commit
     orphan_seg = DELETE_SEG_BASE + 7
     spark.createDataFrame(
         [(123456789, "zzzorphan", -999999, -999999)],
@@ -251,9 +255,9 @@ def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
     # the delete retry lands once, on a seg id that avoids the orphan dir
     res = delete_docs(spark, d1, victims)
     assert res.n_deleted == 20
-    with open(os.path.join(d1, "stats.json")) as f:
-        stats = json.load(f)
-    assert stats["delete_segments"] and stats["delete_segments"][0] != orphan_seg
+    with open(os.path.join(d1, "_SUCCESS.json")) as f:
+        deltas = [s for s in json.load(f)["segments"] if s >= DELETE_SEG_BASE]
+    assert deltas and deltas[0] != orphan_seg
 
     ref = docs.filter(~docs.url.isin(victims)).unionByName(extra)
     build_index(spark, ref, d2, num_partitions=P)
@@ -304,3 +308,75 @@ def test_streaming_reland_of_deleted_url_not_readmitted(
     out = append_segment(spark, d, 1_000_123, num_partitions=P)
     assert out.n_docs == res.n_docs  # nothing re-admitted
     assert topk(spark, d, QUERIES[0], 10).toPandas().equals(before)
+
+
+def _crash(*_a, **_kw):
+    raise RuntimeError("injected crash")
+
+
+def test_delete_crash_before_commit_retries_exactly_once(
+    spark, corpus, tmp_path_factory, monkeypatch
+):
+    """A delete that crashes at its commit-record write leaves the old
+    snapshot whole: the retry must find and delete every victim once and
+    match a survivors-only build (no half-committed tombstone state)."""
+    import statschat_ke_spark.index.build as build_mod
+
+    docs = _docs(spark, corpus)
+    d1 = str(tmp_path_factory.mktemp("dcr") / "idx")
+    d2 = str(tmp_path_factory.mktemp("dcrref") / "idx")
+    build_index(spark, docs, d1, num_partitions=P)
+    victims = sorted(
+        r.url
+        for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
+    )[:60]
+
+    real = build_mod._atomic_json
+    crashed: list[str] = []
+
+    def crash_at_marker(path, obj, **kw):
+        if path.endswith("_SUCCESS.json") and not crashed:
+            crashed.append(path)
+            _crash()
+        return real(path, obj, **kw)
+
+    monkeypatch.setattr(build_mod, "_atomic_json", crash_at_marker)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        delete_docs(spark, d1, victims)
+    assert crashed
+
+    res = delete_docs(spark, d1, victims)
+    assert res.n_deleted == len(victims)
+    build_index(spark, docs.filter(~docs.url.isin(victims)), d2, num_partitions=P)
+    _assert_same_topk(spark, d1, d2)
+
+
+def test_crashed_compaction_keeps_deletes(spark, corpus, tmp_path_factory, monkeypatch):
+    """A compaction that crashes after replacing the commit record and
+    clearing the tables must not lose the delete set: the index refuses
+    reads and deletes until a retried merge_index, which still excludes
+    every tombstoned doc."""
+    import statschat_ke_spark.index.build as build_mod
+
+    docs = _docs(spark, corpus)
+    d1 = str(tmp_path_factory.mktemp("ccd") / "idx")
+    d2 = str(tmp_path_factory.mktemp("ccdref") / "idx")
+    build_index(spark, docs, d1, num_partitions=P)
+    victims = sorted(
+        r.url
+        for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
+    )[::7]
+    delete_docs(spark, d1, victims)
+
+    with monkeypatch.context() as m:
+        m.setattr(build_mod, "_build_segment", _crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            merge_index(spark, d1, num_partitions=P)
+    with pytest.raises(RuntimeError, match="_SUCCESS.json"):
+        topk(spark, d1, QUERIES[0], 10)
+    with pytest.raises(RuntimeError, match="_SUCCESS.json"):
+        delete_docs(spark, d1, victims[:1])
+
+    merge_index(spark, d1, num_partitions=P)
+    build_index(spark, docs.filter(~docs.url.isin(victims)), d2, num_partitions=P)
+    _assert_same_topk(spark, d1, d2)

@@ -180,14 +180,14 @@ def test_term_blocks_budget_cap(spark, index_dir, queries):
 
     import pandas as pd
 
-    from statschat_ke_spark.index.query import _TermBlocks, load_stats
+    from statschat_ke_spark.index.query import _TermBlocks, check_index_format
 
     pst = (
         spark.read.parquet(os.path.join(index_dir, "postings"))
         .toPandas()
         .sort_values(["term_id", "slice", "block_id"])
     )
-    avgdl = float(load_stats(index_dir)["avgdl"])
+    avgdl = float(check_index_format(index_dir)["avgdl"])
     tid, g = next(iter(pst.groupby("term_id", sort=False)))
 
     unbounded = _TermBlocks(1.0, g, avgdl)

@@ -133,8 +133,12 @@ def test_stream_drain_auto_compaction(spark, parts, tmp_path):
     answers identically to a batch build over the same corpus."""
     import numpy as np
 
-    from statschat_ke_spark.index.build import _existing_segments
-    from statschat_ke_spark.index.query import topk
+    from statschat_ke_spark.index.build import DELETE_SEG_BASE
+    from statschat_ke_spark.index.query import check_index_format, topk
+
+    def _data_segments(d):
+        segs = check_index_format(d)["segments"]
+        return [s for s in segs if s < DELETE_SEG_BASE]
 
     full, a, b = parts
     landing = str(tmp_path / "landing_lc")
@@ -143,13 +147,13 @@ def test_stream_drain_auto_compaction(spark, parts, tmp_path):
 
     a.write.mode("append").parquet(landing)
     ingest_stream(spark, landing, idx, num_partitions=P)
-    assert _existing_segments(idx) == [0]
+    assert _data_segments(idx) == [0]
 
     # second drain appends ≥1 segment → count ≥ 2 > max_segments=1 → compact
     b.write.mode("append").parquet(landing)
     res = ingest_stream(spark, landing, idx, num_partitions=P, max_segments=1)
     assert res.compacted
-    assert _existing_segments(idx) == [0]
+    assert _data_segments(idx) == [0]
     assert res.n_docs == full.filter("lang = 'en'").count()
 
     build_index(spark, full, idx_full, num_partitions=P)
