@@ -75,7 +75,7 @@ def main() -> None:
         # --- index build over the sf documents table (fresh, uncached) ---
         shutil.rmtree(idx_dir, ignore_errors=True)
         t0 = time.time()
-        res = build_index(spark, docs, idx_dir, lang="en", num_partitions=cpus)
+        res = build_index(spark, docs, idx_dir, lang="en")
         t["index_build"] = time.time() - t0
         # docs_per_sec derived AFTER the rep loop from the best build wall:
         # computing it per-rep reported whichever rep ran LAST, which under

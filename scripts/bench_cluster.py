@@ -220,7 +220,6 @@ def run_level(
                f"spark.executor.extraJavaOptions=-XX:ActiveProcessorCount={CORES_PER_WORKER}",
                os.path.join(REPO, "scripts", "submit_build.py"),
                "--input", input_dir, "--index-dir", idx,
-               "--partitions", str(num_partitions),
                "--bench-queries"]
         )
         env = {**os.environ, "SPARK_HOME": SPARK_HOME,

@@ -87,8 +87,9 @@ def _materialize_corpus(n_docs: int) -> str:
 
 def _decoded_fraction(spark, idx: str, q: str, k: int = 10):
     """Fraction of the query's posting blocks the WAND path actually
-    decodes — exact: replays topk's own grouping and _wand_slice over the
-    collected postings with the block decoder wrapped by a counter."""
+    decodes — exact: replays topk's own grouping and _wand_groups per
+    (seg, wg) group over the collected postings with the block decoder
+    wrapped by a counter."""
     from statschat_ke_spark.index import query as Q
 
     marker = Q.check_index_format(idx)
@@ -113,9 +114,10 @@ def _decoded_fraction(spark, idx: str, q: str, k: int = 10):
 
     Q._TermBlocks.partials = counting
     try:
-        runner = Q._wand_slice(idf_map, avgdl, k)
-        for _, g in pst.groupby(["seg", "wg"]):
-            runner(g)
+        # one query → one query bucket (qb=0), as in topk's plan
+        runner = Q._wand_groups({0: idf_map}, idf_map, avgdl, k, None, 1)
+        for (seg, wg), g in pst.groupby(["seg", "wg"]):
+            runner((seg, wg, 0), g)
     finally:
         Q._TermBlocks.partials = orig
     return decoded["n"] / len(pst)
@@ -161,7 +163,7 @@ def main() -> None:
     else:
         shutil.rmtree(idx, ignore_errors=True)
         t0 = time.time()
-        res = build_index(spark, input_dir, idx, lang="en", num_partitions=args.cpus)
+        res = build_index(spark, input_dir, idx, lang="en")
         build_s = time.time() - t0
         stats = json.load(open(os.path.join(idx, "stats.json")))
         report["index_build"] = {
@@ -284,8 +286,7 @@ def main() -> None:
             shutil.rmtree(idx2, ignore_errors=True)
             shutil.copytree(idx, idx2)
             t0 = time.time()
-            ur = update_index(spark, delta_df, idx2, num_partitions=args.cpus,
-                              strategy=strategy)
+            ur = update_index(spark, delta_df, idx2, strategy=strategy)
             walls.append(time.time() - t0)
         report[f"update_{strategy}"] = {
             "wall_s": round(min(walls), 3),
@@ -333,13 +334,11 @@ def main() -> None:
             per = max(1, len(part_files) // n_seg)
             slices = [part_files[i * per:(i + 1) * per] for i in range(n_seg - 1)]
             slices.append(part_files[(n_seg - 1) * per:])
-            _bi(spark, spark.read.parquet(*slices[0]), idx_s,
-                lang="en", num_partitions=args.cpus)
+            _bi(spark, spark.read.parquet(*slices[0]), idx_s, lang="en")
             for sl in slices[1:]:
                 update_index(
                     spark, spark.read.parquet(*sl), idx_s,
-                    num_partitions=args.cpus, strategy="segment",
-                    max_segments=None,
+                    strategy="segment", max_segments=None,
                 )
         walls = []
         for rep in range(args.repeats):

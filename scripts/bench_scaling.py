@@ -103,7 +103,7 @@ def child(cpus: int, input_dir: str, num_partitions: int) -> None:
     cpu0 = _subtree_cpu_seconds()
     kind0 = subtree_cpu_by_kind()
     t0 = time.time()
-    res = build_index(spark, docs, idx, lang="en", num_partitions=num_partitions)
+    res = build_index(spark, docs, idx, lang="en")
     build_s = time.time() - t0
     build_cpu_s = _subtree_cpu_seconds() - cpu0
     kind1 = subtree_cpu_by_kind()

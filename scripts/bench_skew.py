@@ -37,9 +37,7 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-from bench_scaling import data_proportional_partitions  # noqa: E402
 
 # same 16 queries as scripts/submit_build.py --bench-queries, so shas are
 # comparable across the cluster and skew benches
@@ -95,8 +93,7 @@ def _ensure_corpus(n_docs: int) -> str:
     return input_dir
 
 
-def run_level(input_dir: str, slice_bits: int | None, cpus: int,
-              num_partitions: int) -> dict:
+def run_level(input_dir: str, slice_bits: int | None, cpus: int) -> dict:
     """One build+query pass in THIS process (levels are sequential; each
     stops its session so JVM state never leaks across levels)."""
     from statschat_ke_spark.index.build import build_index, derive_slice_bits
@@ -108,10 +105,7 @@ def run_level(input_dir: str, slice_bits: int | None, cpus: int,
     spark.sparkContext.setLogLevel("ERROR")
     try:
         t0 = time.time()
-        res = build_index(
-            spark, input_dir, idx,
-            num_partitions=num_partitions, slice_bits=slice_bits,
-        )
+        res = build_index(spark, input_dir, idx, slice_bits=slice_bits)
         build_wall = time.time() - t0
         with open(os.path.join(idx, "stats.json")) as f:
             st = json.load(f)
@@ -135,7 +129,6 @@ def run_level(input_dir: str, slice_bits: int | None, cpus: int,
             "build_wall_s": round(build_wall, 2),
             "docs_per_sec": round(res.n_docs / build_wall, 1),
             "phase_timings_s": st["phase_timings_s"],
-            "num_partitions": num_partitions,
             "bench_query_wall_s": round(q_wall, 3),
             "bench_query_sha256": hashlib.sha256(canon.encode()).hexdigest(),
         }
@@ -156,12 +149,11 @@ def main() -> None:
     args = ap.parse_args()
 
     input_dir = _ensure_corpus(args.n_docs)
-    P = data_proportional_partitions(input_dir)
     levels = []
     for tok in args.slice_bits.split(","):
         sb = None if tok.strip() == "derived" else int(tok)
-        print(f"== slice_bits={tok} (P_pack={P}) ==", flush=True)
-        r = run_level(input_dir, sb, args.cpus, P)
+        print(f"== slice_bits={tok} ==", flush=True)
+        r = run_level(input_dir, sb, args.cpus)
         print(json.dumps(r), flush=True)
         levels.append(r)
 

@@ -31,7 +31,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-from bench_scaling import data_proportional_partitions  # noqa: E402
 from bench_skew import QUERIES, _ensure_corpus, _session  # noqa: E402
 
 
@@ -44,7 +43,7 @@ def _en_docs(input_dir: str) -> int:
     return int(pc.sum(pc.equal(lang, "en")).as_py() or 0)
 
 
-def build(input_dir: str, bits: int, cpus: int, P: int) -> str:
+def build(input_dir: str, bits: int, cpus: int) -> str:
     from statschat_ke_spark.index.build import build_index, committed_record
 
     idx = os.path.join(tempfile.gettempdir(), f"statschat_skewq_idx_{bits}")
@@ -58,7 +57,7 @@ def build(input_dir: str, bits: int, cpus: int, P: int) -> str:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         t0 = time.time()
-        build_index(spark, input_dir, idx, num_partitions=P, slice_bits=bits)
+        build_index(spark, input_dir, idx, slice_bits=bits)
         print(f"built bits={bits} in {time.time() - t0:.1f}s", flush=True)
     finally:
         spark.stop()
@@ -78,8 +77,7 @@ def main() -> None:
 
     bits = [int(b) for b in args.bits.split(",")]
     input_dir = _ensure_corpus(args.n_docs)
-    P = data_proportional_partitions(input_dir)
-    idxs = {b: build(input_dir, b, args.cpus, P) for b in bits}
+    idxs = {b: build(input_dir, b, args.cpus) for b in bits}
 
     from statschat_ke_spark.index.query import topk_batch
 

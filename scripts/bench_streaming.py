@@ -85,7 +85,7 @@ def main() -> None:
         for f in wave:  # files LAND (copy models upstream writers)
             shutil.copy(os.path.join(src, f), os.path.join(landing, f))
         t0 = time.time()
-        res = ingest_stream(spark, landing, idx_stream, num_partitions=args.cpus)
+        res = ingest_stream(spark, landing, idx_stream)
         wall = time.time() - t0
         delta = res.n_docs - total_docs
         total_docs = res.n_docs
@@ -104,7 +104,7 @@ def main() -> None:
     # batch baseline: one-shot build over the identical corpus
     shutil.rmtree(idx_batch, ignore_errors=True)
     t0 = time.time()
-    bres = build_index(spark, src, idx_batch, num_partitions=args.cpus)
+    bres = build_index(spark, src, idx_batch)
     batch_wall = time.time() - t0
 
     # rank identity: streamed multi-segment index == batch single-segment

@@ -87,7 +87,7 @@ def main() -> None:
     docs = spark.read.parquet(stage)
     idx = os.path.join(tempfile.gettempdir(), f"statschat_eval_idx_{args.n_docs}")
     if not os.path.exists(os.path.join(idx, "_SUCCESS.json")):
-        build_index(spark, docs.drop("text"), idx, num_partitions=args.cpus)
+        build_index(spark, docs.drop("text"), idx)
 
     oracle = OracleIndex(pdf)
     text_by_url = dict(zip(pdf["url"], pdf["text"]))

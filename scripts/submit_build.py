@@ -8,7 +8,7 @@ Cluster launch:
         scripts/submit_build.py \
         --input  <parquet-or-iceberg path of documents(url,warc_ts,html,text,lang)> \
         --index-dir <output dir> \
-        [--lang en] [--partitions N] [--chunks K] [--resume] [--update]
+        [--lang en] [--chunks K] [--resume] [--update]
 
 No ``.master(...)`` is set here — the deploy mode, executor count and cores
 come from spark-submit, so the same script runs local[N] in the sandbox and
@@ -16,7 +16,7 @@ multi-executor on a real cluster. Sandbox smoke:
 
     spark-submit --master 'local[4]' --py-files /tmp/statschat_ke_spark.zip \
         scripts/submit_build.py --input /root/testdata/sf0.001/documents.parquet \
-        --index-dir /tmp/submit_idx --partitions 8
+        --index-dir /tmp/submit_idx
 """
 
 from __future__ import annotations
@@ -32,7 +32,6 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--index-dir", required=True)
     ap.add_argument("--lang", default="en")
-    ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--chunks", type=int, default=1)
     ap.add_argument("--stop-after-chunks", type=int, default=None)
     ap.add_argument("--resume", action="store_true")
@@ -57,15 +56,11 @@ def main() -> None:
 
     docs = spark.read.parquet(args.input)
     if args.update:
-        res = update_index(
-            spark, docs, args.index_dir,
-            lang=args.lang, num_partitions=args.partitions,
-        )
+        res = update_index(spark, docs, args.index_dir, lang=args.lang)
     else:
         res = build_index(
             spark, docs, args.index_dir,
-            lang=args.lang, num_partitions=args.partitions,
-            n_chunks=args.chunks, resume=args.resume,
+            lang=args.lang, n_chunks=args.chunks, resume=args.resume,
             stop_after_chunks=args.stop_after_chunks,
         )
     out = {

@@ -11,7 +11,7 @@ From-scratch re-expression of the capabilities of KNBS-StatsChat/statschat-ke
                          salted term-range merge, delta-gap+vbyte, avgdl-free
                          block bounds, doc-disjoint incremental segments)
 - ``index.query``        BM25 top-k (block-max WAND with essential-term
-                         pruning; one scorer for topk and topk_batch)
+                         pruning; one scoring plan for topk and topk_batch)
 - ``api``                the reference's make_query surface composed
                          end-to-end (search → postproc → highlight)
 - ``index.oracle``       single-node numpy oracle for rank-identity tests
@@ -19,7 +19,8 @@ From-scratch re-expression of the capabilities of KNBS-StatsChat/statschat-ke
                          / golden-question evaluation ops
 - ``sources.web``        link extraction + crawl-frontier shaping (S1/S2)
 - ``streaming.ingest``   Trigger.AvailableNow landing-zone drain sharing the
-                         batch phase-A staging + lineage path
+                         batch phase-A staging + lineage path and
+                         update_index's publish step
 - ``functions.multimodal`` binary media columns: stub-codec decode / resize /
                          features / frame-sample over mapInPandas
 - ``functions.textstats`` language-ID, quality scoring, token counts (JVM)

@@ -587,7 +587,6 @@ def build_index(
     index_dir: str,
     *,
     lang: str | None = "en",
-    num_partitions: int | None = None,
     n_chunks: int = 1,
     resume: bool = False,
     stop_after_chunks: int | None = None,
@@ -618,8 +617,6 @@ def build_index(
     checkpoint-resume path.
     """
     t0 = time.time()
-    sc = spark.sparkContext
-    P = num_partitions or sc.defaultParallelism
     os.makedirs(index_dir, exist_ok=True)
 
     by_files = isinstance(docs, str) and n_chunks > 1
@@ -674,7 +671,7 @@ def build_index(
         _stage_chunk(spark, cdf, index_dir, chunk, n_files=n_files)
         processed += 1
 
-    result = merge_index(spark, index_dir, num_partitions=P, slice_bits=slice_bits)
+    result = merge_index(spark, index_dir, slice_bits=slice_bits)
     result.chunks_processed = processed
     result.chunks_skipped = len(done_chunks)
     result.wall_s = time.time() - t0
@@ -687,16 +684,16 @@ def update_index(
     index_dir: str,
     *,
     lang: str | None = "en",
-    num_partitions: int | None = None,
     strategy: str = "segment",
     max_segments: int | None = DEFAULT_MAX_SEGMENTS,
     slice_bits: int | None = None,
 ) -> BuildResult:
     """Incremental UPDATE: stage only genuinely-new documents as a fresh
-    chunk, then merge. The Spark analog of the reference's UPDATE mode
-    (pdf_downloader.py:133-152 anti-join + preprocess.py:250-288 FAISS
-    merge_from): new-vs-existing is a left anti join on url against the
-    already-staged doc table, so re-sending the same batch is a no-op.
+    chunk, then publish it (``_publish_pending``, shared with ingest_stream).
+    The Spark analog of the reference's UPDATE mode (pdf_downloader.py:133-152
+    anti-join + preprocess.py:250-288 FAISS merge_from): new-vs-existing is a
+    left anti join on url against the already-staged doc table, so re-sending
+    the same batch adds no docs — its empty chunk is only recorded as covered.
 
     ``strategy``:
     - ``segment`` (default) — pack ONLY the delta into a new doc-disjoint
@@ -723,7 +720,6 @@ def update_index(
         # not silently take the fresh-dir compaction path
         raise ValueError(f"unknown strategy {strategy!r}")
     t0 = time.time()
-    P = num_partitions or spark.sparkContext.defaultParallelism
     base = _prepare_base(new_docs, lang)
     # NOTE: the committed _SUCCESS.json stays valid throughout staging and
     # segment append — readers prune scans to the marker's segment list, so
@@ -737,53 +733,56 @@ def update_index(
         existing = spark.read.parquet(existing_path).select("url")
         base = base.join(existing, "url", "left_anti")
     done = staged_chunks(spark, index_dir)
-    next_chunk = (max(done) + 1) if done else 0
-    _stage_chunk(spark, base, index_dir, next_chunk)
-
-    # no committed base (fresh dir, unfinished compaction) → the delta is
-    # merged with every staged chunk; take the compaction path
-    base_rec = committed_record(index_dir)
-    if strategy == "compact" or base_rec is None:
-        result = merge_index(
-            spark, index_dir, num_partitions=P, slice_bits=slice_bits
-        )
-        result.chunks_processed = 1
-        result.chunks_skipped = len(done)
-        result.wall_s = time.time() - t0
-        return result
-
-    # Reconcile ALL pending chunks (staged minus covered), not only the one
-    # just staged: if a prior update crashed between _stage_chunk committing
-    # lineage and append_segment finishing, a retry of the same batch
-    # anti-joins everything away and stages an EMPTY next chunk — appending
-    # only next_chunk would then mark the index complete with the earlier
-    # orphan chunk silently unpacked. Same reconciliation as ingest_stream.
-    pending = sorted(
-        staged_chunks(spark, index_dir) - set(base_rec["covered_chunks"])
+    _stage_chunk(spark, base, index_dir, (max(done) + 1) if done else 0)
+    result = _publish_pending(
+        spark, index_dir, strategy=strategy, max_segments=max_segments,
+        slice_bits=slice_bits,
     )
-    appended = list(pending)
-    result = None
-    for c in pending:
-        result = append_segment(
-            spark, index_dir, c, num_partitions=P, slice_bits=slice_bits
-        )
-    if result is None:  # fully covered already (pure replay)
-        result = append_segment(
-            spark, index_dir, next_chunk, num_partitions=P,
-            slice_bits=slice_bits,
-        )
-        appended = [next_chunk]
-    compacted = maybe_compact(
-        spark, index_dir, max_segments=max_segments, num_partitions=P
-    )
-    if compacted is not None:
-        result = compacted
-    # processed = chunks this call actually packed into a segment;
-    # skipped = previously-staged chunks NOT (re)packed now — disjoint by
-    # construction, so a reconciled orphan counts once, as processed.
-    result.chunks_processed = len(appended)
-    result.chunks_skipped = len(set(done) - set(appended))
     result.wall_s = time.time() - t0
+    return result
+
+
+def _publish_pending(
+    spark: SparkSession,
+    index_dir: str,
+    *,
+    strategy: str,
+    max_segments: int | None,
+    slice_bits: int | None = None,
+) -> BuildResult:
+    """Publish every staged chunk the commit record does not cover yet — the
+    one phase-B step of update_index and ingest_stream.
+
+    With ``strategy='compact'`` or no committed base (fresh dir, unfinished
+    compaction) all staged chunks are re-merged into seg=0. Otherwise each
+    pending chunk is appended as its own segment, then the lifecycle policy
+    (maybe_compact) runs. Reconciling ALL pending chunks, not only the one a
+    caller just staged, makes a crashed update retryable: the retry
+    anti-joins everything away and stages an empty chunk, and the orphan
+    chunk the crash left must still be packed.
+
+    The result's ``chunks_processed`` counts the chunks this call newly
+    covers; ``chunks_skipped`` the staged chunks already covered before."""
+    base = committed_record(index_dir)
+    staged = staged_chunks(spark, index_dir)
+    pending = sorted(staged - set(base["covered_chunks"] if base else ()))
+    if strategy == "compact" or base is None:
+        result = merge_index(spark, index_dir, slice_bits=slice_bits)
+    elif not pending:
+        result = BuildResult(
+            index_dir=index_dir,
+            n_docs=int(base["n_docs"]),
+            avgdl=float(base["avgdl"]),
+            wall_s=0.0,
+            chunks_processed=0,
+            chunks_skipped=0,
+        )
+    else:
+        for c in pending:
+            result = append_segment(spark, index_dir, c, slice_bits=slice_bits)
+        result = maybe_compact(spark, index_dir, max_segments=max_segments) or result
+    result.chunks_processed = len(pending)
+    result.chunks_skipped = len(staged) - len(pending)
     return result
 
 
@@ -819,7 +818,6 @@ def maybe_compact(
     index_dir: str,
     *,
     max_segments: int | None = DEFAULT_MAX_SEGMENTS,
-    num_partitions: int | None = None,
 ) -> BuildResult | None:
     """Fold all segments back into seg=0 when the count exceeds
     ``max_segments`` (None = never). Returns the compaction result, or None
@@ -844,7 +842,7 @@ def maybe_compact(
     ]
     if len(data_segs) <= max_segments:
         return None
-    out = merge_index(spark, index_dir, num_partitions=num_partitions)
+    out = merge_index(spark, index_dir)
     out.compacted = True
     return out
 
@@ -1055,16 +1053,14 @@ def append_segment(
     index_dir: str,
     chunk: int,
     *,
-    num_partitions: int | None = None,
     slice_bits: int | None = None,
 ) -> BuildResult:
     """Pack ALREADY-STAGED chunk N into index segment N and merge the global
     stats incrementally — the delta-proportional phase-B unit shared by
     ``update_index(strategy='segment')`` and the streaming drain. Requires a
-    committed base; idempotent: an already-appended or empty chunk commits
-    nothing."""
+    committed base; idempotent: an already-covered chunk commits nothing,
+    and an empty (or all-tombstoned) chunk commits only its coverage."""
     t0 = time.time()
-    P = num_partitions or spark.sparkContext.defaultParallelism
     timings: dict[str, float] = {}
     old = check_index_format(index_dir)
 
@@ -1095,19 +1091,21 @@ def append_segment(
     ).collect()[0]
     n_delta, dl_delta = int(srow.n), float(srow.dl_sum or 0.0)
     if n_delta == 0:
-        # idempotent re-send (everything anti-joined away): nothing to pack
+        # idempotent re-send (everything anti-joined away) or an
+        # all-tombstoned chunk: nothing to pack, but the chunk is covered —
+        # committing that keeps later updates and drains from re-reading it
+        _commit(
+            index_dir,
+            n_docs=old["n_docs"],
+            avgdl=old["avgdl"],
+            segments=old["segments"],
+            covered_chunks=old["covered_chunks"] + [chunk],
+            tombstone_files=old["tombstone_files"],
+        )
         return _unchanged()
-    est_pairs = max(1.0, dl_delta * 0.7)
-    # data-proportional, NOT thread-capped — see merge_index's sizing note
-    P_pack = max(4, min(4096, int(est_pairs // 1_500_000) + 1))
-    P_docs = max(1, min(2048, n_delta // 2_000_000 + 1))
-    # slice_bits derives from THIS segment's doc count: per-slice WAND and
-    # the pack shuffle only ever see one segment's sub-lists, so a small
-    # delta appended to a huge base correctly gets a small slice count
-    sb = slice_bits if slice_bits is not None else derive_slice_bits(n_delta)
     seg_stats = _build_segment(
-        spark, staged_k, index_dir, chunk, P_pack=P_pack, P_docs=P_docs,
-        timings=timings, slice_bits=sb,
+        spark, staged_k, index_dir, chunk, n_docs=n_delta, dl_sum=dl_delta,
+        timings=timings, slice_bits=slice_bits,
     )
 
     # merge global stats incrementally (exact: avgdl is a weighted mean)
@@ -1124,7 +1122,7 @@ def append_segment(
         tombstone_files=old["tombstone_files"],
     )
     wall = time.time() - t0
-    _write_build_metrics(index_dir, seg_stats, sb, timings, wall)
+    _write_build_metrics(index_dir, seg_stats, timings, wall)
     return BuildResult(
         index_dir=index_dir,
         n_docs=n_docs,
@@ -1161,10 +1159,10 @@ def _build_segment(
     index_dir: str,
     seg: int,
     *,
-    P_pack: int,
-    P_docs: int,
+    n_docs: int,
+    dl_sum: float,
     timings: dict,
-    slice_bits: int = SLICE_BITS,
+    slice_bits: int | None = None,
 ) -> dict:
     """Pack one doc-disjoint SEGMENT: postings/seg=N, docs/seg=N,
     lexicon/seg=N, _metrics/seg=N. Segments are the incremental-update unit
@@ -1172,8 +1170,28 @@ def _build_segment(
     are disjoint across segments, and BM25 globals (idf, avgdl) are merged
     at query/probe time, never baked into posting bytes.
 
-    Returns {rows, postings, max_p, avg_p, n_terms} for the build metrics.
+    ``n_docs``/``dl_sum`` are the segment's doc count and total doc length;
+    they size the shuffles and, unless ``slice_bits`` pins it, the slice
+    count. Returns {rows, postings, max_p, avg_p, n_terms, slice_bits} for
+    the build metrics.
     """
+    # Right-size explicit shuffles from the just-measured stats — an
+    # explicit repartition() is exempt from AQE coalescing. Partition count
+    # scales with DATA (~1.5M pair rows ≈ 42 MB per pack partition), NOT
+    # with the thread count: capping at P made each sort task hold
+    # corpus/P rows, which went spill/GC-superlinear at 1M docs (measured:
+    # postings phase 27 s at 270k docs → 358 s at 900k under a min(P, ...)
+    # cap). Tiny corpora still floor at 4 partitions so a big session
+    # doesn't pay P near-empty tasks per stage; excess partitions beyond
+    # the thread count just queue as waves of right-sized tasks.
+    est_pairs = max(1.0, dl_sum * 0.7)  # ≈ Σ distinct terms per doc
+    P_pack = max(4, min(4096, int(est_pairs // 1_500_000) + 1))
+    P_docs = max(1, min(2048, n_docs // 2_000_000 + 1))
+    # slice_bits derives from THIS segment's doc count: per-slice WAND and
+    # the pack shuffle only ever see one segment's sub-lists, so a small
+    # delta appended to a huge base correctly gets a small slice count
+    if slice_bits is None:
+        slice_bits = derive_slice_bits(n_docs)
     seg_sub = f"seg={seg}"
     staged_docs = staged.select("doc_id", "url", "doclen")
 
@@ -1317,6 +1335,7 @@ def _build_segment(
         "max_p": float(agg.max_p or 0.0),
         "avg_p": float(agg.avg_p or 0.0),
         "n_terms": int(lex_box[0]) if lex_box else 0,
+        "slice_bits": slice_bits,
     }
 
 
@@ -1369,8 +1388,7 @@ def _commit(
 
 
 def _write_build_metrics(
-    index_dir: str, seg_stats: dict, slice_bits: int, timings: dict,
-    wall: float, **extra,
+    index_dir: str, seg_stats: dict, timings: dict, wall: float, **extra
 ) -> None:
     """stats.json: metrics of the segment build that just ran, written after
     the commit. Write-only — nothing in the engine reads it."""
@@ -1383,7 +1401,7 @@ def _write_build_metrics(
                 seg_stats["max_p"] / seg_stats["avg_p"]
                 if seg_stats["avg_p"] else 1.0
             ),
-            "slice_bits": slice_bits,
+            "slice_bits": seg_stats["slice_bits"],
             "phase_timings_s": {k: round(v, 3) for k, v in timings.items()},
             "build_wall_s": wall,
             "postings_per_sec": seg_stats["postings"] / wall if wall > 0 else 0.0,
@@ -1405,7 +1423,6 @@ def merge_index(
     spark: SparkSession,
     index_dir: str,
     *,
-    num_partitions: int | None = None,
     slice_bits: int | None = None,
 ) -> BuildResult:
     """Phase B COMPACTION: global stats, lexicon, postings from ALL staged
@@ -1414,7 +1431,6 @@ def merge_index(
     t0 = time.time()
     timings: dict[str, float] = {}
     tp = time.time()
-    P = num_partitions or spark.sparkContext.defaultParallelism
     staged = spark.read.parquet(os.path.join(index_dir, "staged"))
     # physical reclaim of deletes: tombstoned docs are excluded from the
     # rebuilt segment (posting bytes shrink), but the tombstone files carry
@@ -1434,20 +1450,6 @@ def merge_index(
     n_docs, avgdl = int(stats_row.n_docs), float(stats_row.avgdl or 0.0)
     timings["stats"] = time.time() - tp
 
-    # Right-size explicit shuffles from the just-measured stats — an
-    # explicit repartition() is exempt from AQE coalescing. Partition count
-    # scales with DATA (~1.5M pair rows ≈ 42 MB per pack partition), NOT
-    # with the thread count: capping at P made each sort task hold
-    # corpus/P rows, which went spill/GC-superlinear at 1M docs (measured:
-    # postings phase 27 s at 270k docs → 358 s at 900k under a min(P, ...)
-    # cap). Tiny corpora still floor at 4 partitions so a big session
-    # doesn't pay P near-empty tasks per stage; excess partitions beyond
-    # the thread count just queue as waves of right-sized tasks.
-    est_pairs = max(1.0, n_docs * avgdl * 0.7)  # ≈ Σ distinct terms per doc
-    P_pack = max(4, min(4096, int(est_pairs // 1_500_000) + 1))
-    P_docs = max(1, min(2048, n_docs // 2_000_000 + 1))
-    sb = slice_bits if slice_bits is not None else derive_slice_bits(n_docs)
-
     # compaction owns the whole table dirs: BEFORE gutting them, atomically
     # replace the commit record with an uncommitted one that keeps only the
     # tombstones. Readers and delete_docs refuse it, update_index and
@@ -1461,8 +1463,8 @@ def merge_index(
         _clear_dir(os.path.join(index_dir, sub))
 
     seg_stats = _build_segment(
-        spark, staged, index_dir, 0, P_pack=P_pack, P_docs=P_docs,
-        timings=timings, slice_bits=sb,
+        spark, staged, index_dir, 0, n_docs=n_docs, dl_sum=n_docs * avgdl,
+        timings=timings, slice_bits=slice_bits,
     )
     # compaction folds the deletes physically: the rebuilt lexicon is
     # computed over the survivors, so no delta segment remains live (the
@@ -1479,7 +1481,7 @@ def merge_index(
     # a full compaction leaves exactly one segment, so the segment's observed
     # lexicon row count IS the global term count — no read-back job
     _write_build_metrics(
-        index_dir, seg_stats, sb, timings, wall, n_terms=seg_stats["n_terms"]
+        index_dir, seg_stats, timings, wall, n_terms=seg_stats["n_terms"]
     )
     return BuildResult(
         index_dir=index_dir,

@@ -9,10 +9,13 @@ inverted-index analog of an index-nested-loop join (SURVEY.md §2.3 J5):
    per-term impact upper bounds, collected to the driver (≤ |q| rows)
 3. postings scan filtered by term_id (predicate pushdown + row-group
    pruning: postings are written term_id-sorted within range partitions)
-4. scoring: group blocks by doc-range slice; per slice group a vectorized
-   block-max WAND skips blocks whose upper bound can't enter the top-k;
-   per-group top-k then global top-k (TakeOrderedAndProject). Exact because
-   a doc's postings for every term share its slice (slice = f(doc_id)).
+4. scoring: ONE plan (``_scored``) for topk and topk_batch — group blocks
+   by (segment, doc-range slice group, query bucket); per group a vectorized
+   block-max WAND skips blocks whose upper bound can't enter the top-k and
+   emits each query's local top-k; topk then takes the global top-k
+   (TakeOrderedAndProject), topk_batch a ranked window per query. Exact
+   because a doc's postings for every term share its slice
+   (slice = f(doc_id)).
 5. tie-break: score desc, doc_id ascending in unsigned order — identical to
    the numpy oracle (index/oracle.py).
 
@@ -38,15 +41,14 @@ from statschat_ke_spark.operators.postproc import doc_u_asc
 K1 = 1.2
 B = 0.75
 
-# Per-task cap on the batch path's shared decoded-block memo (docs_u +
+# Per-task cap on a slice group's shared decoded-block memo (docs_u +
 # scores ≈ 16 B/posting). Sized so n_concurrent_tasks × cap fits a typical
 # executor: 32 tasks × 256 MB = 8 GB. Past the cap blocks decode per use.
-BATCH_DECODE_CACHE_BYTES = int(
-    os.environ.get("STATSCHAT_BATCH_DECODE_CACHE_BYTES", 256 * 2**20)
-)
+DECODE_CACHE_BYTES = 256 * 2**20
 
-RESULT_SCHEMA = T.StructType(
+SCORED_SCHEMA = T.StructType(
     [
+        T.StructField("query_id", T.LongType(), False),
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("score", T.DoubleType(), False),
     ]
@@ -238,7 +240,7 @@ def _mask_alive(docs_u: np.ndarray, dead: np.ndarray | None):
 
 def _term_ids(query_text: str) -> list[int]:
     """The query's distinct term_ids in appearance order — the canonical
-    per-doc summation order (see _wand_slice) the oracle also uses."""
+    per-doc summation order (see _wand_groups) the oracle also uses."""
     return [xxhash64_str(t) for t in dict.fromkeys(tokenize(query_text))]
 
 
@@ -291,11 +293,91 @@ def wand_group_count(total_df: int, parallelism: int) -> int:
     forfeit most pruning when posting volume is modest. Estimated block
     count (Σdf from the lexicon probe — no extra job) sizes the group
     count: few groups (global-ish θ, max pruning) for small volume, up to
-    4×parallelism for big scans. Single source of truth — topk, topk_batch,
-    and the decoded-fraction instrumentation (scripts/bench_large.py) must
-    group identically, or the instrumentation measures a grouping
-    production never runs."""
+    4×parallelism for big scans. Single source of truth — the shared plan
+    (``_scored``) and the decoded-fraction instrumentation
+    (scripts/bench_large.py) must group identically, or the instrumentation
+    measures a grouping production never runs."""
     return int(max(1, min(4 * parallelism, (total_df // BLOCK) // 512 + 1)))
+
+
+def _scored(
+    spark: SparkSession,
+    index_dir: str,
+    marker: dict,
+    queries: dict[int, str],
+    k: int,
+    *,
+    n_qb: int | None = None,
+    n_groups: int | None = None,
+) -> DataFrame:
+    """The one WAND scoring plan: every query's LOCAL top-k per (segment,
+    slice group, query bucket) as (query_id, doc_id, score) rows, all read
+    against the caller's single commit record ``marker``. Callers rank the
+    union globally (local per-partition top-k, then one global merge — the
+    REPOSE shape); the result is exact because slice groups are doc-disjoint.
+
+    Postings are scanned once with the UNION of all query term_ids pushed
+    down; each group runs WAND once per query that has a term there."""
+    # ONE lexicon probe for the union of every query's terms
+    ids_by_q = {qid: _term_ids(qtext) for qid, qtext in queries.items()}
+    union_ids = sorted({t for ids in ids_by_q.values() for t in ids})
+    lex = _probe_idf(spark, index_dir, union_ids, marker, int(marker["n_docs"]))
+    if not lex:
+        return spark.createDataFrame([], SCORED_SCHEMA)
+    idf_by_q = {
+        qid: {t: lex[t]["idf"] for t in ids if t in lex}
+        for qid, ids in ids_by_q.items()
+    }
+
+    # Adaptive coarsening (see wand_group_count): group count sized from the
+    # union Σdf so per-group θ converges with little decode overhead.
+    # ``n_groups`` pins the count explicitly — the adaptive default couples
+    # the JOB SHAPE to defaultParallelism (more groups = more per-group θ
+    # warm-up decode), so an N-vs-4N scaling measurement must pin it to run
+    # the identical job at both levels and vary only concurrency
+    # (scripts/bench_query_scaling.py does).
+    total_df = sum(v["df"] for v in lex.values())
+    par = spark.sparkContext.defaultParallelism
+    if n_groups is None:
+        n_groups = wand_group_count(total_df, par)
+    else:
+        n_groups = int(max(1, n_groups))
+    # Query-dimension parallelism: slice groups alone bound the task count
+    # at n_seg * n_groups, so a 10^4-question golden set would run its WAND
+    # invocations sequentially inside each group. Split queries into n_qb
+    # buckets and replicate each postings row ONLY to buckets whose queries
+    # reference its term (broadcast join on a (term_id, qb) relation of Σ|q|
+    # rows): per-term duplication is min(n_qb, #queries containing it), and
+    # hot shared terms — the expensive rows — are exactly the ones worth
+    # replicating. n_qb is sized so seg*wg*qb tasks roughly fill the cluster
+    # and is 1 for a single query (no join, no extra shuffle bytes).
+    # ``n_qb`` may be forced by the caller (rank-identity tests exercise
+    # bucket counts > 1 regardless of parallelism).
+    if n_qb is None:
+        n_qb = int(max(1, min(len(idf_by_q), -(-par // n_groups))))
+    else:
+        n_qb = int(max(1, min(len(idf_by_q), n_qb)))
+
+    idf_all = {t: v["idf"] for t, v in lex.items()}
+    dead_bc = _load_tombstones_bc(spark, index_dir, marker)
+    grouped = _postings(spark, index_dir, marker, sorted(lex), n_groups)
+    if n_qb > 1:
+        tb_rows = sorted(
+            {
+                (t, qid % n_qb)
+                for qid, ids in ids_by_q.items()
+                for t in ids
+                if t in lex
+            }
+        )
+        term_buckets = spark.createDataFrame(tb_rows, "term_id long, qb int")
+        grouped = grouped.join(F.broadcast(term_buckets), "term_id")
+    else:
+        grouped = grouped.withColumn("qb", F.lit(0))
+    return grouped.groupBy("seg", "wg", "qb").applyInPandas(
+        _wand_groups(idf_by_q, idf_all, float(marker["avgdl"]), k, dead_bc, n_qb),
+        SCORED_SCHEMA,
+    )
 
 
 def topk(
@@ -306,33 +388,19 @@ def topk(
     *,
     with_url: bool = False,
 ) -> DataFrame:
-    """Top-k (doc_id, score[, url]) for a free-text query: block-max WAND
-    per (segment, slice group), then a global top-k."""
+    """Top-k (doc_id, score[, url]) for a free-text query: the shared WAND
+    plan (``_scored``) for one query, then a global top-k."""
     # ONE snapshot read serves the whole query: format check, segment
     # pruning, n_docs (idf) and avgdl all come from the same commit marker,
     # so an append landing mid-query can't mix one snapshot's postings with
     # another's scoring globals.
     marker = check_index_format(index_dir)
-    terminfo = _probe_idf(
-        spark, index_dir, _term_ids(query_text), marker, int(marker["n_docs"])
+    ranked = (
+        _scored(spark, index_dir, marker, {0: query_text}, k)
+        .orderBy(F.desc("score"), doc_u_asc())
+        .limit(k)
+        .select("doc_id", "score")
     )
-    if not terminfo:
-        res = spark.createDataFrame([], RESULT_SCHEMA)
-    else:
-        total_df = sum(v["df"] for v in terminfo.values())
-        n_groups = wand_group_count(total_df, spark.sparkContext.defaultParallelism)
-        idf_map = {t: v["idf"] for t, v in terminfo.items()}
-        dead_bc = _load_tombstones_bc(spark, index_dir, marker)
-        res = (
-            _postings(spark, index_dir, marker, list(terminfo), n_groups)
-            .groupBy("seg", "wg")
-            .applyInPandas(
-                _wand_slice(idf_map, float(marker["avgdl"]), k, dead_bc),
-                RESULT_SCHEMA,
-            )
-        )
-
-    ranked = res.orderBy(F.desc("score"), doc_u_asc()).limit(k)
     if with_url:
         docs = _prune_to_snapshot(
             spark.read.parquet(os.path.join(index_dir, "docs")), marker
@@ -359,129 +427,19 @@ def topk_batch(
     """Top-k for MANY queries in ONE job: (query_id, rank, doc_id, score).
 
     The distributed analog of the reference's sequential eval loop
-    (evaluation.py:13-39 runs make_query per question): postings are scanned
-    once with the UNION of all query term_ids pushed down; each (slice)
-    group runs WAND once per query that has a term there; a ranked window
+    (evaluation.py:13-39 runs make_query per question): the shared WAND plan
+    (``_scored``) scores every query in one postings scan; a ranked window
     per query yields the global top-k. Latency amortizes to ~one query's
     cost for a whole golden set; at 10^5 golden questions this is the only
     workable shape.
     """
-    # ONE snapshot read for the whole batch (see topk): format check,
-    # segment pruning and scoring globals from the same commit marker.
-    marker = check_index_format(index_dir)
-    # ONE lexicon probe for the union of every query's terms
-    ids_by_q = {qid: _term_ids(qtext) for qid, qtext in queries.items()}
-    union_ids = sorted({t for ids in ids_by_q.values() for t in ids})
-    avgdl = float(marker["avgdl"])
-    lex = _probe_idf(spark, index_dir, union_ids, marker, int(marker["n_docs"]))
-    if not lex:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double"
-        )
-    idf_by_q = {
-        qid: {t: lex[t]["idf"] for t in ids if t in lex}
-        for qid, ids in ids_by_q.items()
-    }
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("score", T.DoubleType(), False),
-        ]
-    )
-
     from pyspark.sql import Window as W
 
-    # same adaptive coarsening as topk (see wand_group_count): group count
-    # sized from the union Σdf so per-group θ converges with little decode
-    # overhead.
-    # ``n_groups`` pins the count explicitly — the adaptive default couples
-    # the JOB SHAPE to defaultParallelism (more groups = more per-group θ
-    # warm-up decode), so an N-vs-4N scaling measurement must pin it to run
-    # the identical job at both levels and vary only concurrency
-    # (scripts/bench_query_scaling.py does; same rule as the build bench's
-    # identical partition counts).
-    total_df = sum(v["df"] for v in lex.values())
-    par = spark.sparkContext.defaultParallelism
-    if n_groups is None:
-        n_groups = wand_group_count(total_df, par)
-    else:
-        n_groups = int(max(1, n_groups))
-    # Query-dimension parallelism: slice groups alone bound the task count
-    # at n_seg * n_groups, so a 10^4-question golden set would run its WAND
-    # invocations sequentially inside each group (the tail the verdict
-    # flagged). Split queries into n_qb buckets and replicate each postings
-    # row ONLY to buckets whose queries reference its term (broadcast join
-    # on a (term_id, qb) relation of Σ|q| rows): per-term duplication is
-    # min(n_qb, #queries containing it), and hot shared terms — the
-    # expensive rows — are exactly the ones worth replicating. n_qb is
-    # sized so seg*wg*qb tasks roughly fill the cluster and stays 1 for
-    # single-query-scale batches (no plan change, no extra shuffle bytes).
-    # ``n_qb`` may be forced by the caller (rank-identity tests exercise
-    # bucket counts > 1 regardless of parallelism).
-    if n_qb is None:
-        n_qb = int(max(1, min(len(idf_by_q), -(-par // n_groups))))
-    else:
-        n_qb = int(max(1, min(len(idf_by_q), n_qb)))
-
-    idf_all = {t: v["idf"] for t, v in lex.items()}
-    dead_bc = _load_tombstones_bc(spark, index_dir, marker)
-
-    def run_slice(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qb = int(key[2])
-        dead = dead_bc.value if dead_bc is not None else None
-        outs = []
-        # Build each term's block structure ONCE per group and share it —
-        # including its memoized decoded blocks — across every query in the
-        # bucket (idf is per-term global, so the structure is query-
-        # independent). Batch queries overlap heavily in vocabulary; the
-        # per-query rebuild this replaces re-sliced the metadata frame and
-        # re-decoded the same hot blocks B times per group and was ~6x of
-        # the batch stage's wall at 64 queries. Per query, terms are picked
-        # from the cache in the query's canonical term order.
-        #
-        # The shared decode memo is budget-capped: structures live for the
-        # WHOLE group, so an uncapped memo's peak would be the union of
-        # every query's decoded blocks (vs one query's before sharing) —
-        # an executor-OOM risk on large slice groups. Hot cross-query
-        # blocks fill the cap first; past it, blocks decode per use.
-        budget = {"left": BATCH_DECODE_CACHE_BYTES}
-        tb_cache = {
-            int(t): _TermBlocks(idf_all[int(t)], g, avgdl, budget)
-            for t, g in pdf.groupby("term_id", sort=False)
-        }
-        for qid, idf_map in idf_by_q.items():
-            if qid % n_qb != qb:
-                continue
-            terms = [tb_cache[t] for t in idf_map if t in tb_cache]
-            if not terms:
-                continue
-            res = _wand_terms_topk(terms, k, dead)
-            if len(res):
-                res.insert(0, "query_id", np.int64(qid))
-                outs.append(res)
-        if not outs:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    grouped = _postings(spark, index_dir, marker, sorted(lex), n_groups)
-    if n_qb > 1:
-        tb_rows = sorted(
-            {
-                (t, qid % n_qb)
-                for qid, ids in ids_by_q.items()
-                for t in ids
-                if t in lex
-            }
-        )
-        term_buckets = spark.createDataFrame(tb_rows, "term_id long, qb int")
-        grouped = grouped.join(F.broadcast(term_buckets), "term_id")
-    else:
-        grouped = grouped.withColumn("qb", F.lit(0))
-    scored = grouped.groupBy("seg", "wg", "qb").applyInPandas(run_slice, schema)
+    # ONE snapshot read for the whole batch (see topk)
+    marker = check_index_format(index_dir)
+    scored = _scored(
+        spark, index_dir, marker, queries, k, n_qb=n_qb, n_groups=n_groups
+    )
     w = W.partitionBy("query_id").orderBy(F.desc("score"), doc_u_asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -496,8 +454,8 @@ class _TermBlocks:
     arrays (first/last doc in unsigned order, block-max score) plus lazy
     memoized decode+score of whole blocks — never per-doc Python.
 
-    ``budget`` (optional, SHARED across all of a group's terms): a mutable
-    ``{"left": bytes}`` cap on total memoized decode output. The batch path
+    ``budget`` (SHARED across all of a group's terms): a mutable
+    ``{"left": bytes}`` cap on total memoized decode output. ``_wand_groups``
     keeps every term's structure alive for the whole group, so without a cap
     peak task memory is the union of every query's decoded blocks (~16
     B/posting) instead of one query's. Once the budget is spent, further
@@ -509,9 +467,7 @@ class _TermBlocks:
         "idf", "firsts_u", "lasts_u", "bms", "_raw", "_avgdl", "_cache", "_budget"
     )
 
-    def __init__(
-        self, idf: float, g: pd.DataFrame, avgdl: float, budget: dict | None = None
-    ):
+    def __init__(self, idf: float, g: pd.DataFrame, avgdl: float, budget: dict):
         self.idf = idf
         # a group may span several slices; slices are doc-range-contiguous
         # (slice = top bits of doc_u), so (slice, block_id) order IS global
@@ -544,13 +500,10 @@ class _TermBlocks:
         scores = self.idf * tfs * (K1 + 1.0) / (
             tfs + K1 * (1.0 - B + B * dls / self._avgdl)
         )
-        if self._budget is None:
+        nbytes = docs_u.nbytes + scores.nbytes
+        if self._budget["left"] >= nbytes:
+            self._budget["left"] -= nbytes
             self._cache[j] = (docs_u, scores)
-        else:
-            nbytes = docs_u.nbytes + scores.nbytes
-            if self._budget["left"] >= nbytes:
-                self._budget["left"] -= nbytes
-                self._cache[j] = (docs_u, scores)
         return docs_u, scores
 
     def covering_block(self, lo_u: np.uint64) -> int:
@@ -561,8 +514,19 @@ class _TermBlocks:
         return -1
 
 
-def _wand_slice(idf_map: dict[int, float], avgdl: float, k: int, dead_bc=None):
-    """Per-slice block-max WAND, vectorized block-at-a-time.
+def _wand_groups(
+    idf_by_q: dict[int, dict[int, float]],
+    idf_all: dict[int, float],
+    avgdl: float,
+    k: int,
+    dead_bc,
+    n_qb: int,
+):
+    """Per-(segment, slice group, query bucket) block-max WAND, vectorized
+    block-at-a-time: the grouped-map function of the shared plan. The
+    group with key ``(seg, wg, qb)`` scores every query ``qid`` with
+    ``qid % n_qb == qb`` and returns its local top-k rows
+    (query_id, doc_id, score).
 
     Two-level evaluation (the SURVEY §2.9 design): level 1 works ONLY on
     block metadata — the union of all terms' block boundaries partitions the
@@ -585,8 +549,8 @@ def _wand_slice(idf_map: dict[int, float], avgdl: float, k: int, dead_bc=None):
 
     Bit-reproducibility: every emitted per-doc score is the sum of its
     per-term partials in CANONICAL order — the query's distinct-term
-    appearance order (``idf_map`` insertion order, the same order the numpy
-    oracle accumulates) as a strict left-to-right fold — NEVER the
+    appearance order (``idf_by_q[qid]`` insertion order, the same order the
+    numpy oracle accumulates) as a strict left-to-right fold — NEVER the
     essential/non-essential split order (varies with θ and therefore with
     slice grouping) and never ``np.add.reduceat`` (numpy reduce associates
     pairwise, so even a correctly-ordered array sums to a different last
@@ -598,18 +562,45 @@ def _wand_slice(idf_map: dict[int, float], avgdl: float, k: int, dead_bc=None):
     the final summation is order-pinned.
     """
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Term processing order = idf_map insertion order (query appearance
-        # order — matches the oracle's accumulation order), NOT Spark's
-        # nondeterministic partition read order and NOT term_id order.
-        by_tid = {int(t): g for t, g in pdf.groupby("term_id", sort=False)}
-        terms: list[_TermBlocks] = [
-            _TermBlocks(idf_map[t], by_tid[t], avgdl)
-            for t in idf_map
-            if t in by_tid
-        ]
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        qb = int(key[2])
         dead = dead_bc.value if dead_bc is not None else None
-        return _wand_terms_topk(terms, k, dead)
+        outs = []
+        # Build each term's block structure ONCE per group and share it —
+        # including its memoized decoded blocks — across every query in the
+        # bucket (idf is per-term global, so the structure is query-
+        # independent). Batch queries overlap heavily in vocabulary; a
+        # per-query rebuild re-sliced the metadata frame and re-decoded the
+        # same hot blocks B times per group (~6x of the batch stage's wall
+        # at 64 queries). Per query, terms are picked from the cache in the
+        # query's canonical term order — NOT Spark's nondeterministic
+        # partition read order and NOT term_id order.
+        #
+        # The shared decode memo is budget-capped: structures live for the
+        # WHOLE group, so an uncapped memo's peak would be the union of
+        # every query's decoded blocks — an executor-OOM risk on large
+        # slice groups. Hot cross-query blocks fill the cap first; past it,
+        # blocks decode per use.
+        budget = {"left": DECODE_CACHE_BYTES}
+        tb_cache = {
+            int(t): _TermBlocks(idf_all[int(t)], g, avgdl, budget)
+            for t, g in pdf.groupby("term_id", sort=False)
+        }
+        for qid, idf_map in idf_by_q.items():
+            if qid % n_qb != qb:
+                continue
+            terms = [tb_cache[t] for t in idf_map if t in tb_cache]
+            if not terms:
+                continue
+            res = _wand_terms_topk(terms, k, dead)
+            if len(res):
+                res.insert(0, "query_id", np.int64(qid))
+                outs.append(res)
+        if not outs:
+            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
+                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
+            )
+        return pd.concat(outs, ignore_index=True)
 
     return run
 
@@ -619,13 +610,10 @@ def _wand_terms_topk(
 ) -> pd.DataFrame:
     """Block-max WAND top-k over prebuilt per-term block structures.
 
-    Split out of ``_wand_slice`` so batch retrieval can build each term's
+    Takes prebuilt structures so ``_wand_groups`` can build each term's
     ``_TermBlocks`` ONCE per slice group and share it (with its memoized
-    decoded blocks) across every query in the batch that references the
-    term — queries in a batch overlap heavily in vocabulary, and without
-    sharing, each of B queries re-sliced the metadata frame and re-decoded
-    the same hot blocks (measured ~6x of the batch stage's wall at 64
-    queries). ``terms`` must be in the query's canonical term order.
+    decoded blocks) across every query in the group that references the
+    term. ``terms`` must be in the query's canonical term order.
     """
     if not terms or k <= 0:
         return pd.DataFrame(

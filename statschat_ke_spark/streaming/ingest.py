@@ -13,8 +13,10 @@ implements that mapping:
   epoch id) and stage with overwrite, making batch REPLAY after a crash
   idempotent (the streaming checkpoint gives at-least-once foreachBatch;
   overwrite-by-epoch upgrades it to effectively-once staging)
-- after the AvailableNow drain, phase B (merge_index) rebuilds
-  lexicon/postings from all staged chunks — batch and stream chunks alike
+- after the AvailableNow drain, the same phase-B publish step as
+  update_index (``_publish_pending``) appends each drained chunk as a segment
+  — or, with no committed base or ``strategy='compact'``, re-merges all
+  staged chunks, batch and stream chunks alike
 
 At web scale the same topology runs with a real trigger interval and an
 Iceberg ``MERGE INTO`` in place of the directory swap; the landing-zone
@@ -24,6 +26,7 @@ pattern, checkpoint dir, and epoch-idempotent staging carry over unchanged.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,11 +36,7 @@ from statschat_ke_spark.index.build import (
     BuildResult,
     _prepare_base,
     _stage_chunk,
-    append_segment,
-    committed_record,
-    maybe_compact,
-    merge_index,
-    staged_chunks,
+    _publish_pending,
 )
 
 STREAM_CHUNK_BASE = 1_000_000
@@ -49,7 +48,6 @@ def ingest_stream(
     index_dir: str,
     *,
     lang: str | None = "en",
-    num_partitions: int | None = None,
     schema: str = CONTRACT_SCHEMA,
     max_files_per_trigger: int | None = None,
     merge: bool = True,
@@ -66,15 +64,18 @@ def ingest_stream(
     ``strategy='segment'`` (default): every drained micro-batch chunk is
     appended as its own doc-disjoint index segment (``append_segment``), so
     continuous ingest cost stays ∝ new data — the shape a real trigger
-    interval needs. Falls back to full compaction when no committed
+    interval needs; past ``max_segments`` the index is folded back to seg=0
+    (``maybe_compact``). Falls back to full compaction when no committed
     snapshot exists (fresh dir, or a compaction that did not finish).
-    ``strategy='compact'``: full phase-B re-merge per drain.
+    ``strategy='compact'``: full phase-B re-merge per drain. Both go through
+    ``_publish_pending``, the phase-B step update_index shares.
     """
     if strategy not in ("segment", "compact"):
         # validate BEFORE any work: an unknown strategy must fail on the
         # first call, not silently compact on a fresh dir (or never validate
         # at all under merge=False) and only blow up on the second drain
         raise ValueError(f"unknown strategy {strategy!r}")
+    t0 = time.time()
     os.makedirs(index_dir, exist_ok=True)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -97,28 +98,8 @@ def ingest_stream(
 
     if not merge:
         return None
-    base = committed_record(index_dir)
-    if strategy == "compact" or base is None:
-        return merge_index(spark, index_dir, num_partitions=num_partitions)
-    staged = staged_chunks(spark, index_dir)
-    pending = sorted(staged - set(base["covered_chunks"]))
-    if not pending:
-        # nothing new landed: report the unchanged index
-        return BuildResult(
-            index_dir=index_dir,
-            n_docs=int(base["n_docs"]),
-            avgdl=float(base["avgdl"]),
-            wall_s=0.0,
-            chunks_processed=0,
-            chunks_skipped=len(staged),
-        )
-    result = None
-    for chunk in pending:
-        result = append_segment(spark, index_dir, chunk, num_partitions=num_partitions)
-    # lifecycle policy: a long-running drain appends one segment per
-    # micro-batch; bound the segment count (and with it query-probe
-    # fan-out) by folding back to seg=0 past the threshold
-    compacted = maybe_compact(
-        spark, index_dir, max_segments=max_segments, num_partitions=num_partitions
+    result = _publish_pending(
+        spark, index_dir, strategy=strategy, max_segments=max_segments
     )
-    return compacted if compacted is not None else result
+    result.wall_s = time.time() - t0
+    return result

@@ -53,5 +53,5 @@ def index_dir(spark, corpus_df, tmp_path_factory):
     """Index built from html only (extraction exercised), shared by tests."""
     d = str(tmp_path_factory.mktemp("index") / "idx1k")
     shutil.rmtree(d, ignore_errors=True)
-    build_index(spark, corpus_df.drop("text"), d, num_partitions=8)
+    build_index(spark, corpus_df.drop("text"), d)
     return d

@@ -22,8 +22,6 @@ from statschat_ke_spark.index.build import (
 )
 from statschat_ke_spark.index.query import check_index_format, topk
 
-P = 4  # fixed partitioning so posting bytes are comparable across builds
-
 
 def _data_segments(d):
     """Data segments of the committed snapshot (delete deltas excluded)."""
@@ -64,14 +62,14 @@ def _postings(spark, d):
 @pytest.fixture(scope="module")
 def single_shot(spark, docs500, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("ss") / "idx")
-    res = build_index(spark, docs500, d, num_partitions=P)
+    res = build_index(spark, docs500, d)
     return d, res
 
 
 def test_chunked_equals_single_shot(spark, docs500, single_shot, tmp_path_factory):
     d_ss, res_ss = single_shot
     d = str(tmp_path_factory.mktemp("ch") / "idx")
-    res = build_index(spark, docs500, d, num_partitions=P, n_chunks=4)
+    res = build_index(spark, docs500, d, n_chunks=4)
     assert res.complete and res.chunks_processed == 4
     assert res.n_docs == res_ss.n_docs
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
@@ -81,17 +79,13 @@ def test_chunked_equals_single_shot(spark, docs500, single_shot, tmp_path_factor
 def test_stop_and_resume(spark, docs500, single_shot, tmp_path_factory):
     d_ss, _ = single_shot
     d = str(tmp_path_factory.mktemp("rs") / "idx")
-    partial = build_index(
-        spark, docs500, d, num_partitions=P, n_chunks=4, stop_after_chunks=2
-    )
+    partial = build_index(spark, docs500, d, n_chunks=4, stop_after_chunks=2)
     assert not partial.complete
     assert partial.chunks_processed == 2
     assert staged_chunks(spark, d) == {0, 1}
     assert not os.path.exists(os.path.join(d, "_SUCCESS.json"))
 
-    resumed = build_index(
-        spark, docs500, d, num_partitions=P, n_chunks=4, resume=True
-    )
+    resumed = build_index(spark, docs500, d, n_chunks=4, resume=True)
     assert resumed.complete
     assert resumed.chunks_skipped == 2  # lineage prevented recomputation
     assert resumed.chunks_processed == 2
@@ -110,8 +104,8 @@ def test_update_equals_full_rebuild(spark, docs500, single_shot, tmp_path_factor
         "url", "warc_ts", "html", "text", "lang"
     )
     d = str(tmp_path_factory.mktemp("up") / "idx")
-    build_index(spark, base, d, num_partitions=P)
-    res = update_index(spark, delta, d, num_partitions=P, strategy="compact")
+    build_index(spark, base, d)
+    res = update_index(spark, delta, d, strategy="compact")
     assert res.complete
     assert res.n_docs == spark.read.parquet(os.path.join(d_ss, "docs")).count()
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
@@ -124,7 +118,7 @@ def test_update_equals_full_rebuild(spark, docs500, single_shot, tmp_path_factor
         assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all()
 
     # idempotency: re-sending the same delta stages 0 new docs
-    res2 = update_index(spark, delta, d, num_partitions=P, strategy="compact")
+    res2 = update_index(spark, delta, d, strategy="compact")
     assert res2.n_docs == res.n_docs
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
 
@@ -155,10 +149,10 @@ def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
         "url", "warc_ts", "html", "text", "lang"
     )
     d = str(tmp_path_factory.mktemp("seg") / "idx")
-    build_index(spark, base, d, num_partitions=P)
+    build_index(spark, base, d)
     before = _seg_files(d, "postings", 0)
 
-    res = update_index(spark, delta, d, num_partitions=P, strategy="segment")
+    res = update_index(spark, delta, d, strategy="segment")
     assert res.complete
     assert res.n_docs == spark.read.parquet(os.path.join(d_ss, "docs")).count()
     # segment 0 untouched: same files, same mtimes (nothing rewritten)
@@ -188,7 +182,7 @@ def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
         assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9)
 
     # idempotency: re-sending the delta appends nothing
-    res2 = update_index(spark, delta, d, num_partitions=P, strategy="segment")
+    res2 = update_index(spark, delta, d, strategy="segment")
     assert res2.n_docs == res.n_docs
     assert not os.path.isdir(os.path.join(d, "postings", "seg=2"))
 
@@ -205,7 +199,7 @@ def test_file_listing_chunked_build(spark, docs500, single_shot, tmp_path_factor
     assert n_parts >= 4
 
     d = str(tmp_path_factory.mktemp("fc") / "idx")
-    res = build_index(spark, src, d, num_partitions=P, n_chunks=4)
+    res = build_index(spark, src, d, n_chunks=4)
     assert res.complete and res.chunks_processed == 4
     lineage = spark.read.parquet(os.path.join(d, "_lineage")).collect()
     per_chunk_files = {r.chunk: r.n_files for r in lineage}
@@ -232,14 +226,14 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
         ).select("url", "warc_ts", "html", "text", "lang")
 
     d = str(tmp_path_factory.mktemp("lc") / "idx")
-    build_index(spark, df_of(0, 200), d, num_partitions=P)
+    build_index(spark, df_of(0, 200), d)
     assert _data_segments(d) == [0]
 
     compactions = []
     # appends → segment counts 2, 3, 4(>3: compact to 1), 2
     for a, b in [(200, 280), (280, 360), (360, 430), (430, 500)]:
         res = update_index(
-            spark, df_of(a, b), d, num_partitions=P,
+            spark, df_of(a, b), d,
             strategy="segment", max_segments=3,
         )
         assert res.complete
@@ -261,10 +255,10 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
 
     # max_segments=None disables the policy entirely
     d2 = str(tmp_path_factory.mktemp("lc2") / "idx")
-    build_index(spark, df_of(0, 200), d2, num_partitions=P)
+    build_index(spark, df_of(0, 200), d2)
     for i, (a, b) in enumerate([(200, 280), (280, 360), (360, 430)]):
         res = update_index(
-            spark, df_of(a, b), d2, num_partitions=P,
+            spark, df_of(a, b), d2,
             strategy="segment", max_segments=None,
         )
         assert not res.compacted
@@ -283,20 +277,45 @@ def test_update_segment_chunk_accounting(spark, tmp_path_factory):
         "url", "warc_ts", "html", "text", "lang"
     )
     d = str(tmp_path_factory.mktemp("acct") / "idx")
-    build_index(spark, base, d, num_partitions=P)
+    build_index(spark, base, d)
 
     # normal delta append: exactly one chunk processed, the base chunk(s)
     # skipped, never both counted for the same chunk
-    res = update_index(spark, delta, d, num_partitions=P, strategy="segment")
+    res = update_index(spark, delta, d, strategy="segment")
     assert res.chunks_processed == 1
     done_total = len(staged_chunks(spark, d))
     assert res.chunks_processed + res.chunks_skipped == done_total
 
-    # pure replay (same delta again): the empty replay chunk is packed via
-    # the fallback path and MUST count as processed=1, not 0
-    res2 = update_index(spark, delta, d, num_partitions=P, strategy="segment")
+    # pure replay (same delta again): the empty replay chunk is published
+    # (recorded as covered) and MUST count as processed=1, not 0
+    res2 = update_index(spark, delta, d, strategy="segment")
     assert res2.chunks_processed == 1
     assert res2.chunks_skipped == done_total  # all prior chunks skipped
+
+
+def test_resent_delta_leaves_no_pending_chunk(spark, tmp_path_factory):
+    """Re-sending a delta stages an EMPTY chunk (everything anti-joins away).
+    Publishing it must still record the chunk as covered — otherwise every
+    later update or drain re-reads every such chunk — and change nothing
+    else about the snapshot."""
+    pdf = generate_documents(300)
+    base = spark.createDataFrame(pdf.iloc[:150], schema=DOCUMENTS_SPARK_SCHEMA).select(
+        "url", "warc_ts", "html", "text", "lang"
+    )
+    delta = spark.createDataFrame(pdf.iloc[150:], schema=DOCUMENTS_SPARK_SCHEMA).select(
+        "url", "warc_ts", "html", "text", "lang"
+    )
+    d = str(tmp_path_factory.mktemp("resend") / "idx")
+    build_index(spark, base, d)
+    update_index(spark, delta, d, strategy="segment")
+    before = check_index_format(d)
+    for _ in range(2):
+        update_index(spark, delta, d, strategy="segment")
+    after = check_index_format(d)
+    assert set(after["covered_chunks"]) == staged_chunks(spark, d)
+    assert len(after["covered_chunks"]) == len(before["covered_chunks"]) + 2
+    assert after["segments"] == before["segments"]
+    assert (after["n_docs"], after["avgdl"]) == (before["n_docs"], before["avgdl"])
 
 
 def test_crashed_compaction_then_segment_update(spark, tmp_path_factory, monkeypatch):
@@ -321,14 +340,14 @@ def test_crashed_compaction_then_segment_update(spark, tmp_path_factory, monkeyp
     base, delta = df_of(pdf.iloc[:300]), df_of(pdf.iloc[300:])
     d = str(tmp_path_factory.mktemp("ccr") / "idx")
     ref = str(tmp_path_factory.mktemp("ccrref") / "idx")
-    build_index(spark, base, d, num_partitions=P)
+    build_index(spark, base, d)
     with monkeypatch.context() as m:
         m.setattr(build_mod, "_build_segment", crash)
         with pytest.raises(RuntimeError, match="injected crash"):
-            build_mod.merge_index(spark, d, num_partitions=P)
+            build_mod.merge_index(spark, d)
 
-    res = update_index(spark, delta, d, num_partitions=P, strategy="segment")
-    ref_res = build_index(spark, base.unionByName(delta), ref, num_partitions=P)
+    res = update_index(spark, delta, d, strategy="segment")
+    ref_res = build_index(spark, base.unionByName(delta), ref)
     assert res.n_docs == ref_res.n_docs
     for q in ["what was inflation in december 2023", "maize production county report"]:
         a = topk(spark, d, q, 10).toPandas()
@@ -413,12 +432,12 @@ def test_writer_lock_conflict_and_stale_recovery(spark, docs500, tmp_path_factor
     with open(os.path.join(d, "_WRITER_LOCK"), "w") as f:
         f.write("1")
     with pytest.raises(WriterConflict, match="live writer"):
-        build_index(spark, docs500, d, num_partitions=P)
+        build_index(spark, docs500, d)
 
     # dead owner: stale lock is broken, build succeeds, lock released
     with open(os.path.join(d, "_WRITER_LOCK"), "w") as f:
         f.write("999999999")
-    res = build_index(spark, docs500, d, num_partitions=P)
+    res = build_index(spark, docs500, d)
     assert res.n_docs > 0
     assert not os.path.exists(os.path.join(d, "_WRITER_LOCK"))
     topk(spark, d, "report", 5)
@@ -477,8 +496,8 @@ def test_update_index_serves_throughout_segment_append(
     delta = spark.createDataFrame(pdf.iloc[200:], schema=DOCUMENTS_SPARK_SCHEMA).select(
         "url", "warc_ts", "html", "text", "lang"
     )
-    res0 = build_index(spark, base, d, num_partitions=P)
-    res = update_index(spark, delta, d, num_partitions=P, strategy="segment")
+    res0 = build_index(spark, base, d)
+    res = update_index(spark, delta, d, strategy="segment")
     assert res.n_docs > res0.n_docs  # delta landed (lang filter may drop some)
     with open(os.path.join(d, "_SUCCESS.json")) as f:
         marker = json.load(f)
@@ -592,7 +611,7 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
     delta = spark.createDataFrame(pdf.iloc[250:], schema=DOCUMENTS_SPARK_SCHEMA).select(
         "url", "warc_ts", "html", "text", "lang"
     )
-    build_index(spark, base, d, num_partitions=P)
+    build_index(spark, base, d)
     q = "county report statistics survey"
 
     def snap(df):
@@ -614,7 +633,7 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
     t = threading.Thread(target=reader)
     t.start()
     try:
-        update_index(spark, delta, d, num_partitions=P, strategy="segment")
+        update_index(spark, delta, d, strategy="segment")
     finally:
         done.set()
         t.join(60)

@@ -26,7 +26,6 @@ from statschat_ke_spark.index.build import (
 )
 from statschat_ke_spark.index.query import topk, topk_batch
 
-P = 4
 QUERIES = [
     "county report statistics survey",
     "what was inflation in december 2023",
@@ -52,14 +51,14 @@ def deleted_pair(spark, corpus, tmp_path_factory):
     docs = _docs(spark, corpus)
     d1 = str(tmp_path_factory.mktemp("del") / "idx")
     d2 = str(tmp_path_factory.mktemp("ref") / "idx")
-    build_index(spark, docs, d1, num_partitions=P)
+    build_index(spark, docs, d1)
     victims = sorted(
         r.url
         for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
     )[:60]
     res = delete_docs(spark, d1, victims)
     assert res.n_deleted == 60
-    build_index(spark, docs.filter(~docs.url.isin(victims)), d2, num_partitions=P)
+    build_index(spark, docs.filter(~docs.url.isin(victims)), d2)
     return d1, d2, victims
 
 
@@ -117,16 +116,16 @@ def test_compaction_reclaims_and_stays_identical(spark, corpus, tmp_path_factory
     docs = _docs(spark, corpus)
     d1 = str(tmp_path_factory.mktemp("cmp") / "idx")
     d2 = str(tmp_path_factory.mktemp("cmpref") / "idx")
-    build_index(spark, docs, d1, num_partitions=P)
+    build_index(spark, docs, d1)
     victims = sorted(
         r.url
         for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
     )[::5]  # every 5th doc
     delete_docs(spark, d1, victims)
-    build_index(spark, docs.filter(~docs.url.isin(victims)), d2, num_partitions=P)
+    build_index(spark, docs.filter(~docs.url.isin(victims)), d2)
 
     rows_before = spark.read.parquet(os.path.join(d1, "postings")).count()
-    merge_index(spark, d1, num_partitions=P)
+    merge_index(spark, d1)
     rows_after = spark.read.parquet(os.path.join(d1, "postings")).count()
     assert rows_after < rows_before  # physical reclaim
     _assert_same_topk(spark, d1, d2)
@@ -137,7 +136,7 @@ def test_compaction_reclaims_and_stays_identical(spark, corpus, tmp_path_factory
     with open(os.path.join(d1, "_SUCCESS.json")) as f:
         assert json.load(f)["tombstone_files"]
     # ... and a SECOND compaction still excludes the deleted docs
-    merge_index(spark, d1, num_partitions=P)
+    merge_index(spark, d1)
     _assert_same_topk(spark, d1, d2)
 
 
@@ -153,13 +152,13 @@ def test_delete_then_segment_append(spark, corpus, tmp_path_factory):
     extra = _docs(spark, pdf2)
     d1 = str(tmp_path_factory.mktemp("da") / "idx")
     d2 = str(tmp_path_factory.mktemp("daref") / "idx")
-    build_index(spark, docs, d1, num_partitions=P)
+    build_index(spark, docs, d1)
     victims = sorted(
         r.url
         for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
     )[:40]
     delete_docs(spark, d1, victims)
-    update_index(spark, extra, d1, num_partitions=P, strategy="segment")
+    update_index(spark, extra, d1, strategy="segment")
 
     with open(os.path.join(d1, "_SUCCESS.json")) as f:
         marker = json.load(f)
@@ -168,12 +167,12 @@ def test_delete_then_segment_append(spark, corpus, tmp_path_factory):
     )
 
     ref = docs.filter(~docs.url.isin(victims)).unionByName(extra)
-    build_index(spark, ref, d2, num_partitions=P)
+    build_index(spark, ref, d2)
     _assert_same_topk(spark, d1, d2)
 
     # terminal-delete semantics: re-sending a deleted url is a no-op
     resend = docs.filter(docs.url.isin(victims[:5]))
-    update_index(spark, resend, d1, num_partitions=P, strategy="segment")
+    update_index(spark, resend, d1, strategy="segment")
     _assert_same_topk(spark, d1, d2)
 
 
@@ -181,7 +180,7 @@ def test_delete_everything(spark, tmp_path_factory):
     pdf = generate_documents(60, seed=3)
     docs = _docs(spark, pdf)
     d = str(tmp_path_factory.mktemp("all") / "idx")
-    build_index(spark, docs, d, num_partitions=P)
+    build_index(spark, docs, d)
     urls = [r.url for r in spark.read.parquet(os.path.join(d, "docs")).collect()]
     res = delete_docs(spark, d, urls)
     assert res.n_docs == 0 and res.avgdl == 0.0
@@ -196,7 +195,7 @@ def test_multiple_deletes_fold_to_one_delta_segment(spark, corpus, tmp_path_fact
     docs = _docs(spark, corpus)
     d1 = str(tmp_path_factory.mktemp("fold") / "idx")
     d2 = str(tmp_path_factory.mktemp("foldref") / "idx")
-    build_index(spark, docs, d1, num_partitions=P)
+    build_index(spark, docs, d1)
     urls = sorted(
         r.url
         for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
@@ -214,7 +213,7 @@ def test_multiple_deletes_fold_to_one_delta_segment(spark, corpus, tmp_path_fact
         if int(x.split("=", 1)[1]) >= DELETE_SEG_BASE
     )
     assert deltas_in_marker == listed[-1:]
-    build_index(spark, docs.filter(~docs.url.isin(urls[:45])), d2, num_partitions=P)
+    build_index(spark, docs.filter(~docs.url.isin(urls[:45])), d2)
     _assert_same_topk(spark, d1, d2)
 
 
@@ -230,7 +229,7 @@ def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
     extra = _docs(spark, pdf2)
     d1 = str(tmp_path_factory.mktemp("orph") / "idx")
     d2 = str(tmp_path_factory.mktemp("orphref") / "idx")
-    build_index(spark, docs, d1, num_partitions=P)
+    build_index(spark, docs, d1)
     victims = sorted(
         r.url
         for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
@@ -247,7 +246,7 @@ def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
     )
 
     # a later append publishes a fresh marker — the orphan must stay out
-    update_index(spark, extra, d1, num_partitions=P, strategy="segment")
+    update_index(spark, extra, d1, strategy="segment")
     with open(os.path.join(d1, "_SUCCESS.json")) as f:
         marker = json.load(f)
     assert orphan_seg not in [int(s) for s in marker["segments"]]
@@ -260,7 +259,7 @@ def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
     assert deltas and deltas[0] != orphan_seg
 
     ref = docs.filter(~docs.url.isin(victims)).unionByName(extra)
-    build_index(spark, ref, d2, num_partitions=P)
+    build_index(spark, ref, d2)
     _assert_same_topk(spark, d1, d2)
 
 
@@ -274,7 +273,7 @@ def test_delete_ignores_uncommitted_staged_chunk(spark, corpus, tmp_path_factory
     pdf2 = generate_documents(40, seed=13)
     pending = _docs(spark, pdf2)
     d = str(tmp_path_factory.mktemp("unc") / "idx")
-    build_index(spark, docs, d, num_partitions=P)
+    build_index(spark, docs, d)
     base = _prepare_base(pending, "en")
     _stage_chunk(spark, base, d, 1)  # staged, never appended
     pending_urls = [r.url for r in base.select("url").limit(5).collect()]
@@ -294,7 +293,7 @@ def test_streaming_reland_of_deleted_url_not_readmitted(
 
     docs = _docs(spark, corpus)
     d = str(tmp_path_factory.mktemp("rl") / "idx")
-    build_index(spark, docs, d, num_partitions=P)
+    build_index(spark, docs, d)
     victims = sorted(
         r.url
         for r in spark.read.parquet(os.path.join(d, "docs")).select("url").collect()
@@ -305,7 +304,7 @@ def test_streaming_reland_of_deleted_url_not_readmitted(
     # simulate the streaming drain re-landing the deleted urls verbatim
     reland = _prepare_base(docs.filter(docs.url.isin(victims)), "en")
     _stage_chunk(spark, reland, d, 1_000_123)
-    out = append_segment(spark, d, 1_000_123, num_partitions=P)
+    out = append_segment(spark, d, 1_000_123)
     assert out.n_docs == res.n_docs  # nothing re-admitted
     assert topk(spark, d, QUERIES[0], 10).toPandas().equals(before)
 
@@ -325,7 +324,7 @@ def test_delete_crash_before_commit_retries_exactly_once(
     docs = _docs(spark, corpus)
     d1 = str(tmp_path_factory.mktemp("dcr") / "idx")
     d2 = str(tmp_path_factory.mktemp("dcrref") / "idx")
-    build_index(spark, docs, d1, num_partitions=P)
+    build_index(spark, docs, d1)
     victims = sorted(
         r.url
         for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
@@ -347,7 +346,7 @@ def test_delete_crash_before_commit_retries_exactly_once(
 
     res = delete_docs(spark, d1, victims)
     assert res.n_deleted == len(victims)
-    build_index(spark, docs.filter(~docs.url.isin(victims)), d2, num_partitions=P)
+    build_index(spark, docs.filter(~docs.url.isin(victims)), d2)
     _assert_same_topk(spark, d1, d2)
 
 
@@ -361,7 +360,7 @@ def test_crashed_compaction_keeps_deletes(spark, corpus, tmp_path_factory, monke
     docs = _docs(spark, corpus)
     d1 = str(tmp_path_factory.mktemp("ccd") / "idx")
     d2 = str(tmp_path_factory.mktemp("ccdref") / "idx")
-    build_index(spark, docs, d1, num_partitions=P)
+    build_index(spark, docs, d1)
     victims = sorted(
         r.url
         for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
@@ -371,12 +370,12 @@ def test_crashed_compaction_keeps_deletes(spark, corpus, tmp_path_factory, monke
     with monkeypatch.context() as m:
         m.setattr(build_mod, "_build_segment", _crash)
         with pytest.raises(RuntimeError, match="injected crash"):
-            merge_index(spark, d1, num_partitions=P)
+            merge_index(spark, d1)
     with pytest.raises(RuntimeError, match="_SUCCESS.json"):
         topk(spark, d1, QUERIES[0], 10)
     with pytest.raises(RuntimeError, match="_SUCCESS.json"):
         delete_docs(spark, d1, victims[:1])
 
-    merge_index(spark, d1, num_partitions=P)
-    build_index(spark, docs.filter(~docs.url.isin(victims)), d2, num_partitions=P)
+    merge_index(spark, d1)
+    build_index(spark, docs.filter(~docs.url.isin(victims)), d2)
     _assert_same_topk(spark, d1, d2)

@@ -65,7 +65,7 @@ def test_wand_exact_tie_at_rank_k(spark, index_dir, oracle):
     unsigned-doc_id tie-break in WAND too. The interval upper bounds come
     out of a float sweep+cumsum whose rounding once pushed the tied doc's
     interval a few ulp below θ, so WAND skipped it while the oracle kept it
-    (query.py _wand_slice eps margin). This query has two docs bit-equal at
+    (query.py _wand_groups eps margin). This query has two docs bit-equal at
     rank 10 on the 1k corpus."""
     q = "w09207 w02260 reports"
     golden = oracle.topk(q, 10)
@@ -79,7 +79,7 @@ def test_wand_exact_tie_at_rank_k(spark, index_dir, oracle):
 def test_scores_bit_identical_across_groupings(spark, index_dir):
     """Emitted scores are a pure function of (index, query): BIT-identical
     across WAND slice-group counts and between topk and topk_batch. Per-doc
-    partials are summed in canonical query-term order (query.py _wand_slice
+    partials are summed in canonical query-term order (query.py _wand_groups
     'Bit-reproducibility'); without that pin, the essential/non-essential
     split order varies with grouping and near-tied docs swap ranks by one
     ulp — caught by exactly such a swap on an all-common query at a pinned
@@ -173,7 +173,7 @@ def test_topk_batch_rank_identity_golden_scale(spark, index_dir, oracle, corpus_
 
 
 def test_term_blocks_budget_cap(spark, index_dir, queries):
-    """The batch path's shared decode memo honors its byte budget: with a
+    """A WAND group's shared decode memo honors its byte budget: with a
     zero budget nothing is retained (every block decodes per use) and the
     emitted partials are bit-identical to the unbounded cache's."""
     import os
@@ -190,7 +190,7 @@ def test_term_blocks_budget_cap(spark, index_dir, queries):
     avgdl = float(check_index_format(index_dir)["avgdl"])
     tid, g = next(iter(pst.groupby("term_id", sort=False)))
 
-    unbounded = _TermBlocks(1.0, g, avgdl)
+    unbounded = _TermBlocks(1.0, g, avgdl, {"left": 2**62})
     zero = {"left": 0}
     capped = _TermBlocks(1.0, g, avgdl, zero)
     for j in range(len(g)):
@@ -242,7 +242,7 @@ def test_scores_bit_identical_across_slice_bits(spark, corpus_df, index_dir,
     SAME corpus at coarser and finer slice_bits must leave every query's
     doc_ids AND score bits unchanged (scores are per-doc sums over the
     query's terms — slices only re-cut posting blocks; the canonical-order
-    fold in _wand_slice keeps the summation order pinned regardless)."""
+    fold in _wand_groups keeps the summation order pinned regardless)."""
     import json
     import os
 
@@ -262,8 +262,7 @@ def test_scores_bit_identical_across_slice_bits(spark, corpus_df, index_dir,
     )
     for sb in (3, 9):
         d = str(tmp_path / f"idx_sb{sb}")
-        build_index(spark, corpus_df.drop("text"), d, num_partitions=8,
-                    slice_bits=sb)
+        build_index(spark, corpus_df.drop("text"), d, slice_bits=sb)
         with open(os.path.join(d, "stats.json")) as f:
             assert json.load(f)["slice_bits"] == sb
         # the layout really changed: slice ids live in [0, 2^sb)

@@ -12,8 +12,6 @@ from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.index.build import build_index
 from statschat_ke_spark.streaming.ingest import ingest_stream
 
-P = 4
-
 
 def _lexicon(spark, d):
     rows = (
@@ -59,8 +57,8 @@ def test_stream_ingest_incremental(spark, parts, tmp_path):
 
     # drop 1 → drain → index == batch build over drop 1
     a.write.mode("append").parquet(landing)
-    res1 = ingest_stream(spark, landing, idx_stream, num_partitions=P)
-    build_index(spark, a, idx_batch_a, num_partitions=P)
+    res1 = ingest_stream(spark, landing, idx_stream)
+    build_index(spark, a, idx_batch_a)
     assert res1.n_docs == a.filter("lang = 'en'").count()
     assert _lexicon(spark, idx_stream) == _lexicon(spark, idx_batch_a)
     assert _postings(spark, idx_stream) == _postings(spark, idx_batch_a)
@@ -69,9 +67,9 @@ def test_stream_ingest_incremental(spark, parts, tmp_path):
     # full re-merge is byte-identical to a batch build over everything
     b.write.mode("append").parquet(landing)
     res2 = ingest_stream(
-        spark, landing, idx_stream, num_partitions=P, strategy="compact"
+        spark, landing, idx_stream, strategy="compact"
     )
-    build_index(spark, full, idx_batch_full, num_partitions=P)
+    build_index(spark, full, idx_batch_full)
     assert res2.n_docs == full.filter("lang = 'en'").count()
     assert _lexicon(spark, idx_stream) == _lexicon(spark, idx_batch_full)
     assert _postings(spark, idx_stream) == _postings(spark, idx_batch_full)
@@ -91,18 +89,18 @@ def test_stream_segment_append(spark, parts, tmp_path):
     idx_full = str(tmp_path / "idx_seg_full")
 
     a.write.mode("append").parquet(landing)
-    ingest_stream(spark, landing, idx, num_partitions=P)
+    ingest_stream(spark, landing, idx)
     seg0 = os.path.join(idx, "postings", "seg=0")
     before = {f: os.path.getmtime(os.path.join(seg0, f)) for f in os.listdir(seg0)}
 
     b.write.mode("append").parquet(landing)
-    res = ingest_stream(spark, landing, idx, num_partitions=P)
+    res = ingest_stream(spark, landing, idx)
     assert res.n_docs == full.filter("lang = 'en'").count()
     assert {f: os.path.getmtime(os.path.join(seg0, f)) for f in os.listdir(seg0)} == before
     segs = [d for d in os.listdir(os.path.join(idx, "postings")) if d.startswith("seg=")]
     assert len(segs) == 2
 
-    build_index(spark, full, idx_full, num_partitions=P)
+    build_index(spark, full, idx_full)
     for q in ["inflation county report", "maize production county report"]:
         x = topk(spark, idx, q, 10).toPandas()
         y = topk(spark, idx_full, q, 10).toPandas()
@@ -110,7 +108,7 @@ def test_stream_segment_append(spark, parts, tmp_path):
         assert np.allclose(x.score.to_numpy(), y.score.to_numpy(), atol=1e-9)
 
     # replayed drain with nothing new: unchanged
-    res2 = ingest_stream(spark, landing, idx, num_partitions=P)
+    res2 = ingest_stream(spark, landing, idx)
     assert res2.n_docs == res.n_docs and res2.chunks_processed == 0
 
 
@@ -119,10 +117,10 @@ def test_stream_rerun_noop(spark, parts, tmp_path):
     landing = str(tmp_path / "landing2")
     idx = str(tmp_path / "idx2")
     a.write.mode("append").parquet(landing)
-    r1 = ingest_stream(spark, landing, idx, num_partitions=P)
+    r1 = ingest_stream(spark, landing, idx)
     lex1 = _lexicon(spark, idx)
     # no new files: drain is a no-op merge over identical staged chunks
-    r2 = ingest_stream(spark, landing, idx, num_partitions=P)
+    r2 = ingest_stream(spark, landing, idx)
     assert r2.n_docs == r1.n_docs
     assert _lexicon(spark, idx) == lex1
 
@@ -146,17 +144,17 @@ def test_stream_drain_auto_compaction(spark, parts, tmp_path):
     idx_full = str(tmp_path / "idx_lc_full")
 
     a.write.mode("append").parquet(landing)
-    ingest_stream(spark, landing, idx, num_partitions=P)
+    ingest_stream(spark, landing, idx)
     assert _data_segments(idx) == [0]
 
     # second drain appends ≥1 segment → count ≥ 2 > max_segments=1 → compact
     b.write.mode("append").parquet(landing)
-    res = ingest_stream(spark, landing, idx, num_partitions=P, max_segments=1)
+    res = ingest_stream(spark, landing, idx, max_segments=1)
     assert res.compacted
     assert _data_segments(idx) == [0]
     assert res.n_docs == full.filter("lang = 'en'").count()
 
-    build_index(spark, full, idx_full, num_partitions=P)
+    build_index(spark, full, idx_full)
     for q in ["inflation county report", "maize production county report"]:
         x = topk(spark, idx, q, 10).toPandas()
         y = topk(spark, idx_full, q, 10).toPandas()

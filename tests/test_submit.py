@@ -69,7 +69,6 @@ def test_spark_submit_py_files_build(spark, tmp_path):
             os.path.join(REPO, "scripts", "submit_build.py"),
             "--input", SF_DOCS,
             "--index-dir", idx,
-            "--partitions", "8",
         ],
         capture_output=True, text=True, timeout=600,
         cwd=str(tmp_path),  # NOT the repo: the zip must satisfy the import
@@ -91,7 +90,7 @@ def test_spark_submit_py_files_build(spark, tmp_path):
     from statschat_ke_spark.index.query import topk
 
     local_idx = str(tmp_path / "local_idx")
-    build_index(spark, spark.read.parquet(SF_DOCS), local_idx, num_partitions=8)
+    build_index(spark, spark.read.parquet(SF_DOCS), local_idx)
     q = "statistics county report"
     got = topk(spark, idx, q, 10).toPandas()
     want = topk(spark, local_idx, q, 10).toPandas()

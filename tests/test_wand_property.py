@@ -1,7 +1,8 @@
 """WAND == brute force on random posting sets (SURVEY.md §5.2-3).
 
-Unit-tests the per-slice block-max WAND function directly (no Spark session)
-against brute-force scoring, including adversarial tie cases.
+Unit-tests the shared plan's block-max WAND group function (``_wand_groups``)
+directly (no Spark session) against brute-force scoring, including
+adversarial tie cases.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ from statschat_ke_spark.index.codec import (
     encode_tfs,
     vbyte_encode,
 )
-from statschat_ke_spark.index.query import K1, B, _wand_slice
+from statschat_ke_spark.index.query import K1, B, _wand_groups
 
 
 def _build_slice_pdf(term_postings: dict[int, list[tuple[int, int, int]]], avgdl: float):
@@ -53,6 +54,13 @@ def _build_slice_pdf(term_postings: dict[int, list[tuple[int, int, int]]], avgdl
     return pd.DataFrame(rows), idf_map
 
 
+def _wand_one(idf_map, avgdl, k, pdf):
+    """One query's local top-k from the shared plan's group function, for a
+    single (seg, wg, qb) group holding every posting."""
+    out = _wand_groups({0: idf_map}, idf_map, avgdl, k, None, 1)((0, 0, 0), pdf)
+    return out.drop(columns="query_id")
+
+
 def _brute_force(term_postings, idf_map, avgdl, k):
     scores: dict[int, float] = {}
     for term_id, plist in term_postings.items():
@@ -82,7 +90,7 @@ def test_wand_matches_bruteforce_random():
             term_postings[1000 + t] = plist
         pdf, idf_map = _build_slice_pdf(term_postings, avgdl)
         for k in (0, 1, 5, 20):
-            got = _wand_slice(idf_map, avgdl, k)(pdf)
+            got = _wand_one(idf_map, avgdl, k, pdf)
             want = _brute_force(term_postings, idf_map, avgdl, k)
             got_ids = got.doc_id.to_numpy().view(np.uint64).tolist()
             assert got_ids == [d for d, _ in want], f"trial={trial} k={k}"
@@ -97,6 +105,6 @@ def test_wand_exact_ties():
     plist = [(d, 3, 100) for d in [10, 5, 99, 42, 7]]
     term_postings = {1: plist, 2: [(d, 1, 100) for d, _, _ in plist]}
     pdf, idf_map = _build_slice_pdf(term_postings, avgdl)
-    got = _wand_slice(idf_map, avgdl, 3)(pdf)
+    got = _wand_one(idf_map, avgdl, 3, pdf)
     want = _brute_force(term_postings, idf_map, avgdl, 3)
     assert got.doc_id.to_numpy().view(np.uint64).tolist() == [d for d, _ in want]
