@@ -92,18 +92,18 @@ def _decoded_fraction(spark, idx: str, q: str, k: int = 10):
     wrapped by a counter."""
     from statschat_ke_spark.index import query as Q
 
-    marker = Q.check_index_format(idx)
-    terminfo = Q._probe_idf(spark, idx, Q._term_ids(q), marker, int(marker["n_docs"]))
+    snap = Q._snapshot(spark, idx, Q.check_index_format(idx))
+    terminfo = Q._probe_idf(snap, Q._term_ids(q))
     if not terminfo:
         return None
     total_df = sum(v["df"] for v in terminfo.values())
     par = spark.sparkContext.defaultParallelism
     n_groups = Q.wand_group_count(total_df, par)  # topk's exact grouping
-    pst = Q._postings(spark, idx, marker, list(terminfo), n_groups).toPandas()
+    pst = Q._postings(snap, list(terminfo), n_groups).toPandas()
     if not len(pst):
         return None
     idf_map = {t: v["idf"] for t, v in terminfo.items()}
-    avgdl = float(marker["avgdl"])
+    avgdl = float(snap.marker["avgdl"])
     decoded = {"n": 0}
     orig = Q._TermBlocks.partials
 

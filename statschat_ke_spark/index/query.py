@@ -5,10 +5,14 @@ Replaces the reference's FAISS ``similarity_search_with_score``
 inverted-index analog of an index-nested-loop join (SURVEY.md §2.3 J5):
 
 1. tokenize the query driver-side (tiny) → distinct term_ids
-2. lexicon lookup (parquet scan filtered by term_id — pushed down) → idf +
-   per-term impact upper bounds, collected to the driver (≤ |q| rows)
-3. postings scan filtered by term_id (predicate pushdown + row-group
-   pruning: postings are written term_id-sorted within range partitions)
+2. lexicon lookup → idf: ONE narrow job per query that misses the probe
+   memo — a term_id-pushed-down scan of the snapshot handle's lexicon,
+   collected to the driver (≤ |q| × n_segments rows) and summed per term
+   there. The handle (``_snapshot``) opens each table once per commit and
+   is shared by every query against that commit.
+3. postings scan of the handle's postings filtered by term_id (predicate
+   pushdown + row-group pruning: postings are written term_id-sorted within
+   range partitions)
 4. scoring: ONE plan (``_scored``) for topk and topk_batch — group blocks
    by (segment, doc-range slice group, query bucket); per group a vectorized
    block-max WAND skips blocks whose upper bound can't enter the top-k and
@@ -28,6 +32,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -104,17 +109,6 @@ def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
     return marker
 
 
-# Driver-side probe cache — the engine analog of the reference's
-# ``lru_cache`` on make_query (cloud_llm.py:235, SURVEY §2.8 "query-result
-# cache dict in the query driver"). Keyed by the index's commit version
-# (the uuid in _SUCCESS.json — unique per commit), NOT mtime: back-to-back
-# segment appends can land within one mtime granule on coarse-timestamp
-# filesystems and would leave stale df cached. Values: term_id → df
-# (0 = probed and absent). Bounded by the number of distinct QUERIED terms,
-# not the lexicon.
-_PROBE_CACHE: dict[tuple[str, str], dict[int, int]] = {}
-
-
 def _index_version(index_dir: str, marker: dict | None = None) -> str:
     if marker is None:
         marker = read_commit(index_dir)
@@ -134,96 +128,105 @@ def _prune_to_snapshot(df: DataFrame, marker: dict) -> DataFrame:
     return df.filter(F.col("seg").isin([int(s) for s in marker["segments"]]))
 
 
-def _probe_dfs(
-    spark: SparkSession, index_dir: str, ids: list[int], marker: dict
-) -> dict[int, int]:
-    """df per term_id (summed over the COMMITTED lexicon segments),
-    probe-cached. The snapshot prune and the cache key come from the
-    caller's one record read (the record its whole query runs against, so
-    probed df can never describe a different commit than the postings scan)
-    — so cached df always describes the keyed version."""
-    key = (index_dir, _index_version(index_dir, marker))
-    if key not in _PROBE_CACHE:
-        # Evict superseded versions of THIS index_dir (a long-lived driver
-        # running ingest_stream gets a fresh commit uuid per append, so
-        # without eviction the cache grows one dead dict per append); keep
-        # other dirs' live entries, with a global cap as a backstop.
-        for stale in [k for k in _PROBE_CACHE if k[0] == index_dir]:
-            del _PROBE_CACHE[stale]
-        if len(_PROBE_CACHE) > 8:  # many distinct dirs — backstop
-            _PROBE_CACHE.clear()
-        _PROBE_CACHE[key] = {}
-    cache = _PROBE_CACHE[key]
-    missing = [i for i in ids if i not in cache]
-    if missing:
-        # Collect FIRST, commit to the cache only on success: pre-seeding
-        # zeros before the Spark action would, on a transient probe failure,
-        # leave df=0 cached for this index version and silently drop those
-        # terms from every subsequent query's scoring.
-        probed = {
-            int(r.term_id): int(r.df)
-            for r in (
-                _prune_to_snapshot(
-                    spark.read.parquet(os.path.join(index_dir, "lexicon")), marker
-                )
-                .filter(F.col("term_id").isin(missing))
-                .groupBy("term_id")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-        }
-        for i in missing:
-            cache[i] = probed.get(i, 0)
-    return {i: cache[i] for i in ids}
+class _Snapshot:
+    """Reader handle for ONE committed snapshot: its three tables opened once
+    (each open lists the table dir and infers the parquet schema — a Spark
+    job apiece), the term_id → df probe memo (0 = probed and absent; bounded
+    by the distinct QUERIED terms, not the lexicon) and the lazily loaded
+    tombstone broadcast. A snapshot is immutable per commit uuid, so every
+    query against that commit shares the handle — the engine analog of the
+    reference's ``lru_cache`` on make_query (cloud_llm.py:235)."""
 
-
-# Tombstone broadcast cache, keyed like the probe cache by (index_dir,
-# commit version): the delete set is immutable per snapshot, so one driver
-# read + one executor broadcast serves every query against that version.
-# Values: (id(SparkContext), Broadcast[np.ndarray uint64 sorted] | None).
-_TOMB_CACHE: dict = {}
-
-
-def _load_tombstones_bc(spark: SparkSession, index_dir: str, marker: dict):
-    """Broadcast of the snapshot's tombstoned doc_ids (sorted uint64), or
-    None when the snapshot has no deletes. Files are driver-read with
-    pyarrow (commit metadata, like lineage) — 8 bytes per lifetime-deleted
-    doc — and shipped to executors once per (index version, SparkContext)."""
-    files = marker.get("tombstone_files") or []
-    if not files:
-        return None
-    key = (index_dir, _index_version(index_dir, marker))
-    sc = spark.sparkContext
-    hit = _TOMB_CACHE.get(key)
-    if hit is not None and hit[0] == id(sc):
-        return hit[1]
-    import pyarrow.parquet as pq
-
-    arrs = [
-        pq.read_table(
-            os.path.join(index_dir, "tombstones", f), columns=["doc_id"]
+    def __init__(self, spark: SparkSession, index_dir: str, marker: dict):
+        self.index_dir = index_dir
+        self.marker = marker
+        self.lexicon, self.postings, self.docs = (
+            _prune_to_snapshot(spark.read.parquet(os.path.join(index_dir, t)), marker)
+            for t in ("lexicon", "postings", "docs")
         )
-        .column("doc_id")
-        .to_numpy()
-        .astype(np.int64)
-        for f in files
-    ]
-    dead = np.unique(np.concatenate(arrs).view(np.uint64))  # sorted unsigned
-    bc = sc.broadcast(dead)
-    for stale in [k for k in _TOMB_CACHE if k[0] == index_dir and k != key]:
-        sc_id, old_bc = _TOMB_CACHE.pop(stale)
-        if old_bc is not None and sc_id == id(sc):
+        self.dfs: dict[int, int] = {}
+        self._sc = spark.sparkContext
+        self._dead_lock = threading.Lock()
+        self._dead_loaded = False
+        self._dead_bc = None
+
+    def dead_bc(self):
+        """Broadcast of the snapshot's tombstoned doc_ids (sorted uint64), or
+        None when the snapshot has no deletes. Files are driver-read with
+        pyarrow (commit metadata, like lineage) — 8 bytes per lifetime-deleted
+        doc — and shipped to executors once per handle."""
+        with self._dead_lock:
+            if not self._dead_loaded:
+                files = self.marker.get("tombstone_files") or []
+                if files:
+                    import pyarrow.parquet as pq
+
+                    arrs = [
+                        pq.read_table(
+                            os.path.join(self.index_dir, "tombstones", f),
+                            columns=["doc_id"],
+                        )
+                        .column("doc_id")
+                        .to_numpy()
+                        .astype(np.int64)
+                        for f in files
+                    ]
+                    dead = np.unique(np.concatenate(arrs).view(np.uint64))
+                    self._dead_bc = self._sc.broadcast(dead)  # sorted unsigned
+                self._dead_loaded = True
+            return self._dead_bc
+
+    def close(self) -> None:
+        """Release the tombstone broadcast's block-manager storage NOW — a
+        long-lived ingest+serve driver opens a handle per commit, and
+        unreferenced broadcasts otherwise linger until context teardown
+        (non-blocking; in-flight tasks holding .value are unaffected)."""
+        if self._dead_bc is not None:
             try:
-                # release executor/driver block-manager storage NOW — a
-                # long-lived ingest+serve driver re-broadcasts per commit
-                # version, and unreferenced broadcasts otherwise linger
-                # until context teardown (non-blocking; in-flight tasks
-                # holding .value are unaffected)
-                old_bc.unpersist(blocking=False)
+                self._dead_bc.unpersist(blocking=False)
             except Exception:
                 pass  # stopped context / already destroyed
-    _TOMB_CACHE[key] = (id(sc), bc)
-    return bc
+
+
+# Open handles, keyed by (index_dir, commit version, id(SparkContext)). The
+# version is the uuid in _SUCCESS.json — unique per commit — NOT mtime:
+# back-to-back segment appends can land within one mtime granule on
+# coarse-timestamp filesystems and would leave a stale handle in use. The
+# handle holds its SparkContext, so that id cannot be reused while the key
+# lives. Lookup, eviction and insert run under one lock, so concurrent
+# queries on a new commit open it once.
+_SNAPSHOTS: dict[tuple[str, str, int], _Snapshot] = {}
+_SNAPSHOT_LOCK = threading.Lock()
+_MAX_SNAPSHOTS = 8
+
+
+def _snapshot(spark: SparkSession, index_dir: str, marker: dict) -> _Snapshot:
+    """The reader handle for the commit ``marker`` (the caller's one record
+    read, so everything the query reads describes that commit)."""
+    key = (index_dir, _index_version(index_dir, marker), id(spark.sparkContext))
+    with _SNAPSHOT_LOCK:
+        snap = _SNAPSHOTS.get(key)
+        if snap is None:
+            # Drop superseded handles of THIS index_dir (a long-lived driver
+            # running ingest_stream commits a new version per append, so
+            # without eviction the cache grows one dead handle per append);
+            # keep other dirs' live handles, with a global cap as a backstop.
+            stale = [k for k in _SNAPSHOTS if k[0] == index_dir]
+            if len(_SNAPSHOTS) - len(stale) >= _MAX_SNAPSHOTS:
+                stale = list(_SNAPSHOTS)
+            for k in stale:
+                old = _SNAPSHOTS.pop(k, None)
+                if old is not None:
+                    old.close()
+            snap = _SNAPSHOTS[key] = _Snapshot(spark, index_dir, marker)
+    return snap
+
+
+def _close_snapshots() -> None:
+    """Drop every open handle; the next query re-opens its snapshot."""
+    with _SNAPSHOT_LOCK:
+        while _SNAPSHOTS:
+            _SNAPSHOTS.popitem()[1].close()
 
 
 def _mask_alive(docs_u: np.ndarray, dead: np.ndarray | None):
@@ -244,43 +247,47 @@ def _term_ids(query_text: str) -> list[int]:
     return [xxhash64_str(t) for t in dict.fromkeys(tokenize(query_text))]
 
 
-def _probe_idf(
-    spark: SparkSession,
-    index_dir: str,
-    ids: list[int],
-    marker: dict,
-    n_docs: int,
-) -> dict[int, dict]:
+def _probe_idf(snap: _Snapshot, ids: list[int]) -> dict[int, dict]:
     """Driver-side lexicon probe: term_id → {idf, df} for the ``ids`` present
-    in the snapshot, in ``ids`` order.
+    in the snapshot, in ``ids`` order, against the handle's commit (the same
+    one its postings scan is pruned to).
 
     The lexicon is segmented (one subdir per incremental segment); global df
-    is the SUM over segments, aggregated on the term_id-pruned probe
-    (≤ |ids| × n_segments rows — trivial) and probe-cached across queries.
-    ``marker``/``n_docs`` come from the caller's single snapshot read so idf
-    is computed against the same commit the postings scan is pruned to."""
-    if not ids:
-        return {}
+    is the SUM over segments. Terms not yet in the handle's memo are probed
+    in ONE narrow job — a term_id-pushed-down scan of the cached lexicon
+    returning ≤ |ids| × n_segments rows — and summed here."""
+    missing = [i for i in ids if i not in snap.dfs]
+    if missing:
+        # Collect FIRST, commit to the memo only on success: pre-seeding
+        # zeros before the Spark action would, on a transient probe failure,
+        # leave df=0 cached for this snapshot and silently drop those terms
+        # from every subsequent query's scoring.
+        probed: dict[int, int] = {}
+        for r in (
+            snap.lexicon.filter(F.col("term_id").isin(missing))
+            .select("term_id", "df")
+            .collect()
+        ):
+            probed[int(r.term_id)] = probed.get(int(r.term_id), 0) + int(r.df)
+        for i in missing:
+            snap.dfs[i] = probed.get(i, 0)
+    n_docs = int(snap.marker["n_docs"])
     out = {}
-    for tid, df in _probe_dfs(spark, index_dir, ids, marker).items():
+    for tid in ids:
+        df = snap.dfs[tid]
         if df > 0:
             idf = math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
             out[tid] = {"idf": idf, "df": df}
     return out
 
 
-def _postings(
-    spark: SparkSession, index_dir: str, marker: dict, ids: list[int], n_groups: int
-) -> DataFrame:
+def _postings(snap: _Snapshot, ids: list[int], n_groups: int) -> DataFrame:
     """The snapshot's posting blocks for ``ids`` (term_id pushdown), tagged
     with their WAND slice group ``wg``. Doc ranges of distinct slices are
     disjoint, so ANY slice partition keeps per-group local top-k + a global
     top-k exact."""
     return (
-        _prune_to_snapshot(
-            spark.read.parquet(os.path.join(index_dir, "postings")), marker
-        )
-        .filter(F.col("term_id").isin(ids))
+        snap.postings.filter(F.col("term_id").isin(ids))
         .select("seg", "term_id", "slice", "block_id", "n", "doc_ids", "tfs",
                 "dls", "block_max_tf", "block_min_dl", "first_doc", "last_doc")
         .withColumn("wg", F.pmod(F.col("slice"), F.lit(n_groups)))
@@ -302,8 +309,7 @@ def wand_group_count(total_df: int, parallelism: int) -> int:
 
 def _scored(
     spark: SparkSession,
-    index_dir: str,
-    marker: dict,
+    snap: _Snapshot,
     queries: dict[int, str],
     k: int,
     *,
@@ -312,16 +318,16 @@ def _scored(
 ) -> DataFrame:
     """The one WAND scoring plan: every query's LOCAL top-k per (segment,
     slice group, query bucket) as (query_id, doc_id, score) rows, all read
-    against the caller's single commit record ``marker``. Callers rank the
-    union globally (local per-partition top-k, then one global merge — the
-    REPOSE shape); the result is exact because slice groups are doc-disjoint.
+    through the one snapshot handle ``snap``. Callers rank the union globally
+    (local per-partition top-k, then one global merge — the REPOSE shape);
+    the result is exact because slice groups are doc-disjoint.
 
     Postings are scanned once with the UNION of all query term_ids pushed
     down; each group runs WAND once per query that has a term there."""
     # ONE lexicon probe for the union of every query's terms
     ids_by_q = {qid: _term_ids(qtext) for qid, qtext in queries.items()}
     union_ids = sorted({t for ids in ids_by_q.values() for t in ids})
-    lex = _probe_idf(spark, index_dir, union_ids, marker, int(marker["n_docs"]))
+    lex = _probe_idf(snap, union_ids)
     if not lex:
         return spark.createDataFrame([], SCORED_SCHEMA)
     idf_by_q = {
@@ -359,8 +365,7 @@ def _scored(
         n_qb = int(max(1, min(len(idf_by_q), n_qb)))
 
     idf_all = {t: v["idf"] for t, v in lex.items()}
-    dead_bc = _load_tombstones_bc(spark, index_dir, marker)
-    grouped = _postings(spark, index_dir, marker, sorted(lex), n_groups)
+    grouped = _postings(snap, sorted(lex), n_groups)
     if n_qb > 1:
         tb_rows = sorted(
             {
@@ -375,7 +380,9 @@ def _scored(
     else:
         grouped = grouped.withColumn("qb", F.lit(0))
     return grouped.groupBy("seg", "wg", "qb").applyInPandas(
-        _wand_groups(idf_by_q, idf_all, float(marker["avgdl"]), k, dead_bc, n_qb),
+        _wand_groups(
+            idf_by_q, idf_all, float(snap.marker["avgdl"]), k, snap.dead_bc(), n_qb
+        ),
         SCORED_SCHEMA,
     )
 
@@ -392,23 +399,22 @@ def topk(
     plan (``_scored``) for one query, then a global top-k."""
     # ONE snapshot read serves the whole query: format check, segment
     # pruning, n_docs (idf) and avgdl all come from the same commit marker,
-    # so an append landing mid-query can't mix one snapshot's postings with
-    # another's scoring globals.
-    marker = check_index_format(index_dir)
+    # and every table is read through that commit's handle, so an append
+    # landing mid-query can't mix one snapshot's postings with another's
+    # scoring globals.
+    snap = _snapshot(spark, index_dir, check_index_format(index_dir))
     ranked = (
-        _scored(spark, index_dir, marker, {0: query_text}, k)
+        _scored(spark, snap, {0: query_text}, k)
         .orderBy(F.desc("score"), doc_u_asc())
         .limit(k)
         .select("doc_id", "score")
     )
     if with_url:
-        docs = _prune_to_snapshot(
-            spark.read.parquet(os.path.join(index_dir, "docs")), marker
-        ).select("doc_id", "url")
         # ≤k result rows: broadcast them as the build side of an inner join
         # against the big docs table (every result id exists in docs)
         ranked = (
-            docs.join(F.broadcast(ranked), "doc_id", "inner")
+            snap.docs.select("doc_id", "url")
+            .join(F.broadcast(ranked), "doc_id", "inner")
             .select("doc_id", "score", "url")
             .orderBy(F.desc("score"), doc_u_asc())
         )
@@ -436,10 +442,8 @@ def topk_batch(
     from pyspark.sql import Window as W
 
     # ONE snapshot read for the whole batch (see topk)
-    marker = check_index_format(index_dir)
-    scored = _scored(
-        spark, index_dir, marker, queries, k, n_qb=n_qb, n_groups=n_groups
-    )
+    snap = _snapshot(spark, index_dir, check_index_format(index_dir))
+    scored = _scored(spark, snap, queries, k, n_qb=n_qb, n_groups=n_groups)
     w = W.partitionBy("query_id").orderBy(F.desc("score"), doc_u_asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))

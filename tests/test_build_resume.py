@@ -401,7 +401,7 @@ def test_reader_ignores_uncommitted_segment(spark, single_shot, tmp_path_factory
     every doc twice under doubled df."""
     import shutil
 
-    from statschat_ke_spark.index.query import _PROBE_CACHE, topk
+    from statschat_ke_spark.index.query import _close_snapshots, topk
 
     d, _ = single_shot
     d2 = str(tmp_path_factory.mktemp("snap") / "idx")
@@ -414,7 +414,9 @@ def test_reader_ignores_uncommitted_segment(spark, single_shot, tmp_path_factory
     # simulate the mid-append window: duplicate seg=0 as an uncommitted seg=99
     for sub in ("postings", "lexicon", "docs"):
         shutil.copytree(os.path.join(d2, sub, "seg=0"), os.path.join(d2, sub, "seg=99"))
-    _PROBE_CACHE.clear()  # same commit uuid — force a re-probe of the lexicon
+    # same commit uuid — drop the open handle so the tables are re-listed
+    # (now with seg=99 on disk) and the lexicon re-probed
+    _close_snapshots()
 
     after = topk(spark, d2, q, 10).toPandas()
     assert after.equals(before), "uncommitted segment leaked into query results"
@@ -454,12 +456,12 @@ def test_append_window_keeps_serving_old_snapshot(
     import shutil
 
     from statschat_ke_spark.index.build import _prepare_base, _stage_chunk
-    from statschat_ke_spark.index.query import _PROBE_CACHE
+    from statschat_ke_spark.index.query import _close_snapshots
 
     d, _ = single_shot
     d2 = str(tmp_path_factory.mktemp("window") / "idx")
     shutil.copytree(d, d2)
-    _PROBE_CACHE.clear()
+    _close_snapshots()
 
     q = "report statistics county"
     before = topk(spark, d2, q, 10).toPandas()
@@ -601,7 +603,7 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
     the engine documents as supported."""
     import threading
 
-    from statschat_ke_spark.index.query import _PROBE_CACHE
+    from statschat_ke_spark.index.query import _close_snapshots
 
     d = str(tmp_path_factory.mktemp("rw") / "idx")
     pdf = generate_documents(400, seed=11)
@@ -625,7 +627,7 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
     def reader():
         try:
             while not done.is_set():
-                _PROBE_CACHE.clear()  # defeat the probe cache: re-read every time
+                _close_snapshots()  # defeat the handle cache: re-open every time
                 observed.append(snap(topk(spark, d, q, 10)))
         except BaseException as e:
             errors.append(e)
@@ -643,3 +645,111 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
     bad = [o for o in observed if o not in (before, after)]
     assert not bad, f"reader saw a torn snapshot: {bad[0]}"
     assert after != before  # the delta actually changed the result set
+
+
+def _docs(spark, pdf):
+    return spark.createDataFrame(pdf, schema=DOCUMENTS_SPARK_SCHEMA).select(
+        "url", "warc_ts", "html", "text", "lang"
+    )
+
+
+def test_snapshot_handle_reuse_and_invalidation(spark, tmp_path_factory, monkeypatch):
+    """Each commit's tables are opened once: a repeat topk on an unchanged
+    snapshot opens no table, and each new commit of the same dir in the same
+    process — a segment append, then a delete — makes the next topk open
+    fresh tables whose results equal a fresh build of the same docs."""
+    import numpy as np
+    from pyspark.sql import DataFrameReader
+
+    from statschat_ke_spark.index.build import delete_docs
+
+    opened: list[str] = []
+    parquet = DataFrameReader.parquet
+
+    def counting(self, *paths, **kw):
+        opened.extend(os.path.basename(p) for p in paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+
+    def opens(d, q):
+        opened.clear()
+        topk(spark, d, q, 10, with_url=True).collect()
+        return sorted(opened)
+
+    def assert_same(d, ref):
+        for q in ["county report statistics survey", "maize production"]:
+            a = topk(spark, d, q, 10).toPandas()
+            b = topk(spark, ref, q, 10).toPandas()
+            assert len(a) > 0, q
+            assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all(), q
+            assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), q
+
+    pdf = generate_documents(300, seed=21)
+    root = tmp_path_factory.mktemp("handle")
+    d = str(root / "idx")
+    build_index(spark, _docs(spark, pdf.iloc[:200]), d)
+    q = "county report statistics"
+    assert opens(d, q) == ["docs", "lexicon", "postings"]
+    assert opens(d, q) == []  # unchanged snapshot: the handle is reused
+    assert opens(d, "maize production") == []  # probe misses reuse it too
+
+    update_index(spark, _docs(spark, pdf.iloc[200:]), d, strategy="segment")
+    assert opens(d, q) == ["docs", "lexicon", "postings"]
+    assert opens(d, q) == []
+    ref = str(root / "ref_update")
+    build_index(spark, _docs(spark, pdf), ref)
+    assert_same(d, ref)
+
+    victims = sorted(pdf.url)[::10]
+    assert delete_docs(spark, d, victims).n_deleted > 0
+    assert opens(d, q) == ["docs", "lexicon", "postings"]
+    ref = str(root / "ref_delete")
+    build_index(spark, _docs(spark, pdf[~pdf.url.isin(victims)]), ref)
+    assert_same(d, ref)
+
+
+def test_concurrent_snapshot_opens(spark, tmp_path_factory):
+    """Eight threads querying a dir's new commit while its previous commit
+    still has an open handle: none raises, and exactly one handle — the new
+    commit's — remains for the dir."""
+    import sys
+    import threading
+
+    from statschat_ke_spark.index import query as Q
+
+    pdf = generate_documents(240, seed=23)
+    d = str(tmp_path_factory.mktemp("handles") / "idx")
+    build_index(spark, _docs(spark, pdf.iloc[:160]), d)
+    q = "county report statistics survey"
+    topk(spark, d, q, 5).collect()  # the previous commit's handle
+    update_index(spark, _docs(spark, pdf.iloc[160:]), d, strategy="segment")
+    version = check_index_format(d)["version"]
+
+    gate = threading.Barrier(8)
+    errors: list[BaseException] = []
+    results: list[list] = []
+
+    def reader():
+        try:
+            gate.wait()
+            results.append(sorted(tuple(r) for r in topk(spark, d, q, 5).collect()))
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader) for _ in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads' lookup/evict/insert
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads), "reader thread hung"
+    assert not errors, f"reader failed: {errors[0]!r}"
+    assert len(results) == 8 and all(r == results[0] for r in results)
+    assert [k for k in Q._SNAPSHOTS if k[0] == d] == [
+        (d, version, id(spark.sparkContext))
+    ]
