@@ -17,10 +17,12 @@ Phase B (global merge) — ONE heavy pass over the (doc, term) pairs:
     staged --explode--> pairs
           --repartition(P, term_id, slice)  [bucketed term shuffle]-->
           --sortWithinPartitions(term_id, slice, doc_sort_key)-->
-          --mapInPandas pack--> postings blocks (delta-gap + vbyte, ≤128
-            docs, per-block max impact, per-block term/tf_sum/bytes)
-    postings --groupBy(term_id) [2-3 orders smaller]--> lexicon
-    postings --column-pruned agg--> per-partition metrics.
+          --mapInArrow pack--> postings blocks (delta-gap + vbyte, ≤128
+            docs, per-block max tf / min doclen)
+    staged --explode--> groupBy(term) [|vocab| rows]--> lexicon (df, cf)
+    postings --groupBy(pid) collect [≤ P rows]--> stats.json metrics.
+The three writes (docs, postings, lexicon) are independent DAGs over the
+staged table and run concurrently.
 
 Partitioning note: the term shuffle is a STATIC bucket partition
 (hash of (term_id, slice)) rather than ``repartitionByRange`` — Spark's range
@@ -181,7 +183,6 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("slice", T.IntegerType(), False),
         T.StructField("block_id", T.IntegerType(), False),
         T.StructField("n", T.IntegerType(), False),
-        T.StructField("tf_sum", T.LongType(), False),
         T.StructField("first_doc", T.LongType(), False),
         T.StructField("last_doc", T.LongType(), False),
         T.StructField("doc_ids", T.BinaryType(), False),
@@ -194,7 +195,6 @@ POSTINGS_SCHEMA = T.StructType(
         # the moment an incremental segment shifts avgdl.
         T.StructField("block_max_tf", T.LongType(), False),
         T.StructField("block_min_dl", T.LongType(), False),
-        T.StructField("bytes", T.IntegerType(), False),
         T.StructField("pid", T.IntegerType(), False),
     ]
 )
@@ -238,7 +238,6 @@ def _pack_body(cols: dict, pid: int, slice_bits: int):
 
     block_max_tf = np.maximum.reduceat(tf, bstart)
     block_min_dl = np.minimum.reduceat(dl, bstart)
-    tf_sum = np.add.reduceat(tf, bstart)
 
     # delta-gap doc ids: absolute at each block start, gap within a block
     gaps = np.empty(n, dtype=np.uint64)
@@ -250,14 +249,12 @@ def _pack_body(cols: dict, pid: int, slice_bits: int):
     enc_tfs = vbyte_encode_chunks(tf.astype(np.uint64) - np.uint64(1), bstart)
     enc_dls = vbyte_encode_chunks(dl.astype(np.uint64), bstart)
 
-    nb = len(bstart)
     return pa.RecordBatch.from_arrays(
         [
             pa.array(term[bstart], type=pa.int64()),
             pa.array(slc[bstart].astype(np.int32), type=pa.int32()),
             pa.array((pos_in_group[bstart] // BLOCK).astype(np.int32), type=pa.int32()),
             pa.array((bend - bstart).astype(np.int32), type=pa.int32()),
-            pa.array(tf_sum.astype(np.int64), type=pa.int64()),
             pa.array(doc[bstart], type=pa.int64()),
             pa.array(doc[bend - 1], type=pa.int64()),
             pa.array(enc_ids, type=pa.binary()),
@@ -265,20 +262,9 @@ def _pack_body(cols: dict, pid: int, slice_bits: int):
             pa.array(enc_dls, type=pa.binary()),
             pa.array(block_max_tf.astype(np.int64), type=pa.int64()),
             pa.array(block_min_dl.astype(np.int64), type=pa.int64()),
-            pa.array(
-                np.array(
-                    [len(a) + len(b) + len(c) for a, b, c in zip(enc_ids, enc_tfs, enc_dls)],
-                    dtype=np.int32,
-                ),
-                type=pa.int32(),
-            ),
-            pa.array(np.full(nb, pid, dtype=np.int32), type=pa.int32()),
+            pa.array(np.full(len(bstart), pid, dtype=np.int32), type=pa.int32()),
         ],
-        names=[
-            "term_id", "slice", "block_id", "n", "tf_sum", "first_doc",
-            "last_doc", "doc_ids", "tfs", "dls", "block_max_tf", "block_min_dl",
-            "bytes", "pid",
-        ],
+        names=POSTINGS_SCHEMA.names,
     )
 
 
@@ -599,7 +585,7 @@ def build_index(
     stay bounded at any scale. Rank/score results are invariant to it.
 
     Layout: staged/ (phase A, per-chunk), docs/, lexicon/, postings/,
-    _lineage/, _metrics/, tombstones/, _SUCCESS.json (the commit record,
+    _lineage/, tombstones/, _SUCCESS.json (the commit record,
     the only snapshot state) and stats.json (metrics of the last segment
     build; the engine never reads it).
 
@@ -697,7 +683,7 @@ def update_index(
 
     ``strategy``:
     - ``segment`` (default) — pack ONLY the delta into a new doc-disjoint
-      segment (postings/docs/lexicon/_metrics under ``seg=N``); existing
+      segment (postings/docs/lexicon under ``seg=N``); existing
       segment files are never read or rewritten, so phase-B wall time is
       proportional to the DELTA, not the corpus. This is the plain-parquet
       realization of an Iceberg snapshot append / ``MERGE INTO`` over
@@ -981,15 +967,8 @@ def delete_docs(
             _listed_delta_segments(index_dir) + old_delta_segs,
             default=DELETE_SEG_BASE - 1,
         ) + 1
-        lex_delta = (
-            victims.select(F.explode(F.arrays_zip("terms", "tfs")).alias("e"))
-            .select(F.col("e.terms").alias("term"), F.col("e.tfs").alias("tf"))
-            .groupBy("term")
-            .agg(
-                (-F.count("*")).alias("df"),
-                (-F.sum("tf")).alias("cf"),
-            )
-            .select(F.xxhash64("term").alias("term_id"), "term", "df", "cf")
+        lex_delta = _term_stats(victims).select(
+            "term_id", "term", (-F.col("df")).alias("df"), (-F.col("cf")).alias("cf")
         )
         if old_delta_segs:
             prev = spark.read.parquet(
@@ -1133,13 +1112,26 @@ def append_segment(
     )
 
 
-def _check_term_collisions(term_dict: DataFrame) -> None:
+def _term_stats(staged: DataFrame) -> DataFrame:
+    """(term_id, term, df, cf) over the docs of ``staged``: one explode of
+    the parallel (terms, tfs) arrays and one groupBy(term), whose map-side
+    partial aggregation collapses the pairs to |vocab| rows. A doc's terms
+    are distinct (tokenize_doc_udf counts them), so df is a row count."""
+    return (
+        staged.select(F.explode(F.arrays_zip("terms", "tfs")).alias("e"))
+        .groupBy(F.col("e.terms").alias("term"))
+        .agg(F.count("*").alias("df"), F.sum("e.tfs").alias("cf"))
+        .select(F.xxhash64("term").alias("term_id"), "term", "df", "cf")
+    )
+
+
+def _check_term_collisions(lexicon: DataFrame) -> None:
     """xxhash64 collision between two distinct terms would silently merge
-    their df/cf into BOTH lexicon rows (ranking corruption) — detect on the
-    small |vocab| relation and fail loudly; P(collision) ≈ |V|²/2⁶⁵
-    (~10⁻⁹ even at 10⁸ terms)."""
+    their df/cf at the query-time probe and their postings under one id
+    (ranking corruption) — detect on the small |vocab| relation and fail
+    loudly; P(collision) ≈ |V|²/2⁶⁵ (~10⁻⁹ even at 10⁸ terms)."""
     dup = (
-        term_dict.groupBy("term_id")
+        lexicon.groupBy("term_id")
         .count()
         .filter(F.col("count") > 1)
         .limit(1)
@@ -1165,10 +1157,10 @@ def _build_segment(
     slice_bits: int | None = None,
 ) -> dict:
     """Pack one doc-disjoint SEGMENT: postings/seg=N, docs/seg=N,
-    lexicon/seg=N, _metrics/seg=N. Segments are the incremental-update unit
-    (the Iceberg-snapshot analog): per-slice WAND stays exact because docs
-    are disjoint across segments, and BM25 globals (idf, avgdl) are merged
-    at query/probe time, never baked into posting bytes.
+    lexicon/seg=N. Segments are the incremental-update unit (the
+    Iceberg-snapshot analog): per-slice WAND stays exact because docs are
+    disjoint across segments, and BM25 globals (idf, avgdl) are merged at
+    query/probe time, never baked into posting bytes.
 
     ``n_docs``/``dl_sum`` are the segment's doc count and total doc length;
     they size the shuffles and, unless ``slice_bits`` pins it, the slice
@@ -1210,7 +1202,6 @@ def _build_segment(
     # within-partition sort restores (term_id, slice, unsigned-doc) order, so
     # posting bytes are identical to a range-partitioned layout and parquet
     # row-group min/max stats on the sorted term_id still prune query scans.
-    tp = time.time()
     pairs = staged.select(
         "doc_id", "doclen", F.explode(F.arrays_zip("terms", "tfs")).alias("e")
     ).select(
@@ -1235,57 +1226,34 @@ def _build_segment(
         .sortWithinPartitions("term_id", doc_sort)
         .mapInArrow(_pack_groups(slice_bits), schema=POSTINGS_SCHEMA)
     )
-    # docs table write and postings build are independent DAGs — submit them
-    # concurrently so the small docs job fills scheduler slots the big
-    # shuffle leaves idle (matters most at low parallelism; on a cluster this
-    # is plain multi-job scheduling)
-    _BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old_batch = spark.conf.get(_BATCH_KEY, None)
-    spark.conf.set(_BATCH_KEY, str(PACK_ARROW_BATCH))
-    try:
-        with ThreadPoolExecutor(2) as ex:
-            f_docs = ex.submit(_write_docs)
-            f_post = ex.submit(
-                lambda: postings.write.mode("overwrite").parquet(
-                    os.path.join(index_dir, "postings", seg_sub)
-                )
-            )
-            f_post.result()
-            f_docs.result()
-    finally:
-        if old_batch is not None:
-            spark.conf.set(_BATCH_KEY, old_batch)
-        else:
-            spark.conf.unset(_BATCH_KEY)
-    timings["postings"] = time.time() - tp
 
-    # ---- lexicon: per-term stats from this segment's packed postings (2-3
-    # orders of magnitude fewer rows than pairs) joined to the term
-    # dictionary — a JVM-only distinct whose map-side partial agg collapses
-    # to |vocab|. Global df/cf are the SUM over segments, aggregated at the
-    # (tiny, term_id-pruned) query-time probe.
-    tp = time.time()
-    pst = spark.read.parquet(os.path.join(index_dir, "postings", seg_sub))
-    lex_box: list = []
+    def _write_postings() -> list:
+        tpp = time.time()
+        path = os.path.join(index_dir, "postings", seg_sub)
+        postings.write.mode("overwrite").parquet(path)
+        # per-pack-partition counts for the metrics: ≤ P_pack rows; column
+        # pruning reads only (pid, n), never the block binaries, and the
+        # known schema skips a footer-inference job
+        per_pid = (
+            spark.read.schema(POSTINGS_SCHEMA).parquet(path)
+            .groupBy("pid")
+            .agg(F.count("*").alias("rows"), F.sum("n").alias("postings"))
+            .collect()
+        )
+        timings["postings"] = time.time() - tpp
+        return per_pid
 
-    def _write_lexicon() -> None:
+    # ---- lexicon: per-term df/cf straight from the staged term arrays, so
+    # it never waits for (or re-reads) the postings. Global df/cf are the SUM
+    # over segments, aggregated at the (tiny, term_id-pruned) query-time
+    # probe.
+    def _write_lexicon() -> int:
         from pyspark.sql import Observation
 
         tpl = time.time()
-        term_dict = (
-            staged.select(F.explode("terms").alias("term"))
-            .distinct()
-            .select(F.xxhash64("term").alias("term_id"), "term")
-        ).persist()
+        lexicon = _term_stats(staged).persist()
         try:
-            _check_term_collisions(term_dict)
-            lex_stats = pst.groupBy("term_id").agg(
-                F.sum("n").alias("df"),
-                F.sum("tf_sum").alias("cf"),
-            )
-            lexicon = lex_stats.join(term_dict, "term_id").select(
-                "term_id", "term", "df", "cf"
-            )
+            _check_term_collisions(lexicon)
             # segment term count observed during the write (no read-back job)
             obs = Observation()
             lexicon.observe(obs, F.count(F.lit(1)).alias("rows")).repartition(
@@ -1293,48 +1261,39 @@ def _build_segment(
             ).sortWithinPartitions("term_id").write.mode("overwrite").parquet(
                 os.path.join(index_dir, "lexicon", seg_sub)
             )
-            lex_box.append(int(obs.get["rows"]))
+            n_terms = int(obs.get["rows"])
         finally:
-            term_dict.unpersist()
+            lexicon.unpersist()
         timings["lexicon"] = time.time() - tpl
+        return n_terms
 
-    # metrics read only (pid, n, bytes) — parquet column pruning skips the
-    # binaries; runs concurrently with the lexicon job (independent DAGs)
-    agg_box: list = []
-
-    def _write_metrics() -> None:
-        tpm = time.time()
-        per_pid = pst.groupBy("pid").agg(
-            F.count("*").alias("posting_rows"),
-            F.sum("n").alias("postings"),
-            F.sum("bytes").alias("bytes"),
-        )
-        per_pid.write.mode("overwrite").parquet(
-            os.path.join(index_dir, "_metrics", seg_sub)
-        )
-        agg_box.append(
-            per_pid.agg(
-                F.sum("posting_rows").alias("rows"),
-                F.sum("postings").alias("postings"),
-                F.max("postings").alias("max_p"),
-                F.avg("postings").alias("avg_p"),
-            ).collect()[0]
-        )
-        timings["metrics"] = time.time() - tpm
-
-    with ThreadPoolExecutor(2) as ex:
-        f_lex = ex.submit(_write_lexicon)
-        f_met = ex.submit(_write_metrics)
-        f_lex.result()
-        f_met.result()
-    agg = agg_box[0]
-    timings["finalize"] = time.time() - tp
+    # the three writes are independent DAGs — submit them concurrently so the
+    # small docs and lexicon jobs fill scheduler slots the big pack shuffle
+    # leaves idle (matters most at low parallelism; on a cluster this is
+    # plain multi-job scheduling)
+    _BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(_BATCH_KEY, None)
+    spark.conf.set(_BATCH_KEY, str(PACK_ARROW_BATCH))
+    try:
+        with ThreadPoolExecutor(3) as ex:
+            f_docs = ex.submit(_write_docs)
+            f_post = ex.submit(_write_postings)
+            f_lex = ex.submit(_write_lexicon)
+            per_pid = f_post.result()
+            n_terms = f_lex.result()
+            f_docs.result()
+    finally:
+        if old_batch is not None:
+            spark.conf.set(_BATCH_KEY, old_batch)
+        else:
+            spark.conf.unset(_BATCH_KEY)
+    counts = [int(r.postings) for r in per_pid]
     return {
-        "rows": int(agg.rows or 0),
-        "postings": int(agg.postings or 0),
-        "max_p": float(agg.max_p or 0.0),
-        "avg_p": float(agg.avg_p or 0.0),
-        "n_terms": int(lex_box[0]) if lex_box else 0,
+        "rows": sum(int(r.rows) for r in per_pid),
+        "postings": sum(counts),
+        "max_p": float(max(counts, default=0)),
+        "avg_p": sum(counts) / len(counts) if counts else 0.0,
+        "n_terms": n_terms,
         "slice_bits": slice_bits,
     }
 
@@ -1459,7 +1418,7 @@ def merge_index(
     _atomic_json(
         os.path.join(index_dir, "_SUCCESS.json"), {"tombstone_files": tomb_files}
     )
-    for sub in ("postings", "docs", "lexicon", "_metrics"):
+    for sub in ("postings", "docs", "lexicon"):
         _clear_dir(os.path.join(index_dir, sub))
 
     seg_stats = _build_segment(
