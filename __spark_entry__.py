@@ -360,8 +360,8 @@ def _ft_bm25_batch(spark, sf_dir):
 
 def _ensure_index_updated(spark: SparkSession, sf_dir: str) -> str:
     """An index constructed via the INCREMENTAL lifecycle: base build over
-    doc_id % 3 != 0, then update_index(strategy='segment') with the FULL
-    table — the anti-join keeps only the missing third, which lands as a
+    doc_id % 3 != 0, then update_index with the FULL table — the
+    anti-join keeps only the missing third, which lands as a
     doc-disjoint delta segment. Scoring over [base, delta] must be exact vs
     the full-corpus oracle (idf/avgdl are merged globals; per-segment WAND
     local top-k composes exactly). The Spark analog of the reference's
@@ -373,7 +373,7 @@ def _ensure_index_updated(spark: SparkSession, sf_dir: str) -> str:
     def _build_via_update(spark, idx, docs):
         base = docs.filter(F.col("doc_id") % 3 != 0)
         build_index(spark, base, idx, lang="en")
-        res = update_index(spark, docs, idx, strategy="segment")
+        res = update_index(spark, docs, idx)
         assert res.complete
 
     return _ensure_cached_index(
@@ -400,9 +400,9 @@ def _ft_bm25_update(spark, sf_dir):
 
 def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     """An index taken through the FULL segment lifecycle: base build over
-    doc_id % 3 != 0, segment-append of the remaining third
-    (update_index(strategy='segment') → segments [0, 1]), then PHYSICAL
-    compaction (maybe_compact(max_segments=1) → one rewritten seg=0).
+    doc_id % 3 != 0, segment-append of the remaining third (update_index →
+    segments [0, 1]), then PHYSICAL compaction (maybe_compact(max_segments=1)
+    → one rewritten seg=0).
     Compaction is the plain-parquet realization of Iceberg's rewrite/compact
     maintenance action; the contract claim is that it is a pure physical
     reorganization — scoring after the rewrite must still hash-match the
@@ -418,7 +418,7 @@ def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     def _build_via_compact(spark, idx, docs):
         base = docs.filter(F.col("doc_id") % 3 != 0)
         build_index(spark, base, idx, lang="en")
-        res = update_index(spark, docs, idx, strategy="segment")
+        res = update_index(spark, docs, idx)
         assert res.complete
         out = maybe_compact(spark, idx, max_segments=1)
         assert out is not None and out.compacted
@@ -468,10 +468,8 @@ def _ensure_index_streamed(spark: SparkSession, sf_dir: str) -> str:
             docs.filter(F.col("doc_id") % 3 == wave).write.mode(
                 "append"
             ).parquet(land)
-            res = ingest_stream(
-                spark, land, idx, schema=docs_schema, strategy="segment"
-            )
-            assert res is not None and res.complete
+            res = ingest_stream(spark, land, idx, schema=docs_schema)
+            assert res.complete
 
     return _ensure_cached_index(
         spark,

@@ -5,8 +5,9 @@ Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "index": {...build stats...}}
 
-Scaling-efficiency evidence (north_rule: N vs 4N executors) is produced by
-scripts/bench_scaling.py and reported in BENCH/BASELINE.md.
+This is the sf0.1 driver-contract bench; the engine's measured benchmark
+(build, append, delete, search and batch on larger corpora, with a per-layer
+split) is ``python3 perfbench/run.py`` (see perfbench/README.md).
 """
 
 from __future__ import annotations

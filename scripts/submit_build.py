@@ -37,10 +37,6 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--update", action="store_true",
                     help="incremental UPDATE into an existing index")
-    ap.add_argument("--bench-queries", action="store_true",
-                    help="after building, run a 16-query topk_batch against "
-                         "the fresh index and report amortized s/query "
-                         "(cluster-bench evidence; needs a completed build)")
     args = ap.parse_args()
 
     spark = (
@@ -71,9 +67,8 @@ def main() -> None:
         "chunks_skipped": res.chunks_skipped,
         "index_dir": res.index_dir,
     }
-    # surface the build observability stats (skew_ratio especially — the
-    # 110M→396M postings trend is 1.085→1.267 and needs a measured point at
-    # every larger build) so cluster-bench JSONs carry them per run
+    # surface the build observability stats (skew_ratio especially) so
+    # every launch reports them next to the wall time
     try:
         import os
 
@@ -88,53 +83,6 @@ def main() -> None:
         out["phase_timings_s"] = st.get("phase_timings_s")
     except (OSError, ValueError, KeyError):
         pass
-    if args.bench_queries and res.complete:
-        import time
-
-        from statschat_ke_spark.index.query import topk_batch
-
-        queries = {
-            i: q
-            for i, q in enumerate(
-                [
-                    "index growth rate report",
-                    "county population census survey",
-                    "market price inflation quarter",
-                    "household labour income",
-                    "government revenue exports quarter",
-                    "food fuel transport price",
-                    "annual gdp growth percent",
-                    "poverty income survey county",
-                    "unemployment rate labour market",
-                    "production exports imports trade",
-                    "school education report annual",
-                    "energy transport index month",
-                    "health household survey data",
-                    "census brief population county",
-                    "statistics bulletin kenya report",
-                    "water agriculture production report",
-                ]
-            )
-        }
-        t0 = time.time()
-        rows = topk_batch(spark, args.index_dir, queries, k=10).collect()
-        q_wall = time.time() - t0
-        out["bench_query_wall_s"] = round(q_wall, 3)
-        out["bench_query_s_per_q"] = round(q_wall / len(queries), 4)
-        out["bench_query_rows"] = len(rows)
-        # canonical result hash: equal across cluster sizes ⇔ the top-k is
-        # rank-identical (and score-identical to 1e-6) at N and 4N workers —
-        # the north rule's correctness criterion measured on the literal
-        # launch shape, not assumed from the local-mode property tests
-        import hashlib
-
-        canon = "\n".join(
-            f"{r.query_id},{r.rank},{r.doc_id},{r.score:.6f}"
-            for r in sorted(rows, key=lambda r: (r.query_id, r.rank))
-        )
-        out["bench_query_sha256"] = hashlib.sha256(
-            canon.encode()
-        ).hexdigest()
     print(json.dumps(out))
     spark.stop()
 

@@ -37,8 +37,7 @@ from statschat_ke_spark.functions.refops import (
     latest_weight_py,
 )
 from statschat_ke_spark.index.query import topk
-from statschat_ke_spark.operators.postproc import doc_u_asc as _doc_u_asc_shared
-from statschat_ke_spark.operators.postproc import search_pipeline
+from statschat_ke_spark.operators.postproc import doc_u_asc, search_pipeline
 
 
 # Query-RESULT cache — the engine analog of the reference's ``lru_cache``
@@ -74,12 +73,6 @@ def _result_cache_put(key, value, pin=None) -> None:
         _RESULT_CACHE.move_to_end(key)
         while len(_RESULT_CACHE) > RESULT_CACHE_MAX:
             _RESULT_CACHE.popitem(last=False)
-
-
-def _doc_u_asc():
-    """Canonical score-tie order (shared engine-wide definition lives in
-    operators/postproc.doc_u_asc; see there)."""
-    return _doc_u_asc_shared()
 
 
 def search(
@@ -173,7 +166,7 @@ def search(
                     "doc_id",
                     "inner",
                 )
-                .orderBy(F.desc("score"), _doc_u_asc())
+                .orderBy(F.desc("score"), doc_u_asc())
                 .limit(k)
             )
         else:
@@ -204,11 +197,11 @@ def search(
 
         out = (
             hits.filter(F.col("score") >= min_score)
-            .orderBy(F.desc("score"), _doc_u_asc())
+            .orderBy(F.desc("score"), doc_u_asc())
             .limit(k_contexts)
             .withColumn(
                 "doc_num",
-                F.row_number().over(W.orderBy(F.desc("score"), _doc_u_asc())),
+                F.row_number().over(W.orderBy(F.desc("score"), doc_u_asc())),
             )
             .withColumn("score", F.round("score", 2))
         )

@@ -1,9 +1,8 @@
-"""Benchmark measurement helpers shared by bench.py and scripts/.
+"""Process-tree CPU accounting shared by bench.py and perfbench/.
 
-The sandbox VM is wholesale-paused at random by its hypervisor (BASELINE.md:
-identical runs vary 5x wall-clock). Two mitigations used everywhere we time:
-best-of-N repeats, and process-tree CPU seconds as the pause-immune signal
-reported alongside wall numbers.
+Wall-clock on a shared VM can stall at random (BASELINE.md: identical runs
+vary 5x), so the benches report process-tree CPU seconds, split by process
+kind (JVM vs Python workers), alongside their wall numbers.
 """
 
 from __future__ import annotations

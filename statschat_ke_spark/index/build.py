@@ -88,14 +88,15 @@ SLICE_BITS = 6
 DOCS_PER_SLICE_TARGET = 1 << 16
 
 
-def derive_slice_bits(n_docs: int, *, target: int = DOCS_PER_SLICE_TARGET) -> int:
-    """ceil(log2(n_docs / target)), floored at SLICE_BITS, capped at 24
-    (`slice` is int32). At the 10^12-doc design point this yields 24 bits /
-    ~16.7M slices: the hottest possible term fans out over ~16.7M reducers at
-    <= ~60k postings (~470 blocks) each, where the old compile-time 6 left
-    ~10^10-posting sub-lists. The target itself is fit to measurement, not
-    chosen: see the BENCH_SKEW.json note on DOCS_PER_SLICE_TARGET above."""
-    n_slices = -(-max(1, n_docs) // max(1, target))  # ceil division
+def derive_slice_bits(n_docs: int) -> int:
+    """ceil(log2(n_docs / DOCS_PER_SLICE_TARGET)), floored at SLICE_BITS,
+    capped at 24 (`slice` is int32). At the 10^12-doc design point this
+    yields 24 bits / ~16.7M slices: the hottest possible term fans out over
+    ~16.7M reducers at <= ~60k postings (~470 blocks) each, where the old
+    compile-time 6 left ~10^10-posting sub-lists. The target itself is fit
+    to measurement, not chosen: see the BENCH_SKEW.json note on
+    DOCS_PER_SLICE_TARGET above."""
+    n_slices = -(-max(1, n_docs) // DOCS_PER_SLICE_TARGET)  # ceil division
     return min(24, max(SLICE_BITS, (n_slices - 1).bit_length()))
 # Bump when the on-disk layout or the commit record changes; recorded in
 # _SUCCESS.json so stale caches rebuild instead of misreading. 3: the
@@ -119,9 +120,12 @@ PACK_ARROW_BATCH = 131072
 # (/root/reference/statschat/preprocess.py:250-288) — this policy is that
 # behavior with the rebuild amortized 8× and bounded probe fan-out.
 DEFAULT_MAX_SEGMENTS = 8
-# Lexicon-delta segments written by delete_docs live in a reserved id range
-# so they can never collide with chunk-numbered data segments (batch chunks
-# start at 0, streaming chunks at STREAM_CHUNK_BASE=1_000_000).
+# Staged chunk ids (and the data segments named after them) come from two
+# disjoint namespaces: batch chunks (build_index, update_index) count up
+# from 0 below STREAM_CHUNK_BASE, streaming micro-batches stage at
+# STREAM_CHUNK_BASE + epoch id. Lexicon-delta segments written by
+# delete_docs live in a third reserved range above both.
+STREAM_CHUNK_BASE = 1_000_000
 DELETE_SEG_BASE = 1_500_000_000
 
 TOKENIZED_SCHEMA = T.StructType(
@@ -203,7 +207,7 @@ POSTINGS_SCHEMA = T.StructType(
 _PACK_COLS = ("term_id", "doc_id", "tf", "doclen")
 
 
-def _pack_body(cols: dict, pid: int, slice_bits: int):
+def _pack_body(cols: dict, pid: int, bits: int):
     """Fully-vectorized block packer: sorted (term_id, doc_sort) rows
     → posting-block arrays. One numpy pass — group/block boundaries via
     flatnonzero/reduceat, codec via a single chunked vbyte encode per column.
@@ -212,16 +216,16 @@ def _pack_body(cols: dict, pid: int, slice_bits: int):
     version was ~50× slower; even batchwise pandas cost an Arrow→object
     conversion that throttled concurrent workers).
 
-    ``slice`` never travels through the shuffle: it is the top SLICE_BITS of
-    the unsigned doc id, so it is recomputed here (4 fewer bytes per pair
-    row), and sorting by unsigned doc within a term already IS slice-sorted
-    order (slices are doc-range prefixes)."""
+    ``slice`` never travels through the shuffle: it is the top ``bits`` (the
+    segment's slice bit count) of the unsigned doc id, so it is recomputed
+    here (4 fewer bytes per pair row), and sorting by unsigned doc within a
+    term already IS slice-sorted order (slices are doc-range prefixes)."""
     import pyarrow as pa
 
     term = cols["term_id"]
     doc = cols["doc_id"]
     doc_u = doc.view(np.uint64)
-    slc = (doc_u >> np.uint64(64 - slice_bits)).astype(np.int64)
+    slc = (doc_u >> np.uint64(64 - bits)).astype(np.int64)
     tf = cols["tf"].astype(np.int64)
     dl = cols["doclen"].astype(np.int64)
     n = len(term)
@@ -268,7 +272,7 @@ def _pack_body(cols: dict, pid: int, slice_bits: int):
     )
 
 
-def _pack_groups(slice_bits: int = SLICE_BITS):
+def _pack_groups(bits: int):
     """mapInArrow packer: sorted (term_id, slice, doc_sort) rows → blocks.
 
     Arrow-native: input RecordBatch columns view as numpy zero-copy (all
@@ -296,15 +300,15 @@ def _pack_groups(slice_bits: int = SLICE_BITS):
             # contiguous because input is sorted by (term_id, unsigned doc),
             # and slice boundaries are doc-order prefixes
             keys = cols["term_id"]
-            slcs = cols["doc_id"].view(np.uint64) >> np.uint64(64 - slice_bits)
+            slcs = cols["doc_id"].view(np.uint64) >> np.uint64(64 - bits)
             mask_tail = (keys == keys[-1]) & (slcs == slcs[-1])
             first_tail = int(np.argmax(mask_tail)) if mask_tail.any() else len(keys)
             if first_tail > 0:
                 body = {k: cols[k][:first_tail] for k in _PACK_COLS}
-                yield _pack_body(body, pid, slice_bits)
+                yield _pack_body(body, pid, bits)
             leftover = {k: cols[k][first_tail:] for k in _PACK_COLS}
         if leftover is not None and len(leftover["term_id"]):
-            yield _pack_body(leftover, pid, slice_bits)
+            yield _pack_body(leftover, pid, bits)
 
     return pack
 
@@ -576,13 +580,8 @@ def build_index(
     n_chunks: int = 1,
     resume: bool = False,
     stop_after_chunks: int | None = None,
-    slice_bits: int | None = None,
 ) -> BuildResult:
     """Build the full index under ``index_dir``.
-
-    ``slice_bits``: doc-range slice granularity; None (default) derives it
-    from the corpus size (derive_slice_bits) so hot-term per-slice sub-lists
-    stay bounded at any scale. Rank/score results are invariant to it.
 
     Layout: staged/ (phase A, per-chunk), docs/, lexicon/, postings/,
     _lineage/, tombstones/, _SUCCESS.json (the commit record,
@@ -657,7 +656,7 @@ def build_index(
         _stage_chunk(spark, cdf, index_dir, chunk, n_files=n_files)
         processed += 1
 
-    result = merge_index(spark, index_dir, slice_bits=slice_bits)
+    result = merge_index(spark, index_dir)
     result.chunks_processed = processed
     result.chunks_skipped = len(done_chunks)
     result.wall_s = time.time() - t0
@@ -670,9 +669,7 @@ def update_index(
     index_dir: str,
     *,
     lang: str | None = "en",
-    strategy: str = "segment",
-    max_segments: int | None = DEFAULT_MAX_SEGMENTS,
-    slice_bits: int | None = None,
+    max_segments: int = DEFAULT_MAX_SEGMENTS,
 ) -> BuildResult:
     """Incremental UPDATE: stage only genuinely-new documents as a fresh
     chunk, then publish it (``_publish_pending``, shared with ingest_stream).
@@ -681,49 +678,47 @@ def update_index(
     left anti join on url against the already-staged doc table, so re-sending
     the same batch adds no docs — its empty chunk is only recorded as covered.
 
-    ``strategy``:
-    - ``segment`` (default) — pack ONLY the delta into a new doc-disjoint
-      segment (postings/docs/lexicon under ``seg=N``); existing
-      segment files are never read or rewritten, so phase-B wall time is
-      proportional to the DELTA, not the corpus. This is the plain-parquet
-      realization of an Iceberg snapshot append / ``MERGE INTO`` over
-      term-keyed partitions. Query-time exactness: segments are doc-
-      disjoint, per-(segment, slice) WAND local top-k composes exactly, and
-      idf/avgdl are merged globals (never baked into posting bytes — the
-      block bounds are avgdl-free, see POSTINGS_SCHEMA).
-    - ``compact`` — full phase-B re-merge of all staged chunks into one
-      segment; byte-identical to a from-scratch build (the compaction /
-      rewrite path).
+    The delta is packed into a new doc-disjoint segment (postings/docs/
+    lexicon under ``seg=N``); existing segment files are never read or
+    rewritten, so phase-B wall time is proportional to the DELTA, not the
+    corpus. This is the plain-parquet realization of an Iceberg snapshot
+    append / ``MERGE INTO`` over term-keyed partitions. Query-time
+    exactness: segments are doc-disjoint, per-(segment, slice) WAND local
+    top-k composes exactly, and idf/avgdl are merged globals (never baked
+    into posting bytes — the block bounds are avgdl-free, see
+    POSTINGS_SCHEMA). With no committed base the staged chunks are
+    re-merged instead. A caller that wants a full compaction — one segment,
+    byte-identical to a from-scratch build — calls ``merge_index``.
 
     Lifecycle: after a segment append, if the segment count exceeds
-    ``max_segments`` (default DEFAULT_MAX_SEGMENTS; None disables), the
-    index is auto-compacted back to one segment — bounding query-time probe
-    fan-out while keeping per-update cost delta-proportional amortized
-    (see maybe_compact). The result's ``compacted`` flag reports it.
+    ``max_segments`` (default DEFAULT_MAX_SEGMENTS), the index is
+    auto-compacted back to one segment — bounding query-time probe fan-out
+    while keeping per-update cost delta-proportional amortized (see
+    maybe_compact). The result's ``compacted`` flag reports it.
+
+    The chunk id is the next batch id below STREAM_CHUNK_BASE, never 0:
+    in the streaming namespace a later drain's epoch would overwrite it,
+    and chunk 0 would append over seg=0, the segment a merge writes.
     """
-    if strategy not in ("segment", "compact"):
-        # same up-front validation as ingest_stream: a typo'd strategy must
-        # not silently take the fresh-dir compaction path
-        raise ValueError(f"unknown strategy {strategy!r}")
     t0 = time.time()
     base = _prepare_base(new_docs, lang)
     # NOTE: the committed _SUCCESS.json stays valid throughout staging and
     # segment append — readers prune scans to the marker's segment list, so
     # the in-flight chunk/segment is invisible and queries keep serving the
     # old snapshot (same reader story as ingest_stream). Only table-rewriting
-    # paths (merge_index, reached via strategy='compact' or maybe_compact)
+    # paths (merge_index, reached directly or via maybe_compact)
     # swap it for an uncommitted record, immediately before clearing the
     # table dirs.
     existing_path = os.path.join(index_dir, "staged")
     if os.path.exists(existing_path):
         existing = spark.read.parquet(existing_path).select("url")
         base = base.join(existing, "url", "left_anti")
-    done = staged_chunks(spark, index_dir)
-    _stage_chunk(spark, base, index_dir, (max(done) + 1) if done else 0)
-    result = _publish_pending(
-        spark, index_dir, strategy=strategy, max_segments=max_segments,
-        slice_bits=slice_bits,
+    chunk = 1 + max(
+        (c for c in staged_chunks(spark, index_dir) if c < STREAM_CHUNK_BASE),
+        default=0,
     )
+    _stage_chunk(spark, base, index_dir, chunk)
+    result = _publish_pending(spark, index_dir, max_segments=max_segments)
     result.wall_s = time.time() - t0
     return result
 
@@ -732,17 +727,15 @@ def _publish_pending(
     spark: SparkSession,
     index_dir: str,
     *,
-    strategy: str,
-    max_segments: int | None,
-    slice_bits: int | None = None,
+    max_segments: int,
 ) -> BuildResult:
     """Publish every staged chunk the commit record does not cover yet — the
     one phase-B step of update_index and ingest_stream.
 
-    With ``strategy='compact'`` or no committed base (fresh dir, unfinished
-    compaction) all staged chunks are re-merged into seg=0. Otherwise each
-    pending chunk is appended as its own segment, then the lifecycle policy
-    (maybe_compact) runs. Reconciling ALL pending chunks, not only the one a
+    With no committed base (fresh dir, unfinished compaction) all staged
+    chunks are re-merged into seg=0. Otherwise each pending chunk is
+    appended as its own segment, then the lifecycle policy (maybe_compact)
+    runs. Reconciling ALL pending chunks, not only the one a
     caller just staged, makes a crashed update retryable: the retry
     anti-joins everything away and stages an empty chunk, and the orphan
     chunk the crash left must still be packed.
@@ -752,8 +745,8 @@ def _publish_pending(
     base = committed_record(index_dir)
     staged = staged_chunks(spark, index_dir)
     pending = sorted(staged - set(base["covered_chunks"] if base else ()))
-    if strategy == "compact" or base is None:
-        result = merge_index(spark, index_dir, slice_bits=slice_bits)
+    if base is None:
+        result = merge_index(spark, index_dir)
     elif not pending:
         result = BuildResult(
             index_dir=index_dir,
@@ -765,7 +758,7 @@ def _publish_pending(
         )
     else:
         for c in pending:
-            result = append_segment(spark, index_dir, c, slice_bits=slice_bits)
+            result = append_segment(spark, index_dir, c)
         result = maybe_compact(spark, index_dir, max_segments=max_segments) or result
     result.chunks_processed = len(pending)
     result.chunks_skipped = len(staged) - len(pending)
@@ -803,11 +796,11 @@ def maybe_compact(
     spark: SparkSession,
     index_dir: str,
     *,
-    max_segments: int | None = DEFAULT_MAX_SEGMENTS,
+    max_segments: int = DEFAULT_MAX_SEGMENTS,
 ) -> BuildResult | None:
     """Fold all segments back into seg=0 when the count exceeds
-    ``max_segments`` (None = never). Returns the compaction result, or None
-    when no compaction was needed. Safe mid-lifecycle: merge_index
+    ``max_segments``. Returns the compaction result, or None when no
+    compaction was needed. Safe mid-lifecycle: merge_index
     replaces the commit record with an uncommitted one before touching
     tables and rebuilds from the staged chunks, so a crash here degrades to
     a resumable rebuild, never a corrupt-but-complete index.
@@ -820,8 +813,6 @@ def maybe_compact(
     retention (what Iceberg snapshots provide; documented divergence in
     COVERAGE.md) — in this layout, schedule compaction off the serving
     path."""
-    if max_segments is None:
-        return None
     data_segs = [
         s for s in check_index_format(index_dir)["segments"]
         if s < DELETE_SEG_BASE
@@ -887,9 +878,9 @@ def delete_docs(
 
     Scope: only docs in the COMMITTED snapshot (staged chunks listed in the
     commit record's covered_chunks) are deletable — a url sitting in a
-    staged-but-unmerged chunk (``ingest_stream(merge=False)``, or the window
-    between _stage_chunk and append_segment) was never added to the
-    committed n_docs, so subtracting it would corrupt n_docs/idf for the
+    staged-but-unpublished chunk (the window between _stage_chunk and
+    append_segment, or one a crashed writer left behind) was never added to
+    the committed n_docs, so subtracting it would corrupt n_docs/idf for the
     live corpus. Delete it after its chunk commits.
 
     Crash safety: the _SUCCESS.json rename is the single commit point. The
@@ -1031,14 +1022,12 @@ def append_segment(
     spark: SparkSession,
     index_dir: str,
     chunk: int,
-    *,
-    slice_bits: int | None = None,
 ) -> BuildResult:
     """Pack ALREADY-STAGED chunk N into index segment N and merge the global
     stats incrementally — the delta-proportional phase-B unit shared by
-    ``update_index(strategy='segment')`` and the streaming drain. Requires a
-    committed base; idempotent: an already-covered chunk commits nothing,
-    and an empty (or all-tombstoned) chunk commits only its coverage."""
+    ``update_index`` and the streaming drain. Requires a committed base;
+    idempotent: an already-covered chunk commits nothing, and an empty (or
+    all-tombstoned) chunk commits only its coverage."""
     t0 = time.time()
     timings: dict[str, float] = {}
     old = check_index_format(index_dir)
@@ -1083,8 +1072,8 @@ def append_segment(
         )
         return _unchanged()
     seg_stats = _build_segment(
-        spark, staged_k, index_dir, chunk, n_docs=n_delta, dl_sum=dl_delta,
-        timings=timings, slice_bits=slice_bits,
+        spark, staged_k, index_dir, chunk,
+        n_docs=n_delta, dl_sum=dl_delta, timings=timings,
     )
 
     # merge global stats incrementally (exact: avgdl is a weighted mean)
@@ -1154,7 +1143,6 @@ def _build_segment(
     n_docs: int,
     dl_sum: float,
     timings: dict,
-    slice_bits: int | None = None,
 ) -> dict:
     """Pack one doc-disjoint SEGMENT: postings/seg=N, docs/seg=N,
     lexicon/seg=N. Segments are the incremental-update unit (the
@@ -1163,9 +1151,8 @@ def _build_segment(
     query/probe time, never baked into posting bytes.
 
     ``n_docs``/``dl_sum`` are the segment's doc count and total doc length;
-    they size the shuffles and, unless ``slice_bits`` pins it, the slice
-    count. Returns {rows, postings, max_p, avg_p, n_terms, slice_bits} for
-    the build metrics.
+    they size the shuffles and the slice count. Returns {rows, postings,
+    max_p, avg_p, n_terms, slice_bits} for the build metrics.
     """
     # Right-size explicit shuffles from the just-measured stats — an
     # explicit repartition() is exempt from AQE coalescing. Partition count
@@ -1182,8 +1169,7 @@ def _build_segment(
     # slice_bits derives from THIS segment's doc count: per-slice WAND and
     # the pack shuffle only ever see one segment's sub-lists, so a small
     # delta appended to a huge base correctly gets a small slice count
-    if slice_bits is None:
-        slice_bits = derive_slice_bits(n_docs)
+    slice_bits = derive_slice_bits(n_docs)
     seg_sub = f"seg={seg}"
     staged_docs = staged.select("doc_id", "url", "doclen")
 
@@ -1381,12 +1367,10 @@ def _atomic_json(path: str, obj, *, indent=None) -> None:
 def merge_index(
     spark: SparkSession,
     index_dir: str,
-    *,
-    slice_bits: int | None = None,
 ) -> BuildResult:
     """Phase B COMPACTION: global stats, lexicon, postings from ALL staged
-    chunks into a single segment (seg=0). Incremental updates can instead
-    append a delta segment (``update_index(strategy='segment')``)."""
+    chunks into a single segment (seg=0). Incremental updates instead
+    append a delta segment (``update_index``)."""
     t0 = time.time()
     timings: dict[str, float] = {}
     tp = time.time()
@@ -1422,8 +1406,8 @@ def merge_index(
         _clear_dir(os.path.join(index_dir, sub))
 
     seg_stats = _build_segment(
-        spark, staged, index_dir, 0, n_docs=n_docs, dl_sum=n_docs * avgdl,
-        timings=timings, slice_bits=slice_bits,
+        spark, staged, index_dir, 0,
+        n_docs=n_docs, dl_sum=n_docs * avgdl, timings=timings,
     )
     # compaction folds the deletes physically: the rebuilt lexicon is
     # computed over the survivors, so no delta segment remains live (the

@@ -83,9 +83,8 @@ def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
     scoring globals, tombstones) from ONE read.
 
     An absent, torn or uncommitted record (no ``version``) means the last
-    build never committed (crash mid-build, an ``ingest_stream(merge=False)``
-    drain awaiting its merge, or a compaction that did not finish) — tables
-    may be partially written. A format MISMATCH means the on-disk layout is
+    build never committed (crash mid-build, or a compaction that did not
+    finish) — tables may be partially written. A format MISMATCH means the on-disk layout is
     not what this engine assumes: rebuild."""
     from statschat_ke_spark.index.build import INDEX_FORMAT
 
@@ -95,9 +94,8 @@ def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
         raise RuntimeError(
             f"index at {index_dir!r} has no _SUCCESS.json commit record "
             "(absent, torn, or left by an unfinished compaction) — the build "
-            "was interrupted before commit or a streaming drain ran with "
-            "merge=False; finish the build (merge_index / append_segment) "
-            "before querying"
+            "was interrupted before commit; finish the build (merge_index / "
+            "append_segment) before querying"
         )
     fmt = marker.get("format")
     if fmt != INDEX_FORMAT:
@@ -300,10 +298,8 @@ def wand_group_count(total_df: int, parallelism: int) -> int:
     forfeit most pruning when posting volume is modest. Estimated block
     count (Σdf from the lexicon probe — no extra job) sizes the group
     count: few groups (global-ish θ, max pruning) for small volume, up to
-    4×parallelism for big scans. Single source of truth — the shared plan
-    (``_scored``) and the decoded-fraction instrumentation
-    (scripts/bench_large.py) must group identically, or the instrumentation
-    measures a grouping production never runs."""
+    4×parallelism for big scans. Single source of truth for the grouping
+    of the shared plan (``_scored``)."""
     return int(max(1, min(4 * parallelism, (total_df // BLOCK) // 512 + 1)))
 
 
@@ -339,9 +335,8 @@ def _scored(
     # union Σdf so per-group θ converges with little decode overhead.
     # ``n_groups`` pins the count explicitly — the adaptive default couples
     # the JOB SHAPE to defaultParallelism (more groups = more per-group θ
-    # warm-up decode), so an N-vs-4N scaling measurement must pin it to run
-    # the identical job at both levels and vary only concurrency
-    # (scripts/bench_query_scaling.py does).
+    # warm-up decode); pinning it runs the identical job at any parallelism,
+    # and the tests use it to check scores are invariant to the grouping.
     total_df = sum(v["df"] for v in lex.values())
     par = spark.sparkContext.defaultParallelism
     if n_groups is None:

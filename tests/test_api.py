@@ -285,13 +285,13 @@ def test_doc_u_asc_unsigned_tie_order(spark):
     doc_id order (doc_id = xxhash64(url) is ~half negative): on a tie the
     positive id (unsigned-small) wins over the negative one, matching
     topk()/the oracle — a signed F.asc would keep the opposite row."""
-    from statschat_ke_spark.api import _doc_u_asc
+    from statschat_ke_spark.operators.postproc import doc_u_asc
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
         [(-5, 1.0), (3, 1.0), (7, 2.0)], "doc_id long, score double"
     )
-    got = [r.doc_id for r in df.orderBy(F.desc("score"), _doc_u_asc()).collect()]
+    got = [r.doc_id for r in df.orderBy(F.desc("score"), doc_u_asc()).collect()]
     assert got == [7, 3, -5]
 
 

@@ -17,6 +17,7 @@ from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.index.build import (
     DELETE_SEG_BASE,
     build_index,
+    merge_index,
     staged_chunks,
     update_index,
 )
@@ -105,7 +106,8 @@ def test_update_equals_full_rebuild(spark, docs500, single_shot, tmp_path_factor
     )
     d = str(tmp_path_factory.mktemp("up") / "idx")
     build_index(spark, base, d)
-    res = update_index(spark, delta, d, strategy="compact")
+    update_index(spark, delta, d)
+    res = merge_index(spark, d)
     assert res.complete
     assert res.n_docs == spark.read.parquet(os.path.join(d_ss, "docs")).count()
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
@@ -118,7 +120,8 @@ def test_update_equals_full_rebuild(spark, docs500, single_shot, tmp_path_factor
         assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all()
 
     # idempotency: re-sending the same delta stages 0 new docs
-    res2 = update_index(spark, delta, d, strategy="compact")
+    update_index(spark, delta, d)
+    res2 = merge_index(spark, d)
     assert res2.n_docs == res.n_docs
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
 
@@ -133,7 +136,7 @@ def _seg_files(d, table, seg):
 
 
 def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
-    """segment strategy: delta-proportional phase B — existing segment files
+    """segment append: delta-proportional phase B — existing segment files
     are untouched (same set, same mtimes), a new doc-disjoint segment is
     appended, and query results are IDENTICAL (ranks and scores) to the
     full single-shot rebuild because idf/avgdl are merged globals and the
@@ -152,7 +155,7 @@ def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
     build_index(spark, base, d)
     before = _seg_files(d, "postings", 0)
 
-    res = update_index(spark, delta, d, strategy="segment")
+    res = update_index(spark, delta, d)
     assert res.complete
     assert res.n_docs == spark.read.parquet(os.path.join(d_ss, "docs")).count()
     # segment 0 untouched: same files, same mtimes (nothing rewritten)
@@ -182,7 +185,7 @@ def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
         assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9)
 
     # idempotency: re-sending the delta appends nothing
-    res2 = update_index(spark, delta, d, strategy="segment")
+    res2 = update_index(spark, delta, d)
     assert res2.n_docs == res.n_docs
     assert not os.path.isdir(os.path.join(d, "postings", "seg=2"))
 
@@ -232,10 +235,7 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
     compactions = []
     # appends → segment counts 2, 3, 4(>3: compact to 1), 2
     for a, b in [(200, 280), (280, 360), (360, 430), (430, 500)]:
-        res = update_index(
-            spark, df_of(a, b), d,
-            strategy="segment", max_segments=3,
-        )
+        res = update_index(spark, df_of(a, b), d, max_segments=3)
         assert res.complete
         compactions.append(bool(res.compacted))
     assert compactions == [False, False, True, False]
@@ -252,17 +252,6 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
         b = topk(spark, d_ss, q, 10).toPandas()
         assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all()
         assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9)
-
-    # max_segments=None disables the policy entirely
-    d2 = str(tmp_path_factory.mktemp("lc2") / "idx")
-    build_index(spark, df_of(0, 200), d2)
-    for i, (a, b) in enumerate([(200, 280), (280, 360), (360, 430)]):
-        res = update_index(
-            spark, df_of(a, b), d2,
-            strategy="segment", max_segments=None,
-        )
-        assert not res.compacted
-    assert _data_segments(d2) == [0, 1, 2, 3]
 
 
 def test_update_segment_chunk_accounting(spark, tmp_path_factory):
@@ -281,14 +270,14 @@ def test_update_segment_chunk_accounting(spark, tmp_path_factory):
 
     # normal delta append: exactly one chunk processed, the base chunk(s)
     # skipped, never both counted for the same chunk
-    res = update_index(spark, delta, d, strategy="segment")
+    res = update_index(spark, delta, d)
     assert res.chunks_processed == 1
     done_total = len(staged_chunks(spark, d))
     assert res.chunks_processed + res.chunks_skipped == done_total
 
     # pure replay (same delta again): the empty replay chunk is published
     # (recorded as covered) and MUST count as processed=1, not 0
-    res2 = update_index(spark, delta, d, strategy="segment")
+    res2 = update_index(spark, delta, d)
     assert res2.chunks_processed == 1
     assert res2.chunks_skipped == done_total  # all prior chunks skipped
 
@@ -307,10 +296,10 @@ def test_resent_delta_leaves_no_pending_chunk(spark, tmp_path_factory):
     )
     d = str(tmp_path_factory.mktemp("resend") / "idx")
     build_index(spark, base, d)
-    update_index(spark, delta, d, strategy="segment")
+    update_index(spark, delta, d)
     before = check_index_format(d)
     for _ in range(2):
-        update_index(spark, delta, d, strategy="segment")
+        update_index(spark, delta, d)
     after = check_index_format(d)
     assert set(after["covered_chunks"]) == staged_chunks(spark, d)
     assert len(after["covered_chunks"]) == len(before["covered_chunks"]) + 2
@@ -346,7 +335,7 @@ def test_crashed_compaction_then_segment_update(spark, tmp_path_factory, monkeyp
         with pytest.raises(RuntimeError, match="injected crash"):
             build_mod.merge_index(spark, d)
 
-    res = update_index(spark, delta, d, strategy="segment")
+    res = update_index(spark, delta, d)
     ref_res = build_index(spark, base.unionByName(delta), ref)
     assert res.n_docs == ref_res.n_docs
     for q in ["what was inflation in december 2023", "maize production county report"]:
@@ -484,10 +473,10 @@ def test_append_window_keeps_serving_old_snapshot(
 def test_update_index_serves_throughout_segment_append(
     spark, docs500, tmp_path_factory
 ):
-    """End-to-end: after update_index(strategy='segment') the marker exists
-    and was NEVER removed along the way (monitored via a marker-deleting
-    tripwire is impossible without threads, so assert the post-state and
-    that the old version string changed only by commit)."""
+    """End-to-end: after update_index the marker exists and was NEVER
+    removed along the way (monitored via a marker-deleting tripwire is
+    impossible without threads, so assert the post-state and that the old
+    version string changed only by commit)."""
     import json
 
     d = str(tmp_path_factory.mktemp("serve") / "idx")
@@ -499,7 +488,7 @@ def test_update_index_serves_throughout_segment_append(
         "url", "warc_ts", "html", "text", "lang"
     )
     res0 = build_index(spark, base, d)
-    res = update_index(spark, delta, d, strategy="segment")
+    res = update_index(spark, delta, d)
     assert res.n_docs > res0.n_docs  # delta landed (lang filter may drop some)
     with open(os.path.join(d, "_SUCCESS.json")) as f:
         marker = json.load(f)
@@ -597,10 +586,10 @@ def test_writer_lock_never_observably_empty(tmp_path_factory):
 
 def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
     """End-to-end snapshot isolation: queries hammered from one thread while
-    update_index(strategy='segment') runs in another must (a) never error
-    and (b) always return a result equal to either the pre-update or the
-    post-update snapshot — never a mix. This is the ingest+serve topology
-    the engine documents as supported."""
+    update_index runs in another must (a) never error and (b) always return
+    a result equal to either the pre-update or the post-update snapshot —
+    never a mix. This is the ingest+serve topology the engine documents as
+    supported."""
     import threading
 
     from statschat_ke_spark.index.query import _close_snapshots
@@ -635,7 +624,7 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
     t = threading.Thread(target=reader)
     t.start()
     try:
-        update_index(spark, delta, d, strategy="segment")
+        update_index(spark, delta, d)
     finally:
         done.set()
         t.join(60)
@@ -694,7 +683,7 @@ def test_snapshot_handle_reuse_and_invalidation(spark, tmp_path_factory, monkeyp
     assert opens(d, q) == []  # unchanged snapshot: the handle is reused
     assert opens(d, "maize production") == []  # probe misses reuse it too
 
-    update_index(spark, _docs(spark, pdf.iloc[200:]), d, strategy="segment")
+    update_index(spark, _docs(spark, pdf.iloc[200:]), d)
     assert opens(d, q) == ["docs", "lexicon", "postings"]
     assert opens(d, q) == []
     ref = str(root / "ref_update")
@@ -723,7 +712,7 @@ def test_concurrent_snapshot_opens(spark, tmp_path_factory):
     build_index(spark, _docs(spark, pdf.iloc[:160]), d)
     q = "county report statistics survey"
     topk(spark, d, q, 5).collect()  # the previous commit's handle
-    update_index(spark, _docs(spark, pdf.iloc[160:]), d, strategy="segment")
+    update_index(spark, _docs(spark, pdf.iloc[160:]), d)
     version = check_index_format(d)["version"]
 
     gate = threading.Barrier(8)

@@ -158,7 +158,7 @@ def test_delete_then_segment_append(spark, corpus, tmp_path_factory):
         for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
     )[:40]
     delete_docs(spark, d1, victims)
-    update_index(spark, extra, d1, strategy="segment")
+    update_index(spark, extra, d1)
 
     with open(os.path.join(d1, "_SUCCESS.json")) as f:
         marker = json.load(f)
@@ -172,7 +172,7 @@ def test_delete_then_segment_append(spark, corpus, tmp_path_factory):
 
     # terminal-delete semantics: re-sending a deleted url is a no-op
     resend = docs.filter(docs.url.isin(victims[:5]))
-    update_index(spark, resend, d1, strategy="segment")
+    update_index(spark, resend, d1)
     _assert_same_topk(spark, d1, d2)
 
 
@@ -246,7 +246,7 @@ def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
     )
 
     # a later append publishes a fresh marker — the orphan must stay out
-    update_index(spark, extra, d1, strategy="segment")
+    update_index(spark, extra, d1)
     with open(os.path.join(d1, "_SUCCESS.json")) as f:
         marker = json.load(f)
     assert orphan_seg not in [int(s) for s in marker["segments"]]

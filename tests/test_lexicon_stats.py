@@ -21,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
+from statschat_ke_spark.index import build
 from statschat_ke_spark.index.build import build_index, delete_docs, update_index
 from statschat_ke_spark.index.oracle import OracleIndex
 from statschat_ke_spark.index.query import check_index_format, topk
@@ -46,7 +47,7 @@ def appended(spark, index_dir, corpus_pdf, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("lexstats") / "idx")
     shutil.copytree(index_dir, d)
     delta = generate_documents(150, seed=7)
-    update_index(spark, _docs(spark, delta).drop("text"), d, strategy="segment")
+    update_index(spark, _docs(spark, delta).drop("text"), d)
     base = _en(corpus_pdf)
     new = _en(delta)
     live = pd.concat([base, new[~new.url.isin(base.url)]], ignore_index=True)
@@ -111,16 +112,16 @@ def test_stats_json_interface(spark, index_dir, appended):
         assert not os.path.exists(os.path.join(idx, "_metrics")), idx
 
 
-def test_term_in_every_doc(spark, corpus_pdf, tmp_path):
+def test_term_in_every_doc(spark, corpus_pdf, tmp_path, monkeypatch):
     """Hostile corpus: one synthetic token appended to every text. Its df
     is every doc, the pack shuffle stays balanced at slice_bits=9, and
     queries containing it stay rank-identical to the oracle."""
     hot = "zqeverydoc"
     pdf = corpus_pdf.assign(text=corpus_pdf.text.fillna("") + f" {hot}")
     d = str(tmp_path / "hot")
+    monkeypatch.setattr(build, "derive_slice_bits", lambda n_docs: 9)
     res = build_index(
-        spark, _docs(spark, pdf, ("url", "warc_ts", "text", "lang")), d,
-        slice_bits=9,
+        spark, _docs(spark, pdf, ("url", "warc_ts", "text", "lang")), d
     )
     df = (
         spark.read.parquet(os.path.join(d, "lexicon"))

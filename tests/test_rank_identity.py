@@ -157,7 +157,7 @@ def test_topk_batch_rank_identity_golden_scale(spark, index_dir, oracle, corpus_
     assert len(qmap) == 190
 
     k = 10
-    # n_groups pinned explicitly (the scaling bench's identical-job knob —
+    # n_groups pinned explicitly (runs the identical job at any parallelism —
     # must not change results vs the adaptive default, asserted per query)
     batch = topk_batch(spark, index_dir, qmap, k=k, n_qb=5, n_groups=7).toPandas()
     n_nonempty = 0
@@ -232,12 +232,10 @@ def test_derive_slice_bits_math():
     assert derive_slice_bits(DOCS_PER_SLICE_TARGET * (1 << SLICE_BITS) + 1) == 7
     assert derive_slice_bits(10**12) == 24  # design point: ~16.7M slices
     assert derive_slice_bits(10**15) == 24  # int32-slice cap
-    # explicit target override scales inversely
-    assert derive_slice_bits(10**12, target=1 << 24) == 16
 
 
 def test_scores_bit_identical_across_slice_bits(spark, corpus_df, index_dir,
-                                                tmp_path):
+                                                tmp_path, monkeypatch):
     """The doc-range slice count is pure physical layout: rebuilding the
     SAME corpus at coarser and finer slice_bits must leave every query's
     doc_ids AND score bits unchanged (scores are per-doc sums over the
@@ -246,7 +244,7 @@ def test_scores_bit_identical_across_slice_bits(spark, corpus_df, index_dir,
     import json
     import os
 
-    from statschat_ke_spark.index.build import build_index
+    from statschat_ke_spark.index import build
     from statschat_ke_spark.index.query import topk_batch
 
     queries = {
@@ -262,7 +260,9 @@ def test_scores_bit_identical_across_slice_bits(spark, corpus_df, index_dir,
     )
     for sb in (3, 9):
         d = str(tmp_path / f"idx_sb{sb}")
-        build_index(spark, corpus_df.drop("text"), d, slice_bits=sb)
+        # force the layout: every segment derives its slice bits here
+        monkeypatch.setattr(build, "derive_slice_bits", lambda n_docs: sb)
+        build.build_index(spark, corpus_df.drop("text"), d)
         with open(os.path.join(d, "stats.json")) as f:
             assert json.load(f)["slice_bits"] == sb
         # the layout really changed: slice ids live in [0, 2^sb)

@@ -145,31 +145,6 @@ def test_flag_latest_null_date_is_false(spark):
     assert flagged.filter(~F.col("latest")).count() == 1
 
 
-def test_unknown_strategy_fails_fast_on_fresh_dir(spark, tmp_path):
-    """A typo'd strategy must raise on the FIRST call even when the fresh-dir
-    shortcut would otherwise take the compaction path (update_index and
-    ingest_stream both)."""
-    from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
-    from statschat_ke_spark.index.build import update_index
-    from statschat_ke_spark.streaming.ingest import ingest_stream
-
-    pdf = generate_documents(5, seed=1)
-    docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SPARK_SCHEMA).select(
-        "url", "warc_ts", "html", "text", "lang"
-    )
-    with pytest.raises(ValueError, match="unknown strategy"):
-        update_index(spark, docs, str(tmp_path / "i1"), strategy="segmnet")
-    with pytest.raises(ValueError, match="unknown strategy"):
-        ingest_stream(
-            spark, str(tmp_path / "landing"), str(tmp_path / "i2"),
-            strategy="segmnet",
-        )
-    # nothing was staged/written by the failed calls
-    import os
-
-    assert not os.path.exists(str(tmp_path / "i1" / "staged"))
-
-
 def test_fuzz_ratio_case_sensitive_like_rapidfuzz(spark):
     """rapidfuzz.fuzz.ratio with its default processor is case-sensitive
     (the reference calls it raw, latest_updates.py:46): 'ABC' vs 'abc' has

@@ -1,6 +1,7 @@
 """Structured-Streaming ingest tests (SURVEY §2.8 mapping): AvailableNow
 drain of a parquet landing zone == batch build over the same docs; a second
-drop is picked up incrementally via the stream checkpoint."""
+drop is picked up incrementally via the stream checkpoint; drains and
+update_index calls interleave without their staged chunks colliding."""
 
 from __future__ import annotations
 
@@ -9,7 +10,13 @@ import os
 import pytest
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
-from statschat_ke_spark.index.build import build_index
+from statschat_ke_spark.index.build import (
+    STREAM_CHUNK_BASE,
+    build_index,
+    merge_index,
+    staged_chunks,
+    update_index,
+)
 from statschat_ke_spark.streaming.ingest import ingest_stream
 
 
@@ -63,12 +70,11 @@ def test_stream_ingest_incremental(spark, parts, tmp_path):
     assert _lexicon(spark, idx_stream) == _lexicon(spark, idx_batch_a)
     assert _postings(spark, idx_stream) == _postings(spark, idx_batch_a)
 
-    # drop 2, compact strategy → drain picks up ONLY the new files and the
-    # full re-merge is byte-identical to a batch build over everything
+    # drop 2 → drain picks up ONLY the new files, and a full re-merge after
+    # it is byte-identical to a batch build over everything
     b.write.mode("append").parquet(landing)
-    res2 = ingest_stream(
-        spark, landing, idx_stream, strategy="compact"
-    )
+    ingest_stream(spark, landing, idx_stream)
+    res2 = merge_index(spark, idx_stream)
     build_index(spark, full, idx_batch_full)
     assert res2.n_docs == full.filter("lang = 'en'").count()
     assert _lexicon(spark, idx_stream) == _lexicon(spark, idx_batch_full)
@@ -76,7 +82,7 @@ def test_stream_ingest_incremental(spark, parts, tmp_path):
 
 
 def test_stream_segment_append(spark, parts, tmp_path):
-    """Default drain strategy appends each drained chunk as its own index
+    """A drain appends each drained chunk as its own index
     segment (delta-proportional): query results match the full batch build
     exactly, and the first drain's segment files are never rewritten."""
     import numpy as np
@@ -155,6 +161,48 @@ def test_stream_drain_auto_compaction(spark, parts, tmp_path):
     assert res.n_docs == full.filter("lang = 'en'").count()
 
     build_index(spark, full, idx_full)
+    for q in ["inflation county report", "maize production county report"]:
+        x = topk(spark, idx, q, 10).toPandas()
+        y = topk(spark, idx_full, q, 10).toPandas()
+        assert (x.doc_id.to_numpy() == y.doc_id.to_numpy()).all()
+        assert np.allclose(x.score.to_numpy(), y.score.to_numpy(), atol=1e-9)
+
+
+def test_update_between_drains_keeps_every_chunk(spark, tmp_path):
+    """drain → update_index → drain: update_index stages its chunk in the
+    batch namespace, below STREAM_CHUNK_BASE and above 0, so the second
+    drain's epoch cannot overwrite it or be mistaken for an already-covered
+    chunk, and its segment cannot overwrite the first drain's seg=0. The
+    result equals a batch build over all the docs."""
+    import numpy as np
+
+    from statschat_ke_spark.index.query import check_index_format, topk
+
+    pdf = generate_documents(300)
+    df = spark.createDataFrame(pdf, schema=DOCUMENTS_SPARK_SCHEMA).select(
+        "url", "warc_ts", "html", "text", "lang"
+    )
+    first, second, third = (
+        spark.createDataFrame(pdf.iloc[a:b], schema=DOCUMENTS_SPARK_SCHEMA)
+        .select("url", "warc_ts", "html", "text", "lang")
+        for a, b in ((0, 100), (100, 200), (200, 300))
+    )
+    landing = str(tmp_path / "landing_mix")
+    idx = str(tmp_path / "idx_mix")
+    idx_full = str(tmp_path / "idx_mix_full")
+
+    first.write.mode("append").parquet(landing)
+    ingest_stream(spark, landing, idx)
+    update_index(spark, second, idx)
+    third.write.mode("append").parquet(landing)
+    res = ingest_stream(spark, landing, idx)
+
+    chunks = sorted(staged_chunks(spark, idx))
+    assert len(chunks) == 3
+    assert [c < STREAM_CHUNK_BASE for c in chunks] == [True, False, False]
+    assert len(set(check_index_format(idx)["segments"])) == 3
+    full = build_index(spark, df, idx_full)
+    assert res.n_docs == full.n_docs == df.filter("lang = 'en'").count()
     for q in ["inflation county report", "maize production county report"]:
         x = topk(spark, idx, q, 10).toPandas()
         y = topk(spark, idx_full, q, 10).toPandas()
