@@ -33,7 +33,6 @@ def main() -> None:
     ap.add_argument("--index-dir", required=True)
     ap.add_argument("--lang", default="en")
     ap.add_argument("--chunks", type=int, default=1)
-    ap.add_argument("--stop-after-chunks", type=int, default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--update", action="store_true",
                     help="incremental UPDATE into an existing index")
@@ -50,17 +49,18 @@ def main() -> None:
     # imported AFTER getOrCreate so --py-files distribution is in effect
     from statschat_ke_spark.index.build import build_index, update_index
 
-    docs = spark.read.parquet(args.input)
     if args.update:
-        res = update_index(spark, docs, args.index_dir, lang=args.lang)
+        res = update_index(
+            spark, spark.read.parquet(args.input), args.index_dir, lang=args.lang
+        )
     else:
+        # the PATH, not a DataFrame: --chunks K then cuts chunks at the file
+        # listing and reads the input once (see build_index)
         res = build_index(
-            spark, docs, args.index_dir,
+            spark, args.input, args.index_dir,
             lang=args.lang, n_chunks=args.chunks, resume=args.resume,
-            stop_after_chunks=args.stop_after_chunks,
         )
     out = {
-        "complete": res.complete,
         "n_docs": res.n_docs,
         "wall_s": round(res.wall_s, 2),
         "chunks_processed": res.chunks_processed,

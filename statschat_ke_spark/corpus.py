@@ -23,7 +23,6 @@ EPOCH = dt.datetime(2023, 1, 1, 0, 0, 0)
 
 THEMES = ["economy", "health", "education", "agriculture", "trade", "population", "energy", "transport"]
 RELEASE_TYPES = ["bulletin", "report", "survey", "census-brief"]
-LANGS = ["en", "sw", "fr"]
 
 # ~200 base words + generated tail to a 10k-term Zipf vocabulary
 _BASE_WORDS = (
@@ -232,14 +231,6 @@ DOCUMENTS_SPARK_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
     "title string, theme string, series int, release_date date"
 )
-
-
-def spark_documents(spark, n: int, seed: int = SEED):
-    """Synthetic documents as a Spark DataFrame (contract columns only)."""
-    pdf = generate_documents(n, seed)
-    return spark.createDataFrame(pdf, schema=DOCUMENTS_SPARK_SCHEMA).select(
-        "url", "warc_ts", "html", "text", "lang"
-    )
 
 
 CONTRACT_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"

@@ -12,31 +12,19 @@ Spark engine, the numpy oracle, and the DuckDB oracle SQL. Spec:
   identically on both sides
 - ``doclen`` = token count
 
-Everything here is vectorized: pandas UDFs over Arrow batches (the
-BASELINE.json input_hint mandates no per-row Python in the Spark plan).
+The build applies ``TOKEN_RE`` in one Arrow-batched pandas UDF
+(``index.build.tokenize_doc_udf``; the BASELINE.json input_hint mandates no
+per-row Python in the Spark plan); the functions here are the driver-side
+query path and the oracle's.
 """
 
 from __future__ import annotations
 
 import re
-from collections import Counter
-
-import pandas as pd
-from pyspark.sql import functions as F, types as T
 
 from statschat_ke_spark.functions.hashing import xxhash64_str
 
 TOKEN_RE = re.compile(r"[a-z0-9]+")
-
-# Schema of the per-document term-frequency map produced by tokenize_tf_udf:
-# computing tf inside the UDF avoids a (doc_id, term) groupBy shuffle — the
-# only shuffles in the index build are the term-range repartitions (SURVEY §4).
-TF_ENTRY = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("tf", T.IntegerType(), False),
-    ]
-)
 
 
 def tokenize(text: str) -> list[str]:
@@ -44,45 +32,8 @@ def tokenize(text: str) -> list[str]:
     return TOKEN_RE.findall(text.lower())
 
 
-def term_counts(text: str) -> Counter:
-    return Counter(tokenize(text))
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokens_udf(text: pd.Series) -> pd.Series:
-    """text → array<string> of tokens (order-preserving, with duplicates)."""
-    lowered = text.fillna("").str.lower()
-    return lowered.map(TOKEN_RE.findall)
-
-
-@F.pandas_udf(T.IntegerType())
-def doclen_udf(text: pd.Series) -> pd.Series:
-    lowered = text.fillna("").str.lower()
-    return lowered.map(lambda s: len(TOKEN_RE.findall(s))).astype("int32")
-
-
-@F.pandas_udf(T.ArrayType(TF_ENTRY))
-def tokenize_tf_udf(text: pd.Series) -> pd.Series:
-    """text → array<struct<term,tf>> — per-doc term frequencies, map-side.
-
-    Replaces the reference's per-chunk embedding step
-    (preprocess.py:230-248) with the BM25 build's tf computation; doing the
-    within-doc aggregation here keeps the (doc, term) pair stream pre-reduced
-    so downstream sees df-bounded rows, not position-bounded rows.
-    """
-    lowered = text.fillna("").str.lower()
-
-    def _tf(s: str):
-        c = Counter(TOKEN_RE.findall(s))
-        return [{"term": t, "tf": int(n)} for t, n in c.items()]
-
-    return lowered.map(_tf)
-
-
 def term_ids(tokens: list[str]) -> list[int]:
-    """Distinct query-term ids, deduped order-preserving (driver side)."""
-    seen: dict[str, int] = {}
-    for t in tokens:
-        if t not in seen:
-            seen[t] = xxhash64_str(t)
-    return list(seen.values())
+    """Distinct query-term ids in appearance order (driver side) — the
+    canonical per-doc summation order (see query._wand_groups) the oracle
+    also uses."""
+    return [xxhash64_str(t) for t in dict.fromkeys(tokens)]

@@ -10,8 +10,10 @@ Phase A (stage per input chunk, checkpoint-resumable):
     contract) --tokenize+tf (single Arrow UDF pass)--> staged table
     (doc_id, url, doclen, tfs), one parquet subdir per chunk, a lineage row
     appended after each chunk commits. Resume = anti-join chunks against the
-    lineage table (the Spark analog of the reference's UPDATE anti-joins,
-    pdf_downloader.py:133-152).
+    lineage table. Incremental ingest (update_index, ingest_stream) stages
+    through _stage_unseen, a url anti-join against the committed chunks, so
+    no url is staged twice (the Spark analog of the reference's UPDATE
+    anti-joins, pdf_downloader.py:133-152).
 
 Phase B (global merge) — ONE heavy pass over the (doc, term) pairs:
     staged --explode--> pairs
@@ -62,6 +64,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from statschat_ke_spark.functions.extract import extract_text_udf
+from statschat_ke_spark.functions.tokenize import TOKEN_RE
 from statschat_ke_spark.index.codec import BLOCK, vbyte_encode_chunks
 from statschat_ke_spark.index.query import check_index_format, read_commit
 
@@ -101,7 +104,9 @@ def derive_slice_bits(n_docs: int) -> int:
 # Bump when the on-disk layout or the commit record changes; recorded in
 # _SUCCESS.json so stale caches rebuild instead of misreading. 3: the
 # _SUCCESS.json record is the only snapshot state (stats.json is metrics).
-INDEX_FORMAT = 3
+# 4: no url is staged in two chunks (_stage_unseen), which phase B relies
+# on — format-3 streaming drains could re-stage a url already indexed.
+INDEX_FORMAT = 4
 LONG_MIN = -(2**63)
 # Arrow batch rows for the pack stage. Pack input rows are 28 fixed-width
 # bytes, so 128k rows ≈ 3.6 MB per batch; the 10k default caused a
@@ -159,16 +164,14 @@ def tokenize_doc_udf(text: pd.Series) -> pd.DataFrame:
     len/total micro-variants were within noise. ~13k docs/s/core here;
     linear, Arrow-batched, embarrassingly parallel across executors.
     """
-    import re
     from collections import Counter
 
-    token_re = re.compile(r"[a-z0-9]+")
     lowered = text.fillna("").str.lower()
     doclens: list[int] = []
     term_lists: list[list[str]] = []
     tf_lists: list[list[int]] = []
     for s in lowered:
-        c = Counter(token_re.findall(s))
+        c = Counter(TOKEN_RE.findall(s))
         doclens.append(sum(c.values()))
         term_lists.append(list(c.keys()))
         tf_lists.append(list(c.values()))
@@ -321,7 +324,6 @@ class BuildResult:
     wall_s: float
     chunks_processed: int
     chunks_skipped: int
-    complete: bool = True
     # set when the segment-lifecycle policy folded all segments back into
     # seg=0 during this call (see maybe_compact)
     compacted: bool = False
@@ -383,6 +385,33 @@ def _stage_chunk(
         n_files=int(n_files),
     )
     return int(n_rows)
+
+
+def _stage_unseen(
+    spark: SparkSession, docs: DataFrame, index_dir: str, chunk: int,
+    lang: str | None,
+) -> int:
+    """Incremental-ingest staging, shared by update_index and ingest_stream:
+    stage ``docs`` as ``chunk`` minus every url that a lineage-committed
+    staged chunk other than ``chunk`` already holds — the Spark analog of
+    the reference's UPDATE-mode anti-join (pdf_downloader.py:133-152).
+
+    This keeps "no url in two staged chunks", which phase B relies on
+    (INDEX_FORMAT 4): a re-sent or re-crawled url adds nothing, and a
+    tombstoned url, whose row stays in its immutable staged chunk, is never
+    re-admitted. ``chunk`` itself is excluded so that an overwrite replay of
+    a stream epoch stages the same rows. A url given twice inside ``docs``
+    is not deduplicated."""
+    base = _prepare_base(docs, lang)
+    seen = sorted(staged_chunks(spark, index_dir) - {chunk})
+    if seen:
+        staged_urls = (
+            spark.read.parquet(os.path.join(index_dir, "staged"))
+            .filter(F.col("chunk").isin(seen))
+            .select("url")
+        )
+        base = base.join(staged_urls, "url", "left_anti")
+    return _stage_chunk(spark, base, index_dir, chunk)
 
 
 def _append_lineage_row(
@@ -579,7 +608,6 @@ def build_index(
     lang: str | None = "en",
     n_chunks: int = 1,
     resume: bool = False,
-    stop_after_chunks: int | None = None,
 ) -> BuildResult:
     """Build the full index under ``index_dir``.
 
@@ -595,11 +623,10 @@ def build_index(
     fallback is a pmod(url-hash) filter, which re-scans the input per chunk
     (documented; fine for n_chunks=1, the default).
 
-    ``stop_after_chunks`` caps phase-A work done in this invocation (an
-    operational budget knob); when the cap fires before all chunks are staged
-    the merge is skipped and the result has ``complete=False`` — rerun with
-    ``resume=True`` to finish. Combined with lineage this is the north-rule
-    checkpoint-resume path.
+    The input is staged as given: no url anti-join against earlier chunks,
+    which would re-read every earlier chunk per chunk. ``resume=True`` skips
+    the chunks whose lineage row committed — after a crash mid-build, rerun
+    with it to finish (the north-rule checkpoint-resume path).
     """
     t0 = time.time()
     os.makedirs(index_dir, exist_ok=True)
@@ -629,16 +656,6 @@ def build_index(
     for chunk in range(n_chunks):
         if chunk in done_chunks:
             continue
-        if stop_after_chunks is not None and processed >= stop_after_chunks:
-            return BuildResult(
-                index_dir=index_dir,
-                n_docs=0,
-                avgdl=0.0,
-                wall_s=time.time() - t0,
-                chunks_processed=processed,
-                chunks_skipped=len(done_chunks),
-                complete=False,
-            )
         if by_files:
             # listing-level slice: this pass reads ONLY these files
             chunk_paths = files[chunk::n_chunks] or [files[0]]
@@ -674,9 +691,11 @@ def update_index(
     """Incremental UPDATE: stage only genuinely-new documents as a fresh
     chunk, then publish it (``_publish_pending``, shared with ingest_stream).
     The Spark analog of the reference's UPDATE mode (pdf_downloader.py:133-152
-    anti-join + preprocess.py:250-288 FAISS merge_from): new-vs-existing is a
-    left anti join on url against the already-staged doc table, so re-sending
-    the same batch adds no docs — its empty chunk is only recorded as covered.
+    anti-join + preprocess.py:250-288 FAISS merge_from): new-vs-existing is
+    ``_stage_unseen``, the url anti-join against the lineage-committed staged
+    chunks that ingest_stream shares, so re-sending the same batch adds no
+    docs — its empty chunk is only recorded as covered — and a deleted url
+    stays deleted.
 
     The delta is packed into a new doc-disjoint segment (postings/docs/
     lexicon under ``seg=N``); existing segment files are never read or
@@ -701,7 +720,6 @@ def update_index(
     and chunk 0 would append over seg=0, the segment a merge writes.
     """
     t0 = time.time()
-    base = _prepare_base(new_docs, lang)
     # NOTE: the committed _SUCCESS.json stays valid throughout staging and
     # segment append — readers prune scans to the marker's segment list, so
     # the in-flight chunk/segment is invisible and queries keep serving the
@@ -709,15 +727,11 @@ def update_index(
     # paths (merge_index, reached directly or via maybe_compact)
     # swap it for an uncommitted record, immediately before clearing the
     # table dirs.
-    existing_path = os.path.join(index_dir, "staged")
-    if os.path.exists(existing_path):
-        existing = spark.read.parquet(existing_path).select("url")
-        base = base.join(existing, "url", "left_anti")
     chunk = 1 + max(
         (c for c in staged_chunks(spark, index_dir) if c < STREAM_CHUNK_BASE),
         default=0,
     )
-    _stage_chunk(spark, base, index_dir, chunk)
+    _stage_unseen(spark, new_docs, index_dir, chunk, lang)
     result = _publish_pending(spark, index_dir, max_segments=max_segments)
     result.wall_s = time.time() - t0
     return result
@@ -736,9 +750,9 @@ def _publish_pending(
     chunks are re-merged into seg=0. Otherwise each pending chunk is
     appended as its own segment, then the lifecycle policy (maybe_compact)
     runs. Reconciling ALL pending chunks, not only the one a
-    caller just staged, makes a crashed update retryable: the retry
-    anti-joins everything away and stages an empty chunk, and the orphan
-    chunk the crash left must still be packed.
+    caller just staged, makes a crashed update retryable: the retry's
+    _stage_unseen finds every url in the orphan chunk the crash left and
+    stages an empty chunk, and the orphan chunk must still be packed.
 
     The result's ``chunks_processed`` counts the chunks this call newly
     covers; ``chunks_skipped`` the staged chunks already covered before."""
@@ -897,10 +911,10 @@ def delete_docs(
     tombstone files are retained forever: the staged chunks still hold the
     deleted rows (they are the resume/lineage anchor and are immutable), so
     the filter must survive every future rebuild. Deletion is therefore
-    TERMINAL for a url in this index — update_index's new-vs-existing
-    anti-join treats a re-send as already ingested, and append_segment
-    anti-joins every chunk it packs against the tombstones, so even a
-    streaming drain that re-lands a deleted url cannot re-admit it.
+    TERMINAL for a url in this index — update_index and ingest_stream stage
+    only urls that no staged chunk holds (_stage_unseen), and the deleted
+    row stays in its chunk, so neither a re-send nor a streaming drain that
+    re-lands a deleted url can re-admit it.
     Re-admitting a deleted url requires a fresh build. Tombstone volume is
     ∝ lifetime deletes (8 bytes/doc), broadcast to executors once per
     snapshot version at query time.
@@ -926,7 +940,7 @@ def delete_docs(
     if tomb is not None:
         # idempotence: docs already tombstoned must not subtract twice
         victims = victims.join(F.broadcast(tomb), "doc_id", "left_anti")
-    # one row per doc even if a url was ever staged twice
+    # one row per doc even if one input batch held a url twice
     victims = (
         victims.select("doc_id", "doclen", "terms", "tfs")
         .dropDuplicates(["doc_id"])
@@ -1026,8 +1040,9 @@ def append_segment(
     """Pack ALREADY-STAGED chunk N into index segment N and merge the global
     stats incrementally — the delta-proportional phase-B unit shared by
     ``update_index`` and the streaming drain. Requires a committed base;
-    idempotent: an already-covered chunk commits nothing, and an empty (or
-    all-tombstoned) chunk commits only its coverage."""
+    idempotent: an already-covered chunk commits nothing, and an empty chunk
+    commits only its coverage. The chunk is packed as staged: _stage_unseen
+    already dropped every url the index holds, tombstoned ones included."""
     t0 = time.time()
     timings: dict[str, float] = {}
     old = check_index_format(index_dir)
@@ -1047,21 +1062,14 @@ def append_segment(
     staged_k = spark.read.parquet(
         os.path.join(index_dir, "staged", f"chunk={chunk}")
     )
-    tomb = _tombstone_df(spark, index_dir, old["tombstone_files"])
-    if tomb is not None:
-        # terminal-delete enforcement at the phase-B choke point: a chunk
-        # that re-lands a tombstoned url (streaming drains have no url
-        # anti-join) must not re-admit the doc — it would re-increment
-        # n_docs/df for a doc_id every scorer masks forever
-        staged_k = staged_k.join(F.broadcast(tomb), "doc_id", "left_anti")
     srow = staged_k.agg(
         F.count("*").alias("n"), F.sum("doclen").alias("dl_sum")
     ).collect()[0]
     n_delta, dl_delta = int(srow.n), float(srow.dl_sum or 0.0)
     if n_delta == 0:
-        # idempotent re-send (everything anti-joined away) or an
-        # all-tombstoned chunk: nothing to pack, but the chunk is covered —
-        # committing that keeps later updates and drains from re-reading it
+        # idempotent re-send (everything anti-joined away): nothing to
+        # pack, but the chunk is covered — committing that keeps later
+        # updates and drains from re-reading it
         _commit(
             index_dir,
             n_docs=old["n_docs"],
@@ -1374,7 +1382,12 @@ def merge_index(
     t0 = time.time()
     timings: dict[str, float] = {}
     tp = time.time()
-    staged = spark.read.parquet(os.path.join(index_dir, "staged"))
+    # lineage-committed chunks only: a chunk dir a crash left before its
+    # lineage row is not covered, and its retry re-stages those urls
+    all_chunks = staged_chunks(spark, index_dir)
+    staged = spark.read.parquet(os.path.join(index_dir, "staged")).filter(
+        F.col("chunk").isin(sorted(all_chunks))
+    )
     # physical reclaim of deletes: tombstoned docs are excluded from the
     # rebuilt segment (posting bytes shrink), but the tombstone files carry
     # forward — the immutable staged chunks still hold the deleted rows, so
@@ -1385,7 +1398,6 @@ def merge_index(
     tomb = _tombstone_df(spark, index_dir, tomb_files)
     if tomb is not None:
         staged = staged.join(F.broadcast(tomb), "doc_id", "left_anti")
-    all_chunks = staged_chunks(spark, index_dir)
 
     stats_row = staged.agg(
         F.count("*").alias("n_docs"), F.avg("doclen").alias("avgdl")

@@ -38,8 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from statschat_ke_spark.functions.hashing import xxhash64_str
-from statschat_ke_spark.functions.tokenize import tokenize
+from statschat_ke_spark.functions.tokenize import term_ids, tokenize
 from statschat_ke_spark.index.codec import BLOCK, decode_doc_ids, decode_tfs, vbyte_decode
 from statschat_ke_spark.operators.postproc import doc_u_asc
 
@@ -239,12 +238,6 @@ def _mask_alive(docs_u: np.ndarray, dead: np.ndarray | None):
     return ~hit
 
 
-def _term_ids(query_text: str) -> list[int]:
-    """The query's distinct term_ids in appearance order — the canonical
-    per-doc summation order (see _wand_groups) the oracle also uses."""
-    return [xxhash64_str(t) for t in dict.fromkeys(tokenize(query_text))]
-
-
 def _probe_idf(snap: _Snapshot, ids: list[int]) -> dict[int, dict]:
     """Driver-side lexicon probe: term_id → {idf, df} for the ``ids`` present
     in the snapshot, in ``ids`` order, against the handle's commit (the same
@@ -321,7 +314,7 @@ def _scored(
     Postings are scanned once with the UNION of all query term_ids pushed
     down; each group runs WAND once per query that has a term there."""
     # ONE lexicon probe for the union of every query's terms
-    ids_by_q = {qid: _term_ids(qtext) for qid, qtext in queries.items()}
+    ids_by_q = {qid: term_ids(tokenize(qtext)) for qid, qtext in queries.items()}
     union_ids = sorted({t for ids in ids_by_q.values() for t in ids})
     lex = _probe_idf(snap, union_ids)
     if not lex:

@@ -6,9 +6,11 @@ optional ``Trigger.AvailableNow`` stream over the landing zone. This module
 implements that mapping:
 
 - ``readStream`` over a parquet landing directory (new files = new docs)
-- ``foreachBatch``: each micro-batch runs the SAME phase-A staging as the
-  batch builder (extract → tokenize pandas UDF → staged chunk + lineage row),
-  so batch and streaming ingest share one code path and one checkpoint story
+- ``foreachBatch``: each micro-batch runs the SAME phase-A staging as
+  update_index (``_stage_unseen``: extract → drop urls already staged →
+  tokenize pandas UDF → staged chunk + lineage row), so a re-crawled or
+  deleted url is not staged again, and batch and streaming ingest share one
+  code path and one checkpoint story
 - micro-batch chunk ids live in a reserved namespace (STREAM_CHUNK_BASE +
   epoch id, disjoint from update_index's batch ids) and stage with
   overwrite, making batch REPLAY after a crash idempotent (the streaming
@@ -36,9 +38,8 @@ from statschat_ke_spark.index.build import (
     DEFAULT_MAX_SEGMENTS,
     STREAM_CHUNK_BASE,
     BuildResult,
-    _prepare_base,
-    _stage_chunk,
     _publish_pending,
+    _stage_unseen,
 )
 
 
@@ -53,8 +54,10 @@ def ingest_stream(
 ) -> BuildResult:
     """Drain the landing zone into the index with Trigger.AvailableNow and
     return the publish result. Repeated invocation picks up only files not
-    yet recorded in the stream checkpoint — the streaming analog of
-    update_index's anti-join.
+    yet recorded in the stream checkpoint, and of those stages only urls
+    that no staged chunk holds yet — the new-vs-existing rule
+    (``_stage_unseen``) update_index uses, so a re-landed url, live or
+    deleted, adds nothing.
 
     Every drained micro-batch chunk is appended as its own doc-disjoint
     index segment (``append_segment``), so continuous ingest cost stays ∝
@@ -70,10 +73,11 @@ def ingest_stream(
     stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def stage_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        base = _prepare_base(batch_df, lang)
         # deterministic chunk id per epoch + overwrite staging ⇒ idempotent
         # under checkpoint replay
-        _stage_chunk(spark, base, index_dir, STREAM_CHUNK_BASE + int(epoch_id))
+        _stage_unseen(
+            spark, batch_df, index_dir, STREAM_CHUNK_BASE + int(epoch_id), lang
+        )
 
     q = (
         stream.writeStream.foreachBatch(stage_batch)

@@ -1,8 +1,8 @@
 """Checkpoint-resume + incremental UPDATE tests (north_rule; SURVEY §5.2-4/5).
 
 - chunked build == single-shot build (identical lexicon + postings bytes)
-- interrupted build (stop_after_chunks) resumes from lineage without
-  recomputing completed chunks, final index identical
+- interrupted build (a crash injected into phase A) resumes from lineage
+  without recomputing completed chunks, final index identical
 - update_index(A, then B) == build_index(A ∪ B); re-sending a delta is a
   no-op (J2 anti-join semantics of pdf_downloader.py:133-152)
 """
@@ -71,23 +71,34 @@ def test_chunked_equals_single_shot(spark, docs500, single_shot, tmp_path_factor
     d_ss, res_ss = single_shot
     d = str(tmp_path_factory.mktemp("ch") / "idx")
     res = build_index(spark, docs500, d, n_chunks=4)
-    assert res.complete and res.chunks_processed == 4
+    assert res.chunks_processed == 4
     assert res.n_docs == res_ss.n_docs
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
     assert _postings(spark, d) == _postings(spark, d_ss)
 
 
-def test_stop_and_resume(spark, docs500, single_shot, tmp_path_factory):
+def test_stop_and_resume(spark, docs500, single_shot, tmp_path_factory, monkeypatch):
     d_ss, _ = single_shot
+    import statschat_ke_spark.index.build as build_mod
+
     d = str(tmp_path_factory.mktemp("rs") / "idx")
-    partial = build_index(spark, docs500, d, n_chunks=4, stop_after_chunks=2)
-    assert not partial.complete
-    assert partial.chunks_processed == 2
+    real = build_mod._stage_chunk
+    calls: list[int] = []
+
+    def crash_on_third(*a, **kw):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("injected crash")
+        return real(*a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(build_mod, "_stage_chunk", crash_on_third)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            build_index(spark, docs500, d, n_chunks=4)
     assert staged_chunks(spark, d) == {0, 1}
     assert not os.path.exists(os.path.join(d, "_SUCCESS.json"))
 
     resumed = build_index(spark, docs500, d, n_chunks=4, resume=True)
-    assert resumed.complete
     assert resumed.chunks_skipped == 2  # lineage prevented recomputation
     assert resumed.chunks_processed == 2
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
@@ -108,7 +119,6 @@ def test_update_equals_full_rebuild(spark, docs500, single_shot, tmp_path_factor
     build_index(spark, base, d)
     update_index(spark, delta, d)
     res = merge_index(spark, d)
-    assert res.complete
     assert res.n_docs == spark.read.parquet(os.path.join(d_ss, "docs")).count()
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
     assert _postings(spark, d) == _postings(spark, d_ss)
@@ -156,7 +166,6 @@ def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
     before = _seg_files(d, "postings", 0)
 
     res = update_index(spark, delta, d)
-    assert res.complete
     assert res.n_docs == spark.read.parquet(os.path.join(d_ss, "docs")).count()
     # segment 0 untouched: same files, same mtimes (nothing rewritten)
     assert _seg_files(d, "postings", 0) == before
@@ -203,7 +212,7 @@ def test_file_listing_chunked_build(spark, docs500, single_shot, tmp_path_factor
 
     d = str(tmp_path_factory.mktemp("fc") / "idx")
     res = build_index(spark, src, d, n_chunks=4)
-    assert res.complete and res.chunks_processed == 4
+    assert res.chunks_processed == 4
     lineage = spark.read.parquet(os.path.join(d, "_lineage")).collect()
     per_chunk_files = {r.chunk: r.n_files for r in lineage}
     assert sum(per_chunk_files.values()) == n_parts  # one total input scan
@@ -236,7 +245,6 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
     # appends → segment counts 2, 3, 4(>3: compact to 1), 2
     for a, b in [(200, 280), (280, 360), (360, 430), (430, 500)]:
         res = update_index(spark, df_of(a, b), d, max_segments=3)
-        assert res.complete
         compactions.append(bool(res.compacted))
     assert compactions == [False, False, True, False]
     # post-compaction state: seg=0 plus exactly the one post-compaction
@@ -345,6 +353,47 @@ def test_crashed_compaction_then_segment_update(spark, tmp_path_factory, monkeyp
         assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), q
 
 
+def test_crash_before_lineage_then_merge_and_retry(spark, tmp_path_factory, monkeypatch):
+    """An update that crashes after writing its staged chunk but before the
+    chunk's lineage row leaves a chunk dir no lineage row covers. A
+    merge_index in between must not pack it, and the retried update must
+    then add the delta exactly once: equal to a fresh build of base + delta."""
+    import numpy as np
+
+    import statschat_ke_spark.index.build as build_mod
+
+    def crash(*_a, **_kw):
+        raise RuntimeError("injected crash")
+
+    pdf = generate_documents(400, seed=23)
+
+    def df_of(part):
+        return spark.createDataFrame(part, schema=DOCUMENTS_SPARK_SCHEMA).select(
+            "url", "warc_ts", "html", "text", "lang"
+        )
+
+    base, delta = df_of(pdf.iloc[:300]), df_of(pdf.iloc[300:])
+    d = str(tmp_path_factory.mktemp("cbl") / "idx")
+    ref = str(tmp_path_factory.mktemp("cblref") / "idx")
+    n_base = build_index(spark, base, d).n_docs
+    with monkeypatch.context() as m:
+        m.setattr(build_mod, "_append_lineage_row", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            update_index(spark, delta, d)
+    assert os.path.isdir(os.path.join(d, "staged", "chunk=1"))
+    assert staged_chunks(spark, d) == {0}
+    assert merge_index(spark, d).n_docs == n_base
+
+    res = update_index(spark, delta, d)
+    ref_res = build_index(spark, base.unionByName(delta), ref)
+    assert res.n_docs == ref_res.n_docs
+    for q in ["what was inflation in december 2023", "maize production county report"]:
+        a = topk(spark, d, q, 10).toPandas()
+        b = topk(spark, ref, q, 10).toPandas()
+        assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all(), q
+        assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), q
+
+
 def test_query_rejects_uncommitted_and_foreign_format(spark, single_shot, tmp_path_factory):
     """check_index_format: querying an uncommitted or format-mismatched index
     fails loudly with an actionable message instead of decoding garbage."""
@@ -376,6 +425,11 @@ def test_query_rejects_uncommitted_and_foreign_format(spark, single_shot, tmp_pa
     with open(marker, "w") as f:
         json.dump({**m, "format": 2}, f)
     with pytest.raises(RuntimeError, match="format 2 .* rebuild"):
+        topk(spark, d2, "anything", 5)
+    # format 3 writers could stage a url in two chunks (streaming re-lands)
+    with open(marker, "w") as f:
+        json.dump({**m, "format": 3}, f)
+    with pytest.raises(RuntimeError, match="format 3 .* rebuild"):
         topk(spark, d2, "anything", 5)
 
     # the committed index still queries fine

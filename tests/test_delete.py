@@ -286,13 +286,14 @@ def test_delete_ignores_uncommitted_staged_chunk(spark, corpus, tmp_path_factory
 def test_streaming_reland_of_deleted_url_not_readmitted(
     spark, corpus, tmp_path_factory
 ):
-    """append_segment anti-joins every chunk against the tombstones, so a
-    drain that re-lands a deleted url (no url anti-join on the streaming
-    path) cannot re-increment n_docs/df for a forever-masked doc."""
-    from statschat_ke_spark.index.build import _prepare_base, _stage_chunk, append_segment
+    """A streaming drain stages only urls no staged chunk holds, and a
+    deleted doc's row stays in its staged chunk, so a drain that re-lands
+    a deleted url cannot re-increment n_docs/df for a forever-masked doc."""
+    from statschat_ke_spark.streaming.ingest import ingest_stream
 
     docs = _docs(spark, corpus)
-    d = str(tmp_path_factory.mktemp("rl") / "idx")
+    tmp = tmp_path_factory.mktemp("rl")
+    d, landing = str(tmp / "idx"), str(tmp / "landing")
     build_index(spark, docs, d)
     victims = sorted(
         r.url
@@ -301,10 +302,9 @@ def test_streaming_reland_of_deleted_url_not_readmitted(
     res = delete_docs(spark, d, victims)
     before = topk(spark, d, QUERIES[0], 10).toPandas()
 
-    # simulate the streaming drain re-landing the deleted urls verbatim
-    reland = _prepare_base(docs.filter(docs.url.isin(victims)), "en")
-    _stage_chunk(spark, reland, d, 1_000_123)
-    out = append_segment(spark, d, 1_000_123)
+    # a real drain re-landing the deleted urls verbatim
+    docs.filter(docs.url.isin(victims)).write.parquet(landing)
+    out = ingest_stream(spark, landing, d)
     assert out.n_docs == res.n_docs  # nothing re-admitted
     assert topk(spark, d, QUERIES[0], 10).toPandas().equals(before)
 

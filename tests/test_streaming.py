@@ -1,7 +1,8 @@
 """Structured-Streaming ingest tests (SURVEY §2.8 mapping): AvailableNow
 drain of a parquet landing zone == batch build over the same docs; a second
-drop is picked up incrementally via the stream checkpoint; drains and
-update_index calls interleave without their staged chunks colliding."""
+drop is picked up incrementally via the stream checkpoint; a re-crawled url
+is not staged twice; drains and update_index calls interleave without their
+staged chunks colliding."""
 
 from __future__ import annotations
 
@@ -208,3 +209,39 @@ def test_update_between_drains_keeps_every_chunk(spark, tmp_path):
         y = topk(spark, idx_full, q, 10).toPandas()
         assert (x.doc_id.to_numpy() == y.doc_id.to_numpy()).all()
         assert np.allclose(x.score.to_numpy(), y.score.to_numpy(), atol=1e-9)
+
+
+def test_stream_recrawl_stages_only_unseen_urls(spark, parts, tmp_path):
+    """A second drain whose landing file re-crawls 20 urls of the first
+    drain plus new docs stages only the new urls: n_docs and the top-k
+    equal a batch build over the distinct docs, and no doc_id is ranked
+    twice."""
+    import numpy as np
+
+    from statschat_ke_spark.functions.tokenize import tokenize
+    from statschat_ke_spark.index.query import topk
+
+    full, a, b = parts
+    landing = str(tmp_path / "landing_recrawl")
+    idx = str(tmp_path / "idx_recrawl")
+    idx_full = str(tmp_path / "idx_recrawl_full")
+
+    a.write.mode("append").parquet(landing)
+    ingest_stream(spark, landing, idx)
+    recrawl = a.filter("lang = 'en'").orderBy("url").limit(20)
+    recrawl_text = [r.text for r in recrawl.select("text").collect()]
+    assert len(recrawl_text) == 20
+    recrawl.unionByName(b).write.mode("append").parquet(landing)
+    res = ingest_stream(spark, landing, idx)
+
+    full_res = build_index(spark, full, idx_full)
+    assert res.n_docs == full_res.n_docs == full.filter("lang = 'en'").count()
+    # the first words of a re-crawled doc rank that doc (and its copy,
+    # were it staged twice) near the top
+    own = " ".join(list(dict.fromkeys(tokenize(recrawl_text[0])))[:8])
+    for q in ["inflation county report", "maize production county report", own]:
+        x = topk(spark, idx, q, 10).toPandas()
+        y = topk(spark, idx_full, q, 10).toPandas()
+        assert x.doc_id.is_unique, q
+        assert (x.doc_id.to_numpy() == y.doc_id.to_numpy()).all(), q
+        assert np.allclose(x.score.to_numpy(), y.score.to_numpy(), atol=1e-9), q

@@ -50,8 +50,9 @@ def _zip_package(dest: str) -> str:
     return zpath
 
 
-@pytest.mark.skipif(not os.path.exists(SF_DOCS), reason="sf0.001 testdata absent")
-def test_spark_submit_py_files_build(spark, tmp_path):
+def _submit_and_compare(spark, tmp_path, chunks: int) -> None:
+    """Run submit_build.py under spark-submit with ``--chunks chunks``; the
+    built index must answer like an in-process build of the same input."""
     zpath = _zip_package(str(tmp_path))
     idx = str(tmp_path / "submit_idx")
     env = {
@@ -69,6 +70,7 @@ def test_spark_submit_py_files_build(spark, tmp_path):
             os.path.join(REPO, "scripts", "submit_build.py"),
             "--input", SF_DOCS,
             "--index-dir", idx,
+            "--chunks", str(chunks),
         ],
         capture_output=True, text=True, timeout=600,
         cwd=str(tmp_path),  # NOT the repo: the zip must satisfy the import
@@ -83,7 +85,8 @@ def test_spark_submit_py_files_build(spark, tmp_path):
         if isinstance(cand, dict) and "n_docs" in cand:
             result = cand
     assert result is not None, f"no result JSON\n{out.stdout[-2000:]}\n{out.stderr[-3000:]}"
-    assert result["complete"] and result["n_docs"] > 0
+    assert result["n_docs"] > 0
+    assert result["chunks_processed"] == chunks
 
     # the submitted build answers queries identically to an in-process build
     from statschat_ke_spark.index.build import build_index
@@ -95,3 +98,15 @@ def test_spark_submit_py_files_build(spark, tmp_path):
     got = topk(spark, idx, q, 10).toPandas()
     want = topk(spark, local_idx, q, 10).toPandas()
     assert got.equals(want)
+
+
+@pytest.mark.skipif(not os.path.exists(SF_DOCS), reason="sf0.001 testdata absent")
+def test_spark_submit_py_files_build(spark, tmp_path):
+    _submit_and_compare(spark, tmp_path, 1)
+
+
+@pytest.mark.skipif(not os.path.exists(SF_DOCS), reason="sf0.001 testdata absent")
+def test_spark_submit_chunked_build(spark, tmp_path):
+    """``--chunks 2`` passes the input PATH to build_index, so chunks are cut
+    at the file listing (here one file: chunk 1 stages empty)."""
+    _submit_and_compare(spark, tmp_path, 2)
