@@ -400,8 +400,9 @@ def _ft_bm25_update(spark, sf_dir):
 def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     """An index taken through the FULL segment lifecycle: base build over
     doc_id % 3 != 0, segment-append of the remaining third (update_index →
-    segments [0, 1]), then PHYSICAL compaction (maybe_compact(max_segments=1)
-    → one rewritten seg=0).
+    a base and a delta segment), then PHYSICAL compaction
+    (maybe_compact(max_segments=1) → one fresh segment of the compaction
+    range).
     Compaction is the plain-parquet realization of Iceberg's rewrite/compact
     maintenance action; the contract claim is that it is a pure physical
     reorganization — scoring after the rewrite must still hash-match the
@@ -409,6 +410,8 @@ def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     (test_build_resume.py / test_delete.py lifecycle chains) to a
     driver-hash-checked contract entry."""
     from statschat_ke_spark.index.build import (
+        COMPACT_SEG_BASE,
+        DELETE_SEG_BASE,
         build_index,
         maybe_compact,
         update_index,
@@ -425,9 +428,12 @@ def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
         spark,
         sf_dir,
         variant="cmp",
-        # compaction folds back to exactly [0]; a multi-segment cache here
-        # means the compact step never ran — rebuild
-        marker_fresh=lambda m: m.get("segments") == [0],
+        # compaction leaves exactly one data segment, of the compaction
+        # range, and no delete delta; anything else means the compact step
+        # never ran — rebuild
+        marker_fresh=lambda m: [
+            COMPACT_SEG_BASE <= s < DELETE_SEG_BASE for s in m.get("segments", [])
+        ] == [True],
         builder=_build_via_compact,
     )
 
@@ -447,7 +453,7 @@ def _ensure_index_streamed(spark: SparkSession, sf_dir: str) -> str:
     """An index constructed via STRUCTURED STREAMING: `documents` dropped
     into a landing zone in three waves (doc_id % 3), each drained with
     Trigger.AvailableNow through streaming/ingest.py::ingest_stream — wave 1
-    compacts into seg=0 (fresh dir), waves 2-3 append doc-disjoint delta
+    compacts into one segment (fresh dir), waves 2-3 append doc-disjoint delta
     segments via the stream checkpoint's incremental file pickup. The
     streaming analog of the reference's UPDATE mode (pdf_runner.py:51-79),
     promoted from pytest-only (test_streaming.py) to a driver-hash-checked

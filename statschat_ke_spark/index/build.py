@@ -106,7 +106,9 @@ def derive_slice_bits(n_docs: int) -> int:
 # _SUCCESS.json record is the only snapshot state (stats.json is metrics).
 # 4: no url is staged in two chunks (_stage_unseen), which phase B relies
 # on — format-3 streaming drains could re-stage a url already indexed.
-INDEX_FORMAT = 4
+# 5: a compaction writes a fresh id from COMPACT_SEG_BASE up; a format-4
+# compaction wrote segment 0, which a chunk-0 append would overwrite.
+INDEX_FORMAT = 5
 LONG_MIN = -(2**63)
 # Arrow batch rows for the pack stage. Pack input rows are 28 fixed-width
 # bytes, so 128k rows ≈ 3.6 MB per batch; the 10k default caused a
@@ -128,9 +130,11 @@ DEFAULT_MAX_SEGMENTS = 8
 # Staged chunk ids (and the data segments named after them) come from two
 # disjoint namespaces: batch chunks (build_index, update_index) count up
 # from 0 below STREAM_CHUNK_BASE, streaming micro-batches stage at
-# STREAM_CHUNK_BASE + epoch id. Lexicon-delta segments written by
-# delete_docs live in a third reserved range above both.
+# STREAM_CHUNK_BASE + epoch id. Compacted segments (merge_index) take fresh
+# ids from COMPACT_SEG_BASE up, and lexicon-delta segments (delete_docs)
+# from DELETE_SEG_BASE up; every id below DELETE_SEG_BASE is a data segment.
 STREAM_CHUNK_BASE = 1_000_000
+COMPACT_SEG_BASE = 1_000_000_000
 DELETE_SEG_BASE = 1_500_000_000
 
 TOKENIZED_SCHEMA = T.StructType(
@@ -324,8 +328,8 @@ class BuildResult:
     wall_s: float
     chunks_processed: int
     chunks_skipped: int
-    # set when the segment-lifecycle policy folded all segments back into
-    # seg=0 during this call (see maybe_compact)
+    # set when the segment-lifecycle policy folded all segments into one
+    # compacted segment during this call (see maybe_compact)
     compacted: bool = False
 
 
@@ -616,12 +620,11 @@ def build_index(
     the only snapshot state) and stats.json (metrics of the last segment
     build; the engine never reads it).
 
-    ``docs`` is a DataFrame or a parquet dataset PATH. With a path and
-    ``n_chunks > 1``, chunks are cut at the FILE LISTING (round-robin over
-    the sorted part-files), so each phase-A pass reads ONLY its slice of the
-    input — n_chunks staged passes cost one total scan. With a DataFrame the
-    fallback is a pmod(url-hash) filter, which re-scans the input per chunk
-    (documented; fine for n_chunks=1, the default).
+    ``docs`` is a DataFrame or a parquet dataset PATH. ``n_chunks > 1``
+    needs a path: chunks are cut at the FILE LISTING (round-robin over the
+    sorted part-files), so each phase-A pass reads ONLY its slice of the
+    input — n_chunks staged passes cost one total scan. A DataFrame is
+    staged as one chunk (``n_chunks > 1`` raises ValueError).
 
     The input is staged as given: no url anti-join against earlier chunks,
     which would re-read every earlier chunk per chunk. ``resume=True`` skips
@@ -629,12 +632,15 @@ def build_index(
     with it to finish (the north-rule checkpoint-resume path).
     """
     t0 = time.time()
+    by_files = n_chunks > 1
+    if by_files and not isinstance(docs, str):
+        raise ValueError(
+            "build_index: n_chunks > 1 cuts chunks at the file listing, so "
+            "docs must be a parquet path, not a DataFrame"
+        )
     os.makedirs(index_dir, exist_ok=True)
-
-    by_files = isinstance(docs, str) and n_chunks > 1
     if by_files:
         files = _chunk_files(docs)
-        base = None
     else:
         if isinstance(docs, str):
             docs = spark.read.parquet(docs)
@@ -647,10 +653,9 @@ def build_index(
     # A pre-existing _SUCCESS.json from an earlier completed build stays in
     # place while chunks are (re)staged: it describes the COMMITTED tables,
     # which staging never touches, so concurrent queries keep serving the old
-    # snapshot for the whole phase-A window (the Iceberg reader story).
-    # merge_index invalidates it immediately before rewriting the tables and
-    # recommits after — the only genuinely reader-unsafe window. Resume
-    # correctness never consults the marker (staged_chunks reads lineage).
+    # snapshot until merge_index commits the new one (the Iceberg reader
+    # story). Resume correctness never consults the marker (staged_chunks
+    # reads lineage).
 
     processed = 0
     for chunk in range(n_chunks):
@@ -663,13 +668,8 @@ def build_index(
             if not files[chunk::n_chunks]:
                 cdf = cdf.limit(0)  # more chunks than files: empty slice
             n_files = len(files[chunk::n_chunks])
-        elif n_chunks == 1:
-            cdf, n_files = base, -1
         else:
-            cdf = base.filter(
-                F.pmod(F.xxhash64(F.col("url")), F.lit(n_chunks)) == chunk
-            )
-            n_files = -1
+            cdf, n_files = base, -1
         _stage_chunk(spark, cdf, index_dir, chunk, n_files=n_files)
         processed += 1
 
@@ -714,22 +714,16 @@ def update_index(
     auto-compacted back to one segment — bounding query-time probe fan-out
     while keeping per-update cost delta-proportional amortized (see
     maybe_compact). The result's ``compacted`` flag reports it.
-
-    The chunk id is the next batch id below STREAM_CHUNK_BASE, never 0:
-    in the streaming namespace a later drain's epoch would overwrite it,
-    and chunk 0 would append over seg=0, the segment a merge writes.
     """
     t0 = time.time()
     # NOTE: the committed _SUCCESS.json stays valid throughout staging and
     # segment append — readers prune scans to the marker's segment list, so
     # the in-flight chunk/segment is invisible and queries keep serving the
-    # old snapshot (same reader story as ingest_stream). Only table-rewriting
-    # paths (merge_index, reached directly or via maybe_compact)
-    # swap it for an uncommitted record, immediately before clearing the
-    # table dirs.
+    # old snapshot until _commit publishes the new one (same reader story
+    # as ingest_stream and merge_index).
     chunk = 1 + max(
         (c for c in staged_chunks(spark, index_dir) if c < STREAM_CHUNK_BASE),
-        default=0,
+        default=-1,
     )
     _stage_unseen(spark, new_docs, index_dir, chunk, lang)
     result = _publish_pending(spark, index_dir, max_segments=max_segments)
@@ -746,11 +740,12 @@ def _publish_pending(
     """Publish every staged chunk the commit record does not cover yet — the
     one phase-B step of update_index and ingest_stream.
 
-    With no committed base (fresh dir, unfinished compaction) all staged
-    chunks are re-merged into seg=0. Otherwise each pending chunk is
+    With no committed base (a fresh dir, a build that crashed before its
+    first commit, or an index of another format) all staged chunks are
+    merged into one compacted segment. Otherwise each pending chunk is
     appended as its own segment, then the lifecycle policy (maybe_compact)
-    runs. Reconciling ALL pending chunks, not only the one a
-    caller just staged, makes a crashed update retryable: the retry's
+    runs. Reconciling ALL pending chunks, not only the one a caller just
+    staged, makes a crashed update retryable: the retry's
     _stage_unseen finds every url in the orphan chunk the crash left and
     stages an empty chunk, and the orphan chunk must still be packed.
 
@@ -779,27 +774,33 @@ def _publish_pending(
     return result
 
 
-def _listed_delta_segments(index_dir: str) -> list[int]:
-    """Lexicon-only delete-delta segment dirs present ON DISK (committed or
-    not) — used only to pick collision-free new ids; never published."""
-    p = os.path.join(index_dir, "lexicon")
-    if not os.path.isdir(p):
-        return []
-    return sorted(
-        s
-        for s in (
-            int(d.split("=", 1)[1])
-            for d in os.listdir(p)
-            if d.startswith("seg=")
-        )
-        if s >= DELETE_SEG_BASE
+def _seg_dirs(index_dir: str):
+    """(path, id) of every ``seg=N`` dir on disk under postings/, docs/ and
+    lexicon/ — committed, superseded or orphaned."""
+    for table in ("postings", "docs", "lexicon"):
+        p = os.path.join(index_dir, table)
+        if os.path.isdir(p):
+            for d in os.listdir(p):
+                if d.startswith("seg="):
+                    yield os.path.join(p, d), int(d.split("=", 1)[1])
+
+
+def _next_seg_id(index_dir: str, lo: int, hi: int = 2**31) -> int:
+    """A fresh segment id in the writer's range [lo, hi) (``seg`` is an int
+    partition column): 1 + the largest id of the range with a dir on disk,
+    or ``lo``. Every segment of the current and the previous snapshot is on
+    disk, so the id is in neither, and an orphan a crashed writer left is
+    never written over."""
+    return 1 + max(
+        (s for _, s in _seg_dirs(index_dir) if lo <= s < hi), default=lo - 1
     )
 
 
 def committed_record(index_dir: str) -> dict | None:
     """The committed snapshot record, or None when there is no committed
-    base to append to: a fresh dir, a compaction that did not finish, or an
-    index of another format. Writers then take the full-merge path."""
+    base to append to: a fresh dir, a build that crashed before its first
+    commit, or an index of another format. Writers then take the full-merge
+    path."""
     try:
         return check_index_format(index_dir)
     except RuntimeError:
@@ -812,21 +813,13 @@ def maybe_compact(
     *,
     max_segments: int = DEFAULT_MAX_SEGMENTS,
 ) -> BuildResult | None:
-    """Fold all segments back into seg=0 when the count exceeds
-    ``max_segments``. Returns the compaction result, or None when no
-    compaction was needed. Safe mid-lifecycle: merge_index
-    replaces the commit record with an uncommitted one before touching
-    tables and rebuilds from the staged chunks, so a crash here degrades to
-    a resumable rebuild, never a corrupt-but-complete index.
-
-    Reader concurrency: segment APPENDS are reader-safe (queries prune to
-    the committed segment list and never see the in-flight segment), but
-    compaction REWRITES table dirs in place — a query started mid-compaction
-    fails fast on the invalidated marker (check_index_format) rather than
-    reading half-cleared tables. True read-while-compact needs old-file
-    retention (what Iceberg snapshots provide; documented divergence in
-    COVERAGE.md) — in this layout, schedule compaction off the serving
-    path."""
+    """Fold all segments into one compacted segment (merge_index) when the
+    count exceeds ``max_segments``. Returns the compaction result, or None
+    when no compaction was needed. Safe mid-lifecycle and for readers: the
+    compacted segment is published by the same single _commit as an
+    append, so a crash before it leaves the old snapshot whole, and a query
+    running on the old snapshot finishes on it (its segments stay on disk
+    for one more commit)."""
     data_segs = [
         s for s in check_index_format(index_dir)["segments"]
         if s < DELETE_SEG_BASE
@@ -897,14 +890,16 @@ def delete_docs(
     the committed n_docs, so subtracting it would corrupt n_docs/idf for the
     live corpus. Delete it after its chunk commits.
 
-    Crash safety: the _SUCCESS.json rename is the single commit point. The
-    delta segment is written to a fresh reserved id first (never in any
-    record until committed — every new segment list is the committed list
-    plus the new segment, never a directory listing), the tombstone file
-    second, the commit record last. A crash anywhere before that rename
-    leaves the committed snapshot untouched plus inert orphan files; a retry
-    re-finds the victims (their tombstone never committed) and performs the
-    delete exactly once.
+    Crash safety: the _SUCCESS.json rename (``_commit``) is the single
+    commit point. The delta segment is written to a fresh id of the delete
+    range first (never in any record until committed — every new segment
+    list is the committed list plus the new segment, never a directory
+    listing), the tombstone file second, the commit record last. A crash
+    anywhere before that rename leaves the committed snapshot untouched plus
+    an orphan delta dir, which the next commit removes; a retry re-finds the
+    victims (their tombstone never committed) and performs the delete
+    exactly once. The superseded delta stays on disk for one more commit,
+    so a query on the previous snapshot can finish.
 
     Physical reclaim happens at the next compaction (merge_index excludes
     tombstoned docs when it rebuilds, so posting bytes shrink), but the
@@ -963,15 +958,10 @@ def delete_docs(
         doc_ids = sorted(int(r.doc_id) for r in hit)
 
         # negative lexicon delta, FOLDED with the previously committed delta
-        # so exactly one delta segment is live at a time. Fresh reserved seg
-        # id (> every on-disk delta dir, committed or orphaned, and disjoint
-        # from chunk-numbered data segments): the superseded/orphan dirs
-        # stay on disk — concurrent readers of older snapshots may still
-        # scan them — and are reclaimed when compaction clears the lexicon.
-        seg = max(
-            _listed_delta_segments(index_dir) + old_delta_segs,
-            default=DELETE_SEG_BASE - 1,
-        ) + 1
+        # so exactly one delta segment is live at a time, under a fresh id
+        # of the delete range (the superseded delta stays on disk for one
+        # more commit, see _commit)
+        seg = _next_seg_id(index_dir, DELETE_SEG_BASE)
         lex_delta = _term_stats(victims).select(
             "term_id", "term", (-F.col("df")).alias("df"), (-F.col("cf")).alias("cf")
         )
@@ -1308,8 +1298,9 @@ def _commit(
     covered_chunks: list[int] | set[int],
     tombstone_files: list[str],
 ) -> None:
-    """Publish one snapshot. The atomic rename of _SUCCESS.json is the ONLY
-    commit point (the Iceberg metadata-pointer swap): a query reads the
+    """Publish one snapshot — the one commit step of every writer (build,
+    append, delete, compaction). The atomic rename of _SUCCESS.json is the
+    ONLY commit point (the Iceberg metadata-pointer swap): a query reads the
     record once and gets its segment list, scoring globals and delete files
     from the same commit, and a crash before the rename leaves the previous
     snapshot whole.
@@ -1319,13 +1310,21 @@ def _commit(
       unpublished. Lexicon-only delete-delta segments are the ids
       >= DELETE_SEG_BASE.
     - ``covered_chunks``: the staged chunks the segments contain (a
-      compaction folds MANY chunks into seg=0, so `staged minus segments`
-      alone would wrongly re-append compacted chunks).
+      compaction folds MANY chunks into one segment, so `staged minus
+      segments` alone would wrongly re-append compacted chunks).
     - ``tombstone_files``: this snapshot's delete files under tombstones/
       (Iceberg positional-delete analog); readers mask them, merges exclude
       them.
     - ``version``: unique per commit — the query probe cache keys on it,
-      not on mtime, which back-to-back appends can share."""
+      not on mtime, which back-to-back appends can share.
+
+    After the rename, every ``seg=N`` table dir that is in neither this
+    record nor the one it replaced is removed: the segments a compaction or
+    a folded delete superseded one commit ago, and orphans of crashed
+    writers. The previous snapshot thus stays readable for one more commit,
+    so a query started on it finishes (the Iceberg snapshot-expiry analog);
+    this is the only place a table dir is removed."""
+    keep = set(segments) | set(read_commit(index_dir).get("segments", ()))
     _atomic_json(
         os.path.join(index_dir, "_SUCCESS.json"),
         {
@@ -1338,6 +1337,9 @@ def _commit(
             "tombstone_files": list(tombstone_files),
         },
     )
+    for seg_dir, s in _seg_dirs(index_dir):
+        if s not in keep:
+            _clear_dir(seg_dir)
 
 
 def _write_build_metrics(
@@ -1377,8 +1379,13 @@ def merge_index(
     index_dir: str,
 ) -> BuildResult:
     """Phase B COMPACTION: global stats, lexicon, postings from ALL staged
-    chunks into a single segment (seg=0). Incremental updates instead
-    append a delta segment (``update_index``)."""
+    chunks into one segment under a fresh id of the compaction range,
+    published by the same single ``_commit`` as every other writer — the
+    analog of Iceberg's rewrite action, which is one more snapshot. The
+    replaced snapshot's segments stay on disk until the next commit, so a
+    query running on it finishes; a crash before the commit leaves it
+    whole, plus an orphan segment dir that the next commit removes.
+    Incremental updates instead append a delta segment (``update_index``)."""
     t0 = time.time()
     timings: dict[str, float] = {}
     tp = time.time()
@@ -1392,8 +1399,8 @@ def merge_index(
     # rebuilt segment (posting bytes shrink), but the tombstone files carry
     # forward — the immutable staged chunks still hold the deleted rows, so
     # every future rebuild must keep filtering (see delete_docs). Read from
-    # the committed record, or from the uncommitted one a crashed compaction
-    # left behind.
+    # the raw record, so the deletes of an index of another format carry
+    # into its rebuild too.
     tomb_files = list(read_commit(index_dir).get("tombstone_files", []))
     tomb = _tombstone_df(spark, index_dir, tomb_files)
     if tomb is not None:
@@ -1405,30 +1412,18 @@ def merge_index(
     n_docs, avgdl = int(stats_row.n_docs), float(stats_row.avgdl or 0.0)
     timings["stats"] = time.time() - tp
 
-    # compaction owns the whole table dirs: BEFORE gutting them, atomically
-    # replace the commit record with an uncommitted one that keeps only the
-    # tombstones. Readers and delete_docs refuse it, update_index and
-    # ingest_stream take the merge path, and a retried merge_index reads its
-    # tombstones from it. This is the ONLY invalidation in the lifecycle:
-    # staging and segment append leave the committed snapshot intact.
-    _atomic_json(
-        os.path.join(index_dir, "_SUCCESS.json"), {"tombstone_files": tomb_files}
-    )
-    for sub in ("postings", "docs", "lexicon"):
-        _clear_dir(os.path.join(index_dir, sub))
-
+    seg = _next_seg_id(index_dir, COMPACT_SEG_BASE, DELETE_SEG_BASE)
     seg_stats = _build_segment(
-        spark, staged, index_dir, 0,
+        spark, staged, index_dir, seg,
         n_docs=n_docs, dl_sum=n_docs * avgdl, timings=timings,
     )
     # compaction folds the deletes physically: the rebuilt lexicon is
-    # computed over the survivors, so no delta segment remains live (the
-    # cleared lexicon/ dir also reclaimed any orphan/superseded delta dirs)
+    # computed over the survivors, so no delta segment remains live
     _commit(
         index_dir,
         n_docs=n_docs,
         avgdl=avgdl,
-        segments=[0],
+        segments=[seg],
         covered_chunks=all_chunks,
         tombstone_files=tomb_files,
     )

@@ -63,11 +63,11 @@ def read_commit(index_dir: str) -> dict:
     """The index's ``_SUCCESS.json`` record as written ({} when absent or
     torn). The record is the index's only snapshot state: ``format``,
     ``version`` (a uuid per commit), ``n_docs``, ``avgdl``, ``segments``,
-    ``covered_chunks`` and ``tombstone_files``; its atomic rename is the only
-    commit point. A compaction in flight replaces it with an uncommitted
-    record holding only ``tombstone_files`` (see merge_index). Writers read
-    it raw only to recover those tombstones; everything else goes through
-    check_index_format."""
+    ``covered_chunks`` and ``tombstone_files``; its atomic rename (every
+    writer's ``_commit``) is the only commit point. Writers read it raw only
+    to keep the replaced record's segments on disk and to carry an index of
+    another format's tombstones into its rebuild; everything else goes
+    through check_index_format."""
     try:
         with open(os.path.join(index_dir, "_SUCCESS.json")) as f:
             return json.load(f)
@@ -81,10 +81,10 @@ def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
     record so callers get their whole snapshot (format, segment list,
     scoring globals, tombstones) from ONE read.
 
-    An absent, torn or uncommitted record (no ``version``) means the last
-    build never committed (crash mid-build, or a compaction that did not
-    finish) — tables may be partially written. A format MISMATCH means the on-disk layout is
-    not what this engine assumes: rebuild."""
+    An absent or torn record (no ``version``) means the build never
+    committed (crash before its first commit) — tables may be partially
+    written. A format MISMATCH means the on-disk layout is not what this
+    engine assumes: rebuild."""
     from statschat_ke_spark.index.build import INDEX_FORMAT
 
     if marker is None:
@@ -92,9 +92,9 @@ def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
     if "version" not in marker:
         raise RuntimeError(
             f"index at {index_dir!r} has no _SUCCESS.json commit record "
-            "(absent, torn, or left by an unfinished compaction) — the build "
-            "was interrupted before commit; finish the build (merge_index / "
-            "append_segment) before querying"
+            "(absent or torn) — the build was interrupted before its first "
+            "commit; finish it (build_index with resume=True, or "
+            "merge_index) before querying"
         )
     fmt = marker.get("format")
     if fmt != INDEX_FORMAT:
@@ -116,21 +116,44 @@ def _prune_to_snapshot(df: DataFrame, marker: dict) -> DataFrame:
     """Restrict a segmented table scan (postings/lexicon/docs, partitioned by
     ``seg``) to the segments the commit record lists.
 
-    The table dirs are enumerated by file listing, so WITHOUT this filter a
-    reader racing a concurrent ``append_segment`` would pick up a fully
-    written ``seg=N`` whose commit (the _SUCCESS.json rename) hasn't landed —
-    scoring uncommitted docs under the old global stats. ``seg`` is a
-    partition column, so the isin() prunes at planning time (no extra job,
-    no data read from uncommitted dirs) — the Iceberg snapshot-read analog."""
+    A frame listed from a whole table dir holds every ``seg=N`` on disk, so
+    WITHOUT this filter a reader racing a concurrent ``append_segment`` would
+    pick up a fully written ``seg=N`` whose commit (the _SUCCESS.json rename)
+    hasn't landed — scoring uncommitted docs under the old global stats.
+    ``seg`` is a partition column, so the isin() prunes at planning time (no
+    extra job, no data read from uncommitted dirs) — the Iceberg
+    snapshot-read analog. Snapshot handles list only their segments' dirs
+    (``_read_snapshot_table``) and keep the filter in the plan as well."""
     return df.filter(F.col("seg").isin([int(s) for s in marker["segments"]]))
+
+
+def _read_snapshot_table(
+    spark: SparkSession, index_dir: str, table: str, marker: dict
+) -> DataFrame:
+    """``table`` of the commit ``marker``, listed from that commit's own
+    ``seg=N`` dirs only (``basePath`` keeps ``seg`` a partition column;
+    delete-delta segments hold only a lexicon). Listing the whole table dir
+    would also list the dirs a concurrent ``_commit`` removes — segments
+    superseded one commit ago, orphans of crashed writers — and a dir that
+    vanishes mid-listing fails the open."""
+    from statschat_ke_spark.index.build import DELETE_SEG_BASE
+
+    root = os.path.join(index_dir, table)
+    return spark.read.option("basePath", root).parquet(
+        *(
+            os.path.join(root, f"seg={s}")
+            for s in marker["segments"]
+            if table == "lexicon" or s < DELETE_SEG_BASE
+        )
+    )
 
 
 class _Snapshot:
     """Reader handle for ONE committed snapshot: its three tables opened once
-    (each open lists the table dir and infers the parquet schema — a Spark
-    job apiece), the term_id → df probe memo (0 = probed and absent; bounded
-    by the distinct QUERIED terms, not the lexicon) and the lazily loaded
-    tombstone broadcast. A snapshot is immutable per commit uuid, so every
+    (each open lists the snapshot's segment dirs of the table and infers
+    the parquet schema — a Spark job apiece), the term_id → df probe memo
+    (0 = probed and absent; bounded by the distinct QUERIED terms, not the
+    lexicon) and the lazily loaded tombstone broadcast. A snapshot is immutable per commit uuid, so every
     query against that commit shares the handle — the engine analog of the
     reference's ``lru_cache`` on make_query (cloud_llm.py:235)."""
 
@@ -138,7 +161,9 @@ class _Snapshot:
         self.index_dir = index_dir
         self.marker = marker
         self.lexicon, self.postings, self.docs = (
-            _prune_to_snapshot(spark.read.parquet(os.path.join(index_dir, t)), marker)
+            _prune_to_snapshot(
+                _read_snapshot_table(spark, index_dir, t, marker), marker
+            )
             for t in ("lexicon", "postings", "docs")
         )
         self.dfs: dict[int, int] = {}

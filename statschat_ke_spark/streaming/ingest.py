@@ -18,11 +18,11 @@ implements that mapping:
   it to effectively-once staging)
 - after the AvailableNow drain, the same phase-B publish step as
   update_index (``_publish_pending``) appends each drained chunk as a segment
-  — or, with no committed base, re-merges all staged chunks, batch and
-  stream chunks alike
+  — or, with no committed base, merges all staged chunks, batch and stream
+  chunks alike — and publishes it with the one commit every writer uses
 
 At web scale the same topology runs with a real trigger interval and an
-Iceberg ``MERGE INTO`` in place of the directory swap; the landing-zone
+Iceberg ``MERGE INTO`` in place of the segment commit; the landing-zone
 pattern, checkpoint dir, and epoch-idempotent staging carry over unchanged.
 """
 
@@ -62,9 +62,9 @@ def ingest_stream(
     Every drained micro-batch chunk is appended as its own doc-disjoint
     index segment (``append_segment``), so continuous ingest cost stays ∝
     new data — the shape a real trigger interval needs; past
-    ``max_segments`` the index is folded back to seg=0 (``maybe_compact``).
-    Falls back to full compaction when no committed snapshot exists (fresh
-    dir, or a compaction that did not finish). Either way the publish step
+    ``max_segments`` the index is folded into one compacted segment
+    (``maybe_compact``). Falls back to full compaction when no committed
+    snapshot exists (a fresh dir). Either way the publish step
     is ``_publish_pending``, which update_index shares; a caller that wants
     a full re-merge calls ``merge_index`` after the drain.
     """

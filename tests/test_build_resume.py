@@ -15,13 +15,18 @@ import pytest
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.index.build import (
+    COMPACT_SEG_BASE,
     DELETE_SEG_BASE,
     build_index,
     merge_index,
     staged_chunks,
     update_index,
 )
-from statschat_ke_spark.index.query import check_index_format, topk
+from statschat_ke_spark.index.query import (
+    _prune_to_snapshot,
+    check_index_format,
+    topk,
+)
 
 
 def _data_segments(d):
@@ -37,9 +42,26 @@ def docs500(spark):
     )
 
 
+def _committed(spark, d, table):
+    """``table`` of the committed snapshot (the replaced snapshot's segments
+    stay on disk for one more commit)."""
+    return _prune_to_snapshot(
+        spark.read.parquet(os.path.join(d, table)), check_index_format(d)
+    )
+
+
+def _listed(d, table):
+    """Segment ids with a dir on disk under ``table``."""
+    return sorted(
+        int(x.split("=", 1)[1])
+        for x in os.listdir(os.path.join(d, table))
+        if x.startswith("seg=")
+    )
+
+
 def _lexicon(spark, d):
     rows = (
-        spark.read.parquet(os.path.join(d, "lexicon"))
+        _committed(spark, d, "lexicon")
         .select("term_id", "term", "df", "cf")
         .collect()
     )
@@ -48,7 +70,7 @@ def _lexicon(spark, d):
 
 def _postings(spark, d):
     rows = (
-        spark.read.parquet(os.path.join(d, "postings"))
+        _committed(spark, d, "postings")
         .select("term_id", "slice", "block_id", "n", "first_doc", "last_doc",
                 "doc_ids", "tfs", "dls")
         .collect()
@@ -67,17 +89,18 @@ def single_shot(spark, docs500, tmp_path_factory):
     return d, res
 
 
-def test_chunked_equals_single_shot(spark, docs500, single_shot, tmp_path_factory):
-    d_ss, res_ss = single_shot
-    d = str(tmp_path_factory.mktemp("ch") / "idx")
-    res = build_index(spark, docs500, d, n_chunks=4)
-    assert res.chunks_processed == 4
-    assert res.n_docs == res_ss.n_docs
-    assert _lexicon(spark, d) == _lexicon(spark, d_ss)
-    assert _postings(spark, d) == _postings(spark, d_ss)
+@pytest.fixture(scope="module")
+def docs500_path(docs500, tmp_path_factory):
+    """docs500 as a parquet dataset of 8 part-files (file-chunked builds
+    need a path)."""
+    src = str(tmp_path_factory.mktemp("src") / "docs_parquet")
+    docs500.repartition(8).write.parquet(src)
+    return src
 
 
-def test_stop_and_resume(spark, docs500, single_shot, tmp_path_factory, monkeypatch):
+def test_stop_and_resume(
+    spark, docs500_path, single_shot, tmp_path_factory, monkeypatch
+):
     d_ss, _ = single_shot
     import statschat_ke_spark.index.build as build_mod
 
@@ -94,11 +117,11 @@ def test_stop_and_resume(spark, docs500, single_shot, tmp_path_factory, monkeypa
     with monkeypatch.context() as m:
         m.setattr(build_mod, "_stage_chunk", crash_on_third)
         with pytest.raises(RuntimeError, match="injected crash"):
-            build_index(spark, docs500, d, n_chunks=4)
+            build_index(spark, docs500_path, d, n_chunks=4)
     assert staged_chunks(spark, d) == {0, 1}
     assert not os.path.exists(os.path.join(d, "_SUCCESS.json"))
 
-    resumed = build_index(spark, docs500, d, n_chunks=4, resume=True)
+    resumed = build_index(spark, docs500_path, d, n_chunks=4, resume=True)
     assert resumed.chunks_skipped == 2  # lineage prevented recomputation
     assert resumed.chunks_processed == 2
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
@@ -163,13 +186,15 @@ def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
     )
     d = str(tmp_path_factory.mktemp("seg") / "idx")
     build_index(spark, base, d)
-    before = _seg_files(d, "postings", 0)
+    [built] = check_index_format(d)["segments"]
+    before = _seg_files(d, "postings", built)
 
     res = update_index(spark, delta, d)
     assert res.n_docs == spark.read.parquet(os.path.join(d_ss, "docs")).count()
-    # segment 0 untouched: same files, same mtimes (nothing rewritten)
-    assert _seg_files(d, "postings", 0) == before
-    # a new segment exists
+    # the built segment untouched: same files, same mtimes (nothing rewritten)
+    assert _seg_files(d, "postings", built) == before
+    # a new segment, named after the delta's chunk, is committed next to it
+    assert check_index_format(d)["segments"] == [1, built]
     assert os.path.isdir(os.path.join(d, "postings", "seg=1"))
 
     # merged lexicon (sum over segments) equals the single-shot lexicon
@@ -199,32 +224,53 @@ def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
     assert not os.path.isdir(os.path.join(d, "postings", "seg=2"))
 
 
-def test_file_listing_chunked_build(spark, docs500, single_shot, tmp_path_factory):
+@pytest.fixture(scope="module")
+def file_chunked(spark, docs500_path, tmp_path_factory):
+    """docs500_path built in 4 chunks cut at the file listing."""
+    d = str(tmp_path_factory.mktemp("fc") / "idx")
+    return d, build_index(spark, docs500_path, d, n_chunks=4)
+
+
+def test_chunked_equals_single_shot(
+    spark, docs500, file_chunked, single_shot, tmp_path_factory
+):
+    """A 4-chunk build is identical to the single-shot build (lexicon and
+    postings). A DataFrame cannot be file-chunked: n_chunks > 1 with one
+    raises before anything is written."""
+    d_ss, res_ss = single_shot
+    d_df = str(tmp_path_factory.mktemp("ch") / "idx")
+    with pytest.raises(ValueError, match="parquet path"):
+        build_index(spark, docs500, d_df, n_chunks=4)
+    assert not os.path.exists(d_df)
+
+    d, res = file_chunked
+    assert res.chunks_processed == 4
+    assert res.n_docs == res_ss.n_docs
+    assert _lexicon(spark, d) == _lexicon(spark, d_ss)
+    assert _postings(spark, d) == _postings(spark, d_ss)
+
+
+def test_file_listing_chunked_build(spark, docs500_path, file_chunked):
     """Path input + n_chunks: chunks are cut at the file listing (each pass
     reads only its slice — lineage records per-chunk file counts that sum to
-    the total part-file count), and the result is identical to the
-    DataFrame-input single-shot build."""
-    d_ss, _ = single_shot
-    src = str(tmp_path_factory.mktemp("src") / "docs_parquet")
-    docs500.repartition(8).write.parquet(src)
-    n_parts = len([f for f in os.listdir(src) if f.endswith(".parquet")])
+    the total part-file count)."""
+    n_parts = len(
+        [f for f in os.listdir(docs500_path) if f.endswith(".parquet")]
+    )
     assert n_parts >= 4
 
-    d = str(tmp_path_factory.mktemp("fc") / "idx")
-    res = build_index(spark, src, d, n_chunks=4)
+    d, res = file_chunked
     assert res.chunks_processed == 4
     lineage = spark.read.parquet(os.path.join(d, "_lineage")).collect()
     per_chunk_files = {r.chunk: r.n_files for r in lineage}
     assert sum(per_chunk_files.values()) == n_parts  # one total input scan
     assert all(v > 0 for v in per_chunk_files.values())
-    assert _lexicon(spark, d) == _lexicon(spark, d_ss)
-    assert _postings(spark, d) == _postings(spark, d_ss)
 
 
 def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path_factory):
     """Lifecycle policy: successive segment appends trigger EXACTLY ONE
     auto-compaction when the segment count crosses max_segments, the index
-    folds back to seg=0, and queries stay rank-identical to the single-shot
+    folds into one fresh compacted segment, and queries stay rank-identical to the single-shot
     build over the same corpus afterwards (including one further append on
     top of the compacted state)."""
     import numpy as np
@@ -239,7 +285,7 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
 
     d = str(tmp_path_factory.mktemp("lc") / "idx")
     build_index(spark, df_of(0, 200), d)
-    assert _data_segments(d) == [0]
+    assert _data_segments(d) == [COMPACT_SEG_BASE]
 
     compactions = []
     # appends → segment counts 2, 3, 4(>3: compact to 1), 2
@@ -247,9 +293,10 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
         res = update_index(spark, df_of(a, b), d, max_segments=3)
         compactions.append(bool(res.compacted))
     assert compactions == [False, False, True, False]
-    # post-compaction state: seg=0 plus exactly the one post-compaction
-    # append (segments are named by chunk id; the 5th slice staged chunk 4)
-    assert _data_segments(d) == [0, 4]
+    # post-compaction state: the next compaction-range id plus exactly the
+    # one post-compaction append (appended segments are named by chunk id;
+    # the 5th slice staged chunk 4)
+    assert _data_segments(d) == [4, COMPACT_SEG_BASE + 1]
 
     # the compacted+appended index answers identically to the single-shot
     # build over the same 500 docs (ranks AND scores); n_docs matches the
@@ -315,11 +362,15 @@ def test_resent_delta_leaves_no_pending_chunk(spark, tmp_path_factory):
     assert (after["n_docs"], after["avgdl"]) == (before["n_docs"], before["avgdl"])
 
 
-def test_crashed_compaction_then_segment_update(spark, tmp_path_factory, monkeypatch):
-    """A compaction that crashes after replacing the commit record and
-    clearing the tables leaves no committed base: a later segment update
-    must rebuild from every staged chunk and equal a fresh build of base +
-    delta, never publish the delta segment alone."""
+@pytest.mark.parametrize("crash_at", ["_build_segment", "_commit"])
+def test_crashed_compaction_then_segment_update(
+    spark, tmp_path_factory, monkeypatch, crash_at
+):
+    """A compaction that crashes before its commit — while writing the new
+    segment, or at the commit after writing it — leaves the committed
+    snapshot whole: a later segment update appends to it and equals a fresh
+    build of base + delta, and its commit removes the orphan compaction
+    dir the crash left."""
     import numpy as np
 
     import statschat_ke_spark.index.build as build_mod
@@ -338,12 +389,19 @@ def test_crashed_compaction_then_segment_update(spark, tmp_path_factory, monkeyp
     d = str(tmp_path_factory.mktemp("ccr") / "idx")
     ref = str(tmp_path_factory.mktemp("ccrref") / "idx")
     build_index(spark, base, d)
+    committed = check_index_format(d)
     with monkeypatch.context() as m:
-        m.setattr(build_mod, "_build_segment", crash)
+        m.setattr(build_mod, crash_at, crash)
         with pytest.raises(RuntimeError, match="injected crash"):
             build_mod.merge_index(spark, d)
+    assert check_index_format(d) == committed
+    orphan = os.path.join(d, "postings", f"seg={COMPACT_SEG_BASE + 1}")
+    assert os.path.isdir(orphan) == (crash_at == "_commit")
 
     res = update_index(spark, delta, d)
+    assert check_index_format(d)["segments"] == [1, COMPACT_SEG_BASE]
+    for table in ("postings", "docs", "lexicon"):
+        assert _listed(d, table) == [1, COMPACT_SEG_BASE], table
     ref_res = build_index(spark, base.unionByName(delta), ref)
     assert res.n_docs == ref_res.n_docs
     for q in ["what was inflation in december 2023", "maize production county report"]:
@@ -431,6 +489,11 @@ def test_query_rejects_uncommitted_and_foreign_format(spark, single_shot, tmp_pa
         json.dump({**m, "format": 3}, f)
     with pytest.raises(RuntimeError, match="format 3 .* rebuild"):
         topk(spark, d2, "anything", 5)
+    # format 4 compactions wrote segment 0, which a chunk-0 append overwrites
+    with open(marker, "w") as f:
+        json.dump({**m, "format": 4}, f)
+    with pytest.raises(RuntimeError, match="format 4 .* rebuild"):
+        topk(spark, d2, "anything", 5)
 
     # the committed index still queries fine
     topk(spark, d, "anything", 5)
@@ -441,10 +504,10 @@ def test_reader_ignores_uncommitted_segment(spark, single_shot, tmp_path_factory
     (_SUCCESS segments list) hasn't landed — the mid-append window a query
     racing ingest_stream sees — must be invisible to topk/probe. Without the
     marker-pruned scans, the directory listing would pick it up and score
-    every doc twice under doubled df."""
+    every doc twice under doubled df. The handle does not even list it."""
     import shutil
 
-    from statschat_ke_spark.index.query import _close_snapshots, topk
+    from statschat_ke_spark.index.query import _close_snapshots, _snapshot, topk
 
     d, _ = single_shot
     d2 = str(tmp_path_factory.mktemp("snap") / "idx")
@@ -454,15 +517,25 @@ def test_reader_ignores_uncommitted_segment(spark, single_shot, tmp_path_factory
     before = topk(spark, d2, q, 10).toPandas()
     assert len(before) > 0
 
-    # simulate the mid-append window: duplicate seg=0 as an uncommitted seg=99
+    # simulate the mid-append window: duplicate the committed segment as an
+    # uncommitted seg=99
+    [seg] = check_index_format(d2)["segments"]
     for sub in ("postings", "lexicon", "docs"):
-        shutil.copytree(os.path.join(d2, sub, "seg=0"), os.path.join(d2, sub, "seg=99"))
+        shutil.copytree(
+            os.path.join(d2, sub, f"seg={seg}"), os.path.join(d2, sub, "seg=99")
+        )
     # same commit uuid — drop the open handle so the tables are re-listed
     # (now with seg=99 on disk) and the lexicon re-probed
     _close_snapshots()
 
     after = topk(spark, d2, q, 10).toPandas()
     assert after.equals(before), "uncommitted segment leaked into query results"
+    # the handle lists only the committed segments' dirs, so a dir that
+    # _commit removes concurrently can never fail the open
+    snap = _snapshot(spark, d2, check_index_format(d2))
+    for table in (snap.postings, snap.lexicon, snap.docs):
+        files = table.inputFiles()
+        assert files and not [f for f in files if "seg=99" in f], files
 
 
 def test_writer_lock_conflict_and_stale_recovery(spark, docs500, tmp_path_factory):
@@ -638,12 +711,16 @@ def test_writer_lock_never_observably_empty(tmp_path_factory):
         pass
 
 
-def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
+@pytest.mark.parametrize("writer", ["update_index", "merge_index"])
+def test_concurrent_reader_during_segment_update(spark, tmp_path_factory, writer):
     """End-to-end snapshot isolation: queries hammered from one thread while
-    update_index runs in another must (a) never error and (b) always return
-    a result equal to either the pre-update or the post-update snapshot —
-    never a mix. This is the ingest+serve topology the engine documents as
-    supported."""
+    a writer runs in another must (a) never error and (b) always return a
+    result equal to either the pre-write or the post-write snapshot — never
+    a mix. The writer is a segment append (update_index), or a compaction
+    (merge_index) of a two-segment index, which changes no result: the
+    compacted segment is published by one commit and the replaced segments
+    stay on disk for readers still on them. This is the ingest+serve
+    topology the engine documents as supported."""
     import threading
 
     from statschat_ke_spark.index.query import _close_snapshots
@@ -657,6 +734,9 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
         "url", "warc_ts", "html", "text", "lang"
     )
     build_index(spark, base, d)
+    if writer == "merge_index":
+        update_index(spark, delta, d)
+        assert len(check_index_format(d)["segments"]) == 2
     q = "county report statistics survey"
 
     def snap(df):
@@ -678,16 +758,59 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory):
     t = threading.Thread(target=reader)
     t.start()
     try:
-        update_index(spark, delta, d)
+        if writer == "merge_index":
+            merge_index(spark, d)
+        else:
+            update_index(spark, delta, d)
     finally:
         done.set()
         t.join(60)
     after = snap(topk(spark, d, q, 10))
-    assert not errors, f"reader failed mid-update: {errors[0]!r}"
+    assert not errors, f"reader failed mid-write: {errors[0]!r}"
     assert observed, "reader thread never completed a query"
     bad = [o for o in observed if o not in (before, after)]
     assert not bad, f"reader saw a torn snapshot: {bad[0]}"
-    assert after != before  # the delta actually changed the result set
+    if writer == "merge_index":
+        assert check_index_format(d)["segments"] == [COMPACT_SEG_BASE + 1]
+        assert after == before  # compaction changes no result
+    else:
+        assert after != before  # the delta actually changed the result set
+
+
+def test_commit_removes_superseded_segments(spark, tmp_path_factory):
+    """The one cleanup rule of _commit: a table dir is removed once it is in
+    neither the new record nor the one it replaced. After a compaction the
+    replaced segments stay on disk for one more commit; after one further
+    append each table holds exactly the committed segments. Three folded
+    deletes leave at most two delta dirs: the live one and the one it
+    superseded."""
+    from statschat_ke_spark.index.build import delete_docs
+
+    pdf = generate_documents(300, seed=31)
+    d = str(tmp_path_factory.mktemp("expire") / "idx")
+    build_index(spark, _docs(spark, pdf.iloc[:150]), d)
+    update_index(spark, _docs(spark, pdf.iloc[150:230]), d)
+    replaced = check_index_format(d)["segments"]
+    assert replaced == [1, COMPACT_SEG_BASE]
+    merge_index(spark, d)
+    assert check_index_format(d)["segments"] == [COMPACT_SEG_BASE + 1]
+    for table in ("postings", "docs", "lexicon"):
+        assert _listed(d, table) == [1, COMPACT_SEG_BASE, COMPACT_SEG_BASE + 1]
+
+    update_index(spark, _docs(spark, pdf.iloc[230:]), d)
+    committed = check_index_format(d)["segments"]
+    assert committed == [2, COMPACT_SEG_BASE + 1]
+    for table in ("postings", "docs", "lexicon"):
+        assert _listed(d, table) == committed, table
+
+    urls = sorted(r.url for r in _committed(spark, d, "docs").select("url").collect())
+    for batch in (urls[:10], urls[10:20], urls[20:30]):
+        assert delete_docs(spark, d, batch).n_deleted > 0
+    [live] = [s for s in check_index_format(d)["segments"] if s >= DELETE_SEG_BASE]
+    deltas = [s for s in _listed(d, "lexicon") if s >= DELETE_SEG_BASE]
+    assert len(deltas) <= 2 and deltas[-1] == live, deltas
+    for table in ("postings", "docs"):
+        assert _listed(d, table) == committed, table
 
 
 def _docs(spark, pdf):
@@ -710,7 +833,8 @@ def test_snapshot_handle_reuse_and_invalidation(spark, tmp_path_factory, monkeyp
     parquet = DataFrameReader.parquet
 
     def counting(self, *paths, **kw):
-        opened.extend(os.path.basename(p) for p in paths)
+        # one open per call, named by table (a snapshot lists its seg dirs)
+        opened.append(os.path.basename(os.path.dirname(paths[0])))
         return parquet(self, *paths, **kw)
 
     monkeypatch.setattr(DataFrameReader, "parquet", counting)

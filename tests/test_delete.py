@@ -18,13 +18,19 @@ import pytest
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.index.build import (
+    COMPACT_SEG_BASE,
     DELETE_SEG_BASE,
     build_index,
     delete_docs,
     merge_index,
     update_index,
 )
-from statschat_ke_spark.index.query import topk, topk_batch
+from statschat_ke_spark.index.query import (
+    _prune_to_snapshot,
+    check_index_format,
+    topk,
+    topk_batch,
+)
 
 QUERIES = [
     "county report statistics survey",
@@ -124,9 +130,15 @@ def test_compaction_reclaims_and_stays_identical(spark, corpus, tmp_path_factory
     delete_docs(spark, d1, victims)
     build_index(spark, docs.filter(~docs.url.isin(victims)), d2)
 
-    rows_before = spark.read.parquet(os.path.join(d1, "postings")).count()
+    def committed_rows():
+        # the replaced snapshot's segments stay on disk for one more commit
+        return _prune_to_snapshot(
+            spark.read.parquet(os.path.join(d1, "postings")), check_index_format(d1)
+        ).count()
+
+    rows_before = committed_rows()
     merge_index(spark, d1)
-    rows_after = spark.read.parquet(os.path.join(d1, "postings")).count()
+    rows_after = committed_rows()
     assert rows_after < rows_before  # physical reclaim
     _assert_same_topk(spark, d1, d2)
     # tombstone files survive the compaction (staged still holds the rows,
@@ -245,11 +257,13 @@ def test_orphan_delta_segment_never_published(spark, corpus, tmp_path_factory):
         os.path.join(d1, "lexicon", f"seg={orphan_seg}")
     )
 
-    # a later append publishes a fresh marker — the orphan must stay out
+    # a later append publishes a fresh marker — the orphan must stay out,
+    # and that commit removes it
     update_index(spark, extra, d1)
     with open(os.path.join(d1, "_SUCCESS.json")) as f:
         marker = json.load(f)
     assert orphan_seg not in [int(s) for s in marker["segments"]]
+    assert not os.path.exists(os.path.join(d1, "lexicon", f"seg={orphan_seg}"))
 
     # the delete retry lands once, on a seg id that avoids the orphan dir
     res = delete_docs(spark, d1, victims)
@@ -350,11 +364,16 @@ def test_delete_crash_before_commit_retries_exactly_once(
     _assert_same_topk(spark, d1, d2)
 
 
-def test_crashed_compaction_keeps_deletes(spark, corpus, tmp_path_factory, monkeypatch):
-    """A compaction that crashes after replacing the commit record and
-    clearing the tables must not lose the delete set: the index refuses
-    reads and deletes until a retried merge_index, which still excludes
-    every tombstoned doc."""
+@pytest.mark.parametrize("crash_at", ["_build_segment", "_commit"])
+def test_crashed_compaction_keeps_deletes(
+    spark, corpus, tmp_path_factory, monkeypatch, crash_at
+):
+    """A compaction that crashes before its commit — while writing the new
+    segment, or at the commit after writing it — must not lose the delete
+    set: the pre-compaction snapshot keeps serving with its deletes applied
+    (equal to a survivors-only build), re-deleting a victim is a no-op, and
+    a retried merge_index still excludes every tombstoned doc and removes
+    the orphan segment dir the crash left."""
     import statschat_ke_spark.index.build as build_mod
 
     docs = _docs(spark, corpus)
@@ -366,16 +385,22 @@ def test_crashed_compaction_keeps_deletes(spark, corpus, tmp_path_factory, monke
         for r in spark.read.parquet(os.path.join(d1, "docs")).select("url").collect()
     )[::7]
     delete_docs(spark, d1, victims)
+    build_index(spark, docs.filter(~docs.url.isin(victims)), d2)
 
     with monkeypatch.context() as m:
-        m.setattr(build_mod, "_build_segment", _crash)
+        m.setattr(build_mod, crash_at, _crash)
         with pytest.raises(RuntimeError, match="injected crash"):
             merge_index(spark, d1)
-    with pytest.raises(RuntimeError, match="_SUCCESS.json"):
-        topk(spark, d1, QUERIES[0], 10)
-    with pytest.raises(RuntimeError, match="_SUCCESS.json"):
-        delete_docs(spark, d1, victims[:1])
+    orphan = os.path.join(d1, "postings", f"seg={COMPACT_SEG_BASE + 1}")
+    assert os.path.isdir(orphan) == (crash_at == "_commit")
+    _assert_same_topk(spark, d1, d2)
+    res = delete_docs(spark, d1, victims[:1])
+    assert res.n_deleted == 0 and res.tombstone_file is None
 
     merge_index(spark, d1)
-    build_index(spark, docs.filter(~docs.url.isin(victims)), d2)
+    [new] = check_index_format(d1)["segments"]
+    # the retry's commit removed the orphan (the replaced segment stays)
+    assert sorted(os.listdir(os.path.dirname(orphan))) == sorted(
+        f"seg={s}" for s in {COMPACT_SEG_BASE, new}
+    )
     _assert_same_topk(spark, d1, d2)

@@ -101,7 +101,10 @@ def test_stats_json_interface(spark, index_dir, appended):
     count is Σ n over that segment's blocks and Σ df over its lexicon, its
     row count is the segment's block count; no _metrics/ table is left."""
     d, _ = appended
-    for idx, seg in ((index_dir, 0), (d, max(check_index_format(d)["segments"]))):
+    [built] = check_index_format(index_dir)["segments"]
+    # an appended segment is named after its chunk, the newest covered one
+    appended_seg = max(check_index_format(d)["covered_chunks"])
+    for idx, seg in ((index_dir, built), (d, appended_seg)):
         with open(os.path.join(idx, "stats.json")) as f:
             st = json.load(f)
         assert STATS_KEYS <= set(st), idx

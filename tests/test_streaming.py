@@ -12,18 +12,28 @@ import pytest
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.index.build import (
+    COMPACT_SEG_BASE,
     STREAM_CHUNK_BASE,
     build_index,
     merge_index,
     staged_chunks,
     update_index,
 )
+from statschat_ke_spark.index.query import _prune_to_snapshot, check_index_format
 from statschat_ke_spark.streaming.ingest import ingest_stream
+
+
+def _committed(spark, d, table):
+    """``table`` of the committed snapshot (the replaced snapshot's segments
+    stay on disk for one more commit)."""
+    return _prune_to_snapshot(
+        spark.read.parquet(os.path.join(d, table)), check_index_format(d)
+    )
 
 
 def _lexicon(spark, d):
     rows = (
-        spark.read.parquet(os.path.join(d, "lexicon"))
+        _committed(spark, d, "lexicon")
         .select("term_id", "term", "df", "cf")
         .collect()
     )
@@ -32,7 +42,7 @@ def _lexicon(spark, d):
 
 def _postings(spark, d):
     rows = (
-        spark.read.parquet(os.path.join(d, "postings"))
+        _committed(spark, d, "postings")
         .select("term_id", "slice", "block_id", "n", "first_doc", "last_doc",
                 "doc_ids", "tfs", "dls")
         .collect()
@@ -97,7 +107,8 @@ def test_stream_segment_append(spark, parts, tmp_path):
 
     a.write.mode("append").parquet(landing)
     ingest_stream(spark, landing, idx)
-    seg0 = os.path.join(idx, "postings", "seg=0")
+    [first] = check_index_format(idx)["segments"]
+    seg0 = os.path.join(idx, "postings", f"seg={first}")
     before = {f: os.path.getmtime(os.path.join(seg0, f)) for f in os.listdir(seg0)}
 
     b.write.mode("append").parquet(landing)
@@ -134,12 +145,13 @@ def test_stream_rerun_noop(spark, parts, tmp_path):
 
 def test_stream_drain_auto_compaction(spark, parts, tmp_path):
     """A drain that pushes the segment count past max_segments triggers the
-    lifecycle compaction: the index folds back to a single seg=0 and still
-    answers identically to a batch build over the same corpus."""
+    lifecycle compaction: the index folds into a single fresh compacted
+    segment and still answers identically to a batch build over the same
+    corpus."""
     import numpy as np
 
     from statschat_ke_spark.index.build import DELETE_SEG_BASE
-    from statschat_ke_spark.index.query import check_index_format, topk
+    from statschat_ke_spark.index.query import topk
 
     def _data_segments(d):
         segs = check_index_format(d)["segments"]
@@ -152,13 +164,13 @@ def test_stream_drain_auto_compaction(spark, parts, tmp_path):
 
     a.write.mode("append").parquet(landing)
     ingest_stream(spark, landing, idx)
-    assert _data_segments(idx) == [0]
+    assert _data_segments(idx) == [COMPACT_SEG_BASE]
 
     # second drain appends ≥1 segment → count ≥ 2 > max_segments=1 → compact
     b.write.mode("append").parquet(landing)
     res = ingest_stream(spark, landing, idx, max_segments=1)
     assert res.compacted
-    assert _data_segments(idx) == [0]
+    assert _data_segments(idx) == [COMPACT_SEG_BASE + 1]
     assert res.n_docs == full.filter("lang = 'en'").count()
 
     build_index(spark, full, idx_full)
@@ -171,13 +183,13 @@ def test_stream_drain_auto_compaction(spark, parts, tmp_path):
 
 def test_update_between_drains_keeps_every_chunk(spark, tmp_path):
     """drain → update_index → drain: update_index stages its chunk in the
-    batch namespace, below STREAM_CHUNK_BASE and above 0, so the second
-    drain's epoch cannot overwrite it or be mistaken for an already-covered
-    chunk, and its segment cannot overwrite the first drain's seg=0. The
+    batch namespace, below STREAM_CHUNK_BASE, so the second drain's epoch
+    cannot overwrite it or be mistaken for an already-covered chunk, and its
+    segment is disjoint from the first drain's compacted segment. The
     result equals a batch build over all the docs."""
     import numpy as np
 
-    from statschat_ke_spark.index.query import check_index_format, topk
+    from statschat_ke_spark.index.query import topk
 
     pdf = generate_documents(300)
     df = spark.createDataFrame(pdf, schema=DOCUMENTS_SPARK_SCHEMA).select(
