@@ -401,8 +401,8 @@ def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     """An index taken through the FULL segment lifecycle: base build over
     doc_id % 3 != 0, segment-append of the remaining third (update_index →
     a base and a delta segment), then PHYSICAL compaction
-    (maybe_compact(max_segments=1) → one fresh segment of the compaction
-    range).
+    (maybe_compact(max_segments=1) → one fresh segment covering every
+    chunk).
     Compaction is the plain-parquet realization of Iceberg's rewrite/compact
     maintenance action; the contract claim is that it is a pure physical
     reorganization — scoring after the rewrite must still hash-match the
@@ -410,7 +410,6 @@ def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     (test_build_resume.py / test_delete.py lifecycle chains) to a
     driver-hash-checked contract entry."""
     from statschat_ke_spark.index.build import (
-        COMPACT_SEG_BASE,
         DELETE_SEG_BASE,
         build_index,
         maybe_compact,
@@ -428,12 +427,13 @@ def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
         spark,
         sf_dir,
         variant="cmp",
-        # compaction leaves exactly one data segment, of the compaction
-        # range, and no delete delta; anything else means the compact step
-        # never ran — rebuild
-        marker_fresh=lambda m: [
-            COMPACT_SEG_BASE <= s < DELETE_SEG_BASE for s in m.get("segments", [])
-        ] == [True],
+        # compaction leaves exactly one data segment, no delete delta, and
+        # covers both the base and the update chunk; anything else means
+        # the compact step never ran — rebuild
+        marker_fresh=lambda m: (
+            [s < DELETE_SEG_BASE for s in m.get("segments", [])] == [True]
+            and len(m.get("covered_chunks", [])) >= 2
+        ),
         builder=_build_via_compact,
     )
 

@@ -209,7 +209,7 @@ class StatsChatApp:
     def _delete(self, environ: dict, start_response: Callable) -> list[bytes]:
         """Tombstone documents by url (index.build.delete_docs). The next
         /search automatically serves the new snapshot — topk re-reads the
-        commit marker per query. A concurrent phase-B writer (in-process
+        commit marker per query. A concurrent writer (in-process
         thread or foreign pid) maps to 409 Conflict rather than corrupting;
         the engine call itself is idempotent and terminal per url."""
         from statschat_ke_spark.index.build import WriterConflict, delete_docs

@@ -106,7 +106,7 @@ def derive_slice_bits(n_docs: int) -> int:
 # _SUCCESS.json record is the only snapshot state (stats.json is metrics).
 # 4: no url is staged in two chunks (_stage_unseen), which phase B relies
 # on — format-3 streaming drains could re-stage a url already indexed.
-# 5: a compaction writes a fresh id from COMPACT_SEG_BASE up; a format-4
+# 5: every data segment takes a fresh id (_next_seg_id); a format-4
 # compaction wrote segment 0, which a chunk-0 append would overwrite.
 INDEX_FORMAT = 5
 LONG_MIN = -(2**63)
@@ -127,14 +127,9 @@ PACK_ARROW_BATCH = 131072
 # (/root/reference/statschat/preprocess.py:250-288) — this policy is that
 # behavior with the rebuild amortized 8× and bounded probe fan-out.
 DEFAULT_MAX_SEGMENTS = 8
-# Staged chunk ids (and the data segments named after them) come from two
-# disjoint namespaces: batch chunks (build_index, update_index) count up
-# from 0 below STREAM_CHUNK_BASE, streaming micro-batches stage at
-# STREAM_CHUNK_BASE + epoch id. Compacted segments (merge_index) take fresh
-# ids from COMPACT_SEG_BASE up, and lexicon-delta segments (delete_docs)
-# from DELETE_SEG_BASE up; every id below DELETE_SEG_BASE is a data segment.
-STREAM_CHUNK_BASE = 1_000_000
-COMPACT_SEG_BASE = 1_000_000_000
+# Data segments take ids below DELETE_SEG_BASE, lexicon-delta segments
+# (delete_docs) from it up; a new id is 1 + the largest of its kind on disk
+# (_next_seg_id).
 DELETE_SEG_BASE = 1_500_000_000
 
 TOKENIZED_SCHEMA = T.StructType(
@@ -392,82 +387,103 @@ def _stage_chunk(
 
 
 def _stage_unseen(
-    spark: SparkSession, docs: DataFrame, index_dir: str, chunk: int,
-    lang: str | None,
+    spark: SparkSession, docs: DataFrame, index_dir: str, lang: str | None
 ) -> int:
     """Incremental-ingest staging, shared by update_index and ingest_stream:
-    stage ``docs`` as ``chunk`` minus every url that a lineage-committed
-    staged chunk other than ``chunk`` already holds — the Spark analog of
-    the reference's UPDATE-mode anti-join (pdf_downloader.py:133-152).
+    stage ``docs`` as a new chunk, 1 + the largest lineage-committed one,
+    minus every url that a lineage-committed staged chunk already holds —
+    the Spark analog of the reference's UPDATE-mode anti-join
+    (pdf_downloader.py:133-152).
 
     This keeps "no url in two staged chunks", which phase B relies on
-    (INDEX_FORMAT 4): a re-sent or re-crawled url adds nothing, and a
-    tombstoned url, whose row stays in its immutable staged chunk, is never
-    re-admitted. ``chunk`` itself is excluded so that an overwrite replay of
-    a stream epoch stages the same rows. A url given twice inside ``docs``
-    is not deduplicated."""
+    (INDEX_FORMAT 4): a re-sent or re-crawled url adds nothing, a replayed
+    stream epoch stages an empty chunk, and a tombstoned url, whose row
+    stays in its immutable staged chunk, is never re-admitted. A chunk dir
+    a crash left before its lineage row is the next id, so the retry
+    overwrites it. A url given twice inside ``docs`` is not deduplicated.
+    The caller holds the writer lock, so no other writer stages meanwhile."""
     base = _prepare_base(docs, lang)
-    seen = sorted(staged_chunks(spark, index_dir) - {chunk})
+    seen = sorted(staged_chunks(spark, index_dir))
     if seen:
-        staged_urls = (
-            spark.read.parquet(os.path.join(index_dir, "staged"))
-            .filter(F.col("chunk").isin(seen))
-            .select("url")
-        )
+        staged_urls = _read_staged(spark, index_dir, seen).select("url")
         base = base.join(staged_urls, "url", "left_anti")
-    return _stage_chunk(spark, base, index_dir, chunk)
+    return _stage_chunk(spark, base, index_dir, 1 + max(seen, default=-1))
+
+
+def _read_staged(spark: SparkSession, index_dir: str, chunks) -> DataFrame:
+    """The staged rows of ``chunks``, listed from their own ``chunk=N`` dirs
+    only (``basePath`` keeps ``chunk`` a column) — the twin of
+    ``query._read_snapshot_table``. A chunk dir without a lineage row is
+    never read."""
+    root = os.path.join(index_dir, "staged")
+    return spark.read.option("basePath", root).parquet(
+        *(os.path.join(root, f"chunk={c}") for c in chunks)
+    )
 
 
 def _append_lineage_row(
     lineage_dir: str, *, chunk: int, rows_in: int, wall_s: float,
     committed_at: float, n_files: int
 ) -> None:
-    """Driver-side lineage commit: one parquet file per chunk commit, written
-    with pyarrow under a unique name (append semantics without a Spark job —
-    a one-row cluster job per chunk is pure scheduler overhead; lineage is
-    commit METADATA, written driver-side exactly as Iceberg writes its commit
-    metadata). Types mirror the Spark schema ``chunk int, rows_in long,
-    wall_s double, committed_at double, n_files int`` so files from either
-    writer read back as one table."""
+    """Driver-side lineage commit: one parquet file per chunk commit
+    (append semantics without a Spark job — a one-row cluster job per chunk
+    is pure scheduler overhead). Types mirror the Spark schema ``chunk int,
+    rows_in long, wall_s double, committed_at double, n_files int`` so files
+    from either writer read back as one table."""
     import pyarrow as pa
+
+    _write_commit_file(
+        lineage_dir,
+        "commit",
+        pa.table(
+            {
+                "chunk": pa.array([chunk], type=pa.int32()),
+                "rows_in": pa.array([rows_in], type=pa.int64()),
+                "wall_s": pa.array([wall_s], type=pa.float64()),
+                "committed_at": pa.array([committed_at], type=pa.float64()),
+                "n_files": pa.array([n_files], type=pa.int32()),
+            }
+        ),
+    )
+
+
+def _write_commit_file(directory: str, prefix: str, table) -> str:
+    """Write one driver-side commit-metadata file (a lineage row, a
+    tombstone file) with pyarrow, exactly as Iceberg writes its commit
+    metadata: to a temp name first, then renamed to a unique
+    ``{prefix}-{uuid}.parquet`` (atomic on posix, so a reader never sees a
+    partial file). Returns the file name."""
     import pyarrow.parquet as pq
 
-    os.makedirs(lineage_dir, exist_ok=True)
-    table = pa.table(
-        {
-            "chunk": pa.array([chunk], type=pa.int32()),
-            "rows_in": pa.array([rows_in], type=pa.int64()),
-            "wall_s": pa.array([wall_s], type=pa.float64()),
-            "committed_at": pa.array([committed_at], type=pa.float64()),
-            "n_files": pa.array([n_files], type=pa.int32()),
-        }
-    )
-    tmp = os.path.join(lineage_dir, f"_tmp-{uuid.uuid4().hex}.parquet")
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f"_tmp-{uuid.uuid4().hex}.parquet")
     pq.write_table(table, tmp)
-    # rename is atomic on posix; readers never see a partial lineage file
-    os.replace(tmp, os.path.join(lineage_dir, f"commit-{uuid.uuid4().hex}.parquet"))
+    name = f"{prefix}-{uuid.uuid4().hex}.parquet"
+    os.replace(tmp, os.path.join(directory, name))
+    return name
 
 
 class WriterConflict(RuntimeError):
-    """A second phase-B writer targeted the same index concurrently."""
+    """A second writer targeted the same index concurrently."""
 
 
 class _writer_lock:
-    """Advisory single-writer lock for phase-B commits (merge / append /
-    compact). Two concurrent writers would interleave table rewrites and
-    stats commits silently; Iceberg rejects the second committer via
-    optimistic concurrency — this is the explicit-lock analog for the
-    filesystem layout.
+    """Advisory single-writer lock, held by every write call (build,
+    update, stream drain, delete, compaction) from its first read to its
+    commit. Two concurrent writers would pick the same chunk id, stage into
+    one chunk dir and interleave their commits; Iceberg lets both write and
+    rejects the second committer (optimistic concurrency) — here the second
+    writer is refused before it stages anything.
 
     Acquisition is ``os.link`` of a fully-written temp file onto
     ``_WRITER_LOCK`` — atomic create-WITH-content, so a contender can never
     observe an empty lock file (an O_EXCL-create-then-write would have a
     window where a racing reader parses pid 0, "breaks" a live writer's
-    lock, and two phase-B writers proceed). A lock whose pid is dead
+    lock, and two writers proceed). A lock whose pid is dead
     (crashed writer) is broken and retaken; losing the retake race to
     another breaker raises WriterConflict rather than corrupting.
-    Reentrant per (thread, index_dir) so update_index → append_segment →
-    maybe_compact nest under one hold; a SECOND THREAD of the same process
+    Reentrant per (thread, index_dir) so update_index → maybe_compact →
+    merge_index nest under one hold; a SECOND THREAD of the same process
     is a conflict, not a reentry (the pid file can't arbitrate in-process
     writers — the threaded WSGI server + background-ingest topology needs
     the map-based check)."""
@@ -502,8 +518,8 @@ class _writer_lock:
             if holder is not None:
                 raise WriterConflict(
                     f"index at {self.index_dir!r} has a live writer in this "
-                    f"process (thread {holder}); concurrent phase-B commits "
-                    "would interleave — serialize writers onto one thread"
+                    f"process (thread {holder}); concurrent writers would "
+                    "interleave — serialize writers onto one thread"
                 )
             # reserve in-process BEFORE touching the filesystem so a second
             # thread can't race between our link and the _held insert
@@ -518,9 +534,9 @@ class _writer_lock:
                 if pid and _pid_alive(pid):
                     raise WriterConflict(
                         f"index at {self.index_dir!r} has a live writer "
-                        f"(pid {pid}, {self.path}); concurrent phase-B "
-                        "commits would interleave — wait for it or remove "
-                        "the lock if it is stale"
+                        f"(pid {pid}, {self.path}); concurrent writers "
+                        "would interleave — wait for it or remove the lock "
+                        "if it is stale"
                     ) from None
                 # dead owner: break the stale lock and retake it; losing
                 # the retake race to another breaker is a conflict
@@ -562,7 +578,7 @@ def _pid_alive(pid: int) -> bool:
 
 
 def _single_writer(fn):
-    """Decorator: run the phase-B unit under the index's writer lock.
+    """Decorator: run the write call under the index's writer lock.
     Expects ``(spark, index_dir, ...)`` signatures."""
     import functools
 
@@ -629,7 +645,9 @@ def build_index(
     The input is staged as given: no url anti-join against earlier chunks,
     which would re-read every earlier chunk per chunk. ``resume=True`` skips
     the chunks whose lineage row committed — after a crash mid-build, rerun
-    with it to finish (the north-rule checkpoint-resume path).
+    with it to finish (the north-rule checkpoint-resume path). Staging and
+    the merge run under the writer lock, so a second writer is refused
+    (WriterConflict) before it stages anything.
     """
     t0 = time.time()
     by_files = n_chunks > 1
@@ -646,34 +664,31 @@ def build_index(
             docs = spark.read.parquet(docs)
         base = _prepare_base(docs, lang)
 
-    done_chunks: set[int] = set()
-    if resume:
-        done_chunks = staged_chunks(spark, index_dir)
-
     # A pre-existing _SUCCESS.json from an earlier completed build stays in
     # place while chunks are (re)staged: it describes the COMMITTED tables,
     # which staging never touches, so concurrent queries keep serving the old
     # snapshot until merge_index commits the new one (the Iceberg reader
     # story). Resume correctness never consults the marker (staged_chunks
     # reads lineage).
+    with _writer_lock(index_dir):
+        done_chunks = staged_chunks(spark, index_dir) if resume else set()
+        processed = 0
+        for chunk in range(n_chunks):
+            if chunk in done_chunks:
+                continue
+            if by_files:
+                # listing-level slice: this pass reads ONLY these files
+                chunk_paths = files[chunk::n_chunks] or [files[0]]
+                cdf = _prepare_base(spark.read.parquet(*chunk_paths), lang)
+                if not files[chunk::n_chunks]:
+                    cdf = cdf.limit(0)  # more chunks than files: empty slice
+                n_files = len(files[chunk::n_chunks])
+            else:
+                cdf, n_files = base, -1
+            _stage_chunk(spark, cdf, index_dir, chunk, n_files=n_files)
+            processed += 1
 
-    processed = 0
-    for chunk in range(n_chunks):
-        if chunk in done_chunks:
-            continue
-        if by_files:
-            # listing-level slice: this pass reads ONLY these files
-            chunk_paths = files[chunk::n_chunks] or [files[0]]
-            cdf = _prepare_base(spark.read.parquet(*chunk_paths), lang)
-            if not files[chunk::n_chunks]:
-                cdf = cdf.limit(0)  # more chunks than files: empty slice
-            n_files = len(files[chunk::n_chunks])
-        else:
-            cdf, n_files = base, -1
-        _stage_chunk(spark, cdf, index_dir, chunk, n_files=n_files)
-        processed += 1
-
-    result = merge_index(spark, index_dir)
+        result = merge_index(spark, index_dir)
     result.chunks_processed = processed
     result.chunks_skipped = len(done_chunks)
     result.wall_s = time.time() - t0
@@ -695,16 +710,17 @@ def update_index(
     ``_stage_unseen``, the url anti-join against the lineage-committed staged
     chunks that ingest_stream shares, so re-sending the same batch adds no
     docs — its empty chunk is only recorded as covered — and a deleted url
-    stays deleted.
+    stays deleted. The whole call holds the writer lock, so a second writer
+    is refused (WriterConflict) before it stages anything.
 
-    The delta is packed into a new doc-disjoint segment (postings/docs/
-    lexicon under ``seg=N``); existing segment files are never read or
-    rewritten, so phase-B wall time is proportional to the DELTA, not the
-    corpus. This is the plain-parquet realization of an Iceberg snapshot
-    append / ``MERGE INTO`` over term-keyed partitions. Query-time
-    exactness: segments are doc-disjoint, per-(segment, slice) WAND local
-    top-k composes exactly, and idf/avgdl are merged globals (never baked
-    into posting bytes — the block bounds are avgdl-free, see
+    The pending chunks are packed into one new doc-disjoint segment
+    (postings/docs/lexicon under a fresh ``seg=N``); existing segment files
+    are never read or rewritten, so phase-B wall time is proportional to
+    the DELTA, not the corpus. This is the plain-parquet realization of an
+    Iceberg snapshot append / ``MERGE INTO`` over term-keyed partitions.
+    Query-time exactness: segments are doc-disjoint, per-(segment, slice)
+    WAND local top-k composes exactly, and idf/avgdl are merged globals
+    (never baked into posting bytes — the block bounds are avgdl-free, see
     POSTINGS_SCHEMA). With no committed base the staged chunks are
     re-merged instead. A caller that wants a full compaction — one segment,
     byte-identical to a from-scratch build — calls ``merge_index``.
@@ -721,12 +737,10 @@ def update_index(
     # the in-flight chunk/segment is invisible and queries keep serving the
     # old snapshot until _commit publishes the new one (same reader story
     # as ingest_stream and merge_index).
-    chunk = 1 + max(
-        (c for c in staged_chunks(spark, index_dir) if c < STREAM_CHUNK_BASE),
-        default=-1,
-    )
-    _stage_unseen(spark, new_docs, index_dir, chunk, lang)
-    result = _publish_pending(spark, index_dir, max_segments=max_segments)
+    os.makedirs(index_dir, exist_ok=True)
+    with _writer_lock(index_dir):
+        _stage_unseen(spark, new_docs, index_dir, lang)
+        result = _publish_pending(spark, index_dir, max_segments=max_segments)
     result.wall_s = time.time() - t0
     return result
 
@@ -738,16 +752,18 @@ def _publish_pending(
     max_segments: int,
 ) -> BuildResult:
     """Publish every staged chunk the commit record does not cover yet — the
-    one phase-B step of update_index and ingest_stream.
+    one phase-B step of update_index and ingest_stream, run under their
+    writer lock.
 
     With no committed base (a fresh dir, a build that crashed before its
     first commit, or an index of another format) all staged chunks are
-    merged into one compacted segment. Otherwise each pending chunk is
-    appended as its own segment, then the lifecycle policy (maybe_compact)
-    runs. Reconciling ALL pending chunks, not only the one a caller just
-    staged, makes a crashed update retryable: the retry's
-    _stage_unseen finds every url in the orphan chunk the crash left and
-    stages an empty chunk, and the orphan chunk must still be packed.
+    merged into one compacted segment (``merge_index``). Otherwise ALL
+    pending chunks are packed into one new segment (``_write_segment``),
+    then the lifecycle policy (maybe_compact) runs. Reconciling every
+    pending chunk, not only the one a caller just staged, makes a crashed
+    update retryable: the retry's _stage_unseen finds every url in the
+    chunk the crash left and stages an empty chunk, and the crashed chunk
+    must still be packed.
 
     The result's ``chunks_processed`` counts the chunks this call newly
     covers; ``chunks_skipped`` the staged chunks already covered before."""
@@ -766,8 +782,7 @@ def _publish_pending(
             chunks_skipped=0,
         )
     else:
-        for c in pending:
-            result = append_segment(spark, index_dir, c)
+        result = _write_segment(spark, index_dir, pending, base)
         result = maybe_compact(spark, index_dir, max_segments=max_segments) or result
     result.chunks_processed = len(pending)
     result.chunks_skipped = len(staged) - len(pending)
@@ -885,10 +900,9 @@ def delete_docs(
 
     Scope: only docs in the COMMITTED snapshot (staged chunks listed in the
     commit record's covered_chunks) are deletable — a url sitting in a
-    staged-but-unpublished chunk (the window between _stage_chunk and
-    append_segment, or one a crashed writer left behind) was never added to
-    the committed n_docs, so subtracting it would corrupt n_docs/idf for the
-    live corpus. Delete it after its chunk commits.
+    staged-but-unpublished chunk (one a crashed writer left behind) was
+    never added to the committed n_docs, so subtracting it would corrupt
+    n_docs/idf for the live corpus. Delete it after its chunk commits.
 
     Crash safety: the _SUCCESS.json rename (``_commit``) is the single
     commit point. The delta segment is written to a fresh id of the delete
@@ -927,9 +941,7 @@ def delete_docs(
         ).distinct()
 
     # committed corpus only — see "Scope" in the docstring
-    staged = spark.read.parquet(os.path.join(index_dir, "staged")).filter(
-        F.col("chunk").isin(old["covered_chunks"])
-    )
+    staged = _read_staged(spark, index_dir, old["covered_chunks"])
     victims = staged.join(F.broadcast(url_df), "url", "semi")
     tomb = _tombstone_df(spark, index_dir, old["tombstone_files"])
     if tomb is not None:
@@ -985,16 +997,12 @@ def delete_docs(
 
     # tombstone file: driver-written commit metadata, exactly like lineage
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    tomb_dir = os.path.join(index_dir, "tombstones")
-    os.makedirs(tomb_dir, exist_ok=True)
-    fname = f"tomb-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(tomb_dir, f"_tmp-{uuid.uuid4().hex}.parquet")
-    pq.write_table(
-        pa.table({"doc_id": pa.array(doc_ids, type=pa.int64())}), tmp
+    fname = _write_commit_file(
+        os.path.join(index_dir, "tombstones"),
+        "tomb",
+        pa.table({"doc_id": pa.array(doc_ids, type=pa.int64())}),
     )
-    os.replace(tmp, os.path.join(tomb_dir, fname))
 
     n_docs = int(old["n_docs"]) - n_del
     avgdl = (
@@ -1018,84 +1026,6 @@ def delete_docs(
         avgdl=avgdl,
         wall_s=time.time() - t0,
         tombstone_file=fname,
-    )
-
-
-@_single_writer
-def append_segment(
-    spark: SparkSession,
-    index_dir: str,
-    chunk: int,
-) -> BuildResult:
-    """Pack ALREADY-STAGED chunk N into index segment N and merge the global
-    stats incrementally — the delta-proportional phase-B unit shared by
-    ``update_index`` and the streaming drain. Requires a committed base;
-    idempotent: an already-covered chunk commits nothing, and an empty chunk
-    commits only its coverage. The chunk is packed as staged: _stage_unseen
-    already dropped every url the index holds, tombstoned ones included."""
-    t0 = time.time()
-    timings: dict[str, float] = {}
-    old = check_index_format(index_dir)
-
-    def _unchanged() -> BuildResult:
-        return BuildResult(
-            index_dir=index_dir,
-            n_docs=int(old["n_docs"]),
-            avgdl=float(old["avgdl"]),
-            wall_s=time.time() - t0,
-            chunks_processed=0,
-            chunks_skipped=0,
-        )
-
-    if chunk in old["covered_chunks"]:
-        return _unchanged()  # replayed drain / already-compacted chunk
-    staged_k = spark.read.parquet(
-        os.path.join(index_dir, "staged", f"chunk={chunk}")
-    )
-    srow = staged_k.agg(
-        F.count("*").alias("n"), F.sum("doclen").alias("dl_sum")
-    ).collect()[0]
-    n_delta, dl_delta = int(srow.n), float(srow.dl_sum or 0.0)
-    if n_delta == 0:
-        # idempotent re-send (everything anti-joined away): nothing to
-        # pack, but the chunk is covered — committing that keeps later
-        # updates and drains from re-reading it
-        _commit(
-            index_dir,
-            n_docs=old["n_docs"],
-            avgdl=old["avgdl"],
-            segments=old["segments"],
-            covered_chunks=old["covered_chunks"] + [chunk],
-            tombstone_files=old["tombstone_files"],
-        )
-        return _unchanged()
-    seg_stats = _build_segment(
-        spark, staged_k, index_dir, chunk,
-        n_docs=n_delta, dl_sum=dl_delta, timings=timings,
-    )
-
-    # merge global stats incrementally (exact: avgdl is a weighted mean)
-    n_docs = int(old["n_docs"]) + n_delta
-    avgdl = (
-        (old["n_docs"] * old["avgdl"] + dl_delta) / n_docs if n_docs else 0.0
-    )
-    _commit(
-        index_dir,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        segments=old["segments"] + [chunk],
-        covered_chunks=old["covered_chunks"] + [chunk],
-        tombstone_files=old["tombstone_files"],
-    )
-    wall = time.time() - t0
-    _write_build_metrics(index_dir, seg_stats, timings, wall)
-    return BuildResult(
-        index_dir=index_dir,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        wall_s=wall,
-        chunks_processed=1,
-        chunks_skipped=0,
     )
 
 
@@ -1307,11 +1237,11 @@ def _commit(
 
     - ``segments``: the committed list plus whatever this commit adds —
       never a directory listing, so orphan dirs of a crashed writer stay
-      unpublished. Lexicon-only delete-delta segments are the ids
-      >= DELETE_SEG_BASE.
-    - ``covered_chunks``: the staged chunks the segments contain (a
-      compaction folds MANY chunks into one segment, so `staged minus
-      segments` alone would wrongly re-append compacted chunks).
+      unpublished. Data segments (``_write_segment``) are the ids below
+      DELETE_SEG_BASE, lexicon-only delete-delta segments the ids above.
+    - ``covered_chunks``: the staged chunks the segments contain. A segment
+      id names no chunk: a compaction, and an append of several pending
+      chunks, pack many chunks into one segment.
     - ``tombstone_files``: this snapshot's delete files under tombstones/
       (Iceberg positional-delete analog); readers mask them, merges exclude
       them.
@@ -1378,61 +1308,86 @@ def merge_index(
     spark: SparkSession,
     index_dir: str,
 ) -> BuildResult:
-    """Phase B COMPACTION: global stats, lexicon, postings from ALL staged
-    chunks into one segment under a fresh id of the compaction range,
-    published by the same single ``_commit`` as every other writer — the
-    analog of Iceberg's rewrite action, which is one more snapshot. The
-    replaced snapshot's segments stay on disk until the next commit, so a
-    query running on it finishes; a crash before the commit leaves it
-    whole, plus an orphan segment dir that the next commit removes.
-    Incremental updates instead append a delta segment (``update_index``)."""
+    """Phase B COMPACTION: every lineage-committed staged chunk, minus the
+    tombstoned docs, packed into one segment that replaces all segments
+    (``_write_segment`` with no base) — the analog of Iceberg's rewrite
+    action, which is one more snapshot. The replaced snapshot's segments
+    stay on disk until the next commit, so a query running on it finishes;
+    a crash before the commit leaves it whole, plus an orphan segment dir
+    that the next commit removes. Incremental updates instead add a delta
+    segment (``update_index``)."""
+    return _write_segment(spark, index_dir, sorted(staged_chunks(spark, index_dir)))
+
+
+def _write_segment(
+    spark: SparkSession,
+    index_dir: str,
+    chunks: list[int],
+    base: dict | None = None,
+) -> BuildResult:
+    """The one segment writer: pack the staged ``chunks`` into ONE segment
+    under a fresh data-segment id and publish it with ``_commit``.
+
+    - ``base`` None (compaction, ``merge_index``): ``chunks`` are every
+      lineage-committed chunk; tombstoned docs are left out (physical
+      reclaim) and the new segment replaces all segments. An empty
+      compaction still writes its segment.
+    - ``base`` the committed record (append, ``_publish_pending``):
+      ``chunks`` are its pending chunks, packed as they were staged
+      (_stage_unseen already dropped every url the index holds, tombstoned
+      ones included), and the segment is added next to the base's. The
+      global stats merge exactly (avgdl is a weighted mean). Chunks that are
+      all empty commit only their coverage."""
     t0 = time.time()
     timings: dict[str, float] = {}
-    tp = time.time()
-    # lineage-committed chunks only: a chunk dir a crash left before its
-    # lineage row is not covered, and its retry re-stages those urls
-    all_chunks = staged_chunks(spark, index_dir)
-    staged = spark.read.parquet(os.path.join(index_dir, "staged")).filter(
-        F.col("chunk").isin(sorted(all_chunks))
-    )
-    # physical reclaim of deletes: tombstoned docs are excluded from the
-    # rebuilt segment (posting bytes shrink), but the tombstone files carry
-    # forward — the immutable staged chunks still hold the deleted rows, so
-    # every future rebuild must keep filtering (see delete_docs). Read from
-    # the raw record, so the deletes of an index of another format carry
-    # into its rebuild too.
-    tomb_files = list(read_commit(index_dir).get("tombstone_files", []))
-    tomb = _tombstone_df(spark, index_dir, tomb_files)
-    if tomb is not None:
-        staged = staged.join(F.broadcast(tomb), "doc_id", "left_anti")
+    staged = _read_staged(spark, index_dir, chunks)
+    if base is None:
+        # physical reclaim of deletes: the tombstone files carry forward —
+        # the immutable staged chunks still hold the deleted rows, so every
+        # future rebuild must keep filtering (see delete_docs). Read from
+        # the raw record, so the deletes of an index of another format carry
+        # into its rebuild too.
+        tomb_files = list(read_commit(index_dir).get("tombstone_files", []))
+        tomb = _tombstone_df(spark, index_dir, tomb_files)
+        if tomb is not None:
+            staged = staged.join(F.broadcast(tomb), "doc_id", "left_anti")
+        base_n, base_dl, segments, covered = 0, 0.0, [], []
+    else:
+        tomb_files = base["tombstone_files"]
+        base_n = int(base["n_docs"])
+        base_dl = base_n * float(base["avgdl"])
+        segments, covered = base["segments"], base["covered_chunks"]
 
-    stats_row = staged.agg(
-        F.count("*").alias("n_docs"), F.avg("doclen").alias("avgdl")
+    srow = staged.agg(
+        F.count("*").alias("n"), F.sum("doclen").alias("dl_sum")
     ).collect()[0]
-    n_docs, avgdl = int(stats_row.n_docs), float(stats_row.avgdl or 0.0)
-    timings["stats"] = time.time() - tp
+    n_seg, dl_seg = int(srow.n), float(srow.dl_sum or 0.0)
+    timings["stats"] = time.time() - t0
+    n_docs = base_n + n_seg
+    avgdl = (base_dl + dl_seg) / n_docs if n_docs else 0.0
 
-    seg = _next_seg_id(index_dir, COMPACT_SEG_BASE, DELETE_SEG_BASE)
-    seg_stats = _build_segment(
-        spark, staged, index_dir, seg,
-        n_docs=n_docs, dl_sum=n_docs * avgdl, timings=timings,
-    )
-    # compaction folds the deletes physically: the rebuilt lexicon is
-    # computed over the survivors, so no delta segment remains live
+    seg_stats = None
+    if n_seg or base is None:
+        seg = _next_seg_id(index_dir, 0, DELETE_SEG_BASE)
+        seg_stats = _build_segment(
+            spark, staged, index_dir, seg,
+            n_docs=n_seg, dl_sum=dl_seg, timings=timings,
+        )
+        segments = segments + [seg]
     _commit(
         index_dir,
         n_docs=n_docs,
         avgdl=avgdl,
-        segments=[seg],
-        covered_chunks=all_chunks,
+        segments=segments,
+        covered_chunks=set(covered) | set(chunks),
         tombstone_files=tomb_files,
     )
     wall = time.time() - t0
-    # a full compaction leaves exactly one segment, so the segment's observed
-    # lexicon row count IS the global term count — no read-back job
-    _write_build_metrics(
-        index_dir, seg_stats, timings, wall, n_terms=seg_stats["n_terms"]
-    )
+    if seg_stats is not None:
+        # a compaction leaves exactly one segment, so the segment's observed
+        # lexicon row count IS the global term count — no read-back job
+        extra = {"n_terms": seg_stats["n_terms"]} if base is None else {}
+        _write_build_metrics(index_dir, seg_stats, timings, wall, **extra)
     return BuildResult(
         index_dir=index_dir,
         n_docs=n_docs,

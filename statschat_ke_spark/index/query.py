@@ -117,7 +117,7 @@ def _prune_to_snapshot(df: DataFrame, marker: dict) -> DataFrame:
     ``seg``) to the segments the commit record lists.
 
     A frame listed from a whole table dir holds every ``seg=N`` on disk, so
-    WITHOUT this filter a reader racing a concurrent ``append_segment`` would
+    WITHOUT this filter a reader racing a concurrent segment append would
     pick up a fully written ``seg=N`` whose commit (the _SUCCESS.json rename)
     hasn't landed — scoring uncommitted docs under the old global stats.
     ``seg`` is a partition column, so the isin() prunes at planning time (no

@@ -8,22 +8,23 @@ implements that mapping:
 - ``readStream`` over a parquet landing directory (new files = new docs)
 - ``foreachBatch``: each micro-batch runs the SAME phase-A staging as
   update_index (``_stage_unseen``: extract → drop urls already staged →
-  tokenize pandas UDF → staged chunk + lineage row), so a re-crawled or
-  deleted url is not staged again, and batch and streaming ingest share one
-  code path and one checkpoint story
-- micro-batch chunk ids live in a reserved namespace (STREAM_CHUNK_BASE +
-  epoch id, disjoint from update_index's batch ids) and stage with
-  overwrite, making batch REPLAY after a crash idempotent (the streaming
-  checkpoint gives at-least-once foreachBatch; overwrite-by-epoch upgrades
-  it to effectively-once staging)
+  tokenize pandas UDF → staged chunk + lineage row, under the next chunk
+  id), so a re-crawled or deleted url is not staged again, and batch and
+  streaming ingest share one code path and one checkpoint story. The
+  streaming checkpoint gives at-least-once foreachBatch; a replayed epoch
+  finds its urls in a committed chunk and stages an empty one, which makes
+  staging effectively-once
 - after the AvailableNow drain, the same phase-B publish step as
-  update_index (``_publish_pending``) appends each drained chunk as a segment
-  — or, with no committed base, merges all staged chunks, batch and stream
-  chunks alike — and publishes it with the one commit every writer uses
+  update_index (``_publish_pending``) packs all drained chunks into one
+  segment — or, with no committed base, merges all staged chunks, batch
+  and stream chunks alike — and publishes it with the one commit every
+  writer uses
+- the whole call holds the index's writer lock, so a concurrent update,
+  delete or drain is refused before it stages anything
 
 At web scale the same topology runs with a real trigger interval and an
 Iceberg ``MERGE INTO`` in place of the segment commit; the landing-zone
-pattern, checkpoint dir, and epoch-idempotent staging carry over unchanged.
+pattern, checkpoint dir, and url-keyed staging carry over unchanged.
 """
 
 from __future__ import annotations
@@ -36,10 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from statschat_ke_spark.corpus import CONTRACT_SCHEMA
 from statschat_ke_spark.index.build import (
     DEFAULT_MAX_SEGMENTS,
-    STREAM_CHUNK_BASE,
     BuildResult,
     _publish_pending,
     _stage_unseen,
+    _writer_lock,
 )
 
 
@@ -59,34 +60,33 @@ def ingest_stream(
     (``_stage_unseen``) update_index uses, so a re-landed url, live or
     deleted, adds nothing.
 
-    Every drained micro-batch chunk is appended as its own doc-disjoint
-    index segment (``append_segment``), so continuous ingest cost stays ∝
-    new data — the shape a real trigger interval needs; past
-    ``max_segments`` the index is folded into one compacted segment
-    (``maybe_compact``). Falls back to full compaction when no committed
-    snapshot exists (a fresh dir). Either way the publish step
-    is ``_publish_pending``, which update_index shares; a caller that wants
-    a full re-merge calls ``merge_index`` after the drain.
+    The chunks of one drain are packed into one doc-disjoint index segment,
+    so continuous ingest cost stays ∝ new data — the shape a real trigger
+    interval needs; past ``max_segments`` the index is folded into one
+    compacted segment (``maybe_compact``). Falls back to full compaction
+    when no committed snapshot exists (a fresh dir). Either way the publish
+    step is ``_publish_pending``, which update_index shares; a caller that
+    wants a full re-merge calls ``merge_index`` after the drain. The whole
+    drain holds the writer lock, so a second writer is refused
+    (WriterConflict) before it stages anything.
     """
     t0 = time.time()
     os.makedirs(index_dir, exist_ok=True)
     stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def stage_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # deterministic chunk id per epoch + overwrite staging ⇒ idempotent
-        # under checkpoint replay
-        _stage_unseen(
-            spark, batch_df, index_dir, STREAM_CHUNK_BASE + int(epoch_id), lang
+        _stage_unseen(spark, batch_df, index_dir, lang)
+
+    with _writer_lock(index_dir):
+        q = (
+            stream.writeStream.foreachBatch(stage_batch)
+            .option(
+                "checkpointLocation", os.path.join(index_dir, "_stream_checkpoint")
+            )
+            .trigger(availableNow=True)
+            .start()
         )
-
-    q = (
-        stream.writeStream.foreachBatch(stage_batch)
-        .option("checkpointLocation", os.path.join(index_dir, "_stream_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    result = _publish_pending(spark, index_dir, max_segments=max_segments)
+        q.awaitTermination()
+        result = _publish_pending(spark, index_dir, max_segments=max_segments)
     result.wall_s = time.time() - t0
     return result

@@ -15,7 +15,6 @@ import pytest
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.index.build import (
-    COMPACT_SEG_BASE,
     DELETE_SEG_BASE,
     build_index,
     merge_index,
@@ -193,9 +192,11 @@ def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
     assert res.n_docs == spark.read.parquet(os.path.join(d_ss, "docs")).count()
     # the built segment untouched: same files, same mtimes (nothing rewritten)
     assert _seg_files(d, "postings", built) == before
-    # a new segment, named after the delta's chunk, is committed next to it
-    assert check_index_format(d)["segments"] == [1, built]
-    assert os.path.isdir(os.path.join(d, "postings", "seg=1"))
+    # one new segment, with an id above the built one, is committed next to it
+    segs = check_index_format(d)["segments"]
+    [new] = [s for s in segs if s != built]
+    assert segs == [built, new] and new > built
+    assert os.path.isdir(os.path.join(d, "postings", f"seg={new}"))
 
     # merged lexicon (sum over segments) equals the single-shot lexicon
     def agg_lex(path):
@@ -221,7 +222,8 @@ def test_update_segment_strategy(spark, docs500, single_shot, tmp_path_factory):
     # idempotency: re-sending the delta appends nothing
     res2 = update_index(spark, delta, d)
     assert res2.n_docs == res.n_docs
-    assert not os.path.isdir(os.path.join(d, "postings", "seg=2"))
+    assert check_index_format(d)["segments"] == segs
+    assert _listed(d, "postings") == segs
 
 
 @pytest.fixture(scope="module")
@@ -285,18 +287,27 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
 
     d = str(tmp_path_factory.mktemp("lc") / "idx")
     build_index(spark, df_of(0, 200), d)
-    assert _data_segments(d) == [COMPACT_SEG_BASE]
+    history = [_data_segments(d)]
+    assert len(history[0]) == 1
 
     compactions = []
     # appends → segment counts 2, 3, 4(>3: compact to 1), 2
     for a, b in [(200, 280), (280, 360), (360, 430), (430, 500)]:
         res = update_index(spark, df_of(a, b), d, max_segments=3)
         compactions.append(bool(res.compacted))
+        history.append(_data_segments(d))
     assert compactions == [False, False, True, False]
-    # post-compaction state: the next compaction-range id plus exactly the
-    # one post-compaction append (appended segments are named by chunk id;
-    # the 5th slice staged chunk 4)
-    assert _data_segments(d) == [4, COMPACT_SEG_BASE + 1]
+    # each call commits one new data segment with an id above every earlier
+    # one: an append adds it, the compaction replaces all segments with it
+    earlier = list(history[0])
+    for prev, cur, compacted in zip(history, history[1:], compactions):
+        [new] = [s for s in cur if s not in prev]
+        assert new > max(earlier)
+        assert cur == ([new] if compacted else prev + [new])
+        earlier.append(new)
+    # post-compaction state: the compacted segment plus exactly the one
+    # post-compaction append
+    assert len(history[-1]) == 2
 
     # the compacted+appended index answers identically to the single-shot
     # build over the same 500 docs (ranks AND scores); n_docs matches the
@@ -310,9 +321,10 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
 
 
 def test_update_segment_chunk_accounting(spark, tmp_path_factory):
-    """chunks_processed counts append_segment calls that actually packed a
-    segment; chunks_skipped counts previously-staged chunks NOT repacked —
-    disjoint, no double-counting (ADVICE r3)."""
+    """chunks_processed counts the staged chunks the call newly covers
+    (packed into its segment, or an empty chunk recorded as covered);
+    chunks_skipped counts previously-staged chunks NOT repacked — disjoint,
+    no double-counting (ADVICE r3)."""
     pdf = generate_documents(300)
     base = spark.createDataFrame(pdf.iloc[:150], schema=DOCUMENTS_SPARK_SCHEMA).select(
         "url", "warc_ts", "html", "text", "lang"
@@ -390,18 +402,21 @@ def test_crashed_compaction_then_segment_update(
     ref = str(tmp_path_factory.mktemp("ccrref") / "idx")
     build_index(spark, base, d)
     committed = check_index_format(d)
+    [built] = committed["segments"]
     with monkeypatch.context() as m:
         m.setattr(build_mod, crash_at, crash)
         with pytest.raises(RuntimeError, match="injected crash"):
             build_mod.merge_index(spark, d)
     assert check_index_format(d) == committed
-    orphan = os.path.join(d, "postings", f"seg={COMPACT_SEG_BASE + 1}")
-    assert os.path.isdir(orphan) == (crash_at == "_commit")
+    orphans = [s for s in _listed(d, "postings") if s != built]
+    assert len(orphans) == (crash_at == "_commit")
 
     res = update_index(spark, delta, d)
-    assert check_index_format(d)["segments"] == [1, COMPACT_SEG_BASE]
+    segs = check_index_format(d)["segments"]
+    [new] = [s for s in segs if s != built]
+    assert segs == [built, new] and new > max([built] + orphans)
     for table in ("postings", "docs", "lexicon"):
-        assert _listed(d, table) == [1, COMPACT_SEG_BASE], table
+        assert _listed(d, table) == segs, table
     ref_res = build_index(spark, base.unionByName(delta), ref)
     assert res.n_docs == ref_res.n_docs
     for q in ["what was inflation in december 2023", "maize production county report"]:
@@ -737,6 +752,7 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory, writer
     if writer == "merge_index":
         update_index(spark, delta, d)
         assert len(check_index_format(d)["segments"]) == 2
+    segs_before = check_index_format(d)["segments"]
     q = "county report statistics survey"
 
     def snap(df):
@@ -771,7 +787,8 @@ def test_concurrent_reader_during_segment_update(spark, tmp_path_factory, writer
     bad = [o for o in observed if o not in (before, after)]
     assert not bad, f"reader saw a torn snapshot: {bad[0]}"
     if writer == "merge_index":
-        assert check_index_format(d)["segments"] == [COMPACT_SEG_BASE + 1]
+        [compacted] = check_index_format(d)["segments"]
+        assert compacted > max(segs_before)
         assert after == before  # compaction changes no result
     else:
         assert after != before  # the delta actually changed the result set
@@ -791,15 +808,17 @@ def test_commit_removes_superseded_segments(spark, tmp_path_factory):
     build_index(spark, _docs(spark, pdf.iloc[:150]), d)
     update_index(spark, _docs(spark, pdf.iloc[150:230]), d)
     replaced = check_index_format(d)["segments"]
-    assert replaced == [1, COMPACT_SEG_BASE]
+    assert len(replaced) == 2
     merge_index(spark, d)
-    assert check_index_format(d)["segments"] == [COMPACT_SEG_BASE + 1]
+    [compacted] = check_index_format(d)["segments"]
+    assert compacted > max(replaced)
     for table in ("postings", "docs", "lexicon"):
-        assert _listed(d, table) == [1, COMPACT_SEG_BASE, COMPACT_SEG_BASE + 1]
+        assert _listed(d, table) == replaced + [compacted]
 
     update_index(spark, _docs(spark, pdf.iloc[230:]), d)
     committed = check_index_format(d)["segments"]
-    assert committed == [2, COMPACT_SEG_BASE + 1]
+    [appended] = [s for s in committed if s != compacted]
+    assert committed == [compacted, appended] and appended > compacted
     for table in ("postings", "docs", "lexicon"):
         assert _listed(d, table) == committed, table
 
@@ -920,3 +939,124 @@ def test_concurrent_snapshot_opens(spark, tmp_path_factory):
     assert [k for k in Q._SNAPSHOTS if k[0] == d] == [
         (d, version, id(spark.sparkContext))
     ]
+
+
+QUERIES = ["what was inflation in december 2023", "maize production county report"]
+
+
+def _assert_same_topk(spark, d, ref):
+    import numpy as np
+
+    for q in QUERIES:
+        a = topk(spark, d, q, 10).toPandas()
+        b = topk(spark, ref, q, 10).toPandas()
+        assert len(a) > 0, q
+        assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all(), q
+        assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), q
+
+
+def _tree(d, sub):
+    """(path, size, mtime) of every file under ``d/sub``."""
+    return sorted(
+        (p, os.stat(p).st_size, os.stat(p).st_mtime_ns)
+        for top, _, files in os.walk(os.path.join(d, sub))
+        for p in (os.path.join(top, f) for f in files)
+    )
+
+
+@pytest.fixture(scope="module")
+def lock_docs(spark, tmp_path_factory):
+    """Base and delta docs, and a fresh build over both."""
+    pdf = generate_documents(300, seed=41)
+    base, delta = _docs(spark, pdf.iloc[:200]), _docs(spark, pdf.iloc[200:])
+    ref = str(tmp_path_factory.mktemp("lockref") / "idx")
+    build_index(spark, base.unionByName(delta), ref)
+    return base, delta, ref
+
+
+@pytest.mark.parametrize("writer", ["build_index", "update_index", "ingest_stream"])
+def test_writer_refused_before_staging(spark, lock_docs, tmp_path_factory, writer):
+    """Every write call holds the writer lock from its first read to its
+    commit: while another thread holds it, build_index, update_index and
+    ingest_stream raise WriterConflict before they stage anything (staged/
+    and _lineage/ unchanged). Retried after the release, the call equals a
+    fresh build."""
+    import threading
+
+    from statschat_ke_spark.index.build import WriterConflict, _writer_lock
+    from statschat_ke_spark.streaming.ingest import ingest_stream
+
+    base, delta, ref = lock_docs
+    root = tmp_path_factory.mktemp("held")
+    d = str(root / "idx")
+    build_index(spark, base, d)
+    if writer == "build_index":
+        def call():
+            return build_index(spark, base.unionByName(delta), d)
+    elif writer == "update_index":
+        def call():
+            return update_index(spark, delta, d)
+    else:
+        landing = str(root / "landing")
+        delta.write.parquet(landing)
+
+        def call():
+            return ingest_stream(spark, landing, d)
+    before = [_tree(d, sub) for sub in ("staged", "_lineage")]
+
+    entered, release = threading.Event(), threading.Event()
+
+    def hold():
+        with _writer_lock(d):
+            entered.set()
+            release.wait(120)
+
+    t = threading.Thread(target=hold)
+    t.start()
+    try:
+        assert entered.wait(60)
+        with pytest.raises(WriterConflict):
+            call()
+        assert [_tree(d, sub) for sub in ("staged", "_lineage")] == before
+    finally:
+        release.set()
+        t.join(60)
+
+    res = call()
+    assert res.n_docs == check_index_format(ref)["n_docs"]
+    _assert_same_topk(spark, d, ref)
+
+
+def test_pending_chunks_publish_as_one_segment(spark, tmp_path_factory, monkeypatch):
+    """An update that crashes while packing its segment leaves its chunk
+    staged and lineage-committed but not covered. The next update packs
+    BOTH pending chunks into one new data segment, with an id above every
+    earlier one, covers both, and equals a fresh build of all the docs."""
+    import statschat_ke_spark.index.build as build_mod
+
+    def crash(*_a, **_kw):
+        raise RuntimeError("injected crash")
+
+    pdf = generate_documents(400, seed=29)
+    base = _docs(spark, pdf.iloc[:250])
+    first, second = _docs(spark, pdf.iloc[250:330]), _docs(spark, pdf.iloc[330:])
+    d = str(tmp_path_factory.mktemp("pend") / "idx")
+    ref = str(tmp_path_factory.mktemp("pendref") / "idx")
+    build_index(spark, base, d)
+    before = check_index_format(d)
+    with monkeypatch.context() as m:
+        m.setattr(build_mod, "_build_segment", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            update_index(spark, first, d)
+    assert check_index_format(d) == before
+
+    res = update_index(spark, second, d)
+    after = check_index_format(d)
+    [new] = [s for s in after["segments"] if s not in before["segments"]]
+    assert after["segments"] == before["segments"] + [new]
+    assert new > max(before["segments"])
+    assert len(after["covered_chunks"]) == len(before["covered_chunks"]) + 2
+    assert res.chunks_processed == 2
+    ref_res = build_index(spark, base.unionByName(first).unionByName(second), ref)
+    assert res.n_docs == ref_res.n_docs
+    _assert_same_topk(spark, d, ref)

@@ -18,7 +18,6 @@ import pytest
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.index.build import (
-    COMPACT_SEG_BASE,
     DELETE_SEG_BASE,
     build_index,
     delete_docs,
@@ -386,21 +385,28 @@ def test_crashed_compaction_keeps_deletes(
     )[::7]
     delete_docs(spark, d1, victims)
     build_index(spark, docs.filter(~docs.url.isin(victims)), d2)
+    [built] = [
+        s for s in check_index_format(d1)["segments"] if s < DELETE_SEG_BASE
+    ]
 
     with monkeypatch.context() as m:
         m.setattr(build_mod, crash_at, _crash)
         with pytest.raises(RuntimeError, match="injected crash"):
             merge_index(spark, d1)
-    orphan = os.path.join(d1, "postings", f"seg={COMPACT_SEG_BASE + 1}")
-    assert os.path.isdir(orphan) == (crash_at == "_commit")
+    postings = os.path.join(d1, "postings")
+    orphans = [
+        int(x.split("=", 1)[1]) for x in os.listdir(postings) if x != f"seg={built}"
+    ]
+    assert len(orphans) == (crash_at == "_commit")
     _assert_same_topk(spark, d1, d2)
     res = delete_docs(spark, d1, victims[:1])
     assert res.n_deleted == 0 and res.tombstone_file is None
 
     merge_index(spark, d1)
     [new] = check_index_format(d1)["segments"]
+    assert new > max([built] + orphans)
     # the retry's commit removed the orphan (the replaced segment stays)
-    assert sorted(os.listdir(os.path.dirname(orphan))) == sorted(
-        f"seg={s}" for s in {COMPACT_SEG_BASE, new}
+    assert sorted(os.listdir(postings)) == sorted(
+        f"seg={s}" for s in {built, new}
     )
     _assert_same_topk(spark, d1, d2)

@@ -102,8 +102,10 @@ def test_stats_json_interface(spark, index_dir, appended):
     row count is the segment's block count; no _metrics/ table is left."""
     d, _ = appended
     [built] = check_index_format(index_dir)["segments"]
-    # an appended segment is named after its chunk, the newest covered one
-    appended_seg = max(check_index_format(d)["covered_chunks"])
+    # the appended segment has the largest data-segment id
+    appended_seg = max(
+        s for s in check_index_format(d)["segments"] if s < build.DELETE_SEG_BASE
+    )
     for idx, seg in ((index_dir, built), (d, appended_seg)):
         with open(os.path.join(idx, "stats.json")) as f:
             st = json.load(f)

@@ -12,8 +12,6 @@ import pytest
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.index.build import (
-    COMPACT_SEG_BASE,
-    STREAM_CHUNK_BASE,
     build_index,
     merge_index,
     staged_chunks,
@@ -164,13 +162,15 @@ def test_stream_drain_auto_compaction(spark, parts, tmp_path):
 
     a.write.mode("append").parquet(landing)
     ingest_stream(spark, landing, idx)
-    assert _data_segments(idx) == [COMPACT_SEG_BASE]
+    [first] = _data_segments(idx)
 
-    # second drain appends ≥1 segment → count ≥ 2 > max_segments=1 → compact
+    # second drain appends a segment → count 2 > max_segments=1 → compact
+    # into one new segment with an id above every earlier one
     b.write.mode("append").parquet(landing)
     res = ingest_stream(spark, landing, idx, max_segments=1)
     assert res.compacted
-    assert _data_segments(idx) == [COMPACT_SEG_BASE + 1]
+    [compacted] = _data_segments(idx)
+    assert compacted > first
     assert res.n_docs == full.filter("lang = 'en'").count()
 
     build_index(spark, full, idx_full)
@@ -182,11 +182,12 @@ def test_stream_drain_auto_compaction(spark, parts, tmp_path):
 
 
 def test_update_between_drains_keeps_every_chunk(spark, tmp_path):
-    """drain → update_index → drain: update_index stages its chunk in the
-    batch namespace, below STREAM_CHUNK_BASE, so the second drain's epoch
-    cannot overwrite it or be mistaken for an already-covered chunk, and its
-    segment is disjoint from the first drain's compacted segment. The
-    result equals a batch build over all the docs."""
+    """drain → update_index → drain: drains and updates take chunk ids from
+    one counter (1 + the largest committed chunk), so the second drain
+    cannot overwrite the update's chunk or be mistaken for an
+    already-covered chunk, and each call commits one new data segment with
+    an id above every earlier one. The result equals a batch build over all
+    the docs."""
     import numpy as np
 
     from statschat_ke_spark.index.query import topk
@@ -206,14 +207,17 @@ def test_update_between_drains_keeps_every_chunk(spark, tmp_path):
 
     first.write.mode("append").parquet(landing)
     ingest_stream(spark, landing, idx)
+    history = [check_index_format(idx)["segments"]]
     update_index(spark, second, idx)
+    history.append(check_index_format(idx)["segments"])
     third.write.mode("append").parquet(landing)
     res = ingest_stream(spark, landing, idx)
+    history.append(check_index_format(idx)["segments"])
 
-    chunks = sorted(staged_chunks(spark, idx))
-    assert len(chunks) == 3
-    assert [c < STREAM_CHUNK_BASE for c in chunks] == [True, False, False]
-    assert len(set(check_index_format(idx)["segments"])) == 3
+    assert sorted(staged_chunks(spark, idx)) == [0, 1, 2]
+    for prev, cur in zip(history, history[1:]):
+        [new] = [s for s in cur if s not in prev]
+        assert cur == prev + [new] and new > max(prev)
     full = build_index(spark, df, idx_full)
     assert res.n_docs == full.n_docs == df.filter("lang = 'en'").count()
     for q in ["inflation county report", "maize production county report"]:
@@ -252,6 +256,50 @@ def test_stream_recrawl_stages_only_unseen_urls(spark, parts, tmp_path):
     # were it staged twice) near the top
     own = " ".join(list(dict.fromkeys(tokenize(recrawl_text[0])))[:8])
     for q in ["inflation county report", "maize production county report", own]:
+        x = topk(spark, idx, q, 10).toPandas()
+        y = topk(spark, idx_full, q, 10).toPandas()
+        assert x.doc_id.is_unique, q
+        assert (x.doc_id.to_numpy() == y.doc_id.to_numpy()).all(), q
+        assert np.allclose(x.score.to_numpy(), y.score.to_numpy(), atol=1e-9), q
+
+
+def test_stream_replayed_epoch_stages_nothing_twice(spark, parts, tmp_path, monkeypatch):
+    """A drain that fails after its micro-batch staged (and lineage-
+    committed) its chunk leaves the epoch uncommitted in the stream
+    checkpoint, so the next drain replays it. The replay finds every url in
+    the committed chunk and stages an empty chunk: n_docs and the top-10
+    equal a batch build, and no doc_id is ranked twice."""
+    import numpy as np
+
+    import statschat_ke_spark.streaming.ingest as ingest_mod
+    from statschat_ke_spark.index.query import topk
+
+    full, a, b = parts
+    landing = str(tmp_path / "landing_replay")
+    idx = str(tmp_path / "idx_replay")
+    idx_full = str(tmp_path / "idx_replay_full")
+
+    a.write.mode("append").parquet(landing)
+    ingest_stream(spark, landing, idx)
+    b.write.mode("append").parquet(landing)
+    real, staged_rows = ingest_mod._stage_unseen, []
+
+    def stage_then_crash(*args, **kw):
+        staged_rows.append(real(*args, **kw))
+        if len(staged_rows) == 1:
+            raise RuntimeError("injected crash")
+        return staged_rows[-1]
+
+    with monkeypatch.context() as m:
+        m.setattr(ingest_mod, "_stage_unseen", stage_then_crash)
+        with pytest.raises(Exception, match="injected crash"):
+            ingest_stream(spark, landing, idx)
+        res = ingest_stream(spark, landing, idx)
+    assert staged_rows[0] > 0 and staged_rows[1:] == [0]
+
+    full_res = build_index(spark, full, idx_full)
+    assert res.n_docs == full_res.n_docs == full.filter("lang = 'en'").count()
+    for q in ["inflation county report", "maize production county report"]:
         x = topk(spark, idx, q, 10).toPandas()
         y = topk(spark, idx_full, q, 10).toPandas()
         assert x.doc_id.is_unique, q
