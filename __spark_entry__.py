@@ -401,8 +401,7 @@ def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     """An index taken through the FULL segment lifecycle: base build over
     doc_id % 3 != 0, segment-append of the remaining third (update_index →
     a base and a delta segment), then PHYSICAL compaction
-    (maybe_compact(max_segments=1) → one fresh segment covering every
-    chunk).
+    (merge_index → one fresh segment covering every chunk).
     Compaction is the plain-parquet realization of Iceberg's rewrite/compact
     maintenance action; the contract claim is that it is a pure physical
     reorganization — scoring after the rewrite must still hash-match the
@@ -412,7 +411,7 @@ def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     from statschat_ke_spark.index.build import (
         DELETE_SEG_BASE,
         build_index,
-        maybe_compact,
+        merge_index,
         update_index,
     )
 
@@ -420,8 +419,7 @@ def _ensure_index_compacted(spark: SparkSession, sf_dir: str) -> str:
         base = docs.filter(F.col("doc_id") % 3 != 0)
         build_index(spark, base, idx, lang="en")
         update_index(spark, docs, idx)
-        out = maybe_compact(spark, idx, max_segments=1)
-        assert out is not None and out.compacted
+        merge_index(spark, idx)
 
     return _ensure_cached_index(
         spark,

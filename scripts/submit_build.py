@@ -8,7 +8,10 @@ Cluster launch:
         scripts/submit_build.py \
         --input  <parquet-or-iceberg path of documents(url,warc_ts,html,text,lang)> \
         --index-dir <output dir> \
-        [--lang en] [--chunks K] [--resume] [--update]
+        [--lang en] [--chunks K] [--update]
+
+Rerunning the same command after a crash resumes the build: the slices the
+crashed run finished stage no docs (see build_index).
 
 No ``.master(...)`` is set here — the deploy mode, executor count and cores
 come from spark-submit, so the same script runs local[N] in the sandbox and
@@ -33,7 +36,6 @@ def main() -> None:
     ap.add_argument("--index-dir", required=True)
     ap.add_argument("--lang", default="en")
     ap.add_argument("--chunks", type=int, default=1)
-    ap.add_argument("--resume", action="store_true")
     ap.add_argument("--update", action="store_true",
                     help="incremental UPDATE into an existing index")
     args = ap.parse_args()
@@ -58,7 +60,7 @@ def main() -> None:
         # listing and reads the input once (see build_index)
         res = build_index(
             spark, args.input, args.index_dir,
-            lang=args.lang, n_chunks=args.chunks, resume=args.resume,
+            lang=args.lang, n_chunks=args.chunks,
         )
     out = {
         "n_docs": res.n_docs,

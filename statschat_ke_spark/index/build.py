@@ -9,11 +9,12 @@ Phase A (stage per input chunk, checkpoint-resumable):
     documents --filter lang--> extract text (pandas UDF, byte-identical
     contract) --tokenize+tf (single Arrow UDF pass)--> staged table
     (doc_id, url, doclen, tfs), one parquet subdir per chunk, a lineage row
-    appended after each chunk commits. Resume = anti-join chunks against the
-    lineage table. Incremental ingest (update_index, ingest_stream) stages
-    through _stage_unseen, a url anti-join against the committed chunks, so
-    no url is staged twice (the Spark analog of the reference's UPDATE
-    anti-joins, pdf_downloader.py:133-152).
+    appended after each chunk commits. Every writer (build_index,
+    update_index, ingest_stream) stages through _stage_unseen, a url
+    anti-join against the lineage-committed chunks into the next chunk id,
+    so no url is staged twice (the Spark analog of the reference's UPDATE
+    anti-joins, pdf_downloader.py:133-152). Resume is a rerun: the slices a
+    crashed build finished anti-join to empty chunks.
 
 Phase B (global merge) — ONE heavy pass over the (doc, term) pairs:
     staged --explode--> pairs
@@ -126,7 +127,8 @@ PACK_ARROW_BATCH = 131072
 # The reference re-merges its whole FAISS store on EVERY update
 # (/root/reference/statschat/preprocess.py:250-288) — this policy is that
 # behavior with the rebuild amortized 8× and bounded probe fan-out.
-DEFAULT_MAX_SEGMENTS = 8
+# _publish_pending reads it at call time, so a test can patch it.
+MAX_SEGMENTS = 8
 # Data segments take ids below DELETE_SEG_BASE, lexicon-delta segments
 # (delete_docs) from it up; a new id is 1 + the largest of its kind on disk
 # (_next_seg_id).
@@ -324,7 +326,7 @@ class BuildResult:
     chunks_processed: int
     chunks_skipped: int
     # set when the segment-lifecycle policy folded all segments into one
-    # compacted segment during this call (see maybe_compact)
+    # compacted segment during this call (see _publish_pending)
     compacted: bool = False
 
 
@@ -351,10 +353,10 @@ def _stage_chunk(
     """Phase-A unit of work: tokenize one chunk into ONE staged table
     (doc_id, url, doclen, tfs) — a single action, no persist — and append the
     lineage row only after the write commits (crash before the lineage append
-    ⇒ the chunk is simply redone on resume; writes are per-chunk subdirs so a
-    partial rewrite is idempotent). The pair explosion is deferred to phase B
-    where it streams out of columnar parquet instead of costing a second
-    materialization here."""
+    ⇒ the rerun stages those docs again under the same id; writes are
+    per-chunk subdirs so a partial rewrite is idempotent). The pair
+    explosion is deferred to phase B where it streams out of columnar
+    parquet instead of costing a second materialization here."""
     from pyspark.sql import Observation
 
     ts = time.time()
@@ -387,27 +389,40 @@ def _stage_chunk(
 
 
 def _stage_unseen(
-    spark: SparkSession, docs: DataFrame, index_dir: str, lang: str | None
+    spark: SparkSession,
+    docs: DataFrame,
+    index_dir: str,
+    lang: str | None,
+    seen: set[int] | None = None,
+    n_files: int = -1,
 ) -> int:
-    """Incremental-ingest staging, shared by update_index and ingest_stream:
-    stage ``docs`` as a new chunk, 1 + the largest lineage-committed one,
-    minus every url that a lineage-committed staged chunk already holds —
-    the Spark analog of the reference's UPDATE-mode anti-join
-    (pdf_downloader.py:133-152).
+    """The one staging step of every writer (build_index, update_index,
+    ingest_stream): stage ``docs`` as a new chunk, 1 + the largest
+    lineage-committed one, minus every url that a chunk of ``seen`` (default:
+    every lineage-committed chunk) already holds — the Spark analog of the
+    reference's UPDATE-mode anti-join (pdf_downloader.py:133-152).
 
     This keeps "no url in two staged chunks", which phase B relies on
     (INDEX_FORMAT 4): a re-sent or re-crawled url adds nothing, a replayed
-    stream epoch stages an empty chunk, and a tombstoned url, whose row
-    stays in its immutable staged chunk, is never re-admitted. A chunk dir
-    a crash left before its lineage row is the next id, so the retry
+    stream epoch stages an empty chunk, a tombstoned url, whose row stays in
+    its immutable staged chunk, is never re-admitted, and a rerun of a
+    crashed build stages only the slices it had not finished. A chunk dir a
+    crash left before its lineage row is the next id, so the retry
     overwrites it. A url given twice inside ``docs`` is not deduplicated.
-    The caller holds the writer lock, so no other writer stages meanwhile."""
+    build_index passes the chunks committed when it took the lock as
+    ``seen``: its slices are parts of one input, which is not deduplicated
+    either, so a slice never joins against the chunks the same call staged,
+    and a build into an empty dir reads no staged table. The caller holds the
+    writer lock, so no other writer stages meanwhile."""
+    committed = staged_chunks(index_dir)
+    seen = committed if seen is None else seen
     base = _prepare_base(docs, lang)
-    seen = sorted(staged_chunks(spark, index_dir))
     if seen:
-        staged_urls = _read_staged(spark, index_dir, seen).select("url")
+        staged_urls = _read_staged(spark, index_dir, sorted(seen)).select("url")
         base = base.join(staged_urls, "url", "left_anti")
-    return _stage_chunk(spark, base, index_dir, 1 + max(seen, default=-1))
+    return _stage_chunk(
+        spark, base, index_dir, 1 + max(committed, default=-1), n_files=n_files
+    )
 
 
 def _read_staged(spark: SparkSession, index_dir: str, chunks) -> DataFrame:
@@ -482,7 +497,7 @@ class _writer_lock:
     lock, and two writers proceed). A lock whose pid is dead
     (crashed writer) is broken and retaken; losing the retake race to
     another breaker raises WriterConflict rather than corrupting.
-    Reentrant per (thread, index_dir) so update_index → maybe_compact →
+    Reentrant per (thread, index_dir) so build_index or _publish_pending →
     merge_index nest under one hold; a SECOND THREAD of the same process
     is a conflict, not a reentry (the pid file can't arbitrate in-process
     writers — the threaded WSGI server + background-ingest topology needs
@@ -525,6 +540,7 @@ class _writer_lock:
             # thread can't race between our link and the _held insert
             _writer_lock._held[self.index_dir] = me
         try:
+            os.makedirs(self.index_dir, exist_ok=True)
             if not self._try_link():
                 try:
                     with open(self.path) as f:
@@ -577,26 +593,12 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-def _single_writer(fn):
-    """Decorator: run the write call under the index's writer lock.
-    Expects ``(spark, index_dir, ...)`` signatures."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(spark, index_dir, *a, **kw):
-        os.makedirs(index_dir, exist_ok=True)
-        with _writer_lock(index_dir):
-            return fn(spark, index_dir, *a, **kw)
-
-    return wrapper
-
-
-def staged_chunks(spark: SparkSession, index_dir: str) -> set[int]:
+def staged_chunks(index_dir: str) -> set[int]:
     """Chunks whose lineage row committed (completed phase-A units).
 
     Lineage is driver-written commit metadata (one tiny file per chunk), so
-    it is read back driver-side with pyarrow — no Spark job on the resume /
-    append path. pyarrow's dataset discovery skips ``_``/``.``-prefixed
+    it is read back driver-side with pyarrow — no Spark job on the staging
+    path. pyarrow's dataset discovery skips ``_``/``.``-prefixed
     files, so legacy Spark-written ``_SUCCESS`` markers are ignored, and
     legacy Spark-written lineage part-files read back identically."""
     import pyarrow.parquet as pq
@@ -627,7 +629,6 @@ def build_index(
     *,
     lang: str | None = "en",
     n_chunks: int = 1,
-    resume: bool = False,
 ) -> BuildResult:
     """Build the full index under ``index_dir``.
 
@@ -642,12 +643,19 @@ def build_index(
     input — n_chunks staged passes cost one total scan. A DataFrame is
     staged as one chunk (``n_chunks > 1`` raises ValueError).
 
-    The input is staged as given: no url anti-join against earlier chunks,
-    which would re-read every earlier chunk per chunk. ``resume=True`` skips
-    the chunks whose lineage row committed — after a crash mid-build, rerun
-    with it to finish (the north-rule checkpoint-resume path). Staging and
-    the merge run under the writer lock, so a second writer is refused
-    (WriterConflict) before it stages anything.
+    Each slice is staged through ``_stage_unseen``, the new-vs-existing
+    rule every writer shares, against the chunks committed before this
+    call, then every chunk is merged into one segment (``merge_index``).
+    Into an empty dir nothing is joined. After a crash mid-build, rerunning
+    the same call resumes: the finished slices stage empty chunks and only
+    the unfinished ones are tokenized, whatever update or drain ran in
+    between. On a dir that holds an index, the input's unseen urls are
+    added and the index is compacted. The whole call holds the writer lock,
+    so a second writer is refused (WriterConflict) before it stages
+    anything.
+
+    The result's ``chunks_processed`` counts the chunks this call staged;
+    ``chunks_skipped`` the chunks committed before it.
     """
     t0 = time.time()
     by_files = n_chunks > 1
@@ -656,41 +664,29 @@ def build_index(
             "build_index: n_chunks > 1 cuts chunks at the file listing, so "
             "docs must be a parquet path, not a DataFrame"
         )
-    os.makedirs(index_dir, exist_ok=True)
     if by_files:
         files = _chunk_files(docs)
-    else:
-        if isinstance(docs, str):
-            docs = spark.read.parquet(docs)
-        base = _prepare_base(docs, lang)
+    elif isinstance(docs, str):
+        docs = spark.read.parquet(docs)
 
-    # A pre-existing _SUCCESS.json from an earlier completed build stays in
-    # place while chunks are (re)staged: it describes the COMMITTED tables,
-    # which staging never touches, so concurrent queries keep serving the old
-    # snapshot until merge_index commits the new one (the Iceberg reader
-    # story). Resume correctness never consults the marker (staged_chunks
-    # reads lineage).
+    # A committed _SUCCESS.json stays in place while chunks are staged: it
+    # describes the COMMITTED tables, which staging never touches, so
+    # concurrent queries keep serving the old snapshot until merge_index
+    # commits the new one (the Iceberg reader story).
     with _writer_lock(index_dir):
-        done_chunks = staged_chunks(spark, index_dir) if resume else set()
-        processed = 0
+        seen = staged_chunks(index_dir)
         for chunk in range(n_chunks):
-            if chunk in done_chunks:
-                continue
             if by_files:
                 # listing-level slice: this pass reads ONLY these files
-                chunk_paths = files[chunk::n_chunks] or [files[0]]
-                cdf = _prepare_base(spark.read.parquet(*chunk_paths), lang)
-                if not files[chunk::n_chunks]:
-                    cdf = cdf.limit(0)  # more chunks than files: empty slice
-                n_files = len(files[chunk::n_chunks])
+                part = files[chunk::n_chunks]
+                cdf = spark.read.parquet(*(part or files[:1]))
+                cdf, n_files = (cdf if part else cdf.limit(0)), len(part)
             else:
-                cdf, n_files = base, -1
-            _stage_chunk(spark, cdf, index_dir, chunk, n_files=n_files)
-            processed += 1
-
+                cdf, n_files = docs, -1
+            _stage_unseen(spark, cdf, index_dir, lang, seen, n_files)
         result = merge_index(spark, index_dir)
-    result.chunks_processed = processed
-    result.chunks_skipped = len(done_chunks)
+    result.chunks_processed = n_chunks
+    result.chunks_skipped = len(seen)
     result.wall_s = time.time() - t0
     return result
 
@@ -701,7 +697,6 @@ def update_index(
     index_dir: str,
     *,
     lang: str | None = "en",
-    max_segments: int = DEFAULT_MAX_SEGMENTS,
 ) -> BuildResult:
     """Incremental UPDATE: stage only genuinely-new documents as a fresh
     chunk, then publish it (``_publish_pending``, shared with ingest_stream).
@@ -725,11 +720,11 @@ def update_index(
     re-merged instead. A caller that wants a full compaction — one segment,
     byte-identical to a from-scratch build — calls ``merge_index``.
 
-    Lifecycle: after a segment append, if the segment count exceeds
-    ``max_segments`` (default DEFAULT_MAX_SEGMENTS), the index is
-    auto-compacted back to one segment — bounding query-time probe fan-out
-    while keeping per-update cost delta-proportional amortized (see
-    maybe_compact). The result's ``compacted`` flag reports it.
+    Lifecycle: after a segment append, if the data-segment count exceeds
+    MAX_SEGMENTS, the index is auto-compacted back to one segment —
+    bounding query-time probe fan-out while keeping per-update cost
+    delta-proportional amortized (see _publish_pending). The result's
+    ``compacted`` flag reports it.
     """
     t0 = time.time()
     # NOTE: the committed _SUCCESS.json stays valid throughout staging and
@@ -737,20 +732,14 @@ def update_index(
     # the in-flight chunk/segment is invisible and queries keep serving the
     # old snapshot until _commit publishes the new one (same reader story
     # as ingest_stream and merge_index).
-    os.makedirs(index_dir, exist_ok=True)
     with _writer_lock(index_dir):
         _stage_unseen(spark, new_docs, index_dir, lang)
-        result = _publish_pending(spark, index_dir, max_segments=max_segments)
+        result = _publish_pending(spark, index_dir)
     result.wall_s = time.time() - t0
     return result
 
 
-def _publish_pending(
-    spark: SparkSession,
-    index_dir: str,
-    *,
-    max_segments: int,
-) -> BuildResult:
+def _publish_pending(spark: SparkSession, index_dir: str) -> BuildResult:
     """Publish every staged chunk the commit record does not cover yet — the
     one phase-B step of update_index and ingest_stream, run under their
     writer lock.
@@ -759,7 +748,9 @@ def _publish_pending(
     first commit, or an index of another format) all staged chunks are
     merged into one compacted segment (``merge_index``). Otherwise ALL
     pending chunks are packed into one new segment (``_write_segment``),
-    then the lifecycle policy (maybe_compact) runs. Reconciling every
+    and when the data segments then exceed MAX_SEGMENTS they are folded
+    into one compacted segment (``merge_index``; safe for readers, which
+    finish on the replaced snapshot). Reconciling every
     pending chunk, not only the one a caller just staged, makes a crashed
     update retryable: the retry's _stage_unseen finds every url in the
     chunk the crash left and stages an empty chunk, and the crashed chunk
@@ -767,8 +758,11 @@ def _publish_pending(
 
     The result's ``chunks_processed`` counts the chunks this call newly
     covers; ``chunks_skipped`` the staged chunks already covered before."""
-    base = committed_record(index_dir)
-    staged = staged_chunks(spark, index_dir)
+    try:
+        base = check_index_format(index_dir)
+    except RuntimeError:  # no committed base, or an index of another format
+        base = None
+    staged = staged_chunks(index_dir)
     pending = sorted(staged - set(base["covered_chunks"] if base else ()))
     if base is None:
         result = merge_index(spark, index_dir)
@@ -783,7 +777,13 @@ def _publish_pending(
         )
     else:
         result = _write_segment(spark, index_dir, pending, base)
-        result = maybe_compact(spark, index_dir, max_segments=max_segments) or result
+        data_segs = [
+            s for s in check_index_format(index_dir)["segments"]
+            if s < DELETE_SEG_BASE
+        ]
+        if len(data_segs) > MAX_SEGMENTS:
+            result = merge_index(spark, index_dir)
+            result.compacted = True
     result.chunks_processed = len(pending)
     result.chunks_skipped = len(staged) - len(pending)
     return result
@@ -811,41 +811,6 @@ def _next_seg_id(index_dir: str, lo: int, hi: int = 2**31) -> int:
     )
 
 
-def committed_record(index_dir: str) -> dict | None:
-    """The committed snapshot record, or None when there is no committed
-    base to append to: a fresh dir, a build that crashed before its first
-    commit, or an index of another format. Writers then take the full-merge
-    path."""
-    try:
-        return check_index_format(index_dir)
-    except RuntimeError:
-        return None
-
-
-def maybe_compact(
-    spark: SparkSession,
-    index_dir: str,
-    *,
-    max_segments: int = DEFAULT_MAX_SEGMENTS,
-) -> BuildResult | None:
-    """Fold all segments into one compacted segment (merge_index) when the
-    count exceeds ``max_segments``. Returns the compaction result, or None
-    when no compaction was needed. Safe mid-lifecycle and for readers: the
-    compacted segment is published by the same single _commit as an
-    append, so a crash before it leaves the old snapshot whole, and a query
-    running on the old snapshot finishes on it (its segments stay on disk
-    for one more commit)."""
-    data_segs = [
-        s for s in check_index_format(index_dir)["segments"]
-        if s < DELETE_SEG_BASE
-    ]
-    if len(data_segs) <= max_segments:
-        return None
-    out = merge_index(spark, index_dir)
-    out.compacted = True
-    return out
-
-
 @dataclass
 class DeleteResult:
     index_dir: str
@@ -871,7 +836,6 @@ def _tombstone_df(spark: SparkSession, index_dir: str, files: list[str]):
     )
 
 
-@_single_writer
 def delete_docs(
     spark: SparkSession,
     index_dir: str,
@@ -932,101 +896,103 @@ def delete_docs(
     (no double-subtraction of df/avgdl).
     """
     t0 = time.time()
-    old = check_index_format(index_dir)  # only committed snapshots mutate
-    if isinstance(urls, DataFrame):
-        url_df = urls.select("url").distinct()
-    else:
-        url_df = spark.createDataFrame(
-            [(str(u),) for u in urls], "url string"
-        ).distinct()
+    with _writer_lock(index_dir):
+        old = check_index_format(index_dir)  # only committed snapshots mutate
+        if isinstance(urls, DataFrame):
+            url_df = urls.select("url").distinct()
+        else:
+            url_df = spark.createDataFrame(
+                [(str(u),) for u in urls], "url string"
+            ).distinct()
 
-    # committed corpus only — see "Scope" in the docstring
-    staged = _read_staged(spark, index_dir, old["covered_chunks"])
-    victims = staged.join(F.broadcast(url_df), "url", "semi")
-    tomb = _tombstone_df(spark, index_dir, old["tombstone_files"])
-    if tomb is not None:
-        # idempotence: docs already tombstoned must not subtract twice
-        victims = victims.join(F.broadcast(tomb), "doc_id", "left_anti")
-    # one row per doc even if one input batch held a url twice
-    victims = (
-        victims.select("doc_id", "doclen", "terms", "tfs")
-        .dropDuplicates(["doc_id"])
-        .persist()
-    )
-    old_delta_segs = [s for s in old["segments"] if s >= DELETE_SEG_BASE]
-    try:
-        hit = victims.select("doc_id", "doclen").collect()  # ≤ |urls| rows
-        if not hit:
-            return DeleteResult(
-                index_dir=index_dir,
-                n_deleted=0,
-                n_docs=int(old["n_docs"]),
-                avgdl=float(old["avgdl"]),
-                wall_s=time.time() - t0,
-                tombstone_file=None,
-            )
-        n_del = len(hit)
-        dl_del = float(sum(int(r.doclen) for r in hit))
-        doc_ids = sorted(int(r.doc_id) for r in hit)
-
-        # negative lexicon delta, FOLDED with the previously committed delta
-        # so exactly one delta segment is live at a time, under a fresh id
-        # of the delete range (the superseded delta stays on disk for one
-        # more commit, see _commit)
-        seg = _next_seg_id(index_dir, DELETE_SEG_BASE)
-        lex_delta = _term_stats(victims).select(
-            "term_id", "term", (-F.col("df")).alias("df"), (-F.col("cf")).alias("cf")
+        # committed corpus only — see "Scope" in the docstring
+        staged = _read_staged(spark, index_dir, old["covered_chunks"])
+        victims = staged.join(F.broadcast(url_df), "url", "semi")
+        tomb = _tombstone_df(spark, index_dir, old["tombstone_files"])
+        if tomb is not None:
+            # idempotence: docs already tombstoned must not subtract twice
+            victims = victims.join(F.broadcast(tomb), "doc_id", "left_anti")
+        # one row per doc even if one input batch held a url twice
+        victims = (
+            victims.select("doc_id", "doclen", "terms", "tfs")
+            .dropDuplicates(["doc_id"])
+            .persist()
         )
-        if old_delta_segs:
-            prev = spark.read.parquet(
-                *(
-                    os.path.join(index_dir, "lexicon", f"seg={s}")
-                    for s in old_delta_segs
+        old_delta_segs = [s for s in old["segments"] if s >= DELETE_SEG_BASE]
+        try:
+            hit = victims.select("doc_id", "doclen").collect()  # ≤ |urls| rows
+            if not hit:
+                return DeleteResult(
+                    index_dir=index_dir,
+                    n_deleted=0,
+                    n_docs=int(old["n_docs"]),
+                    avgdl=float(old["avgdl"]),
+                    wall_s=time.time() - t0,
+                    tombstone_file=None,
                 )
-            ).select("term_id", "term", "df", "cf")
-            lex_delta = (
-                lex_delta.unionByName(prev)
-                .groupBy("term_id", "term")
-                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            n_del = len(hit)
+            dl_del = float(sum(int(r.doclen) for r in hit))
+            doc_ids = sorted(int(r.doc_id) for r in hit)
+
+            # negative lexicon delta, FOLDED with the previously committed
+            # delta so exactly one delta segment is live at a time, under a
+            # fresh id of the delete range (the superseded delta stays on
+            # disk for one more commit, see _commit)
+            seg = _next_seg_id(index_dir, DELETE_SEG_BASE)
+            lex_delta = _term_stats(victims).select(
+                "term_id", "term",
+                (-F.col("df")).alias("df"), (-F.col("cf")).alias("cf"),
             )
-        lex_delta.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "lexicon", f"seg={seg}")
+            if old_delta_segs:
+                prev = spark.read.parquet(
+                    *(
+                        os.path.join(index_dir, "lexicon", f"seg={s}")
+                        for s in old_delta_segs
+                    )
+                ).select("term_id", "term", "df", "cf")
+                lex_delta = (
+                    lex_delta.unionByName(prev)
+                    .groupBy("term_id", "term")
+                    .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+                )
+            lex_delta.repartition(1).write.mode("overwrite").parquet(
+                os.path.join(index_dir, "lexicon", f"seg={seg}")
+            )
+        finally:
+            victims.unpersist()
+
+        # tombstone file: driver-written commit metadata, exactly like lineage
+        import pyarrow as pa
+
+        fname = _write_commit_file(
+            os.path.join(index_dir, "tombstones"),
+            "tomb",
+            pa.table({"doc_id": pa.array(doc_ids, type=pa.int64())}),
         )
-    finally:
-        victims.unpersist()
 
-    # tombstone file: driver-written commit metadata, exactly like lineage
-    import pyarrow as pa
-
-    fname = _write_commit_file(
-        os.path.join(index_dir, "tombstones"),
-        "tomb",
-        pa.table({"doc_id": pa.array(doc_ids, type=pa.int64())}),
-    )
-
-    n_docs = int(old["n_docs"]) - n_del
-    avgdl = (
-        (int(old["n_docs"]) * float(old["avgdl"]) - dl_del) / n_docs
-        if n_docs
-        else 0.0
-    )
-    _commit(
-        index_dir,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        # the folded delta supersedes prior ones
-        segments=[s for s in old["segments"] if s < DELETE_SEG_BASE] + [seg],
-        covered_chunks=old["covered_chunks"],
-        tombstone_files=old["tombstone_files"] + [fname],
-    )
-    return DeleteResult(
-        index_dir=index_dir,
-        n_deleted=n_del,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        wall_s=time.time() - t0,
-        tombstone_file=fname,
-    )
+        n_docs = int(old["n_docs"]) - n_del
+        avgdl = (
+            (int(old["n_docs"]) * float(old["avgdl"]) - dl_del) / n_docs
+            if n_docs
+            else 0.0
+        )
+        _commit(
+            index_dir,
+            n_docs=n_docs,
+            avgdl=avgdl,
+            # the folded delta supersedes prior ones
+            segments=[s for s in old["segments"] if s < DELETE_SEG_BASE] + [seg],
+            covered_chunks=old["covered_chunks"],
+            tombstone_files=old["tombstone_files"] + [fname],
+        )
+        return DeleteResult(
+            index_dir=index_dir,
+            n_deleted=n_del,
+            n_docs=n_docs,
+            avgdl=avgdl,
+            wall_s=time.time() - t0,
+            tombstone_file=fname,
+        )
 
 
 def _term_stats(staged: DataFrame) -> DataFrame:
@@ -1303,7 +1269,6 @@ def _atomic_json(path: str, obj, *, indent=None) -> None:
     os.replace(tmp, path)
 
 
-@_single_writer
 def merge_index(
     spark: SparkSession,
     index_dir: str,
@@ -1316,7 +1281,8 @@ def merge_index(
     a crash before the commit leaves it whole, plus an orphan segment dir
     that the next commit removes. Incremental updates instead add a delta
     segment (``update_index``)."""
-    return _write_segment(spark, index_dir, sorted(staged_chunks(spark, index_dir)))
+    with _writer_lock(index_dir):
+        return _write_segment(spark, index_dir, sorted(staged_chunks(index_dir)))
 
 
 def _write_segment(

@@ -93,8 +93,8 @@ def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
         raise RuntimeError(
             f"index at {index_dir!r} has no _SUCCESS.json commit record "
             "(absent or torn) — the build was interrupted before its first "
-            "commit; finish it (build_index with resume=True, or "
-            "merge_index) before querying"
+            "commit; finish it (rerun build_index, or merge_index) before "
+            "querying"
         )
     fmt = marker.get("format")
     if fmt != INDEX_FORMAT:

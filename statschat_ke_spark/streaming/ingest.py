@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from statschat_ke_spark.corpus import CONTRACT_SCHEMA
 from statschat_ke_spark.index.build import (
-    DEFAULT_MAX_SEGMENTS,
     BuildResult,
     _publish_pending,
     _stage_unseen,
@@ -51,7 +50,6 @@ def ingest_stream(
     *,
     lang: str | None = "en",
     schema: str = CONTRACT_SCHEMA,
-    max_segments: int = DEFAULT_MAX_SEGMENTS,
 ) -> BuildResult:
     """Drain the landing zone into the index with Trigger.AvailableNow and
     return the publish result. Repeated invocation picks up only files not
@@ -62,8 +60,8 @@ def ingest_stream(
 
     The chunks of one drain are packed into one doc-disjoint index segment,
     so continuous ingest cost stays ∝ new data — the shape a real trigger
-    interval needs; past ``max_segments`` the index is folded into one
-    compacted segment (``maybe_compact``). Falls back to full compaction
+    interval needs; past ``build.MAX_SEGMENTS`` data segments the index is
+    folded into one compacted segment. Falls back to full compaction
     when no committed snapshot exists (a fresh dir). Either way the publish
     step is ``_publish_pending``, which update_index shares; a caller that
     wants a full re-merge calls ``merge_index`` after the drain. The whole
@@ -71,7 +69,6 @@ def ingest_stream(
     (WriterConflict) before it stages anything.
     """
     t0 = time.time()
-    os.makedirs(index_dir, exist_ok=True)
     stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def stage_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -87,6 +84,6 @@ def ingest_stream(
             .start()
         )
         q.awaitTermination()
-        result = _publish_pending(spark, index_dir, max_segments=max_segments)
+        result = _publish_pending(spark, index_dir)
     result.wall_s = time.time() - t0
     return result

@@ -1,8 +1,9 @@
 """Checkpoint-resume + incremental UPDATE tests (north_rule; SURVEY §5.2-4/5).
 
 - chunked build == single-shot build (identical lexicon + postings bytes)
-- interrupted build (a crash injected into phase A) resumes from lineage
-  without recomputing completed chunks, final index identical
+- interrupted build (a crash injected into phase A) resumes by a plain
+  rerun without recomputing completed chunks, final index identical, even
+  when an update ran between the crash and the rerun
 - update_index(A, then B) == build_index(A ∪ B); re-sending a delta is a
   no-op (J2 anti-join semantics of pdf_downloader.py:133-152)
 """
@@ -97,13 +98,11 @@ def docs500_path(docs500, tmp_path_factory):
     return src
 
 
-def test_stop_and_resume(
-    spark, docs500_path, single_shot, tmp_path_factory, monkeypatch
-):
-    d_ss, _ = single_shot
+def _crashed_build(spark, src, d, monkeypatch):
+    """build_index(src, d, n_chunks=4) with a crash injected into its third
+    _stage_chunk call: slices 0 and 1 are staged, nothing is committed."""
     import statschat_ke_spark.index.build as build_mod
 
-    d = str(tmp_path_factory.mktemp("rs") / "idx")
     real = build_mod._stage_chunk
     calls: list[int] = []
 
@@ -116,15 +115,94 @@ def test_stop_and_resume(
     with monkeypatch.context() as m:
         m.setattr(build_mod, "_stage_chunk", crash_on_third)
         with pytest.raises(RuntimeError, match="injected crash"):
-            build_index(spark, docs500_path, d, n_chunks=4)
-    assert staged_chunks(spark, d) == {0, 1}
+            build_index(spark, src, d, n_chunks=4)
+    assert staged_chunks(d) == {0, 1}
     assert not os.path.exists(os.path.join(d, "_SUCCESS.json"))
 
-    resumed = build_index(spark, docs500_path, d, n_chunks=4, resume=True)
-    assert resumed.chunks_skipped == 2  # lineage prevented recomputation
-    assert resumed.chunks_processed == 2
+
+def test_stop_and_resume(
+    spark, docs500_path, single_shot, tmp_path_factory, monkeypatch
+):
+    """A build that crashed in its third slice resumes by rerunning the same
+    call: the two finished slices stage empty chunks, only the two
+    unfinished ones are tokenized, and the index equals the single-shot
+    build (lexicon and postings)."""
+    from statschat_ke_spark.index.build import _chunk_files
+
+    d_ss, _ = single_shot
+    d = str(tmp_path_factory.mktemp("rs") / "idx")
+    _crashed_build(spark, docs500_path, d, monkeypatch)
+
+    resumed = build_index(spark, docs500_path, d, n_chunks=4)
+    assert (resumed.chunks_processed, resumed.chunks_skipped) == (4, 2)
+    # lineage prevented recomputation: the rerun's chunks staged exactly
+    # the rows of the two unfinished slices
+    rows_in = {
+        r.chunk: r.rows_in
+        for r in spark.read.parquet(os.path.join(d, "_lineage")).collect()
+    }
+    rerun = [rows_in[c] for c in sorted(rows_in) if c not in (0, 1)]
+    files = _chunk_files(docs500_path)
+    unfinished = (
+        spark.read.parquet(*files[2::4], *files[3::4]).filter("lang = 'en'").count()
+    )
+    assert len(rerun) == 4 and rerun[:2] == [0, 0]
+    assert sum(rerun) == unfinished > 0
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
     assert _postings(spark, d) == _postings(spark, d_ss)
+
+
+def test_update_between_crash_and_rerun_keeps_every_doc(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A build crashes in its third slice, then an update_index of other
+    docs takes the next chunk id, then the build is rerun. The rerun stages
+    every url no chunk holds yet, so no input is lost: n_docs and the
+    top-10s equal a fresh build of all the docs."""
+    import numpy as np
+
+    pdf = generate_documents(300, seed=5)
+    root = tmp_path_factory.mktemp("crashupd")
+    src, d, ref = (str(root / x) for x in ("src", "idx", "ref"))
+    _docs(spark, pdf.iloc[:240]).repartition(8).write.parquet(src)
+    _crashed_build(spark, src, d, monkeypatch)
+    update_index(spark, _docs(spark, pdf.iloc[240:]), d)
+
+    res = build_index(spark, src, d, n_chunks=4)
+    ref_res = build_index(spark, _docs(spark, pdf), ref)
+    assert res.n_docs == ref_res.n_docs == 269
+    for q in QUERIES + ["county report statistics"]:
+        a = topk(spark, d, q, 10).toPandas()
+        b = topk(spark, ref, q, 10).toPandas()
+        assert len(a) > 0, q
+        assert (a.doc_id.to_numpy() == b.doc_id.to_numpy()).all(), q
+        assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), q
+
+
+def test_build_into_empty_dir_reads_no_staged_table(
+    spark, docs500_path, single_shot, tmp_path_factory, monkeypatch
+):
+    """A build into an empty dir has no chunk to anti-join against: staging
+    its four slices reads no staged table (only its merge_index does), so
+    each input slice is read once."""
+    import statschat_ke_spark.index.build as build_mod
+
+    _, res_ss = single_shot
+    real_read, real_merge = build_mod._read_staged, build_mod.merge_index
+
+    def refuse(*_a, **_kw):
+        raise AssertionError("staging read a staged table")
+
+    def merge_index(spark, index_dir):
+        monkeypatch.setattr(build_mod, "_read_staged", real_read)
+        return real_merge(spark, index_dir)
+
+    monkeypatch.setattr(build_mod, "_read_staged", refuse)
+    monkeypatch.setattr(build_mod, "merge_index", merge_index)
+    d = str(tmp_path_factory.mktemp("noread") / "idx")
+    res = build_index(spark, docs500_path, d, n_chunks=4)
+    assert (res.chunks_processed, res.chunks_skipped) == (4, 0)
+    assert res.n_docs == res_ss.n_docs
 
 
 def test_update_equals_full_rebuild(spark, docs500, single_shot, tmp_path_factory):
@@ -269,16 +347,21 @@ def test_file_listing_chunked_build(spark, docs500_path, file_chunked):
     assert all(v > 0 for v in per_chunk_files.values())
 
 
-def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path_factory):
+def test_segment_lifecycle_auto_compaction(
+    spark, docs500, single_shot, tmp_path_factory, monkeypatch
+):
     """Lifecycle policy: successive segment appends trigger EXACTLY ONE
-    auto-compaction when the segment count crosses max_segments, the index
+    auto-compaction when the segment count crosses MAX_SEGMENTS, the index
     folds into one fresh compacted segment, and queries stay rank-identical to the single-shot
     build over the same corpus afterwards (including one further append on
     top of the compacted state)."""
     import numpy as np
 
+    import statschat_ke_spark.index.build as build_mod
+
     d_ss, _ = single_shot
     pdf = generate_documents(500)
+    monkeypatch.setattr(build_mod, "MAX_SEGMENTS", 3)
 
     def df_of(a, b):
         return spark.createDataFrame(
@@ -293,7 +376,7 @@ def test_segment_lifecycle_auto_compaction(spark, docs500, single_shot, tmp_path
     compactions = []
     # appends → segment counts 2, 3, 4(>3: compact to 1), 2
     for a, b in [(200, 280), (280, 360), (360, 430), (430, 500)]:
-        res = update_index(spark, df_of(a, b), d, max_segments=3)
+        res = update_index(spark, df_of(a, b), d)
         compactions.append(bool(res.compacted))
         history.append(_data_segments(d))
     assert compactions == [False, False, True, False]
@@ -339,7 +422,7 @@ def test_update_segment_chunk_accounting(spark, tmp_path_factory):
     # skipped, never both counted for the same chunk
     res = update_index(spark, delta, d)
     assert res.chunks_processed == 1
-    done_total = len(staged_chunks(spark, d))
+    done_total = len(staged_chunks(d))
     assert res.chunks_processed + res.chunks_skipped == done_total
 
     # pure replay (same delta again): the empty replay chunk is published
@@ -368,7 +451,7 @@ def test_resent_delta_leaves_no_pending_chunk(spark, tmp_path_factory):
     for _ in range(2):
         update_index(spark, delta, d)
     after = check_index_format(d)
-    assert set(after["covered_chunks"]) == staged_chunks(spark, d)
+    assert set(after["covered_chunks"]) == staged_chunks(d)
     assert len(after["covered_chunks"]) == len(before["covered_chunks"]) + 2
     assert after["segments"] == before["segments"]
     assert (after["n_docs"], after["avgdl"]) == (before["n_docs"], before["avgdl"])
@@ -454,7 +537,7 @@ def test_crash_before_lineage_then_merge_and_retry(spark, tmp_path_factory, monk
         with pytest.raises(RuntimeError, match="injected crash"):
             update_index(spark, delta, d)
     assert os.path.isdir(os.path.join(d, "staged", "chunk=1"))
-    assert staged_chunks(spark, d) == {0}
+    assert staged_chunks(d) == {0}
     assert merge_index(spark, d).n_docs == n_base
 
     res = update_index(spark, delta, d)
@@ -604,7 +687,7 @@ def test_append_window_keeps_serving_old_snapshot(
     delta = spark.createDataFrame(pdf, schema=DOCUMENTS_SPARK_SCHEMA).select(
         "url", "warc_ts", "html", "text", "lang"
     )
-    done = staged_chunks(spark, d2)
+    done = staged_chunks(d2)
     _stage_chunk(spark, _prepare_base(delta, "en"), d2, max(done) + 1 if done else 0)
 
     assert os.path.exists(marker_path), "staging must not invalidate the commit"

@@ -141,13 +141,14 @@ def test_stream_rerun_noop(spark, parts, tmp_path):
     assert _lexicon(spark, idx) == lex1
 
 
-def test_stream_drain_auto_compaction(spark, parts, tmp_path):
-    """A drain that pushes the segment count past max_segments triggers the
+def test_stream_drain_auto_compaction(spark, parts, tmp_path, monkeypatch):
+    """A drain that pushes the segment count past MAX_SEGMENTS triggers the
     lifecycle compaction: the index folds into a single fresh compacted
     segment and still answers identically to a batch build over the same
     corpus."""
     import numpy as np
 
+    import statschat_ke_spark.index.build as build_mod
     from statschat_ke_spark.index.build import DELETE_SEG_BASE
     from statschat_ke_spark.index.query import topk
 
@@ -164,10 +165,11 @@ def test_stream_drain_auto_compaction(spark, parts, tmp_path):
     ingest_stream(spark, landing, idx)
     [first] = _data_segments(idx)
 
-    # second drain appends a segment → count 2 > max_segments=1 → compact
+    # second drain appends a segment → count 2 > MAX_SEGMENTS=1 → compact
     # into one new segment with an id above every earlier one
     b.write.mode("append").parquet(landing)
-    res = ingest_stream(spark, landing, idx, max_segments=1)
+    monkeypatch.setattr(build_mod, "MAX_SEGMENTS", 1)
+    res = ingest_stream(spark, landing, idx)
     assert res.compacted
     [compacted] = _data_segments(idx)
     assert compacted > first
@@ -214,7 +216,7 @@ def test_update_between_drains_keeps_every_chunk(spark, tmp_path):
     res = ingest_stream(spark, landing, idx)
     history.append(check_index_format(idx)["segments"])
 
-    assert sorted(staged_chunks(spark, idx)) == [0, 1, 2]
+    assert sorted(staged_chunks(idx)) == [0, 1, 2]
     for prev, cur in zip(history, history[1:]):
         [new] = [s for s in cur if s not in prev]
         assert cur == prev + [new] and new > max(prev)
