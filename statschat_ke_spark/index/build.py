@@ -14,7 +14,8 @@ Phase A (stage per input chunk, checkpoint-resumable):
     anti-join against the lineage-committed chunks into the next chunk id,
     so no url is staged twice (the Spark analog of the reference's UPDATE
     anti-joins, pdf_downloader.py:133-152). Resume is a rerun: the slices a
-    crashed build finished anti-join to empty chunks.
+    crashed build finished anti-join to nothing, and a chunk that stages no
+    row leaves no dir and no lineage row.
 
 Phase B (global merge) — ONE heavy pass over the (doc, term) pairs:
     staged --explode--> pairs
@@ -31,10 +32,16 @@ Partitioning note: the term shuffle is a STATIC bucket partition
 (hash of (term_id, slice)) rather than ``repartitionByRange`` — Spark's range
 partitioner samples its child, which would execute the full explode twice per
 build. term_id is already a uniform hash of the term, so hash buckets are
-balance-equivalent to ranges; within each partition rows are sorted by
-(term_id, slice, doc), giving parquet row-group min/max stats that prune
-query-time term lookups just like a range layout. This is the Iceberg
-``bucket(term_id)`` layout. The skew story is unchanged (slices, below).
+balance-equivalent to ranges. This is the Iceberg ``bucket(term_id)``
+layout. The skew story is unchanged (slices, below).
+
+Scan pruning: within each file postings rows are sorted by (term_id, slice,
+doc) and lexicon rows by term_id, and both are written in row groups of
+ROW_GROUP_BYTES (postings only from ROW_GROUP_MIN_DOCS docs per segment up),
+so each row group covers a narrow term_id range. The query's pushed-down
+``term_id IN (...)`` filter skips every row group whose min/max stats admit
+none of its terms: pruning happens per row group, never per file (every file
+spans the whole hash range) and never per row.
 
 Skew handling: every posting row is keyed by (term_id, slice) where
 slice = top SLICE_BITS bits of the unsigned doc_id. A hot term ("the" at web
@@ -129,6 +136,28 @@ PACK_ARROW_BATCH = 131072
 # behavior with the rebuild amortized 8× and bounded probe fan-out.
 # _publish_pending reads it at call time, so a test can patch it.
 MAX_SEGMENTS = 8
+# Parquet row-group size (``parquet.block.size``) of the lexicon writes and
+# of the postings writes of segments of at least ROW_GROUP_MIN_DOCS docs.
+# Both tables are term_id-sorted within each file, so a row group covers a
+# narrow term_id range and the query's pushed-down ``term_id IN`` filter
+# skips the row groups that hold none of its terms. With one row group per
+# file (the writer default, 128 MB, above any pack file) every question read
+# whole files: on the 180k-doc perfbench index (14 pack files) the median
+# selective question read 754,137 posting rows and a 12-term one all
+# 1,880,673; at 1 MB (~25 row groups per file, +0.05% postings bytes) they
+# read 211,620 and 737,917. The writers read it at call time, so a test can
+# patch it.
+ROW_GROUP_BYTES = 1 << 20
+# Postings of a segment with fewer docs keep one row group per file. Below
+# it the doc-id columns (first_doc, last_doc, doc_ids: a doc's id repeats in
+# the one-doc blocks of its rare terms) stay dictionary-encoded, and since
+# every row group holds some term of nearly every doc, each row group
+# repeats a dictionary of the segment's doc ids. Postings bytes at 1 MB row
+# groups vs one per file, same rows: +20% at 11k docs, +16% at 40k, +14% at
+# 55k; +0.4% at 70k, +0.3% at 90k and +0.05% at 180k, where that dictionary
+# outgrows parquet's 1 MB dictionary page and the writer falls back to plain
+# encoding. Read at call time, so a test can patch it.
+ROW_GROUP_MIN_DOCS = 70_000
 # Data segments take ids below DELETE_SEG_BASE, lexicon-delta segments
 # (delete_docs) from it up; a new id is 1 + the largest of its kind on disk
 # (_next_seg_id).
@@ -183,6 +212,18 @@ def tokenize_doc_udf(text: pd.Series) -> pd.DataFrame:
             "tfs": tf_lists,
         }
     )
+
+
+# The staged table as _stage_chunk writes it, plus its ``chunk`` partition
+# column. Readers pass it so an empty chunk list reads as an empty table.
+STAGED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("url", T.StringType()),
+        *TOKENIZED_SCHEMA.fields,
+        T.StructField("chunk", T.IntegerType()),
+    ]
+)
 
 
 POSTINGS_SCHEMA = T.StructType(
@@ -354,9 +395,12 @@ def _stage_chunk(
     (doc_id, url, doclen, tfs) — a single action, no persist — and append the
     lineage row only after the write commits (crash before the lineage append
     ⇒ the rerun stages those docs again under the same id; writes are
-    per-chunk subdirs so a partial rewrite is idempotent). The pair
-    explosion is deferred to phase B where it streams out of columnar
-    parquet instead of costing a second materialization here."""
+    per-chunk subdirs so a partial rewrite is idempotent). A chunk that
+    stages no row (a re-sent update, a replayed epoch, a finished slice of a
+    resumed build) is removed and gets no lineage row, so it costs later
+    writers no listing. Returns the row count. The pair explosion is
+    deferred to phase B where it streams out of columnar parquet instead of
+    costing a second materialization here."""
     from pyspark.sql import Observation
 
     ts = time.time()
@@ -375,6 +419,9 @@ def _stage_chunk(
         "overwrite"
     ).parquet(path)
     n_rows = int(obs.get["rows"])
+    if not n_rows:
+        _clear_dir(path)
+        return 0
     # n_files records the listing-level slice size (bytes-read evidence that
     # file-chunked builds scan the input once total); -1 = not file-chunked
     _append_lineage_row(
@@ -385,7 +432,7 @@ def _stage_chunk(
         committed_at=time.time(),
         n_files=int(n_files),
     )
-    return int(n_rows)
+    return n_rows
 
 
 def _stage_unseen(
@@ -404,12 +451,12 @@ def _stage_unseen(
 
     This keeps "no url in two staged chunks", which phase B relies on
     (INDEX_FORMAT 4): a re-sent or re-crawled url adds nothing, a replayed
-    stream epoch stages an empty chunk, a tombstoned url, whose row stays in
-    its immutable staged chunk, is never re-admitted, and a rerun of a
-    crashed build stages only the slices it had not finished. A chunk dir a
-    crash left before its lineage row is the next id, so the retry
-    overwrites it. A url given twice inside ``docs`` is not deduplicated.
-    build_index passes the chunks committed when it took the lock as
+    stream epoch stages no chunk, a tombstoned url, whose row stays in its
+    immutable staged chunk, is never re-admitted, and a rerun of a crashed
+    build stages only the slices it had not finished. A chunk dir a crash
+    left before its lineage row is the next id, so the retry overwrites it.
+    Returns the staged row count (0: no chunk was staged). A url given
+    twice inside ``docs`` is not deduplicated. build_index passes the chunks committed when it took the lock as
     ``seen``: its slices are parts of one input, which is not deduplicated
     either, so a slice never joins against the chunks the same call staged,
     and a build into an empty dir reads no staged table. The caller holds the
@@ -429,9 +476,9 @@ def _read_staged(spark: SparkSession, index_dir: str, chunks) -> DataFrame:
     """The staged rows of ``chunks``, listed from their own ``chunk=N`` dirs
     only (``basePath`` keeps ``chunk`` a column) — the twin of
     ``query._read_snapshot_table``. A chunk dir without a lineage row is
-    never read."""
+    never read; no chunks (every input staged nothing) read as no rows."""
     root = os.path.join(index_dir, "staged")
-    return spark.read.option("basePath", root).parquet(
+    return spark.read.schema(STAGED_SCHEMA).option("basePath", root).parquet(
         *(os.path.join(root, f"chunk={c}") for c in chunks)
     )
 
@@ -647,14 +694,15 @@ def build_index(
     rule every writer shares, against the chunks committed before this
     call, then every chunk is merged into one segment (``merge_index``).
     Into an empty dir nothing is joined. After a crash mid-build, rerunning
-    the same call resumes: the finished slices stage empty chunks and only
-    the unfinished ones are tokenized, whatever update or drain ran in
+    the same call resumes: the finished slices stage nothing and only the
+    unfinished ones are tokenized, whatever update or drain ran in
     between. On a dir that holds an index, the input's unseen urls are
     added and the index is compacted. The whole call holds the writer lock,
     so a second writer is refused (WriterConflict) before it stages
     anything.
 
-    The result's ``chunks_processed`` counts the chunks this call staged;
+    The result's ``chunks_processed`` counts the input slices this call
+    ran through staging (a slice with no unseen url stages no chunk);
     ``chunks_skipped`` the chunks committed before it.
     """
     t0 = time.time()
@@ -679,8 +727,9 @@ def build_index(
             if by_files:
                 # listing-level slice: this pass reads ONLY these files
                 part = files[chunk::n_chunks]
-                cdf = spark.read.parquet(*(part or files[:1]))
-                cdf, n_files = (cdf if part else cdf.limit(0)), len(part)
+                if not part:
+                    continue
+                cdf, n_files = spark.read.parquet(*part), len(part)
             else:
                 cdf, n_files = docs, -1
             _stage_unseen(spark, cdf, index_dir, lang, seen, n_files)
@@ -704,9 +753,9 @@ def update_index(
     anti-join + preprocess.py:250-288 FAISS merge_from): new-vs-existing is
     ``_stage_unseen``, the url anti-join against the lineage-committed staged
     chunks that ingest_stream shares, so re-sending the same batch adds no
-    docs — its empty chunk is only recorded as covered — and a deleted url
-    stays deleted. The whole call holds the writer lock, so a second writer
-    is refused (WriterConflict) before it stages anything.
+    docs — it stages no chunk — and a deleted url stays deleted. The whole
+    call holds the writer lock, so a second writer is refused
+    (WriterConflict) before it stages anything.
 
     The pending chunks are packed into one new doc-disjoint segment
     (postings/docs/lexicon under a fresh ``seg=N``); existing segment files
@@ -753,8 +802,8 @@ def _publish_pending(spark: SparkSession, index_dir: str) -> BuildResult:
     finish on the replaced snapshot). Reconciling every
     pending chunk, not only the one a caller just staged, makes a crashed
     update retryable: the retry's _stage_unseen finds every url in the
-    chunk the crash left and stages an empty chunk, and the crashed chunk
-    must still be packed.
+    chunk the crash left and stages nothing, and the crashed chunk must
+    still be packed.
 
     The result's ``chunks_processed`` counts the chunks this call newly
     covers; ``chunks_skipped`` the staged chunks already covered before."""
@@ -955,8 +1004,8 @@ def delete_docs(
                     .groupBy("term_id", "term")
                     .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
                 )
-            lex_delta.repartition(1).write.mode("overwrite").parquet(
-                os.path.join(index_dir, "lexicon", f"seg={seg}")
+            _write_lexicon(
+                lex_delta, os.path.join(index_dir, "lexicon", f"seg={seg}"), 1
             )
         finally:
             victims.unpersist()
@@ -1005,6 +1054,20 @@ def _term_stats(staged: DataFrame) -> DataFrame:
         .groupBy(F.col("e.terms").alias("term"))
         .agg(F.count("*").alias("df"), F.sum("e.tfs").alias("cf"))
         .select(F.xxhash64("term").alias("term_id"), "term", "df", "cf")
+    )
+
+
+def _write_lexicon(lexicon: DataFrame, path: str, n_parts: int) -> None:
+    """The one lexicon write (a segment's, a delete delta's): ``n_parts``
+    term_id-hashed files, each sorted by term_id in ROW_GROUP_BYTES row
+    groups, so the query-time df probe reads only the row groups that can
+    hold its terms."""
+    (
+        lexicon.repartition(n_parts, "term_id")
+        .sortWithinPartitions("term_id")
+        .write.mode("overwrite")
+        .option("parquet.block.size", ROW_GROUP_BYTES)
+        .parquet(path)
     )
 
 
@@ -1080,8 +1143,10 @@ def _build_segment(
     # (term_id, slice) co-locates each term's doc-range slices WITHOUT the
     # extra range-sampling scan repartitionByRange would cost; the
     # within-partition sort restores (term_id, slice, unsigned-doc) order, so
-    # posting bytes are identical to a range-partitioned layout and parquet
-    # row-group min/max stats on the sorted term_id still prune query scans.
+    # posting bytes are identical to a range-partitioned layout, and (from
+    # ROW_GROUP_MIN_DOCS docs up) in ROW_GROUP_BYTES row groups each file's
+    # row-group min/max stats on the sorted term_id prune query scans to the
+    # row groups of its terms.
     pairs = staged.select(
         "doc_id", "doclen", F.explode(F.arrays_zip("terms", "tfs")).alias("e")
     ).select(
@@ -1110,7 +1175,10 @@ def _build_segment(
     def _write_postings() -> list:
         tpp = time.time()
         path = os.path.join(index_dir, "postings", seg_sub)
-        postings.write.mode("overwrite").parquet(path)
+        writer = postings.write.mode("overwrite")
+        if n_docs >= ROW_GROUP_MIN_DOCS:
+            writer = writer.option("parquet.block.size", ROW_GROUP_BYTES)
+        writer.parquet(path)
         # per-pack-partition counts for the metrics: ≤ P_pack rows; column
         # pruning reads only (pid, n), never the block binaries, and the
         # known schema skips a footer-inference job
@@ -1125,9 +1193,9 @@ def _build_segment(
 
     # ---- lexicon: per-term df/cf straight from the staged term arrays, so
     # it never waits for (or re-reads) the postings. Global df/cf are the SUM
-    # over segments, aggregated at the (tiny, term_id-pruned) query-time
+    # over segments, aggregated at the (tiny, row-group-pruned) query-time
     # probe.
-    def _write_lexicon() -> int:
+    def _write_segment_lexicon() -> int:
         from pyspark.sql import Observation
 
         tpl = time.time()
@@ -1136,10 +1204,10 @@ def _build_segment(
             _check_term_collisions(lexicon)
             # segment term count observed during the write (no read-back job)
             obs = Observation()
-            lexicon.observe(obs, F.count(F.lit(1)).alias("rows")).repartition(
-                max(1, P_pack // 4), "term_id"
-            ).sortWithinPartitions("term_id").write.mode("overwrite").parquet(
-                os.path.join(index_dir, "lexicon", seg_sub)
+            _write_lexicon(
+                lexicon.observe(obs, F.count(F.lit(1)).alias("rows")),
+                os.path.join(index_dir, "lexicon", seg_sub),
+                max(1, P_pack // 4),
             )
             n_terms = int(obs.get["rows"])
         finally:
@@ -1158,7 +1226,7 @@ def _build_segment(
         with ThreadPoolExecutor(3) as ex:
             f_docs = ex.submit(_write_docs)
             f_post = ex.submit(_write_postings)
-            f_lex = ex.submit(_write_lexicon)
+            f_lex = ex.submit(_write_segment_lexicon)
             per_pid = f_post.result()
             n_terms = f_lex.result()
             f_docs.result()
@@ -1303,7 +1371,8 @@ def _write_segment(
       (_stage_unseen already dropped every url the index holds, tombstoned
       ones included), and the segment is added next to the base's. The
       global stats merge exactly (avgdl is a weighted mean). Chunks that are
-      all empty commit only their coverage."""
+      all empty (staged before empty chunks were dropped) commit only their
+      coverage."""
     t0 = time.time()
     timings: dict[str, float] = {}
     staged = _read_staged(spark, index_dir, chunks)

@@ -10,9 +10,15 @@ inverted-index analog of an index-nested-loop join (SURVEY.md §2.3 J5):
    collected to the driver (≤ |q| × n_segments rows) and summed per term
    there. The handle (``_snapshot``) opens each table once per commit and
    is shared by every query against that commit.
-3. postings scan of the handle's postings filtered by term_id (predicate
-   pushdown + row-group pruning: postings are written term_id-sorted within
-   range partitions)
+3. postings scan of the handle's postings filtered by term_id: the
+   ``term_id IN (...)`` predicate is pushed into the parquet reader, which
+   skips every row group whose term_id min/max admits none of the terms.
+   Postings are written term_id-sorted within each file, in
+   ``build.ROW_GROUP_BYTES`` row groups for a segment of at least
+   ``build.ROW_GROUP_MIN_DOCS`` docs, so a question reads the row groups of
+   its own terms, not whole files (every file spans the whole term_id hash
+   range); a smaller segment's files are one row group each and are read
+   whole. Rows inside a kept row group are filtered after the read
 4. scoring: ONE plan (``_scored``) for topk and topk_batch — group blocks
    by (segment, doc-range slice group, query bucket); per group a vectorized
    block-max WAND skips blocks whose upper bound can't enter the top-k and
@@ -298,10 +304,13 @@ def _probe_idf(snap: _Snapshot, ids: list[int]) -> dict[int, dict]:
 
 
 def _postings(snap: _Snapshot, ids: list[int], n_groups: int) -> DataFrame:
-    """The snapshot's posting blocks for ``ids`` (term_id pushdown), tagged
-    with their WAND slice group ``wg``. Doc ranges of distinct slices are
-    disjoint, so ANY slice partition keeps per-group local top-k + a global
-    top-k exact."""
+    """The snapshot's posting blocks for ``ids``, tagged with their WAND
+    slice group ``wg``. The term_id filter is pushed into the parquet scan,
+    which reads only the row groups whose term_id range can hold one of
+    ``ids``: ~``build.ROW_GROUP_BYTES`` each in a segment of at least
+    ``build.ROW_GROUP_MIN_DOCS`` docs, one per file in a smaller segment or
+    an index written before the row-group size was set. Doc ranges of distinct slices are disjoint, so ANY slice
+    partition keeps per-group local top-k + a global top-k exact."""
     return (
         snap.postings.filter(F.col("term_id").isin(ids))
         .select("seg", "term_id", "slice", "block_id", "n", "doc_ids", "tfs",
@@ -343,7 +352,9 @@ def _scored(
     union_ids = sorted({t for ids in ids_by_q.values() for t in ids})
     lex = _probe_idf(snap, union_ids)
     if not lex:
-        return spark.createDataFrame([], SCORED_SCHEMA)
+        # an RDD with no partition runs no task; a local list would start a
+        # Python stage
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), SCORED_SCHEMA)
     idf_by_q = {
         qid: {t: lex[t]["idf"] for t in ids if t in lex}
         for qid, ids in ids_by_q.items()
@@ -380,15 +391,24 @@ def _scored(
     idf_all = {t: v["idf"] for t, v in lex.items()}
     grouped = _postings(snap, sorted(lex), n_groups)
     if n_qb > 1:
-        tb_rows = sorted(
-            {
-                (t, qid % n_qb)
-                for qid, ids in ids_by_q.items()
-                for t in ids
-                if t in lex
-            }
+        import pyarrow as pa
+
+        terms, qbs = zip(
+            *sorted(
+                {
+                    (t, qid % n_qb)
+                    for qid, ids in ids_by_q.items()
+                    for t in ids
+                    if t in lex
+                }
+            )
         )
-        term_buckets = spark.createDataFrame(tb_rows, "term_id long, qb int")
+        # an Arrow table is parallelized by the JVM: no Python stage
+        term_buckets = spark.createDataFrame(
+            pa.table(
+                {"term_id": pa.array(terms, pa.int64()), "qb": pa.array(qbs, pa.int32())}
+            )
+        )
         grouped = grouped.join(F.broadcast(term_buckets), "term_id")
     else:
         grouped = grouped.withColumn("qb", F.lit(0))

@@ -12,7 +12,7 @@ implements that mapping:
   id), so a re-crawled or deleted url is not staged again, and batch and
   streaming ingest share one code path and one checkpoint story. The
   streaming checkpoint gives at-least-once foreachBatch; a replayed epoch
-  finds its urls in a committed chunk and stages an empty one, which makes
+  finds its urls in a committed chunk and stages nothing, which makes
   staging effectively-once
 - after the AvailableNow drain, the same phase-B publish step as
   update_index (``_publish_pending``) packs all drained chunks into one

@@ -124,9 +124,9 @@ def test_stop_and_resume(
     spark, docs500_path, single_shot, tmp_path_factory, monkeypatch
 ):
     """A build that crashed in its third slice resumes by rerunning the same
-    call: the two finished slices stage empty chunks, only the two
-    unfinished ones are tokenized, and the index equals the single-shot
-    build (lexicon and postings)."""
+    call: the two finished slices stage nothing (no chunk dir, no lineage
+    row), only the two unfinished ones are tokenized, and the index equals
+    the single-shot build (lexicon and postings)."""
     from statschat_ke_spark.index.build import _chunk_files
 
     d_ss, _ = single_shot
@@ -141,13 +141,16 @@ def test_stop_and_resume(
         r.chunk: r.rows_in
         for r in spark.read.parquet(os.path.join(d, "_lineage")).collect()
     }
-    rerun = [rows_in[c] for c in sorted(rows_in) if c not in (0, 1)]
+    assert sorted(rows_in) == [0, 1, 2, 3]
+    assert sorted(os.listdir(os.path.join(d, "staged"))) == [
+        f"chunk={c}" for c in range(4)
+    ]
     files = _chunk_files(docs500_path)
     unfinished = (
         spark.read.parquet(*files[2::4], *files[3::4]).filter("lang = 'en'").count()
     )
-    assert len(rerun) == 4 and rerun[:2] == [0, 0]
-    assert sum(rerun) == unfinished > 0
+    assert rows_in[2] > 0 and rows_in[3] > 0
+    assert rows_in[2] + rows_in[3] == unfinished
     assert _lexicon(spark, d) == _lexicon(spark, d_ss)
     assert _postings(spark, d) == _postings(spark, d_ss)
 
@@ -405,9 +408,8 @@ def test_segment_lifecycle_auto_compaction(
 
 def test_update_segment_chunk_accounting(spark, tmp_path_factory):
     """chunks_processed counts the staged chunks the call newly covers
-    (packed into its segment, or an empty chunk recorded as covered);
-    chunks_skipped counts previously-staged chunks NOT repacked — disjoint,
-    no double-counting (ADVICE r3)."""
+    (packed into its segment); chunks_skipped counts previously-staged
+    chunks NOT repacked — disjoint, no double-counting (ADVICE r3)."""
     pdf = generate_documents(300)
     base = spark.createDataFrame(pdf.iloc[:150], schema=DOCUMENTS_SPARK_SCHEMA).select(
         "url", "warc_ts", "html", "text", "lang"
@@ -425,18 +427,18 @@ def test_update_segment_chunk_accounting(spark, tmp_path_factory):
     done_total = len(staged_chunks(d))
     assert res.chunks_processed + res.chunks_skipped == done_total
 
-    # pure replay (same delta again): the empty replay chunk is published
-    # (recorded as covered) and MUST count as processed=1, not 0
+    # pure replay (same delta again): it stages no chunk, so none is
+    # processed and every prior chunk is skipped
     res2 = update_index(spark, delta, d)
-    assert res2.chunks_processed == 1
-    assert res2.chunks_skipped == done_total  # all prior chunks skipped
+    assert res2.chunks_processed == 0
+    assert res2.chunks_skipped == done_total == len(staged_chunks(d))
 
 
 def test_resent_delta_leaves_no_pending_chunk(spark, tmp_path_factory):
-    """Re-sending a delta stages an EMPTY chunk (everything anti-joins away).
-    Publishing it must still record the chunk as covered — otherwise every
-    later update or drain re-reads every such chunk — and change nothing
-    else about the snapshot."""
+    """Re-sending a delta stages nothing (everything anti-joins away): it
+    leaves no chunk dir and no lineage row that every later update or
+    drain would list again, no chunk is left pending, and the snapshot is
+    unchanged."""
     pdf = generate_documents(300)
     base = spark.createDataFrame(pdf.iloc[:150], schema=DOCUMENTS_SPARK_SCHEMA).select(
         "url", "warc_ts", "html", "text", "lang"
@@ -448,11 +450,13 @@ def test_resent_delta_leaves_no_pending_chunk(spark, tmp_path_factory):
     build_index(spark, base, d)
     update_index(spark, delta, d)
     before = check_index_format(d)
+    dirs = sorted(os.listdir(os.path.join(d, "staged")))
     for _ in range(2):
         update_index(spark, delta, d)
     after = check_index_format(d)
     assert set(after["covered_chunks"]) == staged_chunks(d)
-    assert len(after["covered_chunks"]) == len(before["covered_chunks"]) + 2
+    assert after["covered_chunks"] == before["covered_chunks"]
+    assert sorted(os.listdir(os.path.join(d, "staged"))) == dirs
     assert after["segments"] == before["segments"]
     assert (after["n_docs"], after["avgdl"]) == (before["n_docs"], before["avgdl"])
 

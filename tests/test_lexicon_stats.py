@@ -6,11 +6,14 @@
 - stats.json keeps its keys, and its posting counts agree with the segment
   the build just wrote;
 - a term present in every document keeps df exact, the pack partitions
-  balanced and top-k rank-identical to the oracle.
+  balanced and top-k rank-identical to the oracle;
+- postings and lexicon files are written in term_id-ordered row groups that
+  the query's term_id filter prunes, without changing a score bit.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -24,7 +27,12 @@ from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.index import build
 from statschat_ke_spark.index.build import build_index, delete_docs, update_index
 from statschat_ke_spark.index.oracle import OracleIndex
-from statschat_ke_spark.index.query import check_index_format, topk
+from statschat_ke_spark.index.query import (
+    _postings,
+    _snapshot,
+    check_index_format,
+    topk,
+)
 
 STATS_KEYS = {
     "n_postings", "n_posting_rows", "skew_ratio", "slice_bits",
@@ -147,3 +155,92 @@ def test_term_in_every_doc(spark, corpus_pdf, tmp_path, monkeypatch):
         assert len(got) == len(golden) == 10, q
         assert (got.doc_id.to_numpy() == golden.doc_id.to_numpy()).all(), q
         assert np.allclose(got.score.to_numpy(), golden.score.to_numpy(), atol=1e-9), q
+
+
+def _term_id_ranges(path):
+    """Per parquet file under ``path``: its row groups' (min, max) term_id
+    from the footer statistics."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+        md = pq.ParquetFile(f).metadata
+        col = md.schema.names.index("term_id")
+        out[f] = [
+            (md.row_group(i).column(col).statistics.min,
+             md.row_group(i).column(col).statistics.max)
+            for i in range(md.num_row_groups)
+        ]
+    assert out, path
+    return out
+
+
+def _scan_rows(df) -> int:
+    """Rows the parquet scan of ``df``'s last run delivered: its FileScan's
+    numOutputRows metric, counted after row-group pruning and before the
+    row filter."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    assert leaves.size() == 1 and "Scan" in leaves.apply(0).nodeName()
+    return int(leaves.apply(0).metrics().apply("numOutputRows").value())
+
+
+def test_row_groups_prune_term_scans(
+    spark, corpus_df, corpus_pdf, index_dir, queries, tmp_path, monkeypatch
+):
+    """Built with a few-KB ROW_GROUP_BYTES (and no ROW_GROUP_MIN_DOCS floor),
+    every postings and lexicon file (a delete delta's too) holds several
+    row groups whose term_id ranges ascend without overlap; the engine's
+    postings scan for one mid-frequency term delivers under a quarter of
+    the posting rows, where the default build of this small fixture (below
+    ROW_GROUP_MIN_DOCS: one postings row group per file) delivers all of
+    them; and every top-k is bit-identical to the default build."""
+    monkeypatch.setattr(build, "ROW_GROUP_BYTES", 4096)
+    monkeypatch.setattr(build, "ROW_GROUP_MIN_DOCS", 0)
+    d = str(tmp_path / "rg")
+    build_index(spark, corpus_df.drop("text"), d)
+    [seg] = check_index_format(d)["segments"]
+
+    def assert_ordered(path, strict):
+        for f, ranges in _term_id_ranges(path).items():
+            assert len(ranges) > 1, f
+            assert all(lo <= hi for lo, hi in ranges), f
+            # a term's postings may straddle two row groups, a lexicon
+            # term (one row) never does
+            for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+                assert hi < lo if strict else hi <= lo, f
+
+    assert_ordered(os.path.join(d, "postings", f"seg={seg}"), strict=False)
+    assert_ordered(os.path.join(d, "lexicon", f"seg={seg}"), strict=True)
+
+    # a mid-frequency term: the median df of the terms in >= 5% of docs
+    lex = spark.read.parquet(os.path.join(d, "lexicon", f"seg={seg}"))
+    n_docs = check_index_format(d)["n_docs"]
+    mids = sorted(
+        (int(r.df), int(r.term_id))
+        for r in lex.filter(F.col("df") >= n_docs // 20).collect()
+    )
+    tid = mids[len(mids) // 2][1]
+
+    def scanned(idx):
+        total = spark.read.parquet(os.path.join(idx, "postings")).count()
+        snap = _snapshot(spark, idx, check_index_format(idx))
+        scan = _postings(snap, [tid], 1).select("term_id")
+        rows = scan.collect()
+        assert rows and {r.term_id for r in rows} == {tid}
+        return _scan_rows(scan), total
+
+    pruned, total = scanned(d)
+    assert pruned < total / 4, (pruned, total)
+    assert scanned(index_dir) == (total, total)
+
+    for q in queries.itertuples(index=False):
+        got = topk(spark, d, q.query_text, int(q.k)).toPandas()
+        ref = topk(spark, index_dir, q.query_text, int(q.k)).toPandas()
+        assert list(got.doc_id) == list(ref.doc_id), q.query_id
+        assert (
+            got.score.to_numpy().view(np.int64) == ref.score.to_numpy().view(np.int64)
+        ).all(), q.query_id
+
+    delete_docs(spark, d, sorted(_en(corpus_pdf).url)[::10])
+    [delta] = [s for s in check_index_format(d)["segments"] if s >= build.DELETE_SEG_BASE]
+    assert_ordered(os.path.join(d, "lexicon", f"seg={delta}"), strict=True)

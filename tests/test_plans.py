@@ -76,8 +76,12 @@ def test_broadcast_join_plan_invariants(spark, entry_queries):
 
 def test_bm25_topk_pushes_term_ids(spark, entry_queries):
     """The postings scan must push the query's term_id set into the parquet
-    reader (In(term_id, ...)) — the row-group-pruning contract that keeps a
-    selective query from reading the whole postings table."""
+    reader (In(term_id, ...)). The reader then skips the row groups whose
+    term_id min/max admit none of the terms; that prunes only because the
+    build writes term_id-sorted files in ``build.ROW_GROUP_BYTES`` row
+    groups, from ``build.ROW_GROUP_MIN_DOCS`` docs per segment up (rows
+    read: tests/test_lexicon_stats.py::
+    test_row_groups_prune_term_scans). This test pins the pushdown half."""
     from statschat_ke_spark.functions.hashing import xxhash64_str
 
     import __spark_entry__ as E

@@ -30,8 +30,26 @@ def test_rank_identity_all_queries(spark, index_dir, oracle, queries):
 
 
 def test_negative_query_empty(spark, index_dir):
-    got = topk(spark, index_dir, "xqzvk nonexistenttermxyz", 10).toPandas()
+    """An all-OOV question collects nothing, and once the probe memo knows
+    its terms it runs no task: the empty result frame is built on the JVM
+    side, not by a Python stage."""
+    q = "xqzvk nonexistenttermxyz"
+    got = topk(spark, index_dir, q, 10).toPandas()
     assert len(got) == 0
+
+    sc = spark.sparkContext
+    sc.setJobGroup("zero_hit", "all-OOV question")
+    try:
+        assert topk(spark, index_dir, q, 10).collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    tasks = sum(
+        st.getStageInfo(s).numTasks
+        for j in st.getJobIdsForGroup("zero_hit")
+        for s in st.getJobInfo(j).stageIds
+    )
+    assert tasks == 0
 
 
 def test_with_url(spark, index_dir, oracle):

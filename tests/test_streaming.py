@@ -269,7 +269,7 @@ def test_stream_replayed_epoch_stages_nothing_twice(spark, parts, tmp_path, monk
     """A drain that fails after its micro-batch staged (and lineage-
     committed) its chunk leaves the epoch uncommitted in the stream
     checkpoint, so the next drain replays it. The replay finds every url in
-    the committed chunk and stages an empty chunk: n_docs and the top-10
+    the committed chunk and stages nothing: n_docs and the top-10
     equal a batch build, and no doc_id is ranked twice."""
     import numpy as np
 

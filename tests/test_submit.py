@@ -108,5 +108,6 @@ def test_spark_submit_py_files_build(spark, tmp_path):
 @pytest.mark.skipif(not os.path.exists(SF_DOCS), reason="sf0.001 testdata absent")
 def test_spark_submit_chunked_build(spark, tmp_path):
     """``--chunks 2`` passes the input PATH to build_index, so chunks are cut
-    at the file listing (here one file: chunk 1 stages empty)."""
+    at the file listing (here one file: slice 1 has none and stages
+    nothing)."""
     _submit_and_compare(spark, tmp_path, 2)
