@@ -759,8 +759,8 @@ def update_index(
 
     The pending chunks are packed into one new doc-disjoint segment
     (postings/docs/lexicon under a fresh ``seg=N``); existing segment files
-    are never read or rewritten, so phase-B wall time is proportional to
-    the DELTA, not the corpus. This is the plain-parquet realization of an
+    are never read or rewritten, so an append's phase-B wall time is
+    proportional to the DELTA, not the corpus. This is the plain-parquet realization of an
     Iceberg snapshot append / ``MERGE INTO`` over term-keyed partitions.
     Query-time exactness: segments are doc-disjoint, per-(segment, slice)
     WAND local top-k composes exactly, and idf/avgdl are merged globals
@@ -770,9 +770,12 @@ def update_index(
     byte-identical to a from-scratch build — calls ``merge_index``.
 
     Lifecycle: after a segment append, if the data-segment count exceeds
-    MAX_SEGMENTS, the index is auto-compacted back to one segment —
-    bounding query-time probe fan-out while keeping per-update cost
-    delta-proportional amortized (see _publish_pending). The result's
+    MAX_SEGMENTS, the index is auto-compacted back to one segment, which
+    bounds query-time probe fan-out (see _publish_pending). That
+    compaction rewrites the whole corpus, so the amortized cost of an
+    update is about corpus/MAX_SEGMENTS + delta, not delta alone: on a
+    copy of a 180k-doc index on a 4-vCPU host, the update that compacted
+    took 17.4 s and the appends around it 1.1-1.5 s each. The result's
     ``compacted`` flag reports it.
     """
     t0 = time.time()

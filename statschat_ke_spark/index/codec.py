@@ -84,7 +84,9 @@ def vbyte_encode_chunks(values: np.ndarray, chunk_starts: np.ndarray) -> list[by
 
 
 def vbyte_decode(buf: bytes) -> np.ndarray:
-    """Decode vbyte bytes → uint64 array (vectorized)."""
+    """Decode vbyte bytes → uint64 array (vectorized). A value's payload
+    bytes occupy disjoint bit ranges, so one ``add.reduceat`` over the value
+    starts assembles every value."""
     raw = np.frombuffer(buf, dtype=np.uint8)
     if raw.size == 0:
         return np.empty(0, dtype=np.uint64)
@@ -92,17 +94,12 @@ def vbyte_decode(buf: bytes) -> np.ndarray:
     # value index for each byte: cumulative count of terminators before it
     value_idx = np.zeros(raw.size, dtype=np.int64)
     value_idx[1:] = np.cumsum(is_end[:-1])
-    n_values = int(is_end.sum())
     # shift amount = position within its value (0,7,14,...)
-    ends_pos = np.flatnonzero(is_end)
-    value_start = np.empty(n_values, dtype=np.int64)
-    value_start[0] = 0
-    value_start[1:] = ends_pos[:-1] + 1
+    value_start = np.zeros(int(is_end.sum()), dtype=np.int64)
+    value_start[1:] = np.flatnonzero(is_end)[:-1] + 1
     pos_in_value = np.arange(raw.size, dtype=np.int64) - value_start[value_idx]
     payload = (raw & 0x7F).astype(np.uint64) << (np.uint64(7) * pos_in_value.astype(np.uint64))
-    out = np.zeros(n_values, dtype=np.uint64)
-    np.add.at(out, value_idx, payload)
-    return out
+    return np.add.reduceat(payload, value_start)
 
 
 def encode_doc_ids(doc_ids_u: np.ndarray) -> bytes:
@@ -119,6 +116,17 @@ def encode_doc_ids(doc_ids_u: np.ndarray) -> bytes:
 def decode_doc_ids(buf: bytes) -> np.ndarray:
     gaps = vbyte_decode(buf)
     return np.cumsum(gaps, dtype=np.uint64)
+
+
+def decode_doc_id_blocks(buf: bytes, counts: np.ndarray) -> np.ndarray:
+    """Doc ids of joined ``encode_doc_ids`` blocks of ``counts`` values each,
+    in one decode: each block's running sum restarts at its absolute first
+    gap. uint64 sums wrap, so subtracting the preceding blocks' total is
+    exact."""
+    sums = np.cumsum(vbyte_decode(buf), dtype=np.uint64)
+    base = np.zeros(len(counts), dtype=np.uint64)
+    base[1:] = sums[np.cumsum(counts)[:-1] - 1]
+    return sums - np.repeat(base, counts)
 
 
 def encode_tfs(tfs: np.ndarray) -> bytes:

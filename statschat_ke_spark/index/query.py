@@ -20,11 +20,13 @@ inverted-index analog of an index-nested-loop join (SURVEY.md §2.3 J5):
    range); a smaller segment's files are one row group each and are read
    whole. Rows inside a kept row group are filtered after the read
 4. scoring: ONE plan (``_scored``) for topk and topk_batch — group blocks
-   by (segment, doc-range slice group, query bucket); per group a vectorized
-   block-max WAND skips blocks whose upper bound can't enter the top-k and
-   emits each query's local top-k; topk then takes the global top-k
-   (TakeOrderedAndProject), topk_batch a ranked window per query. Exact
-   because a doc's postings for every term share its slice
+   by (segment, doc-range slice group, query bucket); per group a bulk
+   block-max WAND (``_wand_groups``) scores doc intervals in rounds of
+   1, 2, 4, … in descending upper-bound order, one joined decode per term
+   and column per round, skips every interval whose bound can't enter the
+   top-k and emits each query's local top-k; topk then takes the global
+   top-k (TakeOrderedAndProject), topk_batch a ranked window per query.
+   Exact because a doc's postings for every term share its slice
    (slice = f(doc_id)).
 5. tie-break: score desc, doc_id ascending in unsigned order — identical to
    the numpy oracle (index/oracle.py).
@@ -45,16 +47,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from statschat_ke_spark.functions.tokenize import term_ids, tokenize
-from statschat_ke_spark.index.codec import BLOCK, decode_doc_ids, decode_tfs, vbyte_decode
+from statschat_ke_spark.index.codec import BLOCK, decode_doc_id_blocks, decode_tfs, vbyte_decode
 from statschat_ke_spark.operators.postproc import doc_u_asc
 
 K1 = 1.2
 B = 0.75
-
-# Per-task cap on a slice group's shared decoded-block memo (docs_u +
-# scores ≈ 16 B/posting). Sized so n_concurrent_tasks × cap fits a typical
-# executor: 32 tasks × 256 MB = 8 GB. Past the cap blocks decode per use.
-DECODE_CACHE_BYTES = 256 * 2**20
 
 SCORED_SCHEMA = T.StructType(
     [
@@ -486,69 +483,27 @@ def topk_batch(
     )
 
 
-class _TermBlocks:
-    """One query term's blocks within a slice: block-range metadata as numpy
-    arrays (first/last doc in unsigned order, block-max score) plus lazy
-    memoized decode+score of whole blocks — never per-doc Python.
-
-    ``budget`` (SHARED across all of a group's terms): a mutable
-    ``{"left": bytes}`` cap on total memoized decode output. ``_wand_groups``
-    keeps every term's structure alive for the whole group, so without a cap
-    peak task memory is the union of every query's decoded blocks (~16
-    B/posting) instead of one query's. Once the budget is spent, further
-    blocks are decoded per use but NOT retained — the hot blocks (touched
-    first, by the highest-upper-bound intervals, and shared across queries)
-    occupy the cache; cold-tail blocks cost a re-decode, never memory."""
-
-    __slots__ = (
-        "idf", "firsts_u", "lasts_u", "bms", "_raw", "_avgdl", "_cache", "_budget"
+def _term_blocks(g: pd.DataFrame, idf: float, avgdl: float) -> tuple:
+    """One term's blocks in a group as arrays in doc order: (first doc,
+    last doc, block-max score, n, doc_ids, tfs, dls, idf). Slices are
+    doc-range-contiguous (slice = top bits of doc_u), so (slice, block_id)
+    order is doc order."""
+    g = g.sort_values(["slice", "block_id"])
+    # avgdl-free stored bounds → block-max score under the current global
+    # avgdl: tfn rises with tf and falls with dl, so tfn(max_tf, min_dl)
+    # dominates every doc in the block
+    btf = g["block_max_tf"].to_numpy(dtype=np.float64)
+    bdl = g["block_min_dl"].to_numpy(dtype=np.float64)
+    return (
+        g["first_doc"].to_numpy(dtype=np.int64).view(np.uint64),
+        g["last_doc"].to_numpy(dtype=np.int64).view(np.uint64),
+        idf * btf * (K1 + 1.0) / (btf + K1 * (1.0 - B + B * bdl / avgdl)),
+        g["n"].to_numpy(dtype=np.int64),
+        g["doc_ids"].to_numpy(),
+        g["tfs"].to_numpy(),
+        g["dls"].to_numpy(),
+        idf,
     )
-
-    def __init__(self, idf: float, g: pd.DataFrame, avgdl: float, budget: dict):
-        self.idf = idf
-        # a group may span several slices; slices are doc-range-contiguous
-        # (slice = top bits of doc_u), so (slice, block_id) order IS global
-        # doc order for this term
-        g = g.sort_values(["slice", "block_id"])
-        self.firsts_u = g["first_doc"].to_numpy(dtype=np.int64).view(np.uint64)
-        self.lasts_u = g["last_doc"].to_numpy(dtype=np.int64).view(np.uint64)
-        # avgdl-free stored bounds → block-max score under the CURRENT
-        # global avgdl: tfn is increasing in tf, decreasing in dl, so
-        # tfn(max_tf, min_dl) dominates every doc in the block
-        btf = g["block_max_tf"].to_numpy(dtype=np.float64)
-        bdl = g["block_min_dl"].to_numpy(dtype=np.float64)
-        self.bms = idf * btf * (K1 + 1.0) / (
-            btf + K1 * (1.0 - B + B * bdl / avgdl)
-        )
-        self._raw = list(zip(g["doc_ids"].tolist(), g["tfs"].tolist(), g["dls"].tolist()))
-        self._avgdl = avgdl
-        self._cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        self._budget = budget
-
-    def partials(self, j: int) -> tuple[np.ndarray, np.ndarray]:
-        """(docs_u, bm25_partial) for block j — vectorized, decoded once."""
-        hit = self._cache.get(j)
-        if hit is not None:
-            return hit
-        raw_ids, raw_tfs, raw_dls = self._raw[j]
-        docs_u = decode_doc_ids(raw_ids)
-        tfs = decode_tfs(raw_tfs).astype(np.float64)
-        dls = vbyte_decode(raw_dls).astype(np.float64)
-        scores = self.idf * tfs * (K1 + 1.0) / (
-            tfs + K1 * (1.0 - B + B * dls / self._avgdl)
-        )
-        nbytes = docs_u.nbytes + scores.nbytes
-        if self._budget["left"] >= nbytes:
-            self._budget["left"] -= nbytes
-            self._cache[j] = (docs_u, scores)
-        return docs_u, scores
-
-    def covering_block(self, lo_u: np.uint64) -> int:
-        """Index of the block whose range contains lo_u, or -1."""
-        j = int(np.searchsorted(self.firsts_u, lo_u, side="right")) - 1
-        if j >= 0 and self.lasts_u[j] >= lo_u:
-            return j
-        return -1
 
 
 def _wand_groups(
@@ -559,108 +514,80 @@ def _wand_groups(
     dead_bc,
     n_qb: int,
 ):
-    """Per-(segment, slice group, query bucket) block-max WAND, vectorized
-    block-at-a-time: the grouped-map function of the shared plan. The
-    group with key ``(seg, wg, qb)`` scores every query ``qid`` with
-    ``qid % n_qb == qb`` and returns its local top-k rows
-    (query_id, doc_id, score).
+    """Per-(segment, slice group, query bucket) block-max WAND: the
+    grouped-map function of the shared plan. The group with key
+    ``(seg, wg, qb)`` scores every query ``qid`` with ``qid % n_qb == qb``
+    and returns its local top-k rows (query_id, doc_id, score). Each term's
+    block arrays are built once per group and shared by the bucket's
+    queries (idf is global per term).
 
-    Two-level evaluation (the SURVEY §2.9 design): level 1 works ONLY on
-    block metadata — the union of all terms' block boundaries partitions the
-    slice's doc range into intervals, and one vectorized sweep (add.at +
-    cumsum) yields each interval's upper bound Σ_t blockmax_t. Level 2
-    decodes and scores whole surviving blocks vectorized (BM25 over the full
-    block in one numpy expression, memoized), gathers the interval's rows
-    from each covering block by searchsorted, and aggregates per-doc scores
-    with sort+reduceat. Intervals whose upper bound is strictly below the
-    running top-k threshold are skipped without decoding — block-max WAND's
-    pruning with no per-document Python anywhere.
+    Level 1 works only on block metadata: the union of all terms' block
+    boundaries partitions the slice's doc range into intervals, and one
+    sweep (add.at + cumsum) gives each interval's upper bound UB = Σ_t
+    blockmax_t. Level 2 takes intervals in descending-UB order, in rounds of
+    1, 2, 4, … intervals; a round ends at the first interval with
+    UB < θ − eps. Per round and term, one ``vbyte_decode`` per column
+    decodes the joined bytes of every block covering one of the round's
+    intervals; the decoded docs inside those intervals, minus tombstones,
+    are scored and merged into the running top-k, and θ rises.
 
-    Exactness: θ only grows, so a skipped doc has true score ≤ UB < θ ≤ final
-    θ and can never displace the kth result even via the doc_id tie-break
-    (strict inequality); intervals with UB == θ are processed. Because the
-    interval bounds come out of a float sweep+cumsum, every θ-comparison
-    uses a conservative error margin (``eps`` below) so rounding can never
-    turn that exact-arithmetic argument into a false skip — found the hard
-    way by an exact-tie at rank k whose interval bound landed 1 ulp low.
+    Exactness: θ only grows, so a skipped doc has true score ≤ UB < θ ≤
+    final θ and cannot displace the kth result even via the doc_id
+    tie-break; intervals with UB == θ are scored. The bounds come out of a
+    float sweep + cumsum, so every θ-comparison keeps an error margin
+    (``eps``) so that rounding cannot turn that argument into a false skip
+    — found by an exact tie at rank k whose interval bound landed 1 ulp
+    low. Tombstoned docs leave candidacy before scoring, so θ is built from
+    live docs only (block bounds still count dead docs, which only makes
+    pruning conservative).
 
-    Bit-reproducibility: every emitted per-doc score is the sum of its
-    per-term partials in CANONICAL order — the query's distinct-term
-    appearance order (``idf_by_q[qid]`` insertion order, the same order the
-    numpy oracle accumulates) as a strict left-to-right fold — NEVER the
-    essential/non-essential split order (varies with θ and therefore with
-    slice grouping) and never ``np.add.reduceat`` (numpy reduce associates
-    pairwise, so even a correctly-ordered array sums to a different last
-    ulp than the sequential fold). Float addition is not associative in
-    the last ulp, so without a canonical order two near-tied docs could
-    swap ranks when ``n_groups`` (or the cluster size driving the adaptive
-    default) changes — caught by exactly such a swap at a pinned group
-    count. The split still drives candidate generation and pruning; only
-    the final summation is order-pinned.
+    Bit-reproducibility: every emitted score is a strict left-to-right fold
+    of the doc's per-term partials in CANONICAL order — the query's
+    distinct-term appearance order (``idf_by_q[qid]`` insertion order, the
+    order the numpy oracle accumulates; adding 0.0 for an absent term is
+    exact) — never ``np.add.reduceat``, whose pairwise association sums to
+    a different last ulp. Without it two near-tied docs could swap ranks
+    when ``n_groups`` (or the cluster size behind the adaptive default)
+    changes the rounds a doc is scored in.
     """
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         qb = int(key[2])
         dead = dead_bc.value if dead_bc is not None else None
-        outs = []
-        # Build each term's block structure ONCE per group and share it —
-        # including its memoized decoded blocks — across every query in the
-        # bucket (idf is per-term global, so the structure is query-
-        # independent). Batch queries overlap heavily in vocabulary; a
-        # per-query rebuild re-sliced the metadata frame and re-decoded the
-        # same hot blocks B times per group (~6x of the batch stage's wall
-        # at 64 queries). Per query, terms are picked from the cache in the
-        # query's canonical term order — NOT Spark's nondeterministic
-        # partition read order and NOT term_id order.
-        #
-        # The shared decode memo is budget-capped: structures live for the
-        # WHOLE group, so an uncapped memo's peak would be the union of
-        # every query's decoded blocks — an executor-OOM risk on large
-        # slice groups. Hot cross-query blocks fill the cap first; past it,
-        # blocks decode per use.
-        budget = {"left": DECODE_CACHE_BYTES}
-        tb_cache = {
-            int(t): _TermBlocks(idf_all[int(t)], g, avgdl, budget)
+        blocks = {
+            int(t): _term_blocks(g, idf_all[int(t)], avgdl)
             for t, g in pdf.groupby("term_id", sort=False)
         }
+        qids, docs, scores = [np.empty(0, np.int64)], [np.empty(0, np.uint64)], [np.empty(0)]
         for qid, idf_map in idf_by_q.items():
-            if qid % n_qb != qb:
-                continue
-            terms = [tb_cache[t] for t in idf_map if t in tb_cache]
-            if not terms:
-                continue
-            res = _wand_terms_topk(terms, k, dead)
-            if len(res):
-                res.insert(0, "query_id", np.int64(qid))
-                outs.append(res)
-        if not outs:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        return pd.concat(outs, ignore_index=True)
+            if qid % n_qb == qb:
+                # terms in the query's canonical order, not Spark's read order
+                d, sc = _wand_topk([blocks[t] for t in idf_map if t in blocks], k, avgdl, dead)
+                qids.append(np.full(len(d), qid, dtype=np.int64))
+                docs.append(d)
+                scores.append(sc)
+        return pd.DataFrame({
+            "query_id": np.concatenate(qids),
+            "doc_id": np.concatenate(docs).view(np.int64),
+            "score": np.concatenate(scores),
+        })
 
     return run
 
 
-def _wand_terms_topk(
-    terms: list["_TermBlocks"], k: int, dead: "np.ndarray | None" = None
-) -> pd.DataFrame:
-    """Block-max WAND top-k over prebuilt per-term block structures.
-
-    Takes prebuilt structures so ``_wand_groups`` can build each term's
-    ``_TermBlocks`` ONCE per slice group and share it (with its memoized
-    decoded blocks) across every query in the group that references the
-    term. ``terms`` must be in the query's canonical term order.
-    """
+def _wand_topk(
+    terms: list[tuple], k: int, avgdl: float, dead: "np.ndarray | None"
+) -> tuple[np.ndarray, np.ndarray]:
+    """One query's top-k (doc_u, score), ranked, over its ``_term_blocks``
+    in canonical term order (see ``_wand_groups``)."""
+    top_docs = np.empty(0, dtype=np.uint64)
+    top_scores = np.empty(0, dtype=np.float64)
     if not terms or k <= 0:
-        return pd.DataFrame(
-            {"doc_id": np.empty(0, dtype=np.int64),
-             "score": np.empty(0, dtype=np.float64)}
-        )
+        return top_docs, top_scores
     # ---- level 1: interval upper bounds from block metadata only ----
-    all_firsts = np.concatenate([t.firsts_u for t in terms])
-    all_lasts = np.concatenate([t.lasts_u for t in terms])
-    all_bms = np.concatenate([t.bms for t in terms])
+    all_firsts = np.concatenate([t[0] for t in terms])
+    all_lasts = np.concatenate([t[1] for t in terms])
+    all_bms = np.concatenate([t[2] for t in terms])
     open_end = all_lasts == np.uint64(0xFFFFFFFFFFFFFFFF)  # +1 would wrap
     bounds = np.unique(np.concatenate([all_firsts, all_lasts[~open_end] + np.uint64(1)]))
     ub = np.zeros(len(bounds), dtype=np.float64)
@@ -668,133 +595,51 @@ def _wand_terms_topk(
     closes = np.searchsorted(bounds, all_lasts[~open_end] + np.uint64(1))
     np.subtract.at(ub, closes[closes < len(bounds)], all_bms[~open_end][closes < len(bounds)])
     ub = np.cumsum(ub)
-    # Float-safety margin for every θ-comparison below. The sweep +
-    # cumsum accumulates rounding error ∝ len(bounds)·eps·max|prefix|,
-    # which can push an interval's bound a few ulp BELOW the true
-    # Σ block-max; a doc whose true score EQUALS θ must still be decoded
-    # (it can win the kth slot via the unsigned-doc_id tie-break), so a
-    # bound-vs-θ skip that is exact-arithmetic-safe needs headroom for
-    # that error. False keeps only cost a few extra block decodes.
-    eps = (len(bounds) + len(all_bms)) * np.finfo(np.float64).eps * (
-        float(np.max(np.abs(ub))) if len(ub) else 0.0
-    )
+    # The sweep + cumsum accumulates rounding error ∝ len(bounds)·eps·
+    # max|prefix|, which can push a bound a few ulp below the true Σ
+    # block-max; a doc whose true score equals θ must still be scored (it
+    # can win the kth slot via the doc_id tie-break).
+    eps = (len(bounds) + len(all_bms)) * np.finfo(np.float64).eps * float(np.max(np.abs(ub)))
 
-    # ---- level 2: decode + score surviving intervals, vectorized ----
-    top_docs = np.empty(0, dtype=np.uint64)
-    top_scores = np.empty(0, dtype=np.float64)
-    theta = -math.inf
-
-    # Process intervals in DESCENDING upper-bound order: θ reaches its
-    # final value after ~k high-bound intervals, and the first interval
-    # with ub < θ ends the loop (argsort is desc, so every later one is
-    # smaller too). Exactness is order-independent — a skipped interval
-    # has every true score ≤ ub < θ ≤ θ_final, strictly below the kth
-    # result even under the doc_id tie-break.
-    #
-    # Inside a surviving interval, the WAND essential/non-essential
-    # split: sort covering blocks by block-max ascending and cut off the
-    # largest prefix N with Σ_N bm < θ — a doc containing ONLY N-terms
-    # cannot reach θ, so candidates are gathered (and decoded) from the
-    # essential terms alone. Non-essential blocks are decoded lazily,
-    # only when a candidate's optimistic bound (essential partials +
-    # Σ_N bm) still clears θ. A sparse term's block spanning a huge doc
-    # range therefore no longer forces decoding every dense block it
-    # overlaps — dense-term decode cost is ∝ candidates, not range.
-    for i in np.argsort(-ub, kind="stable"):
-        if ub[i] < theta - eps:
+    # ---- level 2: rounds of 1, 2, 4, … intervals in descending-UB order ----
+    order = np.argsort(-ub, kind="stable")
+    theta, start, size = -math.inf, 0, 1
+    while start < len(order):
+        batch = order[start : start + size]
+        batch = batch[ub[batch] >= theta - eps]  # a prefix: UB descends
+        if not len(batch):
             break
-        lo = bounds[i]
-        hi = bounds[i + 1] if i + 1 < len(bounds) else None  # None = +inf
-        # cov stays in canonical (terms-list) order; the essential/
-        # non-essential split is computed over a bm-sorted VIEW so the
-        # summation order below never depends on θ
-        cov: list[tuple[_TermBlocks, int, float]] = []
-        for t in terms:
-            j = t.covering_block(lo)
-            if j >= 0:
-                cov.append((t, j, float(t.bms[j])))
-        if not cov:
-            continue
-        if theta == -math.inf or len(cov) == 1:
-            ness_i: set[int] = set()
-            nbm = 0.0
-        else:
-            by_bm = sorted(range(len(cov)), key=lambda i: cov[i][2])
-            acc = 0.0
-            ness_i = set()
-            for i_c in by_bm:
-                bm_c = cov[i_c][2]
-                if acc + bm_c < theta - eps:
-                    acc += bm_c
-                    ness_i.add(i_c)
-                else:
-                    break
-            nbm = acc
-        ess = [cov[i_c] for i_c in range(len(cov)) if i_c not in ness_i]
-        cand_docs, cand_scores = [], []
-        for t, j, _bm in ess:
-            docs_u, scores = t.partials(j)
-            a = int(np.searchsorted(docs_u, lo))
-            b = int(np.searchsorted(docs_u, hi)) if hi is not None else len(docs_u)
-            if a < b:
-                cand_docs.append(docs_u[a:b])
-                cand_scores.append(scores[a:b])
-        if not cand_docs:
-            continue
-        d = np.concatenate(cand_docs)
-        s_est = np.concatenate(cand_scores)
-        if len(cand_docs) > 1:
-            order = np.argsort(d, kind="stable")
-            d, s_est = d[order], s_est[order]
-            starts = np.flatnonzero(np.concatenate([[True], d[1:] != d[:-1]]))
-            d = d[starts]
-            # reduceat is an ESTIMATE only: numpy reduce uses pairwise
-            # association, so its float result depends on how partials
-            # happen to group — never emit it as a score
-            s_est = np.add.reduceat(s_est, starts)
-        # tombstoned docs leave candidacy HERE, before the θ filter and the
-        # canonical scoring: θ is then built from live docs only, so a dead
-        # doc can neither rank nor displace — exactly the index built
-        # without it (block-max bounds still include dead docs, which only
-        # makes pruning conservative, never wrong)
-        alive = _mask_alive(d, dead)
+        start, size = start + size, 2 * size
+        in_round = np.zeros(len(bounds), dtype=bool)
+        in_round[batch] = True
+        lo = bounds[batch]
+        parts = []
+        for firsts, lasts, _bms, n, ids, tfs, dls, idf in terms:
+            # an interval lies inside a block or outside it, so the block
+            # covering its start covers all of it
+            j = np.searchsorted(firsts, lo, side="right") - 1
+            j = np.unique(j[(j >= 0) & (lasts[j] >= lo)])
+            docs = decode_doc_id_blocks(b"".join(ids[j]), n[j])
+            tf = decode_tfs(b"".join(tfs[j])).astype(np.float64)
+            dl = vbyte_decode(b"".join(dls[j])).astype(np.float64)
+            parts.append((docs, idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))))
+        cand = np.unique(np.concatenate(
+            [d[in_round[np.searchsorted(bounds, d, side="right") - 1]] for d, _ in parts]
+        ))
+        alive = _mask_alive(cand, dead)
         if alive is not None:
-            d, s_est = d[alive], s_est[alive]
-            if not len(d):
-                continue
-        if ness_i:
-            # keep candidates whose optimistic bound clears θ. Margin:
-            # eps (metadata-sweep error) + a reorder term — the estimate
-            # sums in pairwise order while the final score sums
-            # sequentially, and reorder error is ≤ n·ulp·Σ|partials|.
-            opt = s_est + nbm
-            keep = opt >= theta - eps - len(cov) * np.finfo(np.float64).eps * np.abs(opt)
-            if not keep.any():
-                continue
-            d = d[keep]
-        # canonical score: strict left-to-right fold over ALL covering
-        # terms in terms-list (query appearance) order — the oracle's
-        # accumulation order. Adding 0.0 for a term not containing the
-        # doc is exact, so this equals the oracle's skip-absent-terms
-        # accumulation; non-essential blocks decode lazily, only here.
-        s = np.zeros(len(d), dtype=np.float64)
-        for t, j, _bm in cov:
-            docs_u, scores = t.partials(j)
-            pos = np.minimum(np.searchsorted(docs_u, d), len(docs_u) - 1)
-            s = s + np.where(docs_u[pos] == d, scores[pos], 0.0)
-        # merge into running top-k: (-score, doc_u) lexicographic
-        md = np.concatenate([top_docs, d])
+            cand = cand[alive]
+        # canonical fold over the query's terms (see _wand_groups)
+        s = np.zeros(len(cand), dtype=np.float64)
+        for docs, part in parts:
+            if len(docs):
+                pos = np.minimum(np.searchsorted(docs, cand), len(docs) - 1)
+                s = s + np.where(docs[pos] == cand, part[pos], 0.0)
+        # merge into the running top-k: (-score, doc_u) lexicographic
+        md = np.concatenate([top_docs, cand])
         ms = np.concatenate([top_scores, s])
         sel = np.lexsort((md, -ms))[:k]
         top_docs, top_scores = md[sel], ms[sel]
         if len(top_docs) >= k:
             theta = top_scores[-1]
-
-    order = np.lexsort((top_docs, -top_scores))
-    return pd.DataFrame(
-        {
-            "doc_id": top_docs[order].view(np.int64),
-            "score": top_scores[order],
-        }
-    )
-
+    return top_docs, top_scores

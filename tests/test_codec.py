@@ -6,12 +6,14 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from statschat_ke_spark.index.codec import (
+    decode_doc_id_blocks,
     decode_doc_ids,
     decode_tfs,
     encode_doc_ids,
     encode_tfs,
     vbyte_decode,
     vbyte_encode,
+    vbyte_encode_chunks,
 )
 
 u64 = st.integers(min_value=0, max_value=2**64 - 1)
@@ -86,3 +88,53 @@ def test_vbyte_encode_chunks_equivalence():
         assert chunks == expect
 
     check()
+
+
+@given(
+    st.lists(
+        st.lists(
+            st.tuples(
+                u64,
+                st.integers(min_value=1, max_value=1_000_000),
+                st.integers(min_value=0, max_value=2**32 - 1),
+            ),
+            min_size=1,
+            max_size=40,
+            unique_by=lambda p: p[0],
+        ),
+        min_size=1,
+        max_size=8,
+    ),
+    st.data(),
+)
+@settings(max_examples=100, deadline=None)
+def test_joined_block_decode(blocks, data):
+    """The query kernel's decode: blocks packed as the index writer packs
+    them (one ``vbyte_encode_chunks`` per column; doc-id gaps absolute at
+    each block start, tf-1, dl), a subset of them joined and decoded in ONE
+    call per column, split by per-block counts == per-block decode."""
+    blocks = [sorted(b) for b in blocks]
+    counts = np.array([len(b) for b in blocks], dtype=np.int64)
+    starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
+    doc = np.array([d for b in blocks for d, _, _ in b], dtype=np.uint64)
+    tf = np.array([t for b in blocks for _, t, _ in b], dtype=np.uint64)
+    dl = np.array([l for b in blocks for _, _, l in b], dtype=np.uint64)
+    gaps = np.empty_like(doc)
+    gaps[1:] = doc[1:] - doc[:-1]
+    gaps[starts] = doc[starts]
+    enc_ids = vbyte_encode_chunks(gaps, starts)
+    enc_tfs = vbyte_encode_chunks(tf - np.uint64(1), starts)
+    enc_dls = vbyte_encode_chunks(dl, starts)
+
+    j = np.array(
+        sorted(data.draw(st.sets(st.integers(0, len(blocks) - 1), min_size=1))),
+        dtype=np.int64,
+    )
+    split = np.cumsum(counts[j])[:-1]
+    got_ids = np.split(decode_doc_id_blocks(b"".join(enc_ids[i] for i in j), counts[j]), split)
+    got_tfs = np.split(decode_tfs(b"".join(enc_tfs[i] for i in j)), split)
+    got_dls = np.split(vbyte_decode(b"".join(enc_dls[i] for i in j)), split)
+    for i, ids, tfs, dls in zip(j, got_ids, got_tfs, got_dls):
+        assert ids.tolist() == decode_doc_ids(enc_ids[i]).tolist() == [d for d, _, _ in blocks[i]]
+        assert tfs.tolist() == decode_tfs(enc_tfs[i]).tolist()
+        assert dls.tolist() == vbyte_decode(enc_dls[i]).tolist()

@@ -190,46 +190,6 @@ def test_topk_batch_rank_identity_golden_scale(spark, index_dir, oracle, corpus_
     assert n_nonempty < len(qmap)
 
 
-def test_term_blocks_budget_cap(spark, index_dir, queries):
-    """A WAND group's shared decode memo honors its byte budget: with a
-    zero budget nothing is retained (every block decodes per use) and the
-    emitted partials are bit-identical to the unbounded cache's."""
-    import os
-
-    import pandas as pd
-
-    from statschat_ke_spark.index.query import _TermBlocks, check_index_format
-
-    pst = (
-        spark.read.parquet(os.path.join(index_dir, "postings"))
-        .toPandas()
-        .sort_values(["term_id", "slice", "block_id"])
-    )
-    avgdl = float(check_index_format(index_dir)["avgdl"])
-    tid, g = next(iter(pst.groupby("term_id", sort=False)))
-
-    unbounded = _TermBlocks(1.0, g, avgdl, {"left": 2**62})
-    zero = {"left": 0}
-    capped = _TermBlocks(1.0, g, avgdl, zero)
-    for j in range(len(g)):
-        du, su = unbounded.partials(j)
-        dc, sc = capped.partials(j)
-        assert (du == dc).all()
-        assert (su.view("int64") == sc.view("int64")).all()  # bit-identical
-    assert len(unbounded._cache) == len(g)  # memoized
-    assert len(capped._cache) == 0  # budget respected
-    assert zero["left"] == 0
-
-    # partial budget: caches until spent, then stops — never negative
-    first_cost = unbounded._cache[0][0].nbytes + unbounded._cache[0][1].nbytes
-    part = {"left": first_cost}
-    tb = _TermBlocks(1.0, g, avgdl, part)
-    for j in range(len(g)):
-        tb.partials(j)
-    assert 0 <= part["left"] < first_cost + 1
-    assert 1 <= len(tb._cache) <= len(g)
-
-
 def test_derive_slice_bits_math():
     """slice_bits = ceil(log2(n_docs / target)), floored at the sandbox
     default 6, capped at 24 — the web-scale knob replacing the old
