@@ -7,11 +7,14 @@ Flow (reference step → here):
 1. empty/invalid-question guard (main_api_cloud.py:97-99 → P10; html escape
    F15 is applied to the echoed question)
 2. recency weight from the question (latest_flag_helpers.py:17-28 → F7)
-3. top-k retrieval (FAISS similarity_search → block-max WAND BM25, J5/W1)
-4. metadata join (docstore lookup → broadcast join on doc_id)
+3. top-k retrieval (FAISS similarity_search → block-max WAND BM25, J5/W1),
+   collected with its urls (docstore lookup → a driver-side read of the
+   key-bucketed docs table, index/query.py ``_with_urls``)
+4. metadata join (broadcast join of the metadata on doc_id)
 5. score threshold (P5) → first-wins dedup on (title, date) (A2) → logistic
    time-decay rerank (W2/F5, injected ``now``) → relative-score filter (P6)
-   → rank + head-n contexts (W3/W4) → display rounding (P11)
+   → rank + head-n contexts (W3/W4) → display rounding (P11); without
+   metadata only threshold, head, rank and rounding apply, on the driver
 6. query-term highlighting over the context text (F8; the reference
    highlights LLM-chosen phrases — without an LLM we highlight the query's
    own terms, a documented divergence)
@@ -35,6 +38,7 @@ from statschat_ke_spark.functions.refops import (
     highlight_udf,
     html_escape_py,
     latest_weight_py,
+    round_py,
 )
 from statschat_ke_spark.index.query import topk
 from statschat_ke_spark.operators.postproc import doc_u_asc, search_pipeline
@@ -150,30 +154,40 @@ def search(
     lw = latest_weight_py(q, latest_max)
     q_escaped = html_escape_py(q)
 
-    if metadata is not None:
-        if will_filter_latest:
-            # P4 — the reference's content_type="latest" restriction
-            # (main_api_cloud.py:100-110 → make_query latest_filter). The
-            # reference serves this from a dedicated latest-only store
-            # (cloud_llm.py:115-148 db_latest) and so always has k latest
-            # hits; here we over-fetch (fetch_k candidates), keep the
-            # latest-flagged subset via an inner join against the filtered
-            # metadata, and truncate back to the best k — same guarantee
-            # unless >fetch_k-k non-latest docs outrank the kth latest one.
-            hits = (
-                hits.join(
-                    F.broadcast(metadata.filter(F.col("latest")).drop("latest")),
-                    "doc_id",
-                    "inner",
-                )
-                .orderBy(F.desc("score"), doc_u_asc())
-                .limit(k)
+    if metadata is None:
+        # degraded mode: threshold + rank only (no title/date ops possible),
+        # on the ≤ fetch_k rows topk collected, already in rank order
+        rows = [r for r in hits.collect() if r.score >= min_score][:k_contexts]
+        refs = [
+            {"doc_id": r.doc_id, "score": round_py(r.score), "url": r.url, "doc_num": n}
+            for n, r in enumerate(rows, 1)
+        ]
+        result = {"question": q_escaped, "latest_weight": lw, "references": refs}
+        if cache_key is not None:
+            _result_cache_put(cache_key, result)
+        return result
+
+    if will_filter_latest:
+        # P4 — the reference's content_type="latest" restriction
+        # (main_api_cloud.py:100-110 → make_query latest_filter). The
+        # reference serves this from a dedicated latest-only store
+        # (cloud_llm.py:115-148 db_latest) and so always has k latest
+        # hits; here we over-fetch (fetch_k candidates), keep the
+        # latest-flagged subset via an inner join against the filtered
+        # metadata, and truncate back to the best k — same guarantee
+        # unless >fetch_k-k non-latest docs outrank the kth latest one.
+        hits = (
+            hits.join(
+                F.broadcast(metadata.filter(F.col("latest")).drop("latest")),
+                "doc_id",
+                "inner",
             )
-        else:
-            hits = hits.join(F.broadcast(metadata), "doc_id", "left")
-        have = set(metadata.columns) - {"latest"}
+            .orderBy(F.desc("score"), doc_u_asc())
+            .limit(k)
+        )
     else:
-        have = set()
+        hits = hits.join(F.broadcast(metadata), "doc_id", "left")
+    have = set(metadata.columns) - {"latest"}
 
     if "title" in have and "date" in have:
         shaped = hits.select(
@@ -192,7 +206,7 @@ def search(
             k_contexts=k_contexts,
         )
     else:
-        # degraded mode: threshold + rank only (no title/date ops possible)
+        # metadata without title/date: threshold + rank only
         from pyspark.sql import Window as W
 
         out = (

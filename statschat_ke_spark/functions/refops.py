@@ -12,6 +12,8 @@ Determinism divergences from the reference (documented, §5.2-6):
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import Column, functions as F, types as T
 
@@ -97,6 +99,19 @@ def latest_weight_py(question: str, latest_max: float = 2.0) -> float:
         if re.search("(recent)|(latest)", question.lower())
         else latest_max / 2.0
     )
+
+
+def round_py(x: float, digits: int = 2) -> float:
+    """Driver-side twin of ``F.round(x, digits)`` for the serving path (P11
+    display rounding of ≤ k collected scores). Spark rounds HALF_UP on the
+    decimal form of the double, its shortest repr; Python's ``round`` rounds
+    half-even on the binary value (``round(0.125, 2)`` is 0.12, Spark's
+    0.13). Parity-tested against the Column version."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP))
 
 
 def trim_context(text: Column) -> Column:

@@ -36,12 +36,17 @@ balance-equivalent to ranges. This is the Iceberg ``bucket(term_id)``
 layout. The skew story is unchanged (slices, below).
 
 Scan pruning: within each file postings rows are sorted by (term_id, slice,
-doc) and lexicon rows by term_id, and both are written in row groups of
-ROW_GROUP_BYTES (postings only from ROW_GROUP_MIN_DOCS docs per segment up),
-so each row group covers a narrow term_id range. The query's pushed-down
-``term_id IN (...)`` filter skips every row group whose min/max stats admit
-none of its terms: pruning happens per row group, never per file (every file
-spans the whole hash range) and never per row.
+doc), in row groups of ROW_GROUP_BYTES from ROW_GROUP_MIN_DOCS docs per
+segment up, so each row group covers a narrow term_id range. The query's
+pushed-down ``term_id IN (...)`` filter skips every row group whose min/max
+stats admit none of its terms: pruning happens per row group, never per file
+(every pack file spans the whole hash range) and never per row.
+
+Keyed tables: docs (keyed by doc_id) and every lexicon (by term_id, a delete
+delta's too) are looked up by key on the driver, so ``_write_keyed`` lays
+them out as hive bucket dirs: bucket = the top bits of the unsigned key, one
+key-sorted file per bucket in ROW_GROUP_BYTES row groups. A lookup opens the
+bucket dir its key falls in and reads the row groups whose min/max admit it.
 
 Skew handling: every posting row is keyed by (term_id, slice) where
 slice = top SLICE_BITS bits of the unsigned doc_id. A hot term ("the" at web
@@ -116,7 +121,9 @@ def derive_slice_bits(n_docs: int) -> int:
 # on — format-3 streaming drains could re-stage a url already indexed.
 # 5: every data segment takes a fresh id (_next_seg_id); a format-4
 # compaction wrote segment 0, which a chunk-0 append would overwrite.
-INDEX_FORMAT = 5
+# 6: docs and lexicon segments are key-bucketed dirs (_write_keyed), which
+# the driver-side lookups list; a format-5 segment has no bucket dir.
+INDEX_FORMAT = 6
 LONG_MIN = -(2**63)
 # Arrow batch rows for the pack stage. Pack input rows are 28 fixed-width
 # bytes, so 128k rows ≈ 3.6 MB per batch; the 10k default caused a
@@ -136,11 +143,12 @@ PACK_ARROW_BATCH = 131072
 # behavior with the rebuild amortized 8× and bounded probe fan-out.
 # _publish_pending reads it at call time, so a test can patch it.
 MAX_SEGMENTS = 8
-# Parquet row-group size (``parquet.block.size``) of the lexicon writes and
-# of the postings writes of segments of at least ROW_GROUP_MIN_DOCS docs.
-# Both tables are term_id-sorted within each file, so a row group covers a
-# narrow term_id range and the query's pushed-down ``term_id IN`` filter
-# skips the row groups that hold none of its terms. With one row group per
+# Parquet row-group size (``parquet.block.size``) of the keyed writes (docs,
+# lexicon) and of the postings writes of segments of at least
+# ROW_GROUP_MIN_DOCS docs. Every file of these tables is key-sorted, so a
+# row group covers a narrow key range and a lookup or the query's
+# pushed-down ``term_id IN`` filter skips the row groups that hold none of
+# its keys. With one row group per
 # file (the writer default, 128 MB, above any pack file) every question read
 # whole files: on the 180k-doc perfbench index (14 pack files) the median
 # selective question read 754,137 posting rows and a 12-term one all
@@ -475,7 +483,7 @@ def _stage_unseen(
 def _read_staged(spark: SparkSession, index_dir: str, chunks) -> DataFrame:
     """The staged rows of ``chunks``, listed from their own ``chunk=N`` dirs
     only (``basePath`` keeps ``chunk`` a column) — the twin of
-    ``query._read_snapshot_table``. A chunk dir without a lineage row is
+    ``query._Snapshot``'s postings open. A chunk dir without a lineage row is
     never read; no chunks (every input staged nothing) read as no rows."""
     root = os.path.join(index_dir, "staged")
     return spark.read.schema(STAGED_SCHEMA).option("basePath", root).parquet(
@@ -1007,8 +1015,9 @@ def delete_docs(
                     .groupBy("term_id", "term")
                     .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
                 )
-            _write_lexicon(
-                lex_delta, os.path.join(index_dir, "lexicon", f"seg={seg}"), 1
+            _write_keyed(
+                lex_delta, os.path.join(index_dir, "lexicon", f"seg={seg}"),
+                "term_id", 1,
             )
         finally:
             victims.unpersist()
@@ -1060,15 +1069,28 @@ def _term_stats(staged: DataFrame) -> DataFrame:
     )
 
 
-def _write_lexicon(lexicon: DataFrame, path: str, n_parts: int) -> None:
-    """The one lexicon write (a segment's, a delete delta's): ``n_parts``
-    term_id-hashed files, each sorted by term_id in ROW_GROUP_BYTES row
-    groups, so the query-time df probe reads only the row groups that can
-    hold its terms."""
+def _write_keyed(df: DataFrame, path: str, key: str, n_files: int) -> None:
+    """The one write of a table looked up by ``key`` (a segment's docs by
+    doc_id, a lexicon or a delete delta by term_id): ``n_files`` rounded up
+    to a power of two, 2^b, hive bucket dirs. The bucket of a row is the top
+    b bits of its unsigned key, and its dir is named by the bucket's first
+    key as a signed int64 (``bucket=<first key>``), so a reader maps a key to
+    its dir from the names alone: no b, and no dir for an empty bucket. Each
+    bucket is one file, sorted by key in ROW_GROUP_BYTES row groups, so a
+    lookup reads only the row groups whose key min/max admit its keys (keys
+    of one bucket share their sign bit, so signed and unsigned order agree
+    inside a file)."""
+    b = (max(1, n_files) - 1).bit_length()
+    first = (
+        F.shiftleft(F.shiftrightunsigned(F.col(key), 64 - b), 64 - b)
+        if b else F.lit(0).cast("long")
+    )
     (
-        lexicon.repartition(n_parts, "term_id")
-        .sortWithinPartitions("term_id")
+        df.withColumn("bucket", first)
+        .repartition(1 << b, "bucket")
+        .sortWithinPartitions("bucket", key)
         .write.mode("overwrite")
+        .partitionBy("bucket")
         .option("parquet.block.size", ROW_GROUP_BYTES)
         .parquet(path)
     )
@@ -1135,8 +1157,8 @@ def _build_segment(
 
     def _write_docs() -> None:
         tpd = time.time()
-        staged_docs.repartition(P_docs, "doc_id").write.mode("overwrite").parquet(
-            os.path.join(index_dir, "docs", seg_sub)
+        _write_keyed(
+            staged_docs, os.path.join(index_dir, "docs", seg_sub), "doc_id", P_docs
         )
         timings["docs_write"] = time.time() - tpd
 
@@ -1207,9 +1229,10 @@ def _build_segment(
             _check_term_collisions(lexicon)
             # segment term count observed during the write (no read-back job)
             obs = Observation()
-            _write_lexicon(
+            _write_keyed(
                 lexicon.observe(obs, F.count(F.lit(1)).alias("rows")),
                 os.path.join(index_dir, "lexicon", seg_sub),
+                "term_id",
                 max(1, P_pack // 4),
             )
             n_terms = int(obs.get["rows"])
@@ -1282,7 +1305,7 @@ def _commit(
     - ``tombstone_files``: this snapshot's delete files under tombstones/
       (Iceberg positional-delete analog); readers mask them, merges exclude
       them.
-    - ``version``: unique per commit — the query probe cache keys on it,
+    - ``version``: unique per commit — the query's snapshot handle keys on it,
       not on mtime, which back-to-back appends can share.
 
     After the rename, every ``seg=N`` table dir that is in neither this

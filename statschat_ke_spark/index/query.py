@@ -5,11 +5,13 @@ Replaces the reference's FAISS ``similarity_search_with_score``
 inverted-index analog of an index-nested-loop join (SURVEY.md §2.3 J5):
 
 1. tokenize the query driver-side (tiny) → distinct term_ids
-2. lexicon lookup → idf: ONE narrow job per query that misses the probe
-   memo — a term_id-pushed-down scan of the snapshot handle's lexicon,
-   collected to the driver (≤ |q| × n_segments rows) and summed per term
-   there. The handle (``_snapshot``) opens each table once per commit and
-   is shared by every query against that commit.
+2. lexicon lookup → idf: a driver-side pyarrow read of the question's
+   term_ids from each committed segment's lexicon (delete deltas included),
+   df summed per term there — no Spark job. Lexicons are key-bucketed
+   (``build._write_keyed``): a term opens the one bucket file per segment
+   its id falls in and reads only the row groups whose term_id range admits
+   it. The snapshot handle (``_snapshot``) opens the postings and lists the
+   bucket dirs once per commit, and is shared by every query against it.
 3. postings scan of the handle's postings filtered by term_id: the
    ``term_id IN (...)`` predicate is pushed into the parquet reader, which
    skips every row group whose term_id min/max admits none of the terms.
@@ -30,6 +32,9 @@ inverted-index analog of an index-nested-loop join (SURVEY.md §2.3 J5):
    (slice = f(doc_id)).
 5. tie-break: score desc, doc_id ascending in unsigned order — identical to
    the numpy oracle (index/oracle.py).
+6. urls (``topk(with_url=True)``): the ≤ k ranked rows are collected and
+   their urls read on the driver from the data segments' docs, key-bucketed
+   by doc_id like the lexicon; the result is a local frame.
 
 Thresholding (reference P5, cloud_llm.py:153) and the post-retrieval ports
 (dedup/decay/highlight) operate on the ≤k collected rows (operators/postproc).
@@ -44,6 +49,8 @@ import threading
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from statschat_ke_spark.functions.tokenize import term_ids, tokenize
@@ -126,50 +133,93 @@ def _prune_to_snapshot(df: DataFrame, marker: dict) -> DataFrame:
     ``seg`` is a partition column, so the isin() prunes at planning time (no
     extra job, no data read from uncommitted dirs) — the Iceberg
     snapshot-read analog. Snapshot handles list only their segments' dirs
-    (``_read_snapshot_table``) and keep the filter in the plan as well."""
+    (``_Snapshot``) and keep the filter in the plan as well."""
     return df.filter(F.col("seg").isin([int(s) for s in marker["segments"]]))
 
 
-def _read_snapshot_table(
-    spark: SparkSession, index_dir: str, table: str, marker: dict
-) -> DataFrame:
-    """``table`` of the commit ``marker``, listed from that commit's own
-    ``seg=N`` dirs only (``basePath`` keeps ``seg`` a partition column;
-    delete-delta segments hold only a lexicon). Listing the whole table dir
-    would also list the dirs a concurrent ``_commit`` removes — segments
-    superseded one commit ago, orphans of crashed writers — and a dir that
-    vanishes mid-listing fails the open."""
-    from statschat_ke_spark.index.build import DELETE_SEG_BASE
+class _KeyedTable:
+    """One key-bucketed table of a snapshot (``build._write_keyed``: docs by
+    doc_id, lexicons by term_id), looked up on the driver. Per listed
+    segment it holds the bucket dirs' first keys (unsigned, ascending) and
+    each dir's files, listed once when the handle opens. Only the segments
+    passed in are listed, so a ``seg=N`` dir outside the commit (one being
+    written, or one a concurrent ``_commit`` removes) is never opened."""
 
-    root = os.path.join(index_dir, table)
-    return spark.read.option("basePath", root).parquet(
-        *(
-            os.path.join(root, f"seg={s}")
-            for s in marker["segments"]
-            if table == "lexicon" or s < DELETE_SEG_BASE
-        )
-    )
+    def __init__(self, root: str, key: str, segments):
+        self.key = key
+        self.segments = []
+        for s in segments:
+            seg_dir = os.path.join(root, f"seg={s}")
+            names = [n for n in os.listdir(seg_dir) if n.startswith("bucket=")]
+            firsts = np.array(
+                [int(n.split("=", 1)[1]) for n in names], dtype=np.int64
+            ).view(np.uint64)
+            order = np.argsort(firsts)
+            self.segments.append((
+                firsts[order],
+                [
+                    sorted(
+                        os.path.join(seg_dir, names[i], f)
+                        for f in os.listdir(os.path.join(seg_dir, names[i]))
+                        if f.endswith(".parquet")
+                    )
+                    for i in order
+                ],
+            ))
+
+    def files(self, keys) -> dict[str, list[int]]:
+        """Each file whose bucket can hold one of ``keys`` (signed int64),
+        mapped to those keys: at most one bucket dir per key and segment."""
+        keys = np.unique(np.asarray(keys, dtype=np.int64))
+        out: dict[str, list[int]] = {}
+        for firsts, files in self.segments:
+            # the last bucket starting at or below the key holds it; a key
+            # below the first listed bucket has no bucket in this segment
+            b = np.searchsorted(firsts, keys.view(np.uint64), side="right") - 1
+            for i in np.unique(b[b >= 0]):
+                for f in files[i]:
+                    out[f] = keys[b == i].tolist()
+        return out
+
+    def read(self, keys, columns: list[str]):
+        """Yield, per file of ``files(keys)``, its rows of those keys as a
+        pyarrow table: row groups whose key min/max admit none are skipped."""
+        for f, ks in self.files(keys).items():
+            yield pq.read_table(f, columns=columns, filters=[(self.key, "in", ks)])
 
 
 class _Snapshot:
-    """Reader handle for ONE committed snapshot: its three tables opened once
-    (each open lists the snapshot's segment dirs of the table and infers
-    the parquet schema — a Spark job apiece), the term_id → df probe memo
-    (0 = probed and absent; bounded by the distinct QUERIED terms, not the
-    lexicon) and the lazily loaded tombstone broadcast. A snapshot is immutable per commit uuid, so every
+    """Reader handle for ONE committed snapshot: its postings opened once
+    (the open lists the snapshot's postings dirs; the schema is the known
+    ``build.POSTINGS_SCHEMA``, so no footer-inference job), the bucket
+    listings of its driver-read tables (every segment's lexicon, delete
+    deltas included, and the data segments' docs) and the lazily loaded
+    tombstone broadcast. A snapshot is immutable per commit uuid, so every
     query against that commit shares the handle — the engine analog of the
     reference's ``lru_cache`` on make_query (cloud_llm.py:235)."""
 
     def __init__(self, spark: SparkSession, index_dir: str, marker: dict):
+        from statschat_ke_spark.index.build import DELETE_SEG_BASE, POSTINGS_SCHEMA
+
         self.index_dir = index_dir
         self.marker = marker
-        self.lexicon, self.postings, self.docs = (
-            _prune_to_snapshot(
-                _read_snapshot_table(spark, index_dir, t, marker), marker
-            )
-            for t in ("lexicon", "postings", "docs")
+        data = [s for s in marker["segments"] if s < DELETE_SEG_BASE]
+        # listed from the commit's own seg=N dirs only (``basePath`` keeps
+        # ``seg`` a partition column): listing the whole table dir would
+        # also list the dirs a concurrent ``_commit`` removes — segments
+        # superseded one commit ago, orphans of crashed writers — and a dir
+        # that vanishes mid-listing fails the open
+        root = os.path.join(index_dir, "postings")
+        self.postings = _prune_to_snapshot(
+            spark.read.schema(POSTINGS_SCHEMA).option("basePath", root).parquet(
+                *(os.path.join(root, f"seg={s}") for s in data)
+            ),
+            marker,
         )
-        self.dfs: dict[int, int] = {}
+        self.lexicon_files = _KeyedTable(
+            os.path.join(index_dir, "lexicon"), "term_id", marker["segments"]
+        )
+        self.docs_files = _KeyedTable(os.path.join(index_dir, "docs"), "doc_id", data)
         self._sc = spark.sparkContext
         self._dead_lock = threading.Lock()
         self._dead_loaded = False
@@ -184,8 +234,6 @@ class _Snapshot:
             if not self._dead_loaded:
                 files = self.marker.get("tombstone_files") or []
                 if files:
-                    import pyarrow.parquet as pq
-
                     arrs = [
                         pq.read_table(
                             os.path.join(self.index_dir, "tombstones", f),
@@ -271,33 +319,48 @@ def _probe_idf(snap: _Snapshot, ids: list[int]) -> dict[int, dict]:
     in the snapshot, in ``ids`` order, against the handle's commit (the same
     one its postings scan is pruned to).
 
-    The lexicon is segmented (one subdir per incremental segment); global df
-    is the SUM over segments. Terms not yet in the handle's memo are probed
-    in ONE narrow job — a term_id-pushed-down scan of the cached lexicon
-    returning ≤ |ids| × n_segments rows — and summed here."""
-    missing = [i for i in ids if i not in snap.dfs]
-    if missing:
-        # Collect FIRST, commit to the memo only on success: pre-seeding
-        # zeros before the Spark action would, on a transient probe failure,
-        # leave df=0 cached for this snapshot and silently drop those terms
-        # from every subsequent query's scoring.
-        probed: dict[int, int] = {}
-        for r in (
-            snap.lexicon.filter(F.col("term_id").isin(missing))
-            .select("term_id", "df")
-            .collect()
-        ):
-            probed[int(r.term_id)] = probed.get(int(r.term_id), 0) + int(r.df)
-        for i in missing:
-            snap.dfs[i] = probed.get(i, 0)
+    The lexicon is segmented (one per data segment, plus the delete delta's
+    negated df); global df is the SUM over segments. The probe reads
+    ``(term_id, df)`` with pyarrow from the bucket files that can hold
+    ``ids`` — at most |ids| per segment, each read pruned to the row groups
+    whose term_id range admits them — and sums it here: no Spark job, and no
+    memo (a probe costs about a millisecond)."""
+    dfs: dict[int, int] = {}
+    for t in snap.lexicon_files.read(ids, ["term_id", "df"]):
+        for tid, df in zip(t.column("term_id").to_pylist(), t.column("df").to_pylist()):
+            dfs[tid] = dfs.get(tid, 0) + df
     n_docs = int(snap.marker["n_docs"])
     out = {}
     for tid in ids:
-        df = snap.dfs[tid]
+        df = dfs.get(tid, 0)
         if df > 0:
             idf = math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
             out[tid] = {"idf": idf, "df": df}
     return out
+
+
+def _with_urls(snap: _Snapshot, rows: list) -> pa.Table:
+    """The ranked ``rows`` (doc_id, score) with their urls, in rank order,
+    read with pyarrow from the data segments' docs: at most |rows| bucket
+    files per segment. Every ranked doc has a docs row; a missing one means
+    a damaged docs table, which fails loudly rather than returning fewer
+    than k rows."""
+    ids = [int(r.doc_id) for r in rows]
+    urls: dict[int, str] = {}
+    for t in snap.docs_files.read(ids, ["doc_id", "url"]):
+        urls.update(zip(t.column("doc_id").to_pylist(), t.column("url").to_pylist()))
+    missing = [d for d in ids if d not in urls]
+    if missing:
+        raise RuntimeError(
+            f"index at {snap.index_dir!r}: ranked doc_id(s) {missing} have no "
+            "docs row in the committed segments — the docs table is damaged; "
+            "rebuild the index (merge_index)"
+        )
+    return pa.table({
+        "doc_id": pa.array(ids, pa.int64()),
+        "score": pa.array([float(r.score) for r in rows], pa.float64()),
+        "url": pa.array([urls[d] for d in ids], pa.string()),
+    })
 
 
 def _postings(snap: _Snapshot, ids: list[int], n_groups: int) -> DataFrame:
@@ -388,8 +451,6 @@ def _scored(
     idf_all = {t: v["idf"] for t, v in lex.items()}
     grouped = _postings(snap, sorted(lex), n_groups)
     if n_qb > 1:
-        import pyarrow as pa
-
         terms, qbs = zip(
             *sorted(
                 {
@@ -426,7 +487,9 @@ def topk(
     with_url: bool = False,
 ) -> DataFrame:
     """Top-k (doc_id, score[, url]) for a free-text query: the shared WAND
-    plan (``_scored``) for one query, then a global top-k."""
+    plan (``_scored``) for one query, then a global top-k. With ``with_url``
+    the ≤ k rows are collected here and the result is a local frame with
+    their urls (``_with_urls``)."""
     # ONE snapshot read serves the whole query: format check, segment
     # pruning, n_docs (idf) and avgdl all come from the same commit marker,
     # and every table is read through that commit's handle, so an append
@@ -440,14 +503,8 @@ def topk(
         .select("doc_id", "score")
     )
     if with_url:
-        # ≤k result rows: broadcast them as the build side of an inner join
-        # against the big docs table (every result id exists in docs)
-        ranked = (
-            snap.docs.select("doc_id", "url")
-            .join(F.broadcast(ranked), "doc_id", "inner")
-            .select("doc_id", "score", "url")
-            .orderBy(F.desc("score"), doc_u_asc())
-        )
+        # a local frame over an Arrow table: collecting it runs no job
+        return spark.createDataFrame(_with_urls(snap, ranked.collect()))
     return ranked
 
 

@@ -609,6 +609,7 @@ def test_reader_ignores_uncommitted_segment(spark, single_shot, tmp_path_factory
     every doc twice under doubled df. The handle does not even list it."""
     import shutil
 
+    from statschat_ke_spark.functions.tokenize import term_ids, tokenize
     from statschat_ke_spark.index.query import _close_snapshots, _snapshot, topk
 
     d, _ = single_shot
@@ -635,8 +636,12 @@ def test_reader_ignores_uncommitted_segment(spark, single_shot, tmp_path_factory
     # the handle lists only the committed segments' dirs, so a dir that
     # _commit removes concurrently can never fail the open
     snap = _snapshot(spark, d2, check_index_format(d2))
-    for table in (snap.postings, snap.lexicon, snap.docs):
-        files = table.inputFiles()
+    tids = term_ids(tokenize(q))
+    for files in (
+        snap.postings.inputFiles(),
+        snap.lexicon_files.files(tids),
+        snap.docs_files.files(before.doc_id.tolist()),
+    ):
         assert files and not [f for f in files if "seg=99" in f], files
 
 
@@ -926,7 +931,8 @@ def _docs(spark, pdf):
 
 
 def test_snapshot_handle_reuse_and_invalidation(spark, tmp_path_factory, monkeypatch):
-    """Each commit's tables are opened once: a repeat topk on an unchanged
+    """Each commit's postings are opened once (lexicon and docs are read
+    with pyarrow, never opened in Spark): a repeat topk on an unchanged
     snapshot opens no table, and each new commit of the same dir in the same
     process — a segment append, then a delete — makes the next topk open
     fresh tables whose results equal a fresh build of the same docs."""
@@ -963,12 +969,12 @@ def test_snapshot_handle_reuse_and_invalidation(spark, tmp_path_factory, monkeyp
     d = str(root / "idx")
     build_index(spark, _docs(spark, pdf.iloc[:200]), d)
     q = "county report statistics"
-    assert opens(d, q) == ["docs", "lexicon", "postings"]
+    assert opens(d, q) == ["postings"]
     assert opens(d, q) == []  # unchanged snapshot: the handle is reused
     assert opens(d, "maize production") == []  # probe misses reuse it too
 
     update_index(spark, _docs(spark, pdf.iloc[200:]), d)
-    assert opens(d, q) == ["docs", "lexicon", "postings"]
+    assert opens(d, q) == ["postings"]
     assert opens(d, q) == []
     ref = str(root / "ref_update")
     build_index(spark, _docs(spark, pdf), ref)
@@ -976,7 +982,7 @@ def test_snapshot_handle_reuse_and_invalidation(spark, tmp_path_factory, monkeyp
 
     victims = sorted(pdf.url)[::10]
     assert delete_docs(spark, d, victims).n_deleted > 0
-    assert opens(d, q) == ["docs", "lexicon", "postings"]
+    assert opens(d, q) == ["postings"]
     ref = str(root / "ref_delete")
     build_index(spark, _docs(spark, pdf[~pdf.url.isin(victims)]), ref)
     assert_same(d, ref)

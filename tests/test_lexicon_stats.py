@@ -158,12 +158,12 @@ def test_term_in_every_doc(spark, corpus_pdf, tmp_path, monkeypatch):
 
 
 def _term_id_ranges(path):
-    """Per parquet file under ``path``: its row groups' (min, max) term_id
-    from the footer statistics."""
+    """Per parquet file under ``path`` (a lexicon's files are in its bucket
+    dirs): its row groups' (min, max) term_id from the footer statistics."""
     import pyarrow.parquet as pq
 
     out = {}
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+    for f in sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)):
         md = pq.ParquetFile(f).metadata
         col = md.schema.names.index("term_id")
         out[f] = [

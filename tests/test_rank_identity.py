@@ -30,9 +30,9 @@ def test_rank_identity_all_queries(spark, index_dir, oracle, queries):
 
 
 def test_negative_query_empty(spark, index_dir):
-    """An all-OOV question collects nothing, and once the probe memo knows
-    its terms it runs no task: the empty result frame is built on the JVM
-    side, not by a Python stage."""
+    """An all-OOV question collects nothing and runs no task: the probe
+    reads the lexicon on the driver, and the empty result frame is built on
+    the JVM side, not by a Python stage."""
     q = "xqzvk nonexistenttermxyz"
     got = topk(spark, index_dir, q, 10).toPandas()
     assert len(got) == 0

@@ -111,6 +111,26 @@ def test_html_escape_py_parity(spark):
         assert html_escape_py(c) == str(markupsafe.escape(c))
 
 
+def test_round_py_parity(spark):
+    """Driver-side twin == ``F.round(x, 2)`` on random scores and on .xx5
+    ties, where Python's half-even ``round`` differs from Spark's HALF_UP."""
+    import numpy as np
+
+    from statschat_ke_spark.functions.refops import round_py
+
+    rng = np.random.default_rng(7)
+    xs = np.concatenate([
+        rng.uniform(0, 40, 3000),
+        -rng.uniform(0, 5, 500),
+        np.arange(5, 40000, 10) / 1000,  # 0.005, 0.015, ... 39.995
+        [0.0, 0.125, 2.675, 1e-9],
+    ]).tolist()
+    df = spark.createDataFrame([(x,) for x in xs], "x double")
+    got = df.select("x", F.round("x", 2).alias("r")).collect()
+    assert [round_py(r.x) for r in got] == [r.r for r in got]
+    assert any(round(r.x, 2) != r.r for r in got)
+
+
 def test_trim_context(spark):
     assert one(spark, trim_context(F.col("t")), t="a b c d") == "b c"
     assert one(spark, trim_context(F.col("t")), t="a b") == ""
