@@ -1079,15 +1079,12 @@ def _write_keyed(df: DataFrame, path: str, key: str, n_files: int) -> None:
     bucket is one file, sorted by key in ROW_GROUP_BYTES row groups, so a
     lookup reads only the row groups whose key min/max admit its keys (keys
     of one bucket share their sign bit, so signed and unsigned order agree
-    inside a file)."""
+    inside a file). Bucket i is written by write task i alone."""
     b = (max(1, n_files) - 1).bit_length()
-    first = (
-        F.shiftleft(F.shiftrightunsigned(F.col(key), 64 - b), 64 - b)
-        if b else F.lit(0).cast("long")
-    )
+    index = F.shiftrightunsigned(F.col(key), 64 - b) if b else F.lit(0).cast("long")
     (
-        df.withColumn("bucket", first)
-        .repartition(1 << b, "bucket")
+        df.withColumn("bucket", F.shiftleft(index, 64 - b))
+        .repartitionById(1 << b, index.cast("int"))
         .sortWithinPartitions("bucket", key)
         .write.mode("overwrite")
         .partitionBy("bucket")

@@ -88,15 +88,19 @@ def test_keyed_tables_are_bucketed_and_key_sorted(bucketed):
     for table, key, seg_dir in dirs:
         buckets = sorted(x for x in os.listdir(seg_dir) if x.startswith("bucket="))
         assert 1 < len(buckets) <= BUCKETS, seg_dir
+        parts = set()
         for name in buckets:
             first = int(name.split("=", 1)[1]) & ((1 << 64) - 1)
             [f] = [x for x in os.listdir(os.path.join(seg_dir, name)) if x.endswith(".parquet")]
+            parts.add(int(f.split("-")[1]))  # the write task: part-<task>-...
             keys = pq.read_table(os.path.join(seg_dir, name, f), columns=[key]).column(key)
             keys = keys.to_numpy()
             assert len(keys) and (np.diff(keys) > 0).all(), (seg_dir, name)
             # the bucket is the top log2(BUCKETS) bits of the unsigned key
             shift = np.uint64(64 - (BUCKETS - 1).bit_length())
             assert set((keys.view(np.uint64) >> shift).tolist()) == {first >> int(shift)}
+        # one write task per bucket
+        assert len(parts) == len(buckets) == BUCKETS, (seg_dir, parts)
 
 
 def test_lookups_open_only_their_keys_files(spark, bucketed, tmp_path, monkeypatch):
