@@ -18,43 +18,47 @@ Phase A (stage per input chunk, checkpoint-resumable):
     row leaves no dir and no lineage row.
 
 Phase B (global merge) — ONE heavy pass over the (doc, term) pairs:
+    staged --> docs (doc_id, url, doclen), key-bucketed and sorted by
+          unsigned doc_id: a doc's ordinal is its row position there
     staged --explode--> pairs
-          --repartition(P, term_id, slice)  [bucketed term shuffle]-->
-          --sortWithinPartitions(term_id, slice, doc_sort_key)-->
-          --mapInArrow pack--> postings blocks (delta-gap + vbyte, ≤128
-            docs, per-block max tf / min doclen)
+          --repartitionById(doc range = top bits of the unsigned doc_id)-->
+          --sortWithinPartitions(term_id, doc_sort_key)-->
+          --mapInArrow pack--> postings blocks (delta-gap + vbyte over
+            ordinals, ≤128 docs, per-block max tf / min doclen)
     staged --explode--> groupBy(term) [|vocab| rows]--> lexicon (df, cf)
     postings --groupBy(pid) collect [≤ P rows]--> stats.json metrics.
-The three writes (docs, postings, lexicon) are independent DAGs over the
-staged table and run concurrently.
+The docs write comes first (the pack reads ordinals from it); the lexicon
+is an independent DAG and runs concurrently with both.
 
-Partitioning note: the term shuffle is a STATIC bucket partition
-(hash of (term_id, slice)) rather than ``repartitionByRange`` — Spark's range
-partitioner samples its child, which would execute the full explode twice per
-build. term_id is already a uniform hash of the term, so hash buckets are
-balance-equivalent to ranges. This is the Iceberg ``bucket(term_id)``
-layout. The skew story is unchanged (slices, below).
+Partitioning note: the pair shuffle is a STATIC doc-range partition (the
+top bits of the unsigned doc_id, ``repartitionById``) rather than
+``repartitionByRange``, whose range partitioner samples its child and would
+execute the full explode twice per build. doc_id is a uniform hash of the
+url, so each of the P_pack tasks gets about 1/P_pack of the docs, and so of
+every term's postings: a hot term ("the" at web scale) is spread over every
+pack task, and each task maps its docs to ordinals from the docs rows of
+its own range only.
 
 Scan pruning: within each file postings rows are sorted by (term_id, slice,
 doc), in row groups of ROW_GROUP_BYTES from ROW_GROUP_MIN_DOCS docs per
 segment up, so each row group covers a narrow term_id range. The query's
 pushed-down ``term_id IN (...)`` filter skips every row group whose min/max
 stats admit none of its terms: pruning happens per row group, never per file
-(every pack file spans the whole hash range) and never per row.
+(every pack file, a doc range, spans the whole term range) and never per
+row.
 
 Keyed tables: docs (keyed by doc_id) and every lexicon (by term_id, a delete
-delta's too) are looked up by key on the driver, so ``_write_keyed`` lays
-them out as hive bucket dirs: bucket = the top bits of the unsigned key, one
-key-sorted file per bucket in ROW_GROUP_BYTES row groups. A lookup opens the
-bucket dir its key falls in and reads the row groups whose min/max admit it.
+delta's too) are looked up by key, so ``_write_keyed`` lays them out as hive
+bucket dirs: bucket = the top bits of the unsigned key, one key-sorted file
+per bucket in ROW_GROUP_BYTES row groups. A lookup opens the bucket dir its
+key falls in and reads the row groups whose min/max admit it.
 
-Skew handling: every posting row is keyed by (term_id, slice) where
-slice = top SLICE_BITS bits of the unsigned doc_id. A hot term ("the" at web
-scale) therefore fans out over up to 2^SLICE_BITS ranges that the range
-partitioner can place on different reducers — doc-range salting whose
-sub-lists are *disjoint and ordered*, so merged posting lists stay globally
-doc_id-sorted and block-max WAND can operate per slice (every doc's postings
-for all terms share a slice, making per-slice top-k exact).
+Slices: every posting row is keyed by (term_id, slice) where slice = the
+top slice_bits bits of the unsigned doc_id (derive_slice_bits), the unit of
+a WAND group. Slices are disjoint doc ranges, and ordinals follow unsigned
+doc_id order, so a slice is an ordinal range and a term's blocks stay
+ordinal-sorted; every doc's postings for all terms share a slice, so
+per-slice top-k is exact.
 
 Impact upper bounds are stored idf-free (max of the tf/doclen factor);
 idf multiplies in at query time, so posting blocks never need rebuilding
@@ -79,19 +83,25 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from statschat_ke_spark.functions.extract import extract_text_udf
 from statschat_ke_spark.functions.tokenize import TOKEN_RE
 from statschat_ke_spark.index.codec import BLOCK, vbyte_encode_chunks
-from statschat_ke_spark.index.query import check_index_format, read_commit
+from statschat_ke_spark.index.query import (
+    _DocOrdinals,
+    _KeyedTable,
+    check_index_format,
+    read_commit,
+)
 
 # FLOOR for the per-segment doc-range slice count (2^SLICE_BITS slices).
 # The actual slice_bits of a segment is derived from its own doc count at
 # build time (derive_slice_bits below) so a web-scale build never ships the
 # sandbox default: slices bound a hot term's per-slice sub-list — the unit
-# one pack reducer sorts and one WAND task scans — so the count must grow
-# with the corpus. Queries treat `slice` as opaque data (grouped by pmod),
-# so segments with different slice_bits coexist exactly; the value used is
-# reported in the build's stats.json metrics.
+# one WAND group scans — so the count must grow with the corpus. Queries
+# treat `slice` as opaque data (grouped by pmod), so segments with different
+# slice_bits coexist exactly; the value used is reported in the build's
+# stats.json metrics.
 SLICE_BITS = 6
 # Target upper bound on docs per slice: a term occurring in EVERY doc still
-# packs/scans at most this many postings per (term_id, slice) shuffle key.
+# has at most this many postings per (term_id, slice). (The sweep below was
+# measured when (term_id, slice) was also the pack shuffle key.)
 # Refit from BENCH_SKEW.json (9.0M docs / 1.1B postings, same corpus + P_pack,
 # only slice_bits varied): the old 2^20 target derived 6 bits there, the worst
 # measured level (skew 1.468, build 1116 s); 8 bits was the sweep's optimum
@@ -123,7 +133,9 @@ def derive_slice_bits(n_docs: int) -> int:
 # compaction wrote segment 0, which a chunk-0 append would overwrite.
 # 6: docs and lexicon segments are key-bucketed dirs (_write_keyed), which
 # the driver-side lookups list; a format-5 segment has no bucket dir.
-INDEX_FORMAT = 6
+# 7: posting blocks gap-code each doc's ordinal in its segment's docs table
+# (query._DocOrdinals), not its doc_id; a format-6 block holds doc_ids.
+INDEX_FORMAT = 7
 LONG_MIN = -(2**63)
 # Arrow batch rows for the pack stage. Pack input rows are 28 fixed-width
 # bytes, so 128k rows ≈ 3.6 MB per batch; the 10k default caused a
@@ -157,14 +169,17 @@ MAX_SEGMENTS = 8
 # patch it.
 ROW_GROUP_BYTES = 1 << 20
 # Postings of a segment with fewer docs keep one row group per file. Below
-# it the doc-id columns (first_doc, last_doc, doc_ids: a doc's id repeats in
-# the one-doc blocks of its rare terms) stay dictionary-encoded, and since
-# every row group holds some term of nearly every doc, each row group
-# repeats a dictionary of the segment's doc ids. Postings bytes at 1 MB row
-# groups vs one per file, same rows: +20% at 11k docs, +16% at 40k, +14% at
-# 55k; +0.4% at 70k, +0.3% at 90k and +0.05% at 180k, where that dictionary
-# outgrows parquet's 1 MB dictionary page and the writer falls back to plain
-# encoding. Read at call time, so a test can patch it.
+# it the doc columns (first_doc, last_doc, doc_ids: a doc's ordinal repeats
+# in the one-doc blocks of its rare terms) stay dictionary-encoded, and
+# since every row group holds some term of nearly every doc, each row group
+# repeats a dictionary of the segment's ordinals. Postings bytes at 1 MB row
+# groups vs one per file, same rows, ordinal blocks (INDEX_FORMAT 7): +9.4%
+# at 11k docs (10.39 vs 9.50 MB) and +13.4% at 40k (32.76 vs 28.89 MB),
+# most of it first_doc/last_doc; with doc_id blocks (format 6) it was +20%
+# at 11k, +16% at 40k, +14% at 55k, +0.4% at 70k, +0.3% at 90k and +0.05%
+# at 180k, where the dictionary outgrew parquet's 1 MB dictionary page and
+# the writer fell back to plain encoding. Read at call time, so a test can
+# patch it.
 ROW_GROUP_MIN_DOCS = 70_000
 # Data segments take ids below DELETE_SEG_BASE, lexicon-delta segments
 # (delete_docs) from it up; a new id is 1 + the largest of its kind on disk
@@ -257,13 +272,14 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
-_PACK_COLS = ("term_id", "doc_id", "tf", "doclen")
+_PACK_COLS = ("term_id", "doc_id", "ord", "tf", "doclen")
 
 
 def _pack_body(cols: dict, pid: int, bits: int):
-    """Fully-vectorized block packer: sorted (term_id, doc_sort) rows
-    → posting-block arrays. One numpy pass — group/block boundaries via
-    flatnonzero/reduceat, codec via a single chunked vbyte encode per column.
+    """Fully-vectorized block packer: sorted (term_id, doc_sort) rows, each
+    with its doc's ordinal ``ord`` → posting-block arrays. One numpy pass —
+    group/block boundaries via flatnonzero/reduceat, codec via a single
+    chunked vbyte encode per column.
     ``cols`` holds plain numpy arrays; returns a pyarrow RecordBatch. No
     pandas and no per-row Python objects anywhere (the pandas per-group
     version was ~50× slower; even batchwise pandas cost an Arrow→object
@@ -276,9 +292,9 @@ def _pack_body(cols: dict, pid: int, bits: int):
     import pyarrow as pa
 
     term = cols["term_id"]
-    doc = cols["doc_id"]
-    doc_u = doc.view(np.uint64)
-    slc = (doc_u >> np.uint64(64 - bits)).astype(np.int64)
+    ords = cols["ord"]
+    ords_u = ords.view(np.uint64)
+    slc = (cols["doc_id"].view(np.uint64) >> np.uint64(64 - bits)).astype(np.int64)
     tf = cols["tf"].astype(np.int64)
     dl = cols["doclen"].astype(np.int64)
     n = len(term)
@@ -296,11 +312,13 @@ def _pack_body(cols: dict, pid: int, bits: int):
     block_max_tf = np.maximum.reduceat(tf, bstart)
     block_min_dl = np.minimum.reduceat(dl, bstart)
 
-    # delta-gap doc ids: absolute at each block start, gap within a block
+    # delta-gap ordinals: absolute at each block start, gap within a block
+    # (ordinal order is unsigned doc order, so gaps are >= 0; a url staged
+    # twice has one ordinal, gap 0, as its doc_id had)
     gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = doc_u[0]
-    gaps[1:] = doc_u[1:] - doc_u[:-1]
-    gaps[bstart] = doc_u[bstart]
+    gaps[0] = ords_u[0]
+    gaps[1:] = ords_u[1:] - ords_u[:-1]
+    gaps[bstart] = ords_u[bstart]
 
     enc_ids = vbyte_encode_chunks(gaps, bstart)
     enc_tfs = vbyte_encode_chunks(tf.astype(np.uint64) - np.uint64(1), bstart)
@@ -312,8 +330,8 @@ def _pack_body(cols: dict, pid: int, bits: int):
             pa.array(slc[bstart].astype(np.int32), type=pa.int32()),
             pa.array((pos_in_group[bstart] // BLOCK).astype(np.int32), type=pa.int32()),
             pa.array((bend - bstart).astype(np.int32), type=pa.int32()),
-            pa.array(doc[bstart], type=pa.int64()),
-            pa.array(doc[bend - 1], type=pa.int64()),
+            pa.array(ords[bstart], type=pa.int64()),
+            pa.array(ords[bend - 1], type=pa.int64()),
             pa.array(enc_ids, type=pa.binary()),
             pa.array(enc_tfs, type=pa.binary()),
             pa.array(enc_dls, type=pa.binary()),
@@ -325,18 +343,47 @@ def _pack_body(cols: dict, pid: int, bits: int):
     )
 
 
-def _pack_groups(bits: int):
-    """mapInArrow packer: sorted (term_id, slice, doc_sort) rows → blocks.
+def _pack_groups(bits: int, range_bits: int, doc_ords: _DocOrdinals):
+    """mapInArrow packer: rows sorted by (term_id, unsigned doc) → blocks.
 
     Arrow-native: input RecordBatch columns view as numpy zero-copy (all
     fixed-width numerics — the term string never travels through this path).
     Handles Arrow batch boundaries splitting a (term_id, slice) group by
     carrying the trailing group's arrays between batches.
+
+    A task's rows are one doc range, the top ``range_bits`` bits of the
+    unsigned doc_id (the pack shuffle's key). Its docs' ordinals come from
+    the docs rows of that range alone (``doc_ords``, the segment's
+    ``query._DocOrdinals``: only the row groups whose doc_id range meets
+    it), read once per range: a searchsorted-left, so a url staged twice
+    maps to its first row, and a doc_id with no docs row raises.
     """
+    shift = 64 - range_bits
+
+    def ordinals(doc_u: np.ndarray, ranges: dict) -> np.ndarray:
+        pre = doc_u >> np.uint64(shift)
+        out = np.empty(len(doc_u), dtype=np.int64)
+        for p in [int(pre[0])] if (pre == pre[0]).all() else np.unique(pre).tolist():
+            if p not in ranges:
+                lo = p << shift
+                hi = lo + (1 << shift) - 1
+                # as signed int64: the range keeps one sign bit (range_bits >= 1)
+                ranges[p] = doc_ords.rows(*(x - (1 << 64) if x >> 63 else x for x in (lo, hi)))
+            ids, ords = ranges[p]
+            m = pre == p
+            pos = np.minimum(np.searchsorted(ids, doc_u[m]), max(len(ids) - 1, 0))
+            if not len(ids) or not np.array_equal(ids[pos], doc_u[m]):
+                raise RuntimeError(
+                    "segment build: a posting's doc_id has no row in the "
+                    "segment's docs table — the docs write is incomplete"
+                )
+            out[m] = ords[pos]
+        return out
 
     def pack(batches):
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
         leftover: dict | None = None
+        ranges: dict = {}
 
         for rb in batches:
             if rb.num_rows == 0:
@@ -345,6 +392,7 @@ def _pack_groups(bits: int):
                 name: rb.column(i).to_numpy(zero_copy_only=False)
                 for i, name in enumerate(rb.schema.names)
             }
+            cols["ord"] = ordinals(cols["doc_id"].view(np.uint64), ranges)
             if leftover is not None:
                 cols = {
                     k: np.concatenate([leftover[k], cols[k]]) for k in _PACK_COLS
@@ -1045,6 +1093,7 @@ def delete_docs(
             segments=[s for s in old["segments"] if s < DELETE_SEG_BASE] + [seg],
             covered_chunks=old["covered_chunks"],
             tombstone_files=old["tombstone_files"] + [fname],
+            doc_rows=old["doc_rows"],
         )
         return DeleteResult(
             index_dir=index_dir,
@@ -1072,16 +1121,19 @@ def _term_stats(staged: DataFrame) -> DataFrame:
 def _write_keyed(df: DataFrame, path: str, key: str, n_files: int) -> None:
     """The one write of a table looked up by ``key`` (a segment's docs by
     doc_id, a lexicon or a delete delta by term_id): ``n_files`` rounded up
-    to a power of two, 2^b, hive bucket dirs. The bucket of a row is the top
-    b bits of its unsigned key, and its dir is named by the bucket's first
-    key as a signed int64 (``bucket=<first key>``), so a reader maps a key to
-    its dir from the names alone: no b, and no dir for an empty bucket. Each
-    bucket is one file, sorted by key in ROW_GROUP_BYTES row groups, so a
-    lookup reads only the row groups whose key min/max admit its keys (keys
-    of one bucket share their sign bit, so signed and unsigned order agree
-    inside a file). Bucket i is written by write task i alone."""
-    b = (max(1, n_files) - 1).bit_length()
-    index = F.shiftrightunsigned(F.col(key), 64 - b) if b else F.lit(0).cast("long")
+    to a power of two, 2^b with b >= 1, hive bucket dirs. The bucket of a
+    row is the top b bits of its unsigned key, and its dir is named by the
+    bucket's first key as a signed int64 (``bucket=<first key>``), so a
+    reader maps a key to its dir from the names alone: no b, and no dir for
+    an empty bucket. Each bucket is one file, sorted by key in
+    ROW_GROUP_BYTES row groups, so a lookup reads only the row groups whose
+    key min/max admit its keys. b >= 1, so the keys of one bucket share
+    their sign bit: signed and unsigned order agree inside a file, and a
+    segment's docs files read in unsigned bucket order are its docs in
+    unsigned doc_id order, the order that numbers them
+    (``query._DocOrdinals``). Bucket i is written by write task i alone."""
+    b = max(1, (max(1, n_files) - 1).bit_length())
+    index = F.shiftrightunsigned(F.col(key), 64 - b)
     (
         df.withColumn("bucket", F.shiftleft(index, 64 - b))
         .repartitionById(1 << b, index.cast("int"))
@@ -1144,6 +1196,9 @@ def _build_segment(
     # the thread count just queue as waves of right-sized tasks.
     est_pairs = max(1.0, dl_sum * 0.7)  # ≈ Σ distinct terms per doc
     P_pack = max(4, min(4096, int(est_pairs // 1_500_000) + 1))
+    # pack partitions are doc ranges: the top range_bits bits of the
+    # unsigned doc_id, so P_pack is rounded up to a power of two
+    range_bits = (P_pack - 1).bit_length()
     P_docs = max(1, min(2048, n_docs // 2_000_000 + 1))
     # slice_bits derives from THIS segment's doc count: per-slice WAND and
     # the pack shuffle only ever see one segment's sub-lists, so a small
@@ -1161,41 +1216,38 @@ def _build_segment(
 
     # ---- postings: the ONE heavy pass over the segment's (doc, term) pairs
     # pairs stream out of the columnar staged table (explode of parallel
-    # primitive arrays — never materialized to storage); one hash shuffle on
-    # (term_id, slice) co-locates each term's doc-range slices WITHOUT the
-    # extra range-sampling scan repartitionByRange would cost; the
-    # within-partition sort restores (term_id, slice, unsigned-doc) order, so
-    # posting bytes are identical to a range-partitioned layout, and (from
-    # ROW_GROUP_MIN_DOCS docs up) in ROW_GROUP_BYTES row groups each file's
-    # row-group min/max stats on the sorted term_id prune query scans to the
-    # row groups of its terms.
+    # primitive arrays — never materialized to storage); one shuffle by doc
+    # range (top range_bits bits of the unsigned doc_id) sends each pack task
+    # 1/P_pack of the docs, so of every term's postings, a hot term's too;
+    # the within-partition sort gives (term_id, slice, unsigned-doc) order,
+    # and each task maps its docs to ordinals from the docs rows of its
+    # range. From ROW_GROUP_MIN_DOCS docs up, files are written in
+    # ROW_GROUP_BYTES row groups whose min/max stats on the sorted term_id
+    # prune query scans to the row groups of its terms.
     pairs = staged.select(
         "doc_id", "doclen", F.explode(F.arrays_zip("terms", "tfs")).alias("e")
     ).select(
         "doc_id", "doclen", F.col("e.terms").alias("term"), F.col("e.tfs").alias("tf")
     )
     doc_sort = F.col("doc_id").bitwiseXOR(F.lit(LONG_MIN))  # unsigned order
-    # slice participates as a shuffle-key EXPRESSION only — it never
-    # materializes as a column (4 fewer bytes per pair row; the packer
-    # recomputes it from doc_id). Sorting (term_id, unsigned doc) already
-    # yields (term_id, slice, doc) order because slices are doc prefixes.
-    slice_key = F.shiftrightunsigned(F.col("doc_id"), 64 - slice_bits)
-    # numeric-only columns cross the Arrow boundary: zero-copy into numpy,
-    # no Python string materialization in the packer workers
-    postings = (
-        pairs.select(
-            F.xxhash64("term").alias("term_id"),
-            "doc_id",
-            "tf",
-            "doclen",
-        )
-        .repartition(P_pack, F.col("term_id"), slice_key)
-        .sortWithinPartitions("term_id", doc_sort)
-        .mapInArrow(_pack_groups(slice_bits), schema=POSTINGS_SCHEMA)
-    )
+    # slice never materializes as a column (4 fewer bytes per pair row; the
+    # packer computes it from doc_id). Sorting (term_id, unsigned doc)
+    # already yields (term_id, slice, doc) order because slices are doc
+    # prefixes.
+    doc_range = F.shiftrightunsigned(F.col("doc_id"), 64 - range_bits)
 
-    def _write_postings() -> list:
+    def _write_postings(doc_ords: _DocOrdinals) -> list:
         tpp = time.time()
+        # numeric-only columns cross the Arrow boundary: zero-copy into
+        # numpy, no Python string materialization in the packer workers
+        postings = (
+            pairs.select(F.xxhash64("term").alias("term_id"), "doc_id", "tf", "doclen")
+            .repartitionById(1 << range_bits, doc_range.cast("int"))
+            .sortWithinPartitions("term_id", doc_sort)
+            .mapInArrow(
+                _pack_groups(slice_bits, range_bits, doc_ords), schema=POSTINGS_SCHEMA
+            )
+        )
         path = os.path.join(index_dir, "postings", seg_sub)
         writer = postings.write.mode("overwrite")
         if n_docs >= ROW_GROUP_MIN_DOCS:
@@ -1238,21 +1290,25 @@ def _build_segment(
         timings["lexicon"] = time.time() - tpl
         return n_terms
 
-    # the three writes are independent DAGs — submit them concurrently so the
-    # small docs and lexicon jobs fill scheduler slots the big pack shuffle
+    # the postings need the docs (their ordinals are docs row positions), so
+    # docs are written first; the lexicon is an independent DAG and runs
+    # concurrently with both, filling scheduler slots the pack shuffle
     # leaves idle (matters most at low parallelism; on a cluster this is
     # plain multi-job scheduling)
     _BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old_batch = spark.conf.get(_BATCH_KEY, None)
     spark.conf.set(_BATCH_KEY, str(PACK_ARROW_BATCH))
     try:
-        with ThreadPoolExecutor(3) as ex:
-            f_docs = ex.submit(_write_docs)
-            f_post = ex.submit(_write_postings)
+        with ThreadPoolExecutor(1) as ex:
             f_lex = ex.submit(_write_segment_lexicon)
-            per_pid = f_post.result()
+            _write_docs()
+            # the new docs files' footers, read once here: each pack task
+            # reads only the row groups of its own doc range
+            [(_, files)] = _KeyedTable(
+                os.path.join(index_dir, "docs"), "doc_id", [seg]
+            ).segments
+            per_pid = _write_postings(_DocOrdinals(files, n_docs))
             n_terms = f_lex.result()
-            f_docs.result()
     finally:
         if old_batch is not None:
             spark.conf.set(_BATCH_KEY, old_batch)
@@ -1284,6 +1340,7 @@ def _commit(
     segments: list[int],
     covered_chunks: list[int] | set[int],
     tombstone_files: list[str],
+    doc_rows: dict,
 ) -> None:
     """Publish one snapshot — the one commit step of every writer (build,
     append, delete, compaction). The atomic rename of _SUCCESS.json is the
@@ -1302,6 +1359,10 @@ def _commit(
     - ``tombstone_files``: this snapshot's delete files under tombstones/
       (Iceberg positional-delete analog); readers mask them, merges exclude
       them.
+    - ``doc_rows``: each data segment's docs row count (keyed by the id as
+      a string), its ordinal count: a reader checks the segment's docs
+      files against it (``query._DocOrdinals``), since a lost docs row
+      would map every later ordinal to another doc.
     - ``version``: unique per commit — the query's snapshot handle keys on it,
       not on mtime, which back-to-back appends can share.
 
@@ -1322,6 +1383,7 @@ def _commit(
             "segments": sorted(int(s) for s in segments),
             "covered_chunks": sorted(int(c) for c in covered_chunks),
             "tombstone_files": list(tombstone_files),
+            "doc_rows": {str(s): int(n) for s, n in doc_rows.items()},
         },
     )
     for seg_dir, s in _seg_dirs(index_dir):
@@ -1409,12 +1471,13 @@ def _write_segment(
         tomb = _tombstone_df(spark, index_dir, tomb_files)
         if tomb is not None:
             staged = staged.join(F.broadcast(tomb), "doc_id", "left_anti")
-        base_n, base_dl, segments, covered = 0, 0.0, [], []
+        base_n, base_dl, segments, covered, doc_rows = 0, 0.0, [], [], {}
     else:
         tomb_files = base["tombstone_files"]
         base_n = int(base["n_docs"])
         base_dl = base_n * float(base["avgdl"])
         segments, covered = base["segments"], base["covered_chunks"]
+        doc_rows = base["doc_rows"]
 
     srow = staged.agg(
         F.count("*").alias("n"), F.sum("doclen").alias("dl_sum")
@@ -1432,6 +1495,7 @@ def _write_segment(
             n_docs=n_seg, dl_sum=dl_seg, timings=timings,
         )
         segments = segments + [seg]
+        doc_rows = {**doc_rows, str(seg): n_seg}
     _commit(
         index_dir,
         n_docs=n_docs,
@@ -1439,6 +1503,7 @@ def _write_segment(
         segments=segments,
         covered_chunks=set(covered) | set(chunks),
         tombstone_files=tomb_files,
+        doc_rows=doc_rows,
     )
     wall = time.time() - t0
     if seg_stats is not None:

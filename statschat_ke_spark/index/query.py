@@ -29,7 +29,10 @@ inverted-index analog of an index-nested-loop join (SURVEY.md §2.3 J5):
    top-k and emits each query's local top-k; topk then takes the global
    top-k (TakeOrderedAndProject), topk_batch a ranked window per query.
    Exact because a doc's postings for every term share its slice
-   (slice = f(doc_id)).
+   (slice = f(doc_id)). Blocks hold each doc's ordinal in its segment's
+   docs table (``_DocOrdinals``), whose order is unsigned doc_id order; a
+   group maps its ≤ k winners to doc_ids by a positional read of that
+   table before the global top-k.
 5. tie-break: score desc, doc_id ascending in unsigned order — identical to
    the numpy oracle (index/oracle.py).
 6. urls (``topk(with_url=True)``): the ≤ k ranked rows are collected and
@@ -73,7 +76,8 @@ def read_commit(index_dir: str) -> dict:
     """The index's ``_SUCCESS.json`` record as written ({} when absent or
     torn). The record is the index's only snapshot state: ``format``,
     ``version`` (a uuid per commit), ``n_docs``, ``avgdl``, ``segments``,
-    ``covered_chunks`` and ``tombstone_files``; its atomic rename (every
+    ``covered_chunks``, ``tombstone_files`` and ``doc_rows`` (each data
+    segment's docs row count); its atomic rename (every
     writer's ``_commit``) is the only commit point. Writers read it raw only
     to keep the replaced record's segments on disk and to carry an index of
     another format's tombstones into its rebuild; everything else goes
@@ -188,12 +192,100 @@ class _KeyedTable:
             yield pq.read_table(f, columns=columns, filters=[(self.key, "in", ks)])
 
 
+def _row_counts(md) -> tuple:
+    return tuple(md.row_group(r).num_rows for r in range(md.num_row_groups))
+
+
+class _DocOrdinals:
+    """One data segment's docs rows in ordinal order: its key-bucketed docs
+    files (``build._write_keyed``) in ascending unsigned bucket order, which
+    is unsigned doc_id order. A doc's ordinal is its row position in that
+    sequence, and posting blocks store ordinals, not doc_ids. Holds each row
+    group's file, first ordinal and signed doc_id min/max from the footers,
+    read once (by the segment writer, and by each snapshot handle), so the
+    executors that map ordinals read only row groups, never a listing."""
+
+    def __init__(self, bucket_files: list[list[str]], n_rows: int):
+        """``bucket_files``: a segment's docs files per bucket dir, in
+        ascending unsigned bucket order (``_KeyedTable.segments``);
+        ``n_rows``: the segment's docs row count as committed (its
+        ``doc_rows`` entry), which the footers must add up to."""
+        self.files = files = [f for fs in bucket_files for f in fs]
+        meta = []  # (file, row group, rows, signed min, signed max)
+        self.file_rows = []  # each file's row-group row counts
+        for i, f in enumerate(files):
+            md = pq.read_metadata(f)
+            self.file_rows.append(_row_counts(md))
+            col = md.schema.names.index("doc_id")
+            for r in range(md.num_row_groups):
+                g = md.row_group(r)
+                st = g.column(col).statistics
+                known = st is not None and st.has_min_max
+                meta.append((i, r, g.num_rows,
+                             st.min if known else -(2**63), st.max if known else 2**63 - 1))
+        m = np.array(meta, dtype=np.int64).reshape(-1, 5)
+        self.rg_file, self.rg_local = m[:, 0], m[:, 1]
+        self.lo, self.hi = m[:, 3], m[:, 4]
+        # ordinal of each row group's first row, plus the segment's row count
+        self.start = np.concatenate([[0], np.cumsum(m[:, 2])]).astype(np.int64)
+        if self.start[-1] != n_rows:
+            seg_dir = os.path.dirname(os.path.dirname(files[0])) if files else "a segment"
+            raise RuntimeError(
+                f"docs of {seg_dir!r} hold {self.start[-1]} rows where the "
+                f"commit record lists {n_rows}, so doc ordinals would map to "
+                "other docs — the docs table is damaged; rebuild the index "
+                "(merge_index)"
+            )
+
+    def _read(self, rgs: np.ndarray) -> np.ndarray:
+        """The doc_id column (int64) of the row groups ``rgs`` (ascending),
+        concatenated in that order. A file whose row groups no longer hold
+        the rows its footer held when this was built (a damaged docs table)
+        would shift every later ordinal onto another doc, so it raises."""
+        parts = [np.empty(0, np.int64)]
+        for i in np.unique(self.rg_file[rgs]):
+            f = pq.ParquetFile(self.files[i])
+            if _row_counts(f.metadata) != self.file_rows[i]:
+                raise RuntimeError(
+                    f"docs file {self.files[i]!r} changed since its snapshot "
+                    "was opened, so doc ordinals no longer map to their docs — "
+                    "the docs table is damaged; rebuild the index (merge_index)"
+                )
+            local = self.rg_local[rgs[self.rg_file[rgs] == i]].tolist()
+            parts.append(f.read_row_groups(local, columns=["doc_id"]).column(0).to_numpy())
+        return np.concatenate(parts)
+
+    def rows(self, lo, hi) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_id as uint64, ordinal) of every row of the row groups whose
+        signed doc_id range meets one of the sorted, disjoint signed
+        intervals [lo[j], hi[j]], in ordinal (= unsigned doc_id) order. A
+        caller looks its docs up in it with a searchsorted."""
+        lo = np.atleast_1d(np.asarray(lo, np.int64))
+        hi = np.atleast_1d(np.asarray(hi, np.int64))
+        j = np.searchsorted(hi, self.lo)  # first interval ending at or past it
+        rgs = np.flatnonzero((j < len(hi)) & (lo[np.minimum(j, len(lo) - 1)] <= self.hi))
+        lens = self.start[rgs + 1] - self.start[rgs]
+        ords = np.repeat(self.start[rgs] - (np.cumsum(lens) - lens), lens)
+        return self._read(rgs).view(np.uint64), ords + np.arange(len(ords))
+
+    def doc_ids(self, ords) -> np.ndarray:
+        """The doc_id (int64) of each ordinal: a positional read of the row
+        groups that hold them."""
+        ords = np.asarray(ords, np.int64)
+        rg = np.searchsorted(self.start, ords, side="right") - 1
+        rgs = np.unique(rg)
+        lens = self.start[rgs + 1] - self.start[rgs]
+        at = (np.cumsum(lens) - lens)[np.searchsorted(rgs, rg)]  # offset in the read
+        return self._read(rgs)[at + ords - self.start[rg]]
+
+
 class _Snapshot:
     """Reader handle for ONE committed snapshot: its postings opened once
     (the open lists the snapshot's postings dirs; the schema is the known
     ``build.POSTINGS_SCHEMA``, so no footer-inference job), the bucket
     listings of its driver-read tables (every segment's lexicon, delete
-    deltas included, and the data segments' docs) and the lazily loaded
+    deltas included, and the data segments' docs), each data segment's
+    ``_DocOrdinals`` (its docs footers, read once) and the lazily loaded
     tombstone broadcast. A snapshot is immutable per commit uuid, so every
     query against that commit shares the handle — the engine analog of the
     reference's ``lru_cache`` on make_query (cloud_llm.py:235)."""
@@ -220,32 +312,42 @@ class _Snapshot:
             os.path.join(index_dir, "lexicon"), "term_id", marker["segments"]
         )
         self.docs_files = _KeyedTable(os.path.join(index_dir, "docs"), "doc_id", data)
+        self.doc_ordinals = {
+            s: _DocOrdinals(files, marker["doc_rows"][str(s)])
+            for s, (_firsts, files) in zip(data, self.docs_files.segments)
+        }
         self._sc = spark.sparkContext
         self._dead_lock = threading.Lock()
         self._dead_loaded = False
         self._dead_bc = None
 
     def dead_bc(self):
-        """Broadcast of the snapshot's tombstoned doc_ids (sorted uint64), or
-        None when the snapshot has no deletes. Files are driver-read with
-        pyarrow (commit metadata, like lineage) — 8 bytes per lifetime-deleted
-        doc — and shipped to executors once per handle."""
+        """Broadcast of the snapshot's tombstones as {data segment: sorted
+        uint64 ordinals}, or None when no committed doc is tombstoned. The
+        delete files (commit metadata, like lineage: 8 bytes per
+        lifetime-deleted doc_id) are driver-read with pyarrow, each
+        segment's ordinals found by a read of the docs row groups whose
+        doc_id range admits a tombstoned id, and shipped to executors once
+        per handle."""
         with self._dead_lock:
             if not self._dead_loaded:
                 files = self.marker.get("tombstone_files") or []
                 if files:
-                    arrs = [
+                    tomb = np.unique(np.concatenate([
                         pq.read_table(
                             os.path.join(self.index_dir, "tombstones", f),
                             columns=["doc_id"],
-                        )
-                        .column("doc_id")
-                        .to_numpy()
-                        .astype(np.int64)
+                        ).column("doc_id").to_numpy().astype(np.int64)
                         for f in files
-                    ]
-                    dead = np.unique(np.concatenate(arrs).view(np.uint64))
-                    self._dead_bc = self._sc.broadcast(dead)  # sorted unsigned
+                    ]))
+                    dead = {}
+                    for s, docs in self.doc_ordinals.items():
+                        ids, ords = docs.rows(tomb, tomb)
+                        hit = ords[np.isin(ids.view(np.int64), tomb)]
+                        if len(hit):
+                            dead[s] = hit.astype(np.uint64)  # ordinal order
+                    if dead:
+                        self._dead_bc = self._sc.broadcast(dead)
                 self._dead_loaded = True
             return self._dead_bc
 
@@ -303,8 +405,8 @@ def _close_snapshots() -> None:
 
 
 def _mask_alive(docs_u: np.ndarray, dead: np.ndarray | None):
-    """Boolean keep-mask over unsigned doc ids vs the sorted tombstone set,
-    or None when nothing is masked (fast path)."""
+    """Boolean keep-mask over a segment's ordinals (uint64) vs its sorted
+    tombstoned ordinals, or None when nothing is masked (fast path)."""
     if dead is None or not len(docs_u):
         return None
     pos = np.searchsorted(dead, docs_u)
@@ -368,9 +470,9 @@ def _postings(snap: _Snapshot, ids: list[int], n_groups: int) -> DataFrame:
     slice group ``wg``. The term_id filter is pushed into the parquet scan,
     which reads only the row groups whose term_id range can hold one of
     ``ids``: ~``build.ROW_GROUP_BYTES`` each in a segment of at least
-    ``build.ROW_GROUP_MIN_DOCS`` docs, one per file in a smaller segment or
-    an index written before the row-group size was set. Doc ranges of distinct slices are disjoint, so ANY slice
-    partition keeps per-group local top-k + a global top-k exact."""
+    ``build.ROW_GROUP_MIN_DOCS`` docs, one per file in a smaller segment.
+    Doc ranges of distinct slices are disjoint, so ANY slice partition
+    keeps per-group local top-k + a global top-k exact."""
     return (
         snap.postings.filter(F.col("term_id").isin(ids))
         .select("seg", "term_id", "slice", "block_id", "n", "doc_ids", "tfs",
@@ -381,8 +483,9 @@ def _postings(snap: _Snapshot, ids: list[int], n_groups: int) -> DataFrame:
 
 def wand_group_count(total_df: int, parallelism: int) -> int:
     """Adaptive slice-coarsening group count: every WAND group pays ~k
-    decoded blocks before its local θ converges, so 64 fine slices × k
-    forfeit most pruning when posting volume is modest. Estimated block
+    decoded blocks before its local θ converges, so a segment's fine slices
+    (2^``build.derive_slice_bits``, at least 64) × k forfeit most pruning
+    when posting volume is modest. Estimated block
     count (Σdf from the lexicon probe — no extra job) sizes the group
     count: few groups (global-ish θ, max pruning) for small volume, up to
     4×parallelism for big scans. Single source of truth for the grouping
@@ -470,9 +573,16 @@ def _scored(
         grouped = grouped.join(F.broadcast(term_buckets), "term_id")
     else:
         grouped = grouped.withColumn("qb", F.lit(0))
+    # the group shuffle's partition count is explicit, so AQE never
+    # coalesces it by bytes: ordinal blocks shrank a question's shuffle
+    # enough that its WAND groups ran in one Python task (the 180k index's
+    # long questions ran ~25% slower), and the groupBy reuses this
+    # partitioning (no second exchange)
+    grouped = grouped.repartition(par, "seg", "wg", "qb")
     return grouped.groupBy("seg", "wg", "qb").applyInPandas(
         _wand_groups(
-            idf_by_q, idf_all, float(snap.marker["avgdl"]), k, snap.dead_bc(), n_qb
+            idf_by_q, idf_all, float(snap.marker["avgdl"]), k, snap.dead_bc(), n_qb,
+            snap.doc_ordinals,
         ),
         SCORED_SCHEMA,
     )
@@ -541,10 +651,11 @@ def topk_batch(
 
 
 def _term_blocks(g: pd.DataFrame, idf: float, avgdl: float) -> tuple:
-    """One term's blocks in a group as arrays in doc order: (first doc,
-    last doc, block-max score, n, doc_ids, tfs, dls, idf). Slices are
-    doc-range-contiguous (slice = top bits of doc_u), so (slice, block_id)
-    order is doc order."""
+    """One term's blocks in a group as arrays in ordinal order: (first
+    ordinal, last ordinal, block-max score, n, doc_ids, tfs, dls, idf). A
+    segment's slices are ordinal ranges (slice = top bits of the unsigned
+    doc_id, and ordinals follow unsigned doc_id order), so (slice, block_id)
+    order is ordinal order."""
     g = g.sort_values(["slice", "block_id"])
     # avgdl-free stored bounds → block-max score under the current global
     # avgdl: tfn rises with tf and falls with dl, so tfn(max_tf, min_dl)
@@ -570,6 +681,7 @@ def _wand_groups(
     k: int,
     dead_bc,
     n_qb: int,
+    docs: dict,
 ):
     """Per-(segment, slice group, query bucket) block-max WAND: the
     grouped-map function of the shared plan. The group with key
@@ -577,6 +689,13 @@ def _wand_groups(
     and returns its local top-k rows (query_id, doc_id, score). Each term's
     block arrays are built once per group and shared by the bucket's
     queries (idf is global per term).
+
+    The kernel runs on the segment's doc ordinals, whose order is unsigned
+    doc_id order, so the local top-k and its tie-break are those of the
+    doc_ids; the group then maps its ≤ k winners per query to doc_ids with
+    one positional read (``docs[seg]``, a ``_DocOrdinals``), before the
+    global top-k compares them across segments. ``dead_bc`` holds the
+    tombstones as {seg: sorted ordinals}.
 
     Level 1 works only on block metadata: the union of all terms' block
     boundaries partitions the slice's doc range into intervals, and one
@@ -609,23 +728,23 @@ def _wand_groups(
     """
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qb = int(key[2])
-        dead = dead_bc.value if dead_bc is not None else None
+        seg, qb = int(key[0]), int(key[2])
+        dead = dead_bc.value.get(seg) if dead_bc is not None else None
         blocks = {
             int(t): _term_blocks(g, idf_all[int(t)], avgdl)
             for t, g in pdf.groupby("term_id", sort=False)
         }
-        qids, docs, scores = [np.empty(0, np.int64)], [np.empty(0, np.uint64)], [np.empty(0)]
+        qids, ords, scores = [np.empty(0, np.int64)], [np.empty(0, np.uint64)], [np.empty(0)]
         for qid, idf_map in idf_by_q.items():
             if qid % n_qb == qb:
                 # terms in the query's canonical order, not Spark's read order
                 d, sc = _wand_topk([blocks[t] for t in idf_map if t in blocks], k, avgdl, dead)
                 qids.append(np.full(len(d), qid, dtype=np.int64))
-                docs.append(d)
+                ords.append(d)
                 scores.append(sc)
         return pd.DataFrame({
             "query_id": np.concatenate(qids),
-            "doc_id": np.concatenate(docs).view(np.int64),
+            "doc_id": docs[seg].doc_ids(np.concatenate(ords)),
             "score": np.concatenate(scores),
         })
 
@@ -635,8 +754,10 @@ def _wand_groups(
 def _wand_topk(
     terms: list[tuple], k: int, avgdl: float, dead: "np.ndarray | None"
 ) -> tuple[np.ndarray, np.ndarray]:
-    """One query's top-k (doc_u, score), ranked, over its ``_term_blocks``
-    in canonical term order (see ``_wand_groups``)."""
+    """One query's top-k (key, score), ranked, over its ``_term_blocks``
+    in canonical term order (see ``_wand_groups``). Keys are any uint64
+    doc keys below 2^64 - 1 (the engine passes segment ordinals), compared
+    only for order and equality."""
     top_docs = np.empty(0, dtype=np.uint64)
     top_scores = np.empty(0, dtype=np.float64)
     if not terms or k <= 0:
@@ -645,12 +766,10 @@ def _wand_topk(
     all_firsts = np.concatenate([t[0] for t in terms])
     all_lasts = np.concatenate([t[1] for t in terms])
     all_bms = np.concatenate([t[2] for t in terms])
-    open_end = all_lasts == np.uint64(0xFFFFFFFFFFFFFFFF)  # +1 would wrap
-    bounds = np.unique(np.concatenate([all_firsts, all_lasts[~open_end] + np.uint64(1)]))
+    bounds = np.unique(np.concatenate([all_firsts, all_lasts + np.uint64(1)]))
     ub = np.zeros(len(bounds), dtype=np.float64)
     np.add.at(ub, np.searchsorted(bounds, all_firsts), all_bms)
-    closes = np.searchsorted(bounds, all_lasts[~open_end] + np.uint64(1))
-    np.subtract.at(ub, closes[closes < len(bounds)], all_bms[~open_end][closes < len(bounds)])
+    np.subtract.at(ub, np.searchsorted(bounds, all_lasts + np.uint64(1)), all_bms)
     ub = np.cumsum(ub)
     # The sweep + cumsum accumulates rounding error ∝ len(bounds)·eps·
     # max|prefix|, which can push a bound a few ulp below the true Σ

@@ -596,6 +596,16 @@ def test_query_rejects_uncommitted_and_foreign_format(spark, single_shot, tmp_pa
         json.dump({**m, "format": 4}, f)
     with pytest.raises(RuntimeError, match="format 4 .* rebuild"):
         topk(spark, d2, "anything", 5)
+    # format 5 docs and lexicon segments have no bucket dirs
+    with open(marker, "w") as f:
+        json.dump({**m, "format": 5}, f)
+    with pytest.raises(RuntimeError, match="format 5 .* rebuild"):
+        topk(spark, d2, "anything", 5)
+    # format 6 posting blocks hold doc_ids, not doc ordinals
+    with open(marker, "w") as f:
+        json.dump({**m, "format": 6}, f)
+    with pytest.raises(RuntimeError, match="format 6 .* rebuild"):
+        topk(spark, d2, "anything", 5)
 
     # the committed index still queries fine
     topk(spark, d, "anything", 5)

@@ -16,6 +16,7 @@ import shutil
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import PythonException
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.functions.tokenize import term_ids, tokenize
@@ -177,7 +178,11 @@ def test_topk_with_url_job_count(spark, bucketed):
 
 def test_missing_docs_row_fails_loudly(spark, bucketed, tmp_path):
     """A ranked doc_id whose docs row is gone raises instead of returning
-    fewer than k rows."""
+    fewer than k rows, or other docs' rows: posting blocks hold doc
+    ordinals (row positions in the docs table), so the scoring group's
+    positional read finds the docs file changed and fails the query, and a
+    handle opened after the damage finds fewer docs rows than the commit
+    record lists."""
     d0, _ = bucketed
     d = str(tmp_path / "idx")
     shutil.copytree(d0, d)
@@ -190,5 +195,8 @@ def test_missing_docs_row_fails_loudly(spark, bucketed, tmp_path):
         if top in (t := pq.read_table(f)).column("doc_id").to_pylist()
     ]
     pq.write_table(t.filter(np.asarray(t.column("doc_id")) != top), f)
-    with pytest.raises(RuntimeError, match=rf"doc_id\(s\) \[{top}\] have no docs row"):
+    with pytest.raises(PythonException, match=r"docs file .* changed since its snapshot"):
+        topk(spark, d, q, 10, with_url=True)
+    _close_snapshots()
+    with pytest.raises(RuntimeError, match=r"rows where the commit record lists"):
         topk(spark, d, q, 10, with_url=True)
