@@ -56,9 +56,11 @@ key falls in and reads the row groups whose min/max admit it.
 Slices: every posting row is keyed by (term_id, slice) where slice = the
 top slice_bits bits of the unsigned doc_id (derive_slice_bits), the unit of
 a WAND group. Slices are disjoint doc ranges, and ordinals follow unsigned
-doc_id order, so a slice is an ordinal range and a term's blocks stay
-ordinal-sorted; every doc's postings for all terms share a slice, so
-per-slice top-k is exact.
+doc_id order, so a slice is an ordinal range; every doc's postings for all
+terms share a slice, so per-slice top-k is exact. block_id numbers a
+(term_id, slice)'s blocks within one pack task, and a segment with more
+doc ranges than slices packs a slice in several tasks, so readers order a
+term's blocks by first_doc (``query._term_blocks``).
 
 Impact upper bounds are stored idf-free (max of the tf/doclen factor);
 idf multiplies in at query time, so posting blocks never need rebuilding
@@ -352,38 +354,18 @@ def _pack_groups(bits: int, range_bits: int, doc_ords: _DocOrdinals):
     carrying the trailing group's arrays between batches.
 
     A task's rows are one doc range, the top ``range_bits`` bits of the
-    unsigned doc_id (the pack shuffle's key). Its docs' ordinals come from
-    the docs rows of that range alone (``doc_ords``, the segment's
+    unsigned doc_id, and that range is its partition id (the pack shuffle
+    is ``repartitionById`` on it). Its docs' ordinals come from the docs
+    rows of that range alone (``doc_ords``, the segment's
     ``query._DocOrdinals``: only the row groups whose doc_id range meets
-    it), read once per range: a searchsorted-left, so a url staged twice
+    it), read once per task: a searchsorted-left, so a url staged twice
     maps to its first row, and a doc_id with no docs row raises.
     """
-    shift = 64 - range_bits
-
-    def ordinals(doc_u: np.ndarray, ranges: dict) -> np.ndarray:
-        pre = doc_u >> np.uint64(shift)
-        out = np.empty(len(doc_u), dtype=np.int64)
-        for p in [int(pre[0])] if (pre == pre[0]).all() else np.unique(pre).tolist():
-            if p not in ranges:
-                lo = p << shift
-                hi = lo + (1 << shift) - 1
-                # as signed int64: the range keeps one sign bit (range_bits >= 1)
-                ranges[p] = doc_ords.rows(*(x - (1 << 64) if x >> 63 else x for x in (lo, hi)))
-            ids, ords = ranges[p]
-            m = pre == p
-            pos = np.minimum(np.searchsorted(ids, doc_u[m]), max(len(ids) - 1, 0))
-            if not len(ids) or not np.array_equal(ids[pos], doc_u[m]):
-                raise RuntimeError(
-                    "segment build: a posting's doc_id has no row in the "
-                    "segment's docs table — the docs write is incomplete"
-                )
-            out[m] = ords[pos]
-        return out
 
     def pack(batches):
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+        pid = TaskContext.get().partitionId()
         leftover: dict | None = None
-        ranges: dict = {}
+        ids = None
 
         for rb in batches:
             if rb.num_rows == 0:
@@ -392,7 +374,19 @@ def _pack_groups(bits: int, range_bits: int, doc_ords: _DocOrdinals):
                 name: rb.column(i).to_numpy(zero_copy_only=False)
                 for i, name in enumerate(rb.schema.names)
             }
-            cols["ord"] = ordinals(cols["doc_id"].view(np.uint64), ranges)
+            if ids is None:
+                lo = pid << (64 - range_bits)
+                hi = lo + (1 << (64 - range_bits)) - 1
+                # as signed int64: the range keeps one sign bit (range_bits >= 1)
+                ids, ords = doc_ords.rows(*(x - (1 << 64) if x >> 63 else x for x in (lo, hi)))
+            doc_u = cols["doc_id"].view(np.uint64)
+            pos = np.minimum(np.searchsorted(ids, doc_u), max(len(ids) - 1, 0))
+            if not len(ids) or not np.array_equal(ids[pos], doc_u):
+                raise RuntimeError(
+                    "segment build: a posting's doc_id has no row in the "
+                    "segment's docs table — the docs write is incomplete"
+                )
+            cols["ord"] = ords[pos]
             if leftover is not None:
                 cols = {
                     k: np.concatenate([leftover[k], cols[k]]) for k in _PACK_COLS

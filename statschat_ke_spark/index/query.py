@@ -317,9 +317,10 @@ class _Snapshot:
             for s, (_firsts, files) in zip(data, self.docs_files.segments)
         }
         self._sc = spark.sparkContext
-        self._dead_lock = threading.Lock()
+        self._bc_lock = threading.Lock()
         self._dead_loaded = False
         self._dead_bc = None
+        self._docs_bc = None
 
     def dead_bc(self):
         """Broadcast of the snapshot's tombstones as {data segment: sorted
@@ -329,7 +330,7 @@ class _Snapshot:
         segment's ordinals found by a read of the docs row groups whose
         doc_id range admits a tombstoned id, and shipped to executors once
         per handle."""
-        with self._dead_lock:
+        with self._bc_lock:
             if not self._dead_loaded:
                 files = self.marker.get("tombstone_files") or []
                 if files:
@@ -351,16 +352,27 @@ class _Snapshot:
                 self._dead_loaded = True
             return self._dead_bc
 
+    def docs_bc(self):
+        """Broadcast of ``doc_ordinals``, shipped to executors once per
+        handle: a scoring group reads only its own segment's entry, and
+        every segment's row-group tables in each task's closure would grow
+        with the index (about 2.7 GB at 10^12 docs)."""
+        with self._bc_lock:
+            if self._docs_bc is None:
+                self._docs_bc = self._sc.broadcast(self.doc_ordinals)
+            return self._docs_bc
+
     def close(self) -> None:
-        """Release the tombstone broadcast's block-manager storage NOW — a
+        """Release the broadcasts' block-manager storage NOW — a
         long-lived ingest+serve driver opens a handle per commit, and
         unreferenced broadcasts otherwise linger until context teardown
         (non-blocking; in-flight tasks holding .value are unaffected)."""
-        if self._dead_bc is not None:
-            try:
-                self._dead_bc.unpersist(blocking=False)
-            except Exception:
-                pass  # stopped context / already destroyed
+        for bc in (self._dead_bc, self._docs_bc):
+            if bc is not None:
+                try:
+                    bc.unpersist(blocking=False)
+                except Exception:
+                    pass  # stopped context / already destroyed
 
 
 # Open handles, keyed by (index_dir, commit version, id(SparkContext)). The
@@ -582,7 +594,7 @@ def _scored(
     return grouped.groupBy("seg", "wg", "qb").applyInPandas(
         _wand_groups(
             idf_by_q, idf_all, float(snap.marker["avgdl"]), k, snap.dead_bc(), n_qb,
-            snap.doc_ordinals,
+            snap.docs_bc(),
         ),
         SCORED_SCHEMA,
     )
@@ -652,11 +664,16 @@ def topk_batch(
 
 def _term_blocks(g: pd.DataFrame, idf: float, avgdl: float) -> tuple:
     """One term's blocks in a group as arrays in ordinal order: (first
-    ordinal, last ordinal, block-max score, n, doc_ids, tfs, dls, idf). A
-    segment's slices are ordinal ranges (slice = top bits of the unsigned
-    doc_id, and ordinals follow unsigned doc_id order), so (slice, block_id)
-    order is ordinal order."""
-    g = g.sort_values(["slice", "block_id"])
+    ordinal, last ordinal, block-max score, n, doc_ids, tfs, dls, idf).
+    block_id alone does not give that order: each pack task (a doc range)
+    numbers its blocks of a (term_id, slice) from 0, and a large segment
+    has more doc ranges than slices, so one slice's blocks can come from
+    several tasks. first_doc does: a term's blocks cover ascending ordinal
+    runs, and only one task's consecutive blocks can share a first_doc (a
+    url staged twice has one ordinal), which its block_id orders. Keys sort
+    unsigned, as ``_wand_topk`` compares them."""
+    first = g["first_doc"].to_numpy(dtype=np.int64).view(np.uint64)
+    g = g.iloc[np.lexsort((g["block_id"].to_numpy(), first))]
     # avgdl-free stored bounds → block-max score under the current global
     # avgdl: tfn rises with tf and falls with dl, so tfn(max_tf, min_dl)
     # dominates every doc in the block
@@ -681,7 +698,7 @@ def _wand_groups(
     k: int,
     dead_bc,
     n_qb: int,
-    docs: dict,
+    docs_bc,
 ):
     """Per-(segment, slice group, query bucket) block-max WAND: the
     grouped-map function of the shared plan. The group with key
@@ -693,7 +710,7 @@ def _wand_groups(
     The kernel runs on the segment's doc ordinals, whose order is unsigned
     doc_id order, so the local top-k and its tie-break are those of the
     doc_ids; the group then maps its ≤ k winners per query to doc_ids with
-    one positional read (``docs[seg]``, a ``_DocOrdinals``), before the
+    one positional read (``docs_bc.value[seg]``, a ``_DocOrdinals``), before the
     global top-k compares them across segments. ``dead_bc`` holds the
     tombstones as {seg: sorted ordinals}.
 
@@ -744,7 +761,7 @@ def _wand_groups(
                 scores.append(sc)
         return pd.DataFrame({
             "query_id": np.concatenate(qids),
-            "doc_id": docs[seg].doc_ids(np.concatenate(ords)),
+            "doc_id": docs_bc.value[seg].doc_ids(np.concatenate(ords)),
             "score": np.concatenate(scores),
         })
 

@@ -6,6 +6,8 @@ small:
 
 - the encoded doc-id bytes per posting of the 1k fixture stay at most 2
   (about 8 when blocks held doc_id gaps);
+- a (term, slice) group packed by several tasks (doc ranges finer than
+  slices) keeps its blocks in ordinal order at query time;
 - ordinals survive hostile docs: a doc with no token (a docs row, no
   posting), a url given twice in one batch (two docs rows, one doc_id), and
   a tombstoned doc in each of two data segments. Every top-k equals the
@@ -25,6 +27,7 @@ import pytest
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
 from statschat_ke_spark.functions.hashing import xxhash64_str
 from statschat_ke_spark.functions.tokenize import tokenize
+from statschat_ke_spark.index import build
 from statschat_ke_spark.index.build import (
     DELETE_SEG_BASE,
     build_index,
@@ -60,6 +63,41 @@ def test_doc_id_bytes_per_posting(index_dir):
             size += sum(len(b) for b in t.column("doc_ids").to_pylist())
     assert n > 0
     assert size / n <= 2.0, size / n
+
+
+def test_pack_ranges_finer_than_slices(
+    spark, corpus_pdf, corpus_df, queries, tmp_path, monkeypatch
+):
+    """A large segment's pack shuffle has more doc ranges than slices
+    (BENCH_SKEW's 9M docs: 1024 ranges, 256 slices), so one (term_id,
+    slice) group is packed by several tasks, each numbering its blocks from
+    0. One slice bit on the 1k corpus (4 ranges) makes that happen; every
+    top-k still equals the exact scorer."""
+    monkeypatch.setattr(build, "derive_slice_bits", lambda n_docs: 1)
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus_df, d)
+    [s] = _data_segments(d)
+    t = pq.read_table(
+        os.path.join(d, "postings", f"seg={s}"),
+        columns=["term_id", "slice", "block_id", "pid"],
+    ).to_pandas()
+    assert set(t.slice) == {0, 1} and t.pid.nunique() == 4
+    # the case this covers: (term_id, slice, block_id) repeats across tasks
+    assert t.duplicated(["term_id", "slice", "block_id"]).any()
+
+    oracle = OracleIndex(corpus_pdf)
+    qmap = {int(q.query_id): (q.query_text, int(q.k)) for q in queries.itertuples(index=False)}
+    qmap[-1] = ("the of and statistics county", K)
+    batch = topk_batch(spark, d, {i: q for i, (q, _) in qmap.items()}, K).toPandas()
+    for i, (q, k) in qmap.items():
+        want = oracle.topk(q, k)
+        got = topk(spark, d, q, k).toPandas()
+        assert list(got.doc_id) == list(want.doc_id), q
+        assert np.allclose(got.score.to_numpy(), want.score.to_numpy(), atol=1e-9), q
+        want = oracle.topk(q, K)
+        b = batch[batch.query_id == i]
+        assert list(b.doc_id) == list(want.doc_id), q
+        assert np.allclose(b.score.to_numpy(), want.score.to_numpy(), atol=1e-9), q
 
 
 def _docs(spark, pdf):

@@ -60,12 +60,14 @@ def _build_slice_pdf(term_postings: dict[int, list[tuple[int, int, int]]], avgdl
 def _wand_one(idf_map, avgdl, k, pdf, dead=None):
     """One query's local top-k from the shared plan's group function, for a
     single (seg, wg, qb) group holding every posting. The blocks key docs
-    by their doc ids, so segment 0's ordinal -> doc_id map is the identity;
-    ``dead`` (sorted uint64 doc ids) stands in for the tombstone
-    broadcast."""
+    by their doc ids, so segment 0's ordinal -> doc_id map (the docs
+    broadcast) is the identity; ``dead`` (sorted uint64 doc ids) stands in
+    for the tombstone broadcast."""
     dead_bc = None if dead is None else SimpleNamespace(value={0: dead})
-    docs = {0: SimpleNamespace(doc_ids=lambda ords: ords.view(np.int64))}
-    out = _wand_groups({0: idf_map}, idf_map, avgdl, k, dead_bc, 1, docs)((0, 0, 0), pdf)
+    docs_bc = SimpleNamespace(
+        value={0: SimpleNamespace(doc_ids=lambda ords: ords.view(np.int64))}
+    )
+    out = _wand_groups({0: idf_map}, idf_map, avgdl, k, dead_bc, 1, docs_bc)((0, 0, 0), pdf)
     return out.drop(columns="query_id")
 
 
